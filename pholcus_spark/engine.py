@@ -8,16 +8,17 @@ Each superstep:
    frontier: ``row_number() over (partition by host order by priority
    desc, seq asc) <= budget(host)`` (reference pull order
    `matrix.go:101-124`; budgets are the north-rule crawl-delay
-   extension). The *global* rank (wave_pos) is computed only over the
-   selected wave (hosts × budget rows), never over the whole frontier —
-   the per-host window is the only frontier-wide shuffle and it
-   partitions by host.
-2. **fetch** — batched fetcher (fixture equi-join / aiohttp mapInPandas).
-3. **extract** — Arrow-vectorized link + figure extraction (extract.py),
-   image validation (validate.py).
-4. **emit** — items and validated image rows appended.
+   extension), tagging the queue in place. Every window partitions (by
+   host, or by spider for the fair-share quota); no global rank over
+   the wave or the frontier is ever needed — wave order is the total
+   order (-priority, seq).
+2. **fetch** — ``fetcher.fetch_meta`` (fixture equi-join, body-store
+   metadata, or a live mapInPandas fetch), checkpointed once per wave.
+3. **parse** — one decoded-body pass per page for links, figures and
+   ExtractRule items (``fetcher.parse_pages``).
+4. **emit** — items, validated image rows and file rows appended.
 5. **push** — children: absolutize→canonicalize→route→robots-filter→
-   SHA-1 key→within-batch dedup (first (wave_pos, ordinal) wins)→
+   SHA-1 key→within-batch dedup (first in wave order, then ordinal, wins)→
    anti-join vs url_seen ∪ still-queued keys→limit cutoff→dense seq
    assignment (`matrix.go:51-98` Push semantics).
 6. **ack** — succeeded keys appended to url_seen (non-reloadable only,
@@ -173,6 +174,22 @@ def _dlt():
     return F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss")
 
 
+def release(df: DataFrame) -> None:
+    """Free the executor storage behind ``df`` — the one release path
+    for every cache and checkpoint the engine owns.
+
+    ``DataFrame.unpersist`` only drops cache-manager entries, so on a
+    ``localCheckpoint`` frame it is a no-op and the checkpoint blocks
+    stay until JVM GC. A checkpoint's analyzed plan is a ``LogicalRDD``
+    over the checkpointed RDD; that RDD is unpersisted directly. Pass
+    the handle ``persist``/``localCheckpoint`` returned, not a
+    projection of it."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def two_phase_rank(
     df: DataFrame,
     order: list,
@@ -199,7 +216,7 @@ def two_phase_rank(
     A lazy cache gives that single execution without the per-call
     driver planning a localCheckpoint forces (~1s/superstep measured);
     the caller owns release via `unpersist_into` (the persisted frame
-    is appended for a later ``unpersist()``).
+    is appended for a later :func:`release`).
     """
     ranged = (
         df.repartitionByRange(partitions, *order)
@@ -246,10 +263,11 @@ class EngineConfig:
     default_crawl_delay_ms: int = 375  # 1.25 × reference Pausetime 300 ms
     requeue_failures: bool = True
     num_buckets: int = 64  # url_seen bucketing (10^10 scale → 1024+)
-    # golden-order table: materializes wave_pos with an UNPARTITIONED
-    # window per superstep — a single-partition exchange no production
-    # plan should contain. Off by default; conformance fixtures opt in
-    # (the order table is a test instrument, not an output).
+    # golden-order table: ranks wave_pos with an UNPARTITIONED window
+    # over each wave where the table is appended — a single-partition
+    # exchange no production plan should contain. Off by default;
+    # conformance fixtures opt in (the order table is a test
+    # instrument, not an output).
     record_order: bool = False
     bloom_enabled: bool = True
     bloom_fpp: float = 0.01
@@ -359,6 +377,11 @@ class CrawlEngine:
         if "allow_prefixes" in robots.columns:
             rcols.insert(2, "allow_prefixes")
         self.robots = robots.select(*rcols)
+        # FileOutput rules (rule -> nameOrExt): raw-body outputs, never
+        # parsed as pages
+        self._file_rules = {
+            fr.rule: fr.name_or_ext for fr in getattr(spec, "file_rules", ()) or ()
+        }
         self._bloom = None  # BloomSidecar handle (paths/params only)
         self._bloom_load_attempted = False
         self._uncovered_est: int | None = None  # keys not covered by sidecar
@@ -371,7 +394,7 @@ class CrawlEngine:
         # in-memory engine state between durable commits
         self._state: dict | None = None
         self._pending: dict[str, list[DataFrame]] = {}
-        self._pending_unpersist: list[DataFrame] = []
+        self._pending_release: list[DataFrame] = []
         # python-sink staging: (manifest_df, rel_dir) pairs per table;
         # manifests are forced (running the sink tasks) then the dirs
         # are adopted by the same catalog commit
@@ -475,15 +498,6 @@ class CrawlEngine:
         # push path) — never a driver-side collect() of the robots table,
         # which at web scale is a millions-of-hosts dim
         new_df = self._robots_disallow_filter(new_df, "url")
-        # in-batch dedup AFTER the robots filter (a blocked row must not
-        # shadow an allowed duplicate); first occurrence wins, reloadable
-        # rows always pass but still claim their key for later dups
-        _kw = Window.partitionBy("key").orderBy(F.asc("seq"))
-        new_df = (
-            new_df.withColumn("_krn", F.row_number().over(_kw))
-            .where(F.col("reloadable") | (F.col("_krn") == 1))
-            .drop("_krn")
-        )
         self._merge_new_frontier(new_df, state0)
 
     def _robots_disallow_filter(self, df: DataFrame, url_col: str) -> DataFrame:
@@ -581,7 +595,7 @@ class CrawlEngine:
                 [F.asc("curl")],
                 max(1, self.config.frontier_partitions),
                 "_ord",
-                unpersist_into=self._pending_unpersist,
+                unpersist_into=self._pending_release,
             )
         # robots disallow (same broadcast-dim filter as the push path)
         gen = self._robots_disallow_filter(gen, "curl")
@@ -617,14 +631,6 @@ class CrawlEngine:
             ).alias("temp"),
             F.lit("queued").alias("state"),
         )
-        # in-batch dedup (first occurrence wins, like seed()'s seen_keys)
-        # — colliding template indices canonicalize to one key
-        _kw = Window.partitionBy("key").orderBy(F.asc("seq"))
-        new_df = (
-            new_df.withColumn("_krn", F.row_number().over(_kw))
-            .where(F.col("reloadable") | (F.col("_krn") == 1))
-            .drop("_krn")
-        )
         self._merge_new_frontier(new_df, state0)
 
     def _seed_prelude(self):
@@ -634,6 +640,17 @@ class CrawlEngine:
         return state0
 
     def _merge_new_frontier(self, new_df: DataFrame, state0) -> None:
+        # in-batch dedup, AFTER the caller's robots filter (a blocked row
+        # must not shadow an allowed duplicate): first occurrence in seq
+        # order wins — colliding seeds or template indices canonicalize
+        # to one key; reloadable rows always pass but still claim their
+        # key for later dups
+        by_key = Window.partitionBy("key").orderBy(F.asc("seq"))
+        new_df = (
+            new_df.withColumn("_krn", F.row_number().over(by_key))
+            .where(F.col("reloadable") | (F.col("_krn") == 1))
+            .drop("_krn")
+        )
         # push dedup (hasHistory = success ∪ temp history): inherited
         # url_seen (SuccessInherit) via the Bloom-accelerated
         # _dedup_vs_history — a seed_range re-run against 10^10 seen
@@ -683,9 +700,8 @@ class CrawlEngine:
             .persist()
         )
         n_new = new_df.count()
-        pre.unpersist()
-        for _df in _seed_unpersist:
-            _df.unpersist()
+        for df in [pre, *_seed_unpersist]:
+            release(df)
         if state0 is None:
             state = {
                 "superstep": 0,
@@ -713,10 +729,10 @@ class CrawlEngine:
             )
             self.catalog.commit({}, {"frontier": frontier}, state0)
             if self._frontier_df is not None:
-                self._frontier_df.unpersist()
+                release(self._frontier_df)
             self._frontier_df = frontier
             self._frontier_dirty = False
-        new_df.unpersist()
+        release(new_df)
 
     # ------------------------------------------------------------------
     # superstep loop
@@ -760,83 +776,217 @@ class CrawlEngine:
             self._flush(state)
             return 0
 
-        cfg = self.config
         t0 = time.time()
-        superstep = state["superstep"] + 1
-        queued = frontier.where(F.col("state") == "queued")
-        others = frontier.where(F.col("state") != "queued")
-
-        # small-wave shuffle shrink (config.adaptive_shuffle_rows): a
-        # tail wave of 1-100 rows pays base-width near-empty shuffle
-        # tasks across ~10 stages; size this superstep's shuffles by the
-        # queue instead, and restore the session default afterwards
-        base_sp = None
-        if cfg.adaptive_shuffle_rows:
-            try:
-                base = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            except Exception:
-                base = 0
-            # size by the LARGER of queue depth and last superstep's
-            # children volume: the dominant shuffles (children dedup
-            # windows, push rank) scale with wave × out-link fanout,
-            # not queue depth — a 100-row wave of pages emitting
-            # hundreds of links each must not collapse those stages to
-            # 2 partitions (round-5 ADVICE)
-            q_rows = max(
-                1, state["queued_count"], self._last_children_count
-            )
-            target = -(-q_rows // cfg.adaptive_shuffle_rows)  # ceil
-            if base and target < base:
-                base_sp = base
-                self.spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(target)
-                )
+        base_sp = self._shrink_shuffles(state)
         try:
-            # truncate the wave's lineage: every downstream branch (fetch,
-            # fetch_meta, politeness bookkeeping, order table) would
-            # otherwise re-analyze the frontier + wave-select window tree on
-            # each of its many Dataset creations (driver-side cost, grows
-            # with plan size); the wave is materialized exactly once either
-            # way, and it is small by construction (Σ host budgets).
-            #
-            # Default config (no quota, no order table): checkpoint the
-            # TAGGED queue (one boolean `_wv` column over ONE window
-            # pass) instead of the wave alone — `rest` used to stay a
-            # live plan, so the frontier checkpoint and the dedup's
-            # in-run-keys branch re-ran the whole wave-select window
-            # once more per superstep (guide §2.4: consumers of one
-            # partitioning should share one execution). Both frames
-            # become cheap filters over one materialization; the quota /
-            # record_order shapes keep the original two-frame path
-            # (their extra windows run over the wave subset only).
-            if (
-                self.config.per_spider_quota is None
-                and not self.config.record_order
-            ):
-                tagged = self._wave_tagged(queued).localCheckpoint(
-                    eager=True
-                )
-                wave = tagged.where(F.col("_wv")).drop("_wv")
-                rest = tagged.where(~F.col("_wv")).drop("_wv")
-            else:
-                wave, rest = self._wave_plan(queued)
-                wave = wave.localCheckpoint(eager=True)
-            if os.environ.get("PHOLCUS_TIMING"):
-                print(f"  [t] wave-ckpt {time.time()-t0:.2f}")
-
-            return self._superstep_after_wave(
-                state, frontier, others, wave, rest, superstep, t0
-            )
+            return self._run_superstep(state, frontier, t0)
         finally:
+            self.spark.sparkContext.setJobDescription(None)
             if base_sp is not None:
                 self.spark.conf.set(
                     "spark.sql.shuffle.partitions", str(base_sp)
                 )
 
-    def _budget_ranked(self, queued: DataFrame) -> DataFrame:
-        """The shared wave-selection core: queued rows joined with the
-        broadcast robots delay dim, carrying ``_budget`` (per-host wave
-        budget) and ``_host_rank`` (politeness rank within host)."""
+    def _shrink_shuffles(self, state: dict) -> int | None:
+        """Small-wave shuffle shrink (config.adaptive_shuffle_rows): a
+        tail wave of 1-100 rows pays base-width near-empty shuffle tasks
+        across ~10 stages; size this superstep's shuffles by the queue
+        instead. Returns the session default to restore afterwards, or
+        None when nothing changed."""
+        cfg = self.config
+        if not cfg.adaptive_shuffle_rows:
+            return None
+        try:
+            base = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        except Exception:
+            base = 0
+        # size by the LARGER of queue depth and last superstep's
+        # children volume: the dominant shuffles (children dedup
+        # windows, push rank) scale with wave × out-link fanout, not
+        # queue depth — a 100-row wave of pages emitting hundreds of
+        # links each must not collapse those stages to 2 partitions
+        q_rows = max(1, state["queued_count"], self._last_children_count)
+        target = -(-q_rows // cfg.adaptive_shuffle_rows)  # ceil
+        if not base or target >= base:
+            return None
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(target))
+        return base
+
+    def _describe(self, superstep: int, phase: str) -> None:
+        """Label the Spark jobs that follow as ``ss{N}:{phase}``, so the
+        event log and UI attribute their cost to a superstep phase."""
+        self.spark.sparkContext.setJobDescription(f"ss{superstep}:{phase}")
+
+    def _checkpoint(self, df: DataFrame) -> DataFrame:
+        """Eager localCheckpoint owned by this superstep: released (see
+        :func:`release`) at the flush that commits the plans reading it.
+        Truncating lineage here keeps the many downstream Dataset
+        creations analyzing a one-leaf tree instead of re-walking the
+        frontier + wave-select + fetch plan each time."""
+        ck = df.localCheckpoint(eager=True)
+        self._pending_release.append(ck)
+        return ck
+
+    def _run_superstep(self, state: dict, frontier: DataFrame, t0: float) -> int:
+        """The superstep as a sequence of named phases: wave → fetch →
+        parse → emit → children → frontier → counts → commit. Each phase
+        that runs Spark jobs labels them ``ss{N}:{phase}``."""
+        cfg = self.config
+        superstep = state["superstep"] + 1
+        # python body-stage width for this superstep: queue depth is a
+        # (pre-wave) upper bound on every body batch below — size the
+        # body-store mapInPandas stages by DATA, not by inherited bucket
+        # width (config.python_rows_per_task; BASELINE §6's lesson)
+        py_tasks = (
+            max(1, -(-max(1, state["queued_count"]) // cfg.python_rows_per_task))
+            if cfg.python_rows_per_task
+            else None
+        )
+        tagged = self._select_wave(
+            frontier.where(F.col("state") == "queued"), superstep
+        )
+        wave = tagged.where(F.col("_wv")).drop("_wv")
+        rest = tagged.where(~F.col("_wv")).drop("_wv")
+        others = frontier.where(F.col("state") != "queued")
+
+        fetched = self._fetch(wave, superstep)
+        parsed = self._parse(fetched, superstep, py_tasks)
+        out = self._emit(parsed, fetched, superstep, py_tasks)
+        new_seen = fetched.where(F.col("ok")).where(~F.col("reloadable")).select(
+            "key"
+        )
+        failed_first, perm_failed, new_failed_wait = self._ack_failures(
+            fetched, others, superstep
+        )
+        kept = self._push_children(
+            parsed, new_seen, rest, failed_first, state, superstep
+        )
+        new_frontier = self._next_frontier(
+            rest, others, kept, new_failed_wait, state, superstep
+        )
+        n = self._count_wave(fetched, out["items"], perm_failed, kept, superstep)
+        self._last_children_count = n["children"]
+
+        # -- commit: skip appends known to be empty (each is a Spark job)
+        lineage = (
+            fetched.groupBy("host")
+            .agg(
+                F.count("*").alias("fetched"),
+                F.sum(F.col("ok").cast("int")).alias("succeeded"),
+            )
+            .withColumn("superstep", F.lit(superstep))
+        )
+        n_failed = n["wave"] - n["ok"]
+        metrics = self.spark.createDataFrame(
+            [
+                (
+                    superstep, n["wave"], n["ok"], n_failed, n["perm"],
+                    n["items"], n["images"], n["children"],
+                    float(time.time() - t0),
+                )
+            ],
+            "superstep int, wave_size long, fetched long, failed long, "
+            "failed_final long, items long, images long, children long, "
+            "seconds double",
+        )
+        appends = {"metrics": metrics}
+        if n["wave"] > 0:
+            appends["lineage"] = lineage
+        if n["ok"] > 0:
+            appends["url_seen"] = new_seen.withColumn(
+                "bucket", key_bucket_col(F.col("key"), cfg.num_buckets)
+            )
+        if n["items"] > 0:
+            appends["items"] = out["items"]
+        if n["files"] > 0:
+            appends["files"] = out["files"]
+        if n["images"] > 0 and out["images"] is not None:
+            appends["images"] = out["images"]
+        elif n["images"] > 0:
+            self._stage_image_sink(out["image_meta"], superstep, py_tasks)
+        if n["perm"] > 0:
+            appends["failures_final"] = perm_failed
+        if cfg.record_order and n["wave"] > 0:
+            # golden-order table (test instrument): the only place the
+            # global wave position is ranked — an unpartitioned window
+            # over the wave, never part of wave selection
+            appends["order"] = wave.select(
+                "spider", "key", "url",
+                F.lit(superstep).alias("superstep"),
+                (
+                    F.row_number().over(
+                        Window.orderBy(F.desc("priority"), F.asc("seq"))
+                    ) - 1
+                ).cast("int").alias("wave_pos"),
+                "priority", "seq",
+            )
+        state.update(
+            superstep=superstep,
+            next_seq=state["next_seq"] + n["children"],
+            max_page=(
+                state["max_page"] + n["children"]
+                if state["max_page"] is not None
+                else None
+            ),
+            # an EMPTY wave despite queued_count > 0 is counter drift
+            # (selection takes a non-empty prefix whenever any queued
+            # row exists — budget >= 1 per host): trust the frontier,
+            # not the counter, or the loop would spin forever
+            queued_count=(
+                n["children"]
+                if n["wave"] == 0
+                else state["queued_count"] - n["wave"] + n["children"]
+            ),
+            failed_wait_count=state["failed_wait_count"] + (n_failed - n["perm"]),
+        )
+        totals = state["totals"]
+        totals["fetched"] += n["ok"]
+        totals["failed"] += n_failed
+        totals["items"] += n["items"]
+        totals["images"] += n["images"]
+        if self._file_rules:
+            # resume-safe: older checkpoints predate the files counter
+            totals["files"] = totals.get("files", 0) + n["files"]
+        if self._frontier_df is not None:
+            # old checkpoint may still back pending append plans — defer
+            self._pending_release.append(self._frontier_df)
+        self._frontier_df = new_frontier
+        self._frontier_dirty = True
+        for name, df in appends.items():
+            self._pending.setdefault(name, []).append(
+                df.coalesce(cfg.append_partitions)
+            )
+        if n["ok"] > 0:
+            # appended keys sit in the uncovered tail until the sidecar
+            # is rebuilt (exact-joined meanwhile — _dedup_vs_history)
+            self._uncovered_est = (self._uncovered_est or 0) + n["ok"]
+        self._steps_since_flush += 1
+        if self._steps_since_flush >= cfg.commit_every:
+            self._flush(state)
+        return n["wave"]
+
+    def _select_wave(self, queued: DataFrame, superstep: int) -> DataFrame:
+        """Wave phase: the tagged queue (:meth:`_wave_tagged`),
+        checkpointed once. The wave and the rest of the queue are cheap
+        filters over this one materialization, and the wave is small by
+        construction (Σ host budgets)."""
+        self._describe(superstep, "wave")
+        return self._checkpoint(self._wave_tagged(queued))
+
+    def _wave_tagged(self, queued: DataFrame) -> DataFrame:
+        """Wave selection as ONE frame: the full queue plus a boolean
+        ``_wv`` (in-wave) column.
+
+        Politeness: ``row_number`` per host over (priority desc, seq
+        asc) against the host's budget — window / crawl delay from the
+        broadcast robots dim (reference pull order `matrix.go:101-124`).
+        Fair share (``per_spider_quota``, scheduler.go:92-99 avgRes) is
+        one more window, partitioned by (spider, in-budget): a prefix
+        of each spider's in-budget rows in (priority desc, seq) order —
+        the oracle's greedy — stays in the wave, the overflow stays
+        queued. Every window is partitioned, under any config; the
+        golden-order ``wave_pos`` is ranked only where the order table
+        is appended."""
         cfg = self.config
         # crawl_delay_ms = 0 falls back to the default exactly like the
         # oracle's `delay or default` (a zero divisor would otherwise
@@ -854,66 +1004,54 @@ class CrawlEngine:
         by_host = Window.partitionBy("host").orderBy(
             F.desc("priority"), F.asc("seq")
         )
-        return queued.join(
-            F.broadcast(self.robots.select("host", "crawl_delay_ms")),
-            "host",
-            "left",
-        ).withColumns(
-            {"_budget": budget, "_host_rank": F.row_number().over(by_host)}
-        )
-
-    def _wave_tagged(self, queued: DataFrame) -> DataFrame:
-        """Default-config wave selection as ONE frame: the full queue
-        with a boolean ``_wv`` (in-wave) column — a single window pass
-        whose checkpoint serves wave AND rest (`_wave_plan`'s two-frame
-        form re-executes the window per consumer). Only valid without
-        per_spider_quota / record_order (those rank the wave subset)."""
-        return self._budget_ranked(queued).withColumn(
-            "_wv", F.col("_host_rank") <= F.col("_budget")
-        ).drop("crawl_delay_ms", "_budget", "_host_rank")
-
-    def _wave_plan(self, queued: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Wave selection (politeness budgets + fair share) as a pure
-        plan: returns (wave, rest) BEFORE lineage truncation so tests
-        can assert the plan shape — with the default config this plan
-        contains no unpartitioned window (every `row_number` is
-        partitioned by host or spider); the single-partition golden-order
-        `wave_pos` window exists only behind the test-only
-        ``record_order`` opt-in."""
-        cfg = self.config
-        ranked = self._budget_ranked(queued)
-        wave = ranked.where(F.col("_host_rank") <= F.col("_budget")).drop(
-            "crawl_delay_ms", "_budget", "_host_rank"
-        )
-        rest = ranked.where(F.col("_host_rank") > F.col("_budget")).drop(
-            "crawl_delay_ms", "_budget", "_host_rank"
+        tagged = (
+            queued.join(
+                F.broadcast(self.robots.select("host", "crawl_delay_ms")),
+                "host",
+                "left",
+            )
+            .withColumns(
+                {"_budget": budget, "_host_rank": F.row_number().over(by_host)}
+            )
+            .withColumn("_wv", F.col("_host_rank") <= F.col("_budget"))
+            .drop("crawl_delay_ms", "_budget", "_host_rank")
         )
         if cfg.per_spider_quota is not None:
-            # fair share (scheduler.go:92-99 avgRes): per-spider cap over
-            # the host-budgeted wave; overflow returns to the queue. A
-            # prefix in (priority desc, seq) order == the oracle's greedy.
-            by_spider = Window.partitionBy("spider").orderBy(
+            by_spider = Window.partitionBy("spider", "_wv").orderBy(
                 F.desc("priority"), F.asc("seq")
             )
-            wave = wave.withColumn("_srank", F.row_number().over(by_spider))
-            rest = rest.unionByName(
-                wave.where(F.col("_srank") > cfg.per_spider_quota).drop("_srank")
+            tagged = tagged.withColumn(
+                "_wv",
+                F.col("_wv")
+                & (F.row_number().over(by_spider) <= cfg.per_spider_quota),
             )
-            wave = wave.where(F.col("_srank") <= cfg.per_spider_quota).drop(
-                "_srank"
-            )
-        # NOTE: no global sort of the wave. Within-wave position is the
-        # total order (-priority, seq) — used directly for child dedup /
-        # seq ordering. A materialized wave_pos (single-partition window)
-        # is computed ONLY for the golden-order table in test runs.
-        if cfg.record_order:
-            wave = wave.withColumn(
-                "wave_pos",
-                F.row_number().over(
-                    Window.orderBy(F.desc("priority"), F.asc("seq"))
-                ) - 1,
-            )
-        return wave, rest
+        return tagged
+
+    def _fetch(self, wave: DataFrame, superstep: int) -> DataFrame:
+        """Fetch phase: ``fetcher.fetch_meta`` once per wave, with the
+        request-side columns attached (author headers, session cookies,
+        proxy, User-Agent) and dropped again after, checkpointed. Every
+        bookkeeping branch reads this one materialization. A body-store
+        or fixture fetcher returns metadata only (bodies attach per
+        branch, for just that branch's rows); a live fetcher returns the
+        full fetch, so the checkpoint is also what makes it run once."""
+        self._describe(superstep, "fetch")
+        out = self._attach_cookies(self._attach_headers(wave))
+        dim = self._proxy_dim_for(superstep)
+        if dim is not None:
+            from .proxy import assign_proxy
+
+            # tick = superstep: the rotation clock (proxy.go:162-173
+            # UpdateTicker advances curIndex per period)
+            out = assign_proxy(out, dim, superstep)
+        if self.config.ua_mode:
+            from .proxy import assign_user_agent
+
+            out = assign_user_agent(out, self.config.ua_mode)
+        fetched = self._checkpoint(
+            self.fetcher.fetch_meta(out).drop("hdr", "cookie", "proxy", "ua")
+        )
+        return self._harvest_cookies(fetched)
 
     def _attach_headers(self, wave: DataFrame) -> DataFrame:
         """Author-set request headers out (`request.Request{Header:}`,
@@ -947,7 +1085,7 @@ class CrawlEngine:
             "cookie", F.coalesce(F.col("cookie"), F.lit(""))
         )
 
-    def _harvest_cookies(self, fetched: DataFrame) -> None:
+    def _harvest_cookies(self, fetched: DataFrame) -> DataFrame:
         """Session cookies in: fold harvested Set-Cookie headers into
         the store in wave order (priority desc, seq asc — the oracle's
         sequential DoHistory order, so same-name updates are
@@ -965,9 +1103,10 @@ class CrawlEngine:
         hosts, not responses, to the driver each superstep. The
         driver-resident jar itself stays O(hosts × cookie names); that
         envelope is the login-session use case the reference's cookie
-        jar serves (surf's per-client jar), not a per-page cache."""
+        jar serves (surf's per-client jar), not a per-page cache.
+        Returns ``fetched`` without the ``set_cookies`` column."""
         if not getattr(self.fetcher, "enable_cookie", False):
-            return
+            return fetched
 
         rows = fetched.where(F.size("set_cookies") > 0).select(
             "host", "priority", "seq", "set_cookies"
@@ -1016,165 +1155,97 @@ class CrawlEngine:
             for name in json.loads(r.dels):
                 jar.pop(name, None)
             jar.update(json.loads(r.sets))
+        return fetched.drop("set_cookies")
 
-    def _superstep_after_wave(
-        self, state, frontier, others, wave, rest, superstep, t0
-    ):
-        cfg = self.config
 
-        # -- 2. fetch -----------------------------------------------------
-        # bodies are NEVER cached: the metadata projection (tiny rows) is
-        # what every bookkeeping branch consumes; body-bearing branches
-        # (extract, image write) each stream bodies exactly once. With a
-        # cheap-meta fetcher the metadata pass never touches bodies at all.
-        has_store = getattr(self.fetcher, "store", None) is not None
-        # python body-stage width for this superstep: queue depth is a
-        # (pre-wave) upper bound on every body batch below — size the
-        # mapInPandas stages by DATA, not by inherited bucket width
-        # (config.python_rows_per_task; BASELINE §6's lesson)
-        py_tasks = None
-        if has_store and self.config.python_rows_per_task:
-            py_tasks = max(
-                1,
-                -(-max(1, state["queued_count"])
-                  // self.config.python_rows_per_task),
-            )
-        # author-set request headers ride every fetch (dropped with the
-        # other transport columns below)
-        wave = self._attach_headers(wave)
-        if has_store:
-            # body-store fetcher: the JVM plan carries metadata only;
-            # each body-consuming branch filters on metadata FIRST and
-            # attaches bytes python-side for just its rows (filters do
-            # not push through mapInPandas, so attach-then-filter would
-            # ship every body)
-            fetched_full = None
-            # localCheckpoint (not persist): the metadata join is
-            # materialized exactly once — it feeds every branch anyway —
-            # and TRUNCATES the logical plan, so the ~15 downstream
-            # Dataset creations per superstep analyze a one-leaf tree
-            # instead of re-walking frontier+wave-select+join each time
-            # (driver-side plan-build was ~3s/superstep at fixture scale)
-            fetched = (
-                self.fetcher.fetch_meta(wave)
-                .drop("hdr")
-                .localCheckpoint(eager=True)
-            )
-        elif getattr(self.fetcher, "has_cheap_meta", False):
-            # deterministic fetcher: body branches re-derive lazily
-            fetched_full = self.fetcher.fetch(wave).drop("hdr")
-            fetched = (
-                self.fetcher.fetch_meta(wave)
-                .drop("hdr")
-                .localCheckpoint(eager=True)
-            )
-        else:
-            # live fetcher: fetch exactly once, cache bodies (idempotence)
-            wave_out = self._attach_cookies(wave)
-            dim = self._proxy_dim_for(superstep)
-            if dim is not None:
-                from .proxy import assign_proxy
+    def _ack_failures(
+        self, fetched: DataFrame, others: DataFrame, superstep: int
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """The failure state machine as lazy plans: (first failure per
+        key, permanent failures, new failed_wait frontier rows).
 
-                # tick = superstep: the rotation clock (proxy.go:162-173
-                # UpdateTicker advances curIndex per period)
-                wave_out = assign_proxy(wave_out, dim, superstep)
-            if self.config.ua_mode:
-                from .proxy import assign_user_agent
-
-                wave_out = assign_user_agent(wave_out, self.config.ua_mode)
-            fetched_cached = self.fetcher.fetch(wave_out).persist()
-            # the PERSISTED handle must be the one unpersisted later:
-            # uncacheQuery matches on plan identity, so unpersisting the
-            # .drop() projection below would strand the cached parent
-            # (one wave of raw bodies leaked per superstep)
-            self._pending_unpersist.append(fetched_cached)
-            self._harvest_cookies(fetched_cached)
-            # session/transport columns leave the plan here: downstream
-            # stores / unions see the exact pre-attach schema
-            fetched_full = fetched_cached.drop(
-                "cookie", "set_cookies", "proxy", "ua", "hdr"
-            )
-            fetched = fetched_full
-        if os.environ.get("PHOLCUS_TIMING"):
-            print(f"  [t] fetch-ckpt {time.time()-t0:.2f}")
-        ok = fetched.where(F.col("ok"))
-        failed = fetched.where(~F.col("ok"))
-        # same-key repeat failures within one wave (only possible for
-        # reloadable rows — non-reloadable keys are unique in the queue):
-        # the FIRST failure (wave order) drives the failure store and the
-        # within-wave child rule; repeats go straight to the permanent
-        # failure history, like the reference's sequential DoHistory
-        # hitting an already-stashed key (matrix.go:160-168)
-        _wave_fail_rank = Window.partitionBy("key").orderBy(
+        Same-key repeat failures within one wave (only possible for
+        reloadable rows — non-reloadable keys are unique in the queue):
+        the FIRST failure (wave order) drives the failure store and the
+        within-wave child rule; repeats go straight to the permanent
+        failure history, like the reference's sequential DoHistory
+        hitting an already-stashed key (matrix.go:160-168). A first
+        failure whose key already sits in the failure store is
+        permanent too."""
+        by_key = Window.partitionBy("key").orderBy(
             F.desc("priority"), F.asc("seq")
         )
-        failed_ranked = failed.withColumn(
-            "_frank", F.row_number().over(_wave_fail_rank)
+        failed = fetched.where(~F.col("ok")).withColumn(
+            "_frank", F.row_number().over(by_key)
         )
-        failed_first = failed_ranked.where(F.col("_frank") == 1).drop("_frank")
-        failed_repeat = failed_ranked.where(F.col("_frank") > 1).drop("_frank")
+        failed_first = failed.where(F.col("_frank") == 1).drop("_frank")
+        failed_repeat = failed.where(F.col("_frank") > 1).drop("_frank")
+        store_keys = others.where(
+            F.col("state").isin("failed_wait", "failed_nil")
+        ).select(F.col("key").alias("_sk"))
+        failed2 = failed_first.join(
+            store_keys, failed_first["key"] == store_keys["_sk"], "left"
+        )
+        perm_cols = [
+            "key", "spider", "rule", "url", F.lit(superstep).alias("superstep")
+        ]
+        perm_failed = (
+            failed2.where(F.col("_sk").isNotNull())
+            .select(*perm_cols)
+            .unionByName(failed_repeat.select(*perm_cols))
+        )
+        new_failed_wait = failed2.where(F.col("_sk").isNull()).select(
+            "key", "spider", "rule", "url", "host", "method", "post_data",
+            "priority", "seq", "depth", "parent_url",
+            (F.col("tries") + 1).alias("tries"), "retried", "reloadable",
+            "temp",
+            F.lit("failed_wait").alias("state"),
+        )
+        return failed_first, perm_failed, new_failed_wait
 
-        # -- 3/4. extract + emit -------------------------------------------
-        from .extract import extract_all_vec
-        from .validate import validate_image_udf
-
-        _file_rules = {
-            fr.rule: fr.name_or_ext
-            for fr in getattr(self.spec, "file_rules", ()) or ()
-        }
-        _html_filter = F.col("ok") & (F.col("rule") != self.spec.image_rule)
-        if _file_rules:
+    def _parse(
+        self, fetched: DataFrame, superstep: int, py_tasks: int | None
+    ) -> DataFrame:
+        """Parse phase: links, figures and ExtractRule output of every
+        ok page in one decoded-body pass (``fetcher.parse_pages``),
+        cached. Bodies never enter the cache. Metadata is filtered
+        FIRST: filters do not push through mapInPandas."""
+        self._describe(superstep, "parse")
+        html = F.col("ok") & (F.col("rule") != self.spec.image_rule)
+        if self._file_rules:
             # FileOutput rules consume the raw body (context.go:252-256
             # io.ReadAll) — never parsed as a page
-            _html_filter = _html_filter & ~F.col("rule").isin(
-                list(_file_rules)
-            )
-        if has_store:
-            # fused read+parse inside the body-read task — html bodies
-            # never enter the JVM plan (metadata filtered FIRST: filters
-            # do not push through mapInPandas)
-            parsed = self.fetcher.parse_pages(
-                fetched.where(_html_filter), self.spec.extract_rules,
-                getattr(self.spec, "carry_concat", ()) or (),
-                n_tasks=py_tasks,
-            ).persist()
-        else:
-            html_ok = fetched_full.where(_html_filter)
-            parsed = (
-                html_ok.withColumn(
-                    "_ex",
-                    extract_all_vec(
-                        self.spec.extract_rules,
-                        getattr(self.spec, "carry_concat", ()) or (),
-                    )("body", "content_type", "url", "rule", "temp"),
-                )
-                .withColumns(
-                    {
-                        "out_links": F.col("_ex.out_links"),
-                        "figures": F.col("_ex.figures"),
-                        "dsl_items": F.col("_ex.dsl_items"),
-                        "dsl_links": F.col("_ex.dsl_links"),
-                        "dsl_carry": F.col("_ex.dsl_carry"),
-                    }
-                )
-                .drop("_ex", "body")  # bodies leave the plan before the cache
-                .persist()
-            )
+            html = html & ~F.col("rule").isin(list(self._file_rules))
+        parsed = self.fetcher.parse_pages(
+            fetched.where(html), self.spec.extract_rules,
+            getattr(self.spec, "carry_concat", ()) or (),
+            n_tasks=py_tasks,
+        ).persist()
+        self._pending_release.append(parsed)
+        return parsed
 
+    def _emit(
+        self, parsed: DataFrame, fetched: DataFrame, superstep: int,
+        py_tasks: int | None,
+    ) -> dict:
+        """Emit phase, as lazy append plans: ``items`` (figure items
+        plus emitting ExtractRule items, cached), ``images`` (None when
+        the python image sink writes them; ``image_meta`` is then its
+        metadata input) and ``files`` (None without FileOutput rules).
+        Images are NOT cached or counted on their own branch: their row
+        count is the ok image-rule metadata count, so the decode and the
+        body stream run exactly once — inside the flush write."""
+        from .extract import NOEMIT_KEY, OUTRULE_KEY
+
+        stamp = {"superstep": F.lit(superstep), "download_time": _dlt()}
         items = (
             parsed.where(F.col("rule").isin(list(self.spec.item_rules)))
             .select(
-                "spider",
-                "rule",
-                "url",
-                F.col("parent_url"),
+                "spider", "rule", "url", "parent_url",
                 F.explode("figures").alias("fig"),
             )
             .select(
-                "spider",
-                "rule",
-                "url",
-                "parent_url",
+                "spider", "rule", "url", "parent_url",
                 F.create_map(
                     F.lit("image_id"),
                     F.regexp_extract(F.col("fig.src"), r"/img/(.+)\.(png|jpe?g)$", 1),
@@ -1182,22 +1253,16 @@ class CrawlEngine:
                     F.col("fig.caption"),
                 ).alias("data"),
             )
-            .withColumns({"superstep": F.lit(superstep), "download_time": _dlt()})
+            .withColumns(stamp)
         )
+        # user-authored ExtractRules (the ParseFunc surface), computed in
+        # the same parse pass with temp_fields already merged. emit=False
+        # rules (ParseFunc without ctx.Output — baidunews.go:121-136)
+        # drive links/carries/pagination but output nothing: the parse
+        # tags their items with NOEMIT_KEY, filtered here, so emitting
+        # and non-emitting rules may share one rule name (baidusearch).
+        # Rule names where nothing emits skip the union entirely.
         if self.spec.extract_rules:
-            # user-authored ExtractRules (the ParseFunc surface),
-            # exploded into the same items table as the figure items.
-            # Store mode: already computed in the fused parse kernel;
-            # otherwise one vectorized body pass.
-            # emit=False rules (ParseFunc without ctx.Output —
-            # baidunews.go:121-136) drive links/carries/pagination but
-            # contribute no output rows. Emit is per ExtractRule: the
-            # fused kernel tags non-emitting rules' items with
-            # NOEMIT_KEY, filtered (and stripped) here — so emitting
-            # and non-emitting ExtractRules may share one rule name
-            # (baidusearch: result items Output, the page-level
-            # next-link probe doesn't). Rule names where NOTHING emits
-            # skip the union entirely.
             dsl_rules = sorted(
                 {
                     er.rule
@@ -1205,148 +1270,112 @@ class CrawlEngine:
                     if getattr(er, "emit", True)
                 }
             )
-            # both modes: the fused parse already computed dsl_items in
-            # the same body pass as links/figures
-            # temp_fields merged task-side inside the fused parse (the
-            # UDF/kernel receives the request temp), so items here are
-            # already carry-complete — including multi-hop re-carry
-            from .extract import NOEMIT_KEY, OUTRULE_KEY
-
-            dsl_src = (
+            dsl = (
                 parsed.where(F.col("rule").isin(dsl_rules))
                 .select(
                     "spider", "rule", "url", "parent_url",
                     F.explode("dsl_items").alias("data"),
                 )
-                .where(
-                    ~F.map_contains_key(F.col("data"), F.lit(NOEMIT_KEY))
-                )
+                .where(~F.map_contains_key(F.col("data"), F.lit(NOEMIT_KEY)))
                 # ctx.Parse relabel (ExtractRule.out_rule → SetRuleName,
                 # context.go:363): the item's rule column is the
                 # delegated name; the marker never reaches the table
                 .withColumn(
                     "rule",
                     F.coalesce(
-                        F.try_element_at(
-                            F.col("data"), F.lit(OUTRULE_KEY)
-                        ),
+                        F.try_element_at(F.col("data"), F.lit(OUTRULE_KEY)),
                         F.col("rule"),
                     ),
                 )
                 .withColumn(
                     "data",
                     F.map_filter(
-                        F.col("data"),
-                        lambda k, _v: k != F.lit(OUTRULE_KEY),
+                        F.col("data"), lambda k, _v: k != F.lit(OUTRULE_KEY)
                     ),
                 )
-            )  # download_time/superstep added with the figure items below
-            items = items.unionByName(
-                dsl_src.withColumns(
-                    {"superstep": F.lit(superstep), "download_time": _dlt()}
-                )
             )
+            items = items.unionByName(dsl.withColumns(stamp))
+        items = items.persist()
+        self._pending_release.append(items)
 
-        use_pysink = self.config.python_image_sink and has_store
-        _img_filter = F.col("ok") & (F.col("rule") == self.spec.image_rule)
-        if use_pysink:
-            image_ok = fetched.where(_img_filter)  # metadata only
-        elif has_store:
-            image_ok = self.fetcher.attach_bodies(
-                fetched.where(_img_filter), n_tasks=py_tasks
-            )
-        else:
-            image_ok = fetched_full.where(_img_filter)
-        images = None if use_pysink else (
-            image_ok.withColumn(
-                "val", validate_image_udf("body", "content_type", "url")
-            )
-            .select(
-                F.coalesce(
-                    F.try_element_at(F.col("temp"), F.lit("image_id")),
-                    F.regexp_extract("url", r"/img/(.+)\.(png|jpe?g)$", 1),
-                ).alias("image_id"),
-                F.col("body").alias("bytes"),
-                F.col("val.w").alias("w"),
-                F.col("val.h").alias("h"),
-                F.when(F.col("content_type").contains("jpeg"), "jpeg")
-                .otherwise("png")
-                .alias("fmt"),
-                F.coalesce(
-                    F.try_element_at(F.col("temp"), F.lit("caption")), F.lit("")
-                ).alias("caption"),
-                F.col("val.phash").alias("phash"),
-                F.col("val.ok").alias("valid"),
-                F.col("val.error").alias("error"),
-                F.col("url"),
-                F.col("parent_url"),
-            )
-            .withColumns({"superstep": F.lit(superstep), "download_time": _dlt()})
+        out = {"items": items, "images": None, "files": None}
+        image_meta = fetched.where(
+            F.col("ok") & (F.col("rule") == self.spec.image_rule)
         )
-        files = None
-        if _file_rules:
+        if self.config.python_image_sink and getattr(self.fetcher, "store", None):
+            out["image_meta"] = image_meta
+        else:
+            from .validate import validate_image_udf
+
+            out["images"] = (
+                self.fetcher.attach_bodies(image_meta, n_tasks=py_tasks)
+                .withColumn("val", validate_image_udf("body", "content_type", "url"))
+                .select(
+                    F.coalesce(
+                        F.try_element_at(F.col("temp"), F.lit("image_id")),
+                        F.regexp_extract("url", r"/img/(.+)\.(png|jpe?g)$", 1),
+                    ).alias("image_id"),
+                    F.col("body").alias("bytes"),
+                    F.col("val.w").alias("w"),
+                    F.col("val.h").alias("h"),
+                    F.when(F.col("content_type").contains("jpeg"), "jpeg")
+                    .otherwise("png")
+                    .alias("fmt"),
+                    F.coalesce(
+                        F.try_element_at(F.col("temp"), F.lit("caption")), F.lit("")
+                    ).alias("caption"),
+                    F.col("val.phash").alias("phash"),
+                    F.col("val.ok").alias("valid"),
+                    F.col("val.error").alias("error"),
+                    F.col("url"),
+                    F.col("parent_url"),
+                )
+                .withColumns(stamp)
+            )
+        if self._file_rules:
             # FileCells (context.go:247-284): raw body + derived name.
             # Name derivation is pure JVM (file_output_name_col); the
             # per-rule nameOrExt constants fold into a when-chain.
             from .sinks import file_output_name_col
 
-            _file_filter = F.col("ok") & F.col("rule").isin(list(_file_rules))
-            if has_store:
-                file_ok = self.fetcher.attach_bodies(
-                    fetched.where(_file_filter), n_tasks=py_tasks
-                )
-            else:
-                file_ok = fetched_full.where(_file_filter)
             name_col = F.lit(None).cast("string")
-            for r, arg in _file_rules.items():
+            for r, arg in self._file_rules.items():
                 name_col = F.when(
                     F.col("rule") == r, file_output_name_col(F.col("url"), arg)
                 ).otherwise(name_col)
-            files = (
-                file_ok.select(
-                    "spider",
-                    "rule",
-                    "url",
-                    "parent_url",
+            file_meta = fetched.where(
+                F.col("ok") & F.col("rule").isin(list(self._file_rules))
+            )
+            out["files"] = (
+                self.fetcher.attach_bodies(file_meta, n_tasks=py_tasks)
+                .select(
+                    "spider", "rule", "url", "parent_url",
                     name_col.alias("name"),
                     F.col("body").alias("bytes"),
                     F.length("body").cast("long").alias("size"),
                 )
-                .withColumns(
-                    {"superstep": F.lit(superstep), "download_time": _dlt()}
-                )
+                .withColumns(stamp)
             )
-        items = items.persist()
-        # images is intentionally NOT persisted and NOT counted via its own
-        # branch: its row count equals the ok image-rule rows (metadata),
-        # so the decode UDF + body stream execute exactly once — inside
-        # the flush write
+        return out
 
-        # -- 5. children push ----------------------------------------------
+    def _push_children(
+        self, parsed: DataFrame, new_seen: DataFrame, rest: DataFrame,
+        failed_first: DataFrame, state: dict, superstep: int,
+    ) -> DataFrame:
+        """Children phase: emitted links → deduped, limit-cut children
+        in push order with a dense ``_push_rank`` (cached)."""
+        self._describe(superstep, "children")
         # checkpoint: the emission chain (explode -> canonicalize UDF ->
-        # route -> robots -> key) is re-analyzed by every dedup/rank/
-        # failure Dataset below; truncating it once keeps those trees
-        # flat. Wave-proportional rows, materialized once either way.
-        if os.environ.get("PHOLCUS_TIMING_DETAIL"):
-            # measurement aid only: force the parse cache so the
-            # children checkpoint below attributes parse vs emit time
-            parsed.count()
-            print(f"  [t] parse-forced {time.time()-t0:.2f}")
-        children = self._emit_children(parsed, superstep).localCheckpoint(
-            eager=True
-        )
-        if os.environ.get("PHOLCUS_TIMING"):
-            print(f"  [t] children-ckpt {time.time()-t0:.2f}")
+        # route -> robots -> key) is re-analyzed by every dedup/rank
+        # Dataset below; truncating it once keeps those trees flat
+        children = self._checkpoint(self._emit_children(parsed, superstep))
         # dedup (matrix.go:81-86 hasHistory = success-history ∪ temp-history):
-        #   in-run keys (this wave's successes + still-queued) are small and
-        #   checked with a plain anti-join; the historical url_seen — the
-        #   10^10-scale side — goes through the Bloom sidecar so the exact
-        #   anti-join only sees probable hits + the uncovered recent tail.
-        new_seen = ok.where(~F.col("reloadable")).select("key")
-        # no distinct: the right side of a left_anti join needs no
-        # dedup (identical result, one aggregate+exchange less per
-        # superstep — guide §2.4 "a distinct on data that is already
-        # unique"-class removal; here duplicates are simply harmless)
+        # in-run keys (this wave's successes + still-queued) are small and
+        # checked with a plain anti-join (no distinct: duplicates on the
+        # right side of a left_anti are harmless); the historical
+        # url_seen — the 10^10-scale side — goes through the Bloom
+        # sidecar so the exact anti-join only sees probable hits + the
+        # uncovered recent tail
         in_run_keys = new_seen.union(rest.select("key"))
         non_reload = children.where(~F.col("reloadable")).join(
             in_run_keys, "key", "left_anti"
@@ -1390,12 +1419,24 @@ class CrawlEngine:
         kept = dense_push_rank(
             kept_base,
             max(1, self.config.frontier_partitions),
-            unpersist_into=self._pending_unpersist,
+            unpersist_into=self._pending_release,
         )
         if state["max_page"] is not None:
-            allowed = max(0, -state["max_page"])
-            kept = kept.where(F.col("_push_rank") <= allowed)
+            kept = kept.where(F.col("_push_rank") <= max(0, -state["max_page"]))
         kept = kept.persist()
+        self._pending_release.extend([kept_base, kept])
+        return kept
+
+    def _next_frontier(
+        self, rest: DataFrame, others: DataFrame, kept: DataFrame,
+        new_failed_wait: DataFrame, state: dict, superstep: int,
+    ) -> DataFrame:
+        """Frontier phase: rest of the queue ∪ non-queued rows ∪ the new
+        children (dense seq from ``state['next_seq']``) ∪ new
+        failed_wait rows, checkpointed. It runs BEFORE the counts job:
+        this checkpoint forces the expensive children dedup + rank spine
+        exactly once, and the counts then read materialized branches."""
+        self._describe(superstep, "frontier")
         new_rows = kept.select(
             "key", "spider", "rule",
             F.col("curl").alias("url"), "host",
@@ -1406,85 +1447,38 @@ class CrawlEngine:
             "reloadable", "temp",
             F.lit("queued").alias("state"),
         )
-
-        # -- 6. ack / failure state machine --------------------------------
-        fail_store_keys = others.where(
-            F.col("state").isin("failed_wait", "failed_nil")
-        ).select(F.col("key").alias("_sk"))
-        failed2 = failed_first.join(
-            fail_store_keys, failed_first["key"] == fail_store_keys["_sk"], "left"
-        )
-        perm_failed = failed2.where(F.col("_sk").isNotNull()).select(
-            "key", "spider", "rule", "url",
-            F.lit(superstep).alias("superstep"),
-        ).unionByName(
-            failed_repeat.select(
-                "key", "spider", "rule", "url",
-                F.lit(superstep).alias("superstep"),
-            )
-        )
-        new_failed_wait = failed2.where(F.col("_sk").isNull()).select(
-            "key", "spider", "rule", "url", "host", "method", "post_data",
-            "priority", "seq", "depth", "parent_url",
-            (F.col("tries") + 1).alias("tries"), "retried", "reloadable",
-            "temp",
-            F.lit("failed_wait").alias("state"),
-        )
-
-        # -- counts: ONE job over the persisted branches ---------------------
-        import os as _os
-        _dbg = _os.environ.get("PHOLCUS_TIMING")
-        if _dbg:
-            print(f"  [t] plan-build {time.time()-t0:.2f}")
-        # -- 7a. next frontier FIRST (round-5 superstep fixed-cost cut):
-        # the frontier checkpoint forces the expensive spine (children
-        # dedup + rank via new_rows) exactly once; the counts job below
-        # then reads persisted/materialized branches and costs one
-        # near-free pass instead of re-materializing the spine itself.
-        # new_rows only needs state["next_seq"] (pre-update), never the
-        # counts, so the reorder is purely a scheduling change.
-        new_frontier = (
-            rest.select(*[c for c in rest.columns])
-            .unionByName(others)
+        return (
+            rest.unionByName(others)
             .unionByName(new_rows)
             .unionByName(new_failed_wait)
+            .coalesce(self.config.frontier_partitions)
+            .localCheckpoint(eager=True)
         )
-        _tf = time.time()
-        new_frontier = new_frontier.coalesce(
-            self.config.frontier_partitions
-        ).localCheckpoint(eager=True)
-        if _dbg:
-            print(f"  [t] frontier-ckpt {time.time()-_tf:.2f}")
-        _tc = time.time()
-        # wave/ok/images/files are all conditional counts over ONE scan
-        # of the checkpointed fetch metadata — a single aggregate
-        # replaces four separate tagged scans of the same rows (the
-        # remaining branches read different caches and stay tagged)
-        _ok1 = F.col("ok").cast("long")
-        fetched_aggs = [
-            F.count("*").alias("wave"),
-            F.sum(_ok1).alias("ok"),
-            F.sum(
-                (F.col("ok") & (F.col("rule") == self.spec.image_rule))
-                .cast("long")
-            ).alias("images"),
-        ]
-        if _file_rules:
-            fetched_aggs.append(
-                F.sum(
-                    (F.col("ok") & F.col("rule").isin(list(_file_rules)))
-                    .cast("long")
-                ).alias("files")
-            )
-        fetched_counts = fetched.agg(*fetched_aggs).select(
+
+    def _count_wave(
+        self, fetched: DataFrame, items: DataFrame, perm_failed: DataFrame,
+        kept: DataFrame, superstep: int,
+    ) -> dict[str, int]:
+        """Counts phase: ONE job. wave/ok/images/files are conditional
+        counts over one scan of the checkpointed fetch metadata; items,
+        permanent failures and children read their caches."""
+        self._describe(superstep, "counts")
+        ok_is = lambda cond: F.sum((F.col("ok") & cond).cast("long"))  # noqa: E731
+        aggs = {
+            "wave": F.count("*"),
+            "ok": F.sum(F.col("ok").cast("long")),
+            "images": ok_is(F.col("rule") == self.spec.image_rule),
+        }
+        if self._file_rules:
+            aggs["files"] = ok_is(F.col("rule").isin(list(self._file_rules)))
+        fetched_counts = fetched.agg(
+            *[c.alias(name) for name, c in aggs.items()]
+        ).select(
             F.explode(
                 F.create_map(
                     *[
                         c
-                        for name in (
-                            ["wave", "ok", "images"]
-                            + (["files"] if _file_rules else [])
-                        )
+                        for name in aggs
                         for c in (F.lit(name), F.coalesce(F.col(name), F.lit(0)))
                     ]
                 )
@@ -1499,154 +1493,54 @@ class CrawlEngine:
             .agg(F.count("*").alias("n"))
             .unionByName(fetched_counts)
         )
-        counts = dict((r.t, r.n) for r in counts_src.collect())
-        if _dbg:
-            print(f"  [t] count-job {time.time()-_tc:.2f}")
-        wave_size = counts.get("wave", 0)
-        n_ok = counts.get("ok", 0)
-        n_failed = wave_size - n_ok
-        n_perm_failed = counts.get("perm", 0)
-        n_items = counts.get("items", 0)
-        n_images = counts.get("images", 0)
-        n_files = counts.get("files", 0)
-        n_children = counts.get("children", 0)
-        self._last_children_count = n_children
-
-        # -- lineage: per-host (the crawl's natural partition) --------------
-        lineage = (
-            fetched.groupBy("host")
-            .agg(
-                F.count("*").alias("fetched"),
-                F.sum(F.col("ok").cast("int")).alias("succeeded"),
-            )
-            .withColumn("superstep", F.lit(superstep))
+        counts = dict.fromkeys(
+            ("wave", "ok", "images", "files", "items", "perm", "children"), 0
         )
-        metrics = self.spark.createDataFrame(
-            [
-                (
-                    superstep, wave_size, n_ok, n_failed, n_perm_failed,
-                    n_items, n_images, n_children,
-                    float(time.time() - t0),
-                )
-            ],
-            "superstep int, wave_size long, fetched long, failed long, "
-            "failed_final long, items long, images long, children long, "
-            "seconds double",
+        counts.update((r.t, r.n) for r in counts_src.collect())
+        return counts
+
+    def _stage_image_sink(
+        self, image_meta: DataFrame, superstep: int, py_tasks: int | None
+    ) -> None:
+        """Python image sink: decode + validate + write image rows inside
+        the body-read task (body bytes never cross into the JVM). The
+        staged dir is published and adopted by the next flush."""
+        from .validate import images_arrow_schema, make_image_sink_kernel
+
+        # stage OUTSIDE the table dir (.staging is invisible to the
+        # streaming consumer's {table}/* glob and to Spark scans), and
+        # clear any leftover from a crashed prior run — a resumed run
+        # with a different config must not adopt stale orphan part files
+        stage_rel = f"images/stage-{superstep:06d}"
+        stage_dir = os.path.join(
+            self.catalog.root, ".staging", f"images-stage-{superstep:06d}"
         )
-
-        # -- 7. commit (frontier already checkpointed above) -----------------
-        # skip writes we know are empty — each append is a Spark job
-        appends = {"metrics": metrics}
-        if wave_size > 0:
-            appends["lineage"] = lineage
-        if n_ok > 0:
-            appends["url_seen"] = new_seen.withColumn(
-                "bucket", key_bucket_col(F.col("key"), self.config.num_buckets)
-            )
-        if n_items > 0:
-            appends["items"] = items
-        if n_files > 0:
-            appends["files"] = files
-        if n_images > 0 and not use_pysink:
-            appends["images"] = images
-        elif n_images > 0:
-            from .validate import images_arrow_schema, make_image_sink_kernel
-
-            # stage OUTSIDE the table dir (.staging is invisible to the
-            # streaming consumer's {table}/* glob and to Spark scans),
-            # and clear any leftover from a crashed prior run — a
-            # resumed run with a different config must not adopt stale
-            # orphan part files (round-2 ADVICE); the flush publishes
-            # the dir into images/ with one rename
-            stage_rel = f"images/stage-{superstep:06d}"
-            stage_dir = os.path.join(
-                self.catalog.root, ".staging", f"images-stage-{superstep:06d}"
-            )
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            os.makedirs(stage_dir)
-            manifest = self.fetcher.store.sink_map_bodies(
-                image_ok.select(
-                    "url", "parent_url", "content_type", "temp"
+        shutil.rmtree(stage_dir, ignore_errors=True)
+        os.makedirs(stage_dir)
+        manifest = self.fetcher.store.sink_map_bodies(
+            image_meta.select("url", "parent_url", "content_type", "temp"),
+            make_image_sink_kernel(
+                superstep,
+                session_tz=self.spark.conf.get(
+                    "spark.sql.session.timeZone", "UTC"
                 ),
-                make_image_sink_kernel(
-                    superstep,
-                    session_tz=self.spark.conf.get(
-                        "spark.sql.session.timeZone", "UTC"
-                    ),
-                ),
-                "image_id string, valid boolean",
-                n_tasks=py_tasks,
-                sink_dir=stage_dir,
-                sink_tag=f"s{superstep:06d}",
-                sink_arrow_schema=images_arrow_schema(),
-            )
-            self._pending_adopt.setdefault("images", []).append(
-                (manifest, stage_dir, stage_rel)
-            )
-        if n_perm_failed > 0:
-            appends["failures_final"] = perm_failed
-        if self.config.record_order and wave_size > 0:
-            appends["order"] = wave.select(
-                "spider", "key", "url",
-                F.lit(superstep).alias("superstep"),
-                F.col("wave_pos").cast("int"),
-                "priority", "seq",
-            )
-        state.update(
-            superstep=superstep,
-            next_seq=state["next_seq"] + n_children,
-            max_page=(
-                state["max_page"] + n_children
-                if state["max_page"] is not None
-                else None
             ),
-            # an EMPTY wave despite queued_count > 0 is counter drift
-            # (selection takes a non-empty prefix whenever any queued
-            # row exists — budget >= 1 per host): trust the frontier,
-            # not the counter, or the loop would spin forever
-            queued_count=(
-                n_children
-                if wave_size == 0
-                else state["queued_count"] - wave_size + n_children
-            ),
-            failed_wait_count=state["failed_wait_count"]
-            + (n_failed - n_perm_failed),
+            "image_id string, valid boolean",
+            n_tasks=py_tasks,
+            sink_dir=stage_dir,
+            sink_tag=f"s{superstep:06d}",
+            sink_arrow_schema=images_arrow_schema(),
         )
-        state["totals"]["fetched"] += n_ok
-        state["totals"]["failed"] += n_failed
-        state["totals"]["items"] += n_items
-        state["totals"]["images"] += n_images
-        if _file_rules:
-            # resume-safe: older checkpoints predate the files counter
-            state["totals"]["files"] = (
-                state["totals"].get("files", 0) + n_files
-            )
-        ap = self.config.append_partitions
-        appends = {k: v.coalesce(ap) for k, v in appends.items()}
-        if self._frontier_df is not None:
-            # old checkpoint may still back pending append plans — defer
-            self._pending_unpersist.append(self._frontier_df)
-        self._frontier_df = new_frontier
-        self._frontier_dirty = True
-        for name, df in appends.items():
-            self._pending.setdefault(name, []).append(df)
-        self._pending_unpersist.extend([fetched, parsed, kept_base, kept, items])
-        if n_ok > 0:
-            # appended keys sit in the uncovered tail until the sidecar
-            # is rebuilt (exact-joined meanwhile — _dedup_vs_history)
-            self._uncovered_est = (self._uncovered_est or 0) + n_ok
-        self._steps_since_flush += 1
-        if self._steps_since_flush >= self.config.commit_every:
-            _tfl = time.time()
-            self._flush(state)
-            if _dbg:
-                print(f"  [t] flush {time.time()-_tfl:.2f}")
-        return wave_size
+        self._pending_adopt.setdefault("images", []).append(
+            (manifest, stage_dir, stage_rel)
+        )
 
     def _flush(self, state: dict) -> None:
         """Durably commit buffered append deltas + the current frontier +
-        state as one catalog snapshot, then release the caches that
-        backed the buffered plans."""
+        state as one catalog snapshot, then release the caches and
+        checkpoints that backed the buffered plans. Its Spark jobs are
+        labelled ``ss{N}:flush``."""
+        self._describe(state["superstep"], "flush")
         appends: dict[str, DataFrame] = {}
         for name, dfs in self._pending.items():
             out = dfs[0]
@@ -1672,14 +1566,14 @@ class CrawlEngine:
             # adopts it (a crash before here leaves only .staging
             # orphans — never visible to readers or streams)
             _name, manifest, stage_dir, rel = item
+            # pool threads do not inherit the caller's job description
+            self._describe(state["superstep"], "flush")
             manifest.write.mode("overwrite").format("noop").save()
             dst = os.path.join(self.catalog.root, rel)
             shutil.rmtree(dst, ignore_errors=True)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.replace(stage_dir, dst)
 
-        _dbg = os.environ.get("PHOLCUS_TIMING")
-        _tm = time.time()
         if len(staged_all) > 1:
             # commit_every>1 buffers one independent staged sink per
             # superstep; run them as concurrent Spark jobs so the tail
@@ -1698,16 +1592,11 @@ class CrawlEngine:
         for name, _m, _s, rel in staged_all:
             adopt.setdefault(name, []).append(rel)
         self._pending_adopt = {}
-        if _dbg and staged_all:
-            print(f"  [t] flush-sinks {time.time()-_tm:.2f}")
-        _tc = time.time()
         self.catalog.commit(appends, rewrites, state, adopt=adopt)
-        if _dbg:
-            print(f"  [t] flush-commit {time.time()-_tc:.2f}")
-        for df in self._pending_unpersist:
-            df.unpersist()
+        for df in self._pending_release:
+            release(df)
         self._pending = {}
-        self._pending_unpersist = []
+        self._pending_release = []
         self._steps_since_flush = 0
         self._frontier_dirty = False
         if self.config.compact_every:
@@ -1723,6 +1612,7 @@ class CrawlEngine:
                 keep_last=self.config.expire_keep_snapshots
             )
         self._maybe_rebuild_bloom()
+        self.spark.sparkContext.setJobDescription(None)
 
     # ------------------------------------------------------------------
 
@@ -1732,17 +1622,10 @@ class CrawlEngine:
         # children come from anchors AND embedded image srcs — the reference
         # enqueues file downloads from img srcs via ctx.AddQueue just like
         # page links (context.go:104-125, FileOutput path :247-284).
-        #
-        # Round-5 shape: the figure-caption carry and the rule-authored
-        # Temp carry ride the SAME explode as the links, as struct
-        # entries, instead of the previous separate figs/carries
-        # branches (each its own canonical_split python stage + dedup
-        # window + join back). One canonicalize pass and one last-wins
-        # window over (parent_url, curl) replace two python round trips,
-        # two windows and two joins per superstep — and for an
-        # image-heavy crawl (figures ≈ children, the north-rule shape)
-        # the join form's build side was the same size as the probe, so
-        # this is also strictly fewer shuffles at bulk scale.
+        # The figure-caption carry and the rule-authored Temp carry ride
+        # the SAME explode as the links, as struct entries: one
+        # canonicalize pass and one last-wins window over (parent_url,
+        # curl), instead of a python stage, window and join per carry.
         follow = getattr(spec, "follow_anchors", True)
         has_carry = any(
             getattr(er, "carry_fields", ()) or ()
@@ -2163,10 +2046,8 @@ class CrawlEngine:
             state["stopped"] = True
         self.catalog.commit({}, {"frontier": new_frontier}, state)
         if self._frontier_df is not None:
-            self._frontier_df.unpersist()
+            release(self._frontier_df)
         self._frontier_df = new_frontier
         self._frontier_dirty = False
-        requeued.unpersist()
-        cand_pre.unpersist()
-        for _df in _rq_unpersist:
-            _df.unpersist()
+        for df in [requeued, cand_pre, *_rq_unpersist]:
+            release(df)

@@ -23,7 +23,6 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -837,7 +836,7 @@ def apply_rule_spec(
 # fused parse runs (field_transforms, require/forbid guards, item_slice,
 # const_fields, carve, dynamic_kv), so it silently produced different
 # items than the engine for the same ExtractRules. The engine path
-# (`udf_for` / the fused parse) is the one extraction surface.
+# (`udf_for` / `parse_pages_kernel`) is the one extraction surface.
 
 
 EXTRACT_ALL_TYPE = StructType(
@@ -846,82 +845,6 @@ EXTRACT_ALL_TYPE = StructType(
         StructField("figures", FIGURES_TYPE),
     ]
 )
-
-EXTRACT_FULL_TYPE = StructType(
-    [
-        StructField("out_links", ArrayType(StringType())),
-        StructField("figures", FIGURES_TYPE),
-        StructField("dsl_items", ArrayType(MapType(StringType(), StringType()))),
-        StructField("dsl_links", ArrayType(StringType())),
-        # per-dsl-link carry temp (parallel to dsl_links; null = none)
-        StructField(
-            "dsl_carry", ArrayType(MapType(StringType(), StringType()))
-        ),
-    ]
-)
-
-
-def extract_all_vec(extract_rules=(), carry_concat=()):
-    """The fully-fused page parse: links + figures + user ExtractRule
-    items + rule-emitted links (``link_fields`` — ctx.AddQueue from
-    rule data, avatar.go:95-101) in ONE decoded-body pass and one
-    Python stage. This is the engine's hot-path UDF; dsl_links are
-    absolutized here and appended after anchors + figure srcs in push
-    order (the oracle mirrors that ordering independently)."""
-    specs = rule_spec_tuples(extract_rules)
-
-    @pandas_udf(EXTRACT_FULL_TYPE)
-    def _udf(
-        bodies: pd.Series,
-        content_types: pd.Series,
-        base_urls: pd.Series,
-        rules: pd.Series,
-        temps: pd.Series,
-    ) -> pd.DataFrame:
-        compiled = compile_rule_specs(specs)
-        links_out, figs_out, dsl_out, dlinks_out, dcarry_out = (
-            [], [], [], [], [],
-        )
-        for b, ct, u, r, tp in zip(
-            bodies, content_types, base_urls, rules, temps
-        ):
-            if b is None:
-                links_out.append([])
-                figs_out.append([])
-                dsl_out.append([])
-                dlinks_out.append([])
-                dcarry_out.append([])
-                continue
-            text = decode_body(b, ct)
-            links_out.append(
-                [absolutize(u, html_mod.unescape(h)) for h in _HREF_RE.findall(text)]
-            )
-            figs_out.append(
-                [
-                    {
-                        "src": absolutize(u, html_mod.unescape(src)),
-                        "caption": html_mod.unescape(cap),
-                    }
-                    for src, cap in _FIGURE_RE.findall(text)
-                ]
-            )
-            row_items, row_links, row_carries = _apply_rules_for(
-                compiled, text, r, u, tp, carry_concat
-            )
-            dsl_out.append(row_items)
-            dlinks_out.append(row_links)
-            dcarry_out.append(row_carries)
-        return pd.DataFrame(
-            {
-                "out_links": links_out,
-                "figures": figs_out,
-                "dsl_items": dsl_out,
-                "dsl_links": dlinks_out,
-                "dsl_carry": dcarry_out,
-            }
-        )
-
-    return _udf
 
 
 def _apply_rules_for(
@@ -1161,12 +1084,16 @@ def extract_all_udf(
 
 
 def parse_pages_kernel(extract_rules=(), carry_concat=()):
-    """Body-store kernel (bodystore.map_bodies): one decoded-body pass
-    computing out_links + figures + user ExtractRule items inside the
-    task that read the bytes — html bodies never enter the JVM plan
-    ("parse where you read", the html analog of the python image sink).
-    Input pdf carries ``body``; output drops it and adds the three
-    extraction columns."""
+    """The page parse: one decoded-body pass per row computing
+    out_links + figures + user ExtractRule items + rule-emitted links
+    (``link_fields`` — ctx.AddQueue from rule data, avatar.go:95-101),
+    absolutized and appended after anchors + figure srcs in push order
+    (the oracle mirrors that order independently). Every fetcher's
+    ``parse_pages`` runs it: the body store inside the task that read
+    the bytes, so html bodies never enter the JVM plan ("parse where
+    you read"); other fetchers over their attached bodies. Input pdf
+    carries ``body``; output drops it and adds the
+    :data:`PARSE_EXTRA_DDL` columns."""
     specs = rule_spec_tuples(extract_rules)
 
     def kernel(grp: pd.DataFrame) -> pd.DataFrame:

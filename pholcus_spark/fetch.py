@@ -2,20 +2,23 @@
 downloader (`app/downloader/downloader_surfer.go:35-74`, Surf HTTP
 `app/downloader/surfer/surf.go:52-197`).
 
-Two interchangeable implementations behind one interface (SURVEY.md
-§7.3: the fetch stage must be cleanly swappable because tests run with
-no network):
+Interchangeable implementations behind one contract, :class:`Fetcher`
+(SURVEY.md §7.3: the fetch stage must be cleanly swappable because
+tests run with no network):
 
 * :class:`FixtureFetcher` — deterministic equi-join against the fixture
   ``pages`` table. Flaky pages (fail first, succeed on retry) model the
   transient-error path that drives the reference's
   failure-requeue-once (`matrix.go:144-204`); missing URLs and
   status>=400 model the permanent path (`downloader_surfer.go:67-69`).
+* :class:`StoreFetcher` — the fixture join over a body store's
+  metadata; bodies are read python-side, only where a stage needs them.
 * :class:`HttpFetcher` — an ``aiohttp``-based ``mapInPandas`` batch
-  fetcher for production clusters. Gated behind an import-try; this
-  container has no aiohttp and tests never touch the network.
+  fetcher for production clusters. Gated behind an import-try; tests
+  never touch the network (``httpfetch.StdlibHttpFetcher`` is the
+  stdlib twin).
 
-Both return the wave DataFrame extended with
+``fetch(wave)`` returns the wave DataFrame extended with
 ``status int, content_type string, body binary, ok boolean``.
 """
 
@@ -61,20 +64,72 @@ def headers_col(spec_headers: tuple = ()) -> "F.Column":
     return F.when(F.size(merged) > 0, F.to_json(merged)).otherwise(F.lit(""))
 
 
-class FixtureFetcher:
+class Fetcher:
+    """The contract the crawl engine runs every wave through.
+
+    * ``fetch_meta(wave)`` — the fetch result, once per wave; the engine
+      checkpoints it. It may leave out ``body``: a fetcher that can
+      re-read bodies (fixture table, body store) returns metadata only.
+      Default: the full :meth:`fetch`, as a live fetch cannot be issued
+      twice.
+    * ``attach_bodies(meta, n_tasks)`` — add ``body`` to an
+      already-filtered slice of ``fetch_meta``'s rows. Default: the
+      identity (the rows already carry it).
+    * ``parse_pages(meta, extract_rules, carry_concat, n_tasks)`` — the
+      pages' links, figures and ExtractRule output
+      (``extract.PARSE_EXTRA_DDL`` columns) in place of ``body``.
+      Default: :func:`extract.parse_pages_kernel` over
+      ``attach_bodies(meta)``.
+
+    ``n_tasks`` caps the width of a python body stage; fetchers without
+    one ignore it. ``fetch(wave)`` stays the one-call form for callers
+    outside the engine (sitemap and robots ingestion).
+    """
+
+    def fetch(self, wave: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def fetch_meta(self, wave: DataFrame) -> DataFrame:
+        return self.fetch(wave)
+
+    def attach_bodies(
+        self, meta: DataFrame, n_tasks: int | None = None
+    ) -> DataFrame:
+        return meta
+
+    def parse_pages(
+        self, meta: DataFrame, extract_rules=(), carry_concat=(),
+        n_tasks: int | None = None,
+    ) -> DataFrame:
+        from pyspark.sql.types import StructType
+
+        from .extract import PARSE_EXTRA_DDL, parse_pages_kernel
+
+        pages = self.attach_bodies(meta, n_tasks=n_tasks)
+        kernel = parse_pages_kernel(extract_rules, carry_concat)
+        schema = StructType(
+            [f for f in pages.schema.fields if f.name != "body"]
+            + list(StructType.fromDDL(PARSE_EXTRA_DDL).fields)
+        )
+
+        def run(batches):
+            for pdf in batches:
+                if len(pdf):
+                    yield kernel(pdf)
+
+        return pages.mapInPandas(run, schema)
+
+
+class FixtureFetcher(Fetcher):
     """Fetch = left equi-join on canonical URL against the pages fixture.
 
     The join is the 'scan of the web' (SURVEY.md §2.1). The pages side
     is pre-repartitioned on url so repeated waves reuse a stable
-    shuffle; at bench scale AQE handles the skewed hot host.
+    shuffle; at bench scale AQE handles the skewed hot host. A fixture
+    fetch is a deterministic lookup, so ``fetch_meta`` joins without the
+    body column and ``attach_bodies`` joins it back for just the rows a
+    stage needs.
     """
-
-    # a fixture fetch is a deterministic table lookup, so the engine may
-    # ask for the cheap metadata-only projection separately from bodies
-    # (body bytes then flow ONLY through the extract/validate branches).
-    # A live HTTP fetcher can't fetch twice — it sets this False and the
-    # engine falls back to a single full fetch.
-    has_cheap_meta = True
 
     def __init__(self, pages: DataFrame, try_times: int = 1):
         # try_times models the reference's in-fetch bounded retry
@@ -134,7 +189,10 @@ class FixtureFetcher:
                 f"{dup[0]['_page_url']!r} — one row per (url, post_data)"
             )
 
-    def _join(self, wave: DataFrame, pages: DataFrame) -> DataFrame:
+    @staticmethod
+    def _match(wave: DataFrame, pages: DataFrame) -> DataFrame:
+        """Left join of wave rows to their page row: same url, and a
+        matching POST body when the page is body-keyed."""
         cond = wave["url"] == pages["_page_url"]
         if "_page_post" in pages.columns:
             cond = cond & (
@@ -144,9 +202,10 @@ class FixtureFetcher:
                     == F.coalesce(wave["post_data"], F.lit(""))
                 )
             )
-        joined = wave.join(pages, cond, "left").drop(
-            "_page_url", "_page_post"
-        )
+        return wave.join(pages, cond, "left").drop("_page_url", "_page_post")
+
+    def _join(self, wave: DataFrame, pages: DataFrame) -> DataFrame:
+        joined = self._match(wave, pages)
         if "require_header" in joined.columns:
             # header-walled page: 403 unless the request's hdr JSON
             # (engine-attached, fetch.headers_col) carries the named
@@ -191,6 +250,13 @@ class FixtureFetcher:
         page cache prunes the body column, so this join moves KBs, not
         the corpus."""
         return self._join(wave, self.pages.drop("body"))
+
+    def attach_bodies(
+        self, meta: DataFrame, n_tasks: int | None = None
+    ) -> DataFrame:
+        """Join ``body`` back onto filtered metadata rows."""
+        keys = [c for c in ("_page_url", "_page_post") if c in self.pages.columns]
+        return self._match(meta, self.pages.select(*keys, "body"))
 
 
 class StoreFetcher(FixtureFetcher):
@@ -258,7 +324,7 @@ class StoreFetcher(FixtureFetcher):
         )
 
 
-class HttpFetcher:  # aiohttp session gated; wrapper executed via factory
+class HttpFetcher(Fetcher):  # aiohttp session gated; wrapper executed via factory
     """Production fetcher: Arrow-batched async HTTP via mapInPandas.
 
     Per-batch politeness is already enforced upstream by wave selection;

@@ -36,6 +36,8 @@ from urllib.parse import parse_qsl, urljoin
 
 from pyspark.sql import DataFrame
 
+from .fetch import Fetcher
+
 # deterministic boundary: content only depends on post_data, so fetch
 # retries and conformance fixtures see byte-identical multipart bodies
 MULTIPART_BOUNDARY = "pholcus-spark-boundary-7f2a91c4"
@@ -563,8 +565,9 @@ def fetch_one(
     )
 
 
-class StdlibHttpFetcher:
-    """Live fetcher over ``urllib`` with the engine's fetcher contract:
+class StdlibHttpFetcher(Fetcher):
+    """Live fetcher over ``urllib`` with the engine's fetcher contract
+    (:class:`~pholcus_spark.fetch.Fetcher`, live defaults):
     ``fetch(wave) -> wave + (status, content_type, body, ok)``.
 
     ``enable_cookie=True`` is the reference's EnableCookie
@@ -577,8 +580,6 @@ class StdlibHttpFetcher:
     never lives in the executor (tasks are stateless/retryable); it
     round-trips through the driver-held store, which is O(hosts) — the
     same scale class as the robots dim."""
-
-    has_cheap_meta = False  # a live fetch cannot be issued twice
 
     def __init__(
         self,

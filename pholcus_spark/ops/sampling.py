@@ -154,7 +154,8 @@ def _gram_buckets(
     toks = F.split(norm_text(F.col(text_col)), " ")
     # no spread here: the gram explode fans out fast enough that the
     # up-front corpus shuffle costs more than the serial scan it
-    # parallelizes (same-box A/B: median 2.3s plain vs 4.6s spread)
+    # parallelizes (fresh-box same-HEAD A/B: median 2.3 s plain vs
+    # 4.6-7.0 s spread; OPTIMIZATION_r06.md, q_dsir_weights)
     with_tk = df.select(F.col(id_col), toks.alias("_tk"))
     bigrams = F.when(
         F.size("_tk") >= 2,

@@ -35,6 +35,18 @@ def spread_scan(df, target: int | None = None):
     return df.repartition(target)
 
 
+def _default_driver_memory() -> str:
+    """Driver heap for local mode: 48g, or about half of physical
+    memory when the box has less than 96 GiB (the JVM also needs
+    off-heap room, and python workers share the box)."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{max(1, min(48 * 1024, kb // 2048))}m"
+
+
 def build_spark(
     app_name: str = "pholcus-spark",
     parallelism: int | None = None,
@@ -59,8 +71,11 @@ def build_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode: the driver JVM IS the executor — size it for cached
-        # fixture + shuffle buffers (the box has 125 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # fixture + shuffle buffers; SPARK_DRIVER_MEM overrides
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -4,6 +4,7 @@ column-pruned scan going wide, a broadcast join degrading to shuffle)
 change no results at test scale but break the engine at target scale —
 so they are pinned explicitly."""
 
+import re
 import sys
 
 sys.path.insert(0, ".")
@@ -77,15 +78,14 @@ def test_two_phase_rank_matches_global_window(spark):
     df.unpersist()
 
 
-def test_default_wave_plan_has_no_unpartitioned_window(spark, tmp_path):
+def test_wave_selection_has_no_unpartitioned_window(spark, tmp_path):
     """Round-3 verdict item: `record_order` defaulted True, so every
     superstep of a defaults-taking production run paid a SinglePartition
-    exchange for the test-only golden-order window. The default is now
-    False — the wave-select plan must contain only host/spider
-    partitioned windows; the single-partition shape appears only behind
-    the explicit record_order opt-in."""
-    from pyspark.sql import functions as F
-
+    exchange for the test-only golden-order window. Wave selection is
+    now one tagged plan under every config: its windows partition by
+    host (politeness) and by (spider, in-budget) (fair-share quota), and
+    no config — quota and record_order included — adds a
+    SinglePartition exchange to it."""
     from pholcus_spark.catalog import SnapshotCatalog
     from pholcus_spark.engine import CrawlEngine, EngineConfig
     from pholcus_spark.fetch import FixtureFetcher
@@ -102,8 +102,8 @@ def test_default_wave_plan_has_no_unpartitioned_window(spark, tmp_path):
     )
     queued = spark.createDataFrame(
         [
-            (f"http://h{i % 4}.test/p/{i}", f"h{i % 4}.test", "list", "site",
-             "", 0, i, False, {}, "queued", "GET", "")
+            (f"http://h{i % 4}.test/p/{i}", f"h{i % 4}.test", "list",
+             f"s{i % 3}", "", i % 2, i, False, {}, "queued", "GET", "")
             for i in range(64)
         ],
         "url string, host string, rule string, spider string, keyin string, "
@@ -111,21 +111,32 @@ def test_default_wave_plan_has_no_unpartitioned_window(spark, tmp_path):
         "state string, method string, post_data string",
     )
 
-    def wave_phys(cfg):
+    def tagged(cfg):
         eng = CrawlEngine(
             spark, SnapshotCatalog(str(tmp_path / "wp"), spark),
             FixtureFetcher(pages), SpiderSpec("site"), robots, cfg,
         )
-        wave, _rest = eng._wave_plan(queued)
-        return _plans(wave)[0]
+        return eng._wave_tagged(queued)
 
-    phys = wave_phys(EngineConfig(per_spider_quota=8))
-    assert "SinglePartition" not in phys
-    assert "windowspecdefinition(host" in phys
-    # the opt-in still produces the golden-order window (test instrument)
-    assert "SinglePartition" in wave_phys(
-        EngineConfig(per_spider_quota=8, record_order=True)
-    )
+    configs = [
+        EngineConfig(),
+        EngineConfig(record_order=True),
+        EngineConfig(per_spider_quota=3),
+        EngineConfig(per_spider_quota=3, record_order=True),
+    ]
+    for cfg in configs:
+        df = tagged(cfg)
+        phys = _plans(df)[0]
+        assert "SinglePartition" not in phys, cfg
+        assert "windowspecdefinition(host" in phys
+        if cfg.per_spider_quota is not None:
+            assert re.search(r"windowspecdefinition\(spider#\d+, _wv", phys)
+        # every queued row is kept exactly once, tagged in or out
+        assert df.count() == 64
+    # the quota caps each spider's in-budget rows (3 spiders x 3)
+    wave = tagged(EngineConfig(per_spider_quota=3)).where("_wv")
+    per_spider = {r.spider: r["count"] for r in wave.groupBy("spider").count().collect()}
+    assert per_spider == {"s0": 3, "s1": 3, "s2": 3}
 
 
 def test_seed_range_frontier_is_multi_partition(spark, tmp_path):

@@ -339,7 +339,7 @@ with pyarrow (mmap), decodes + phashes in-task, and writes the full
 images-table rows as parquet itself; the snapshot commit adopts those
 files (Iceberg add-files analog). One-partition-per-bucket scheduling
 bounds any straggler at a single bucket. The isolated kernel measures
-**0.99** efficiency at {lo}→{hi} cores (tools/exp_arrow.py `pybody`);
+**0.99** efficiency at {lo}→{hi} cores (round-1 isolated-kernel `pybody` measurement, BENCH/BASELINE.md §1);
 the JVM-bridge variant of the same kernel measures 0.55.
 
 | parallelism (pinned) | wall s | URLs fetched+deduped+validated/s |
