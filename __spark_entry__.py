@@ -1516,6 +1516,7 @@ def q_robots_filter(spark, sf_dir):
     prefix-matched on the parsed path (query string excluded, like Go's
     robots packages match on the path)."""
     from pholcus_spark.robots import disallow_filter
+    from pholcus_spark.session import local_frame
 
     docs = _load(spark, sf_dir, "documents")
     host = F.concat(
@@ -1531,7 +1532,8 @@ def q_robots_filter(spark, sf_dir):
     # host N holds sources src{N}, src{N+5}, src{N+10}, src{N+15}
     # (source tracks doc_id), so these prefixes exercise the whole
     # precedence ladder on real rows:
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [
             # /src1 disallows src10+src15; /src15 allow carves src15
             # back out (6 > 5); /src15/d1 re-disallows its d1* docs
@@ -1603,6 +1605,7 @@ def q_sitemap_parse(spark, sf_dir):
     padding whitespace in every loc, plus one <sitemapindex> body) —
     extraction, entity unescape, document-order ordinals, and the
     index flag all compared exactly."""
+    from pholcus_spark.session import local_frame
     from pholcus_spark.sitemap import sitemap_locs
 
     docs = _load(spark, sf_dir, "documents")
@@ -1631,7 +1634,8 @@ def q_sitemap_parse(spark, sf_dir):
         ).alias("url"),
         F.col("body_s").cast("binary").alias("body"),
     )
-    idx = spark.createDataFrame(
+    idx = local_frame(
+        spark,
         [(
             "http://h.test/sitemap_index.xml",
             b"<sitemapindex><sitemap><loc>http://h.test/sm/src0.xml</loc>"

@@ -11,11 +11,13 @@ Each superstep:
    extension), tagging the queue in place. Every window partitions (by
    host, or by spider for the fair-share quota); no global rank over
    the wave or the frontier is ever needed — wave order is the total
-   order (-priority, seq).
+   order (-priority, seq). Budgets and the robots filters read the
+   robots dim, cached once per engine.
 2. **fetch** — ``fetcher.fetch_meta`` (fixture equi-join, body-store
    metadata, or a live mapInPandas fetch), checkpointed once per wave.
 3. **parse** — one decoded-body pass per page for links, figures and
-   ExtractRule items (``fetcher.parse_pages``).
+   ExtractRule items (``fetcher.parse_pages``), checkpointed in its own
+   ``ss{N}:parse`` job before any reader runs.
 4. **emit** — items, validated image rows and file rows appended.
 5. **push** — children: absolutize→canonicalize→route→robots-filter→
    SHA-1 key→within-batch dedup (first in wave order, then ordinal, wins)→
@@ -59,6 +61,7 @@ from .keys import (
     request_key,
     request_key_col,
 )
+from .session import local_frame
 from .spiderspec import SpiderSpec, apply_keyin, fanout_spider_name, parse_keyins
 
 FRONTIER_DDL = (
@@ -367,8 +370,8 @@ class CrawlEngine:
         self.proxy_dim = None if callable(proxy_dim) else proxy_dim
         self._proxy_built_at: int | None = None
         if robots is None:
-            robots = spark.createDataFrame(
-                [], "host string, disallow_prefixes array<string>, crawl_delay_ms long"
+            robots = local_frame(
+                spark, [], "host string, disallow_prefixes array<string>, crawl_delay_ms long"
             )
         # allow_prefixes is optional in the dim (legacy all-Disallow
         # shape) — disallow_filter applies RFC 9309 longest-match-wins
@@ -376,7 +379,11 @@ class CrawlEngine:
         rcols = ["host", "disallow_prefixes", "crawl_delay_ms"]
         if "allow_prefixes" in robots.columns:
             rcols.insert(2, "allow_prefixes")
-        self.robots = robots.select(*rcols)
+        # cached for the engine's lifetime (O(hosts) rows, never
+        # released): the seed filter, every wave join and every children
+        # filter read it, and its lineage may be a live robots.txt fetch
+        # (robots.fetch_robots_dim) that must not re-run per read
+        self.robots = robots.select(*rcols).persist()
         # FileOutput rules (rule -> nameOrExt): raw-body outputs, never
         # parsed as pages
         self._file_rules = {
@@ -493,7 +500,7 @@ class CrawlEngine:
                         0, False, reloadable, temp, "queued",
                     )
                 )
-        new_df = self.spark.createDataFrame(rows, FRONTIER_DDL)
+        new_df = local_frame(self.spark, rows, FRONTIER_DDL)
         # robots disallow via the broadcast dim (shared with seed_range /
         # push path) — never a driver-side collect() of the robots table,
         # which at web scale is a millions-of-hosts dim
@@ -877,7 +884,8 @@ class CrawlEngine:
             .withColumn("superstep", F.lit(superstep))
         )
         n_failed = n["wave"] - n["ok"]
-        metrics = self.spark.createDataFrame(
+        metrics = local_frame(
+            self.spark,
             [
                 (
                     superstep, n["wave"], n["ok"], n_failed, n["perm"],
@@ -1080,7 +1088,7 @@ class CrawlEngine:
         ]
         if not rows:
             return wave.withColumn("cookie", F.lit(""))
-        dim = self.spark.createDataFrame(rows, "host string, cookie string")
+        dim = local_frame(self.spark, rows, "host string, cookie string")
         return wave.join(F.broadcast(dim), "host", "left").withColumn(
             "cookie", F.coalesce(F.col("cookie"), F.lit(""))
         )
@@ -1208,21 +1216,25 @@ class CrawlEngine:
     ) -> DataFrame:
         """Parse phase: links, figures and ExtractRule output of every
         ok page in one decoded-body pass (``fetcher.parse_pages``),
-        cached. Bodies never enter the cache. Metadata is filtered
-        FIRST: filters do not push through mapInPandas."""
+        checkpointed in its own ``ss{N}:parse`` job. A lazy cache would
+        be filled inside the children checkpoint, where two concurrent
+        AQE stages reach it: one runs the kernel while the other holds
+        its task slots waiting on the cache blocks. Bodies never enter
+        the checkpoint. Metadata is filtered FIRST: filters do not push
+        through mapInPandas."""
         self._describe(superstep, "parse")
         html = F.col("ok") & (F.col("rule") != self.spec.image_rule)
         if self._file_rules:
             # FileOutput rules consume the raw body (context.go:252-256
             # io.ReadAll) — never parsed as a page
             html = html & ~F.col("rule").isin(list(self._file_rules))
-        parsed = self.fetcher.parse_pages(
-            fetched.where(html), self.spec.extract_rules,
-            getattr(self.spec, "carry_concat", ()) or (),
-            n_tasks=py_tasks,
-        ).persist()
-        self._pending_release.append(parsed)
-        return parsed
+        return self._checkpoint(
+            self.fetcher.parse_pages(
+                fetched.where(html), self.spec.extract_rules,
+                getattr(self.spec, "carry_concat", ()) or (),
+                n_tasks=py_tasks,
+            )
+        )
 
     def _emit(
         self, parsed: DataFrame, fetched: DataFrame, superstep: int,

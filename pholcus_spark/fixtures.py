@@ -34,6 +34,7 @@ import html as html_mod
 import numpy as np
 
 from .imaging import encode_png, phash64, quantize, synth_pixels
+from .session import local_frame
 
 SEED = 42
 
@@ -292,7 +293,8 @@ IMAGES_TRUTH_DDL = "image_id string, orig_png binary, lossy boolean"
 
 def to_spark(spark, corpus: Corpus):
     """Return (pages, images, images_truth, seeds, robots) DataFrames."""
-    pages = spark.createDataFrame(
+    pages = local_frame(
+        spark,
         [
             (
                 p["url"], p["host"], p["depth"], p["status"], p["flaky"],
@@ -304,22 +306,26 @@ def to_spark(spark, corpus: Corpus):
         ],
         PAGES_DDL,
     )
-    images = spark.createDataFrame(
+    images = local_frame(
+        spark,
         [
             (i["image_id"], i["bytes"], i["w"], i["h"], i["fmt"], i["caption"], i["phash"])
             for i in corpus.images
         ],
         IMAGES_DDL,
     )
-    truth = spark.createDataFrame(
+    truth = local_frame(
+        spark,
         [(t["image_id"], t["orig_png"], t["lossy"]) for t in corpus.images_truth],
         IMAGES_TRUTH_DDL,
     )
-    seeds = spark.createDataFrame(
+    seeds = local_frame(
+        spark,
         [(s["spider"], s["url"], s["rule"], s["priority"]) for s in corpus.seeds],
         SEEDS_DDL,
     )
-    robots = spark.createDataFrame(
+    robots = local_frame(
+        spark,
         [
             (
                 r["host"],

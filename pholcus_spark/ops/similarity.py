@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def dot_col(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -289,7 +291,8 @@ def centroids_df(spark, centroids: list) -> DataFrame:
     """The coarse quantizer as an n_cells-row broadcastable dim
     (cell, cvec) — the join-friendly twin of the literal-expression
     form."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(c), [float(x) for x in v]) for c, v in centroids],
         "cell long, cvec array<double>",
     )

@@ -42,6 +42,8 @@ import time
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .session import local_frame
+
 # A small generic pool of common desktop browser UA strings (public
 # wire-format knowledge; the reference ships a much larger list — the
 # pool contents are config, the rotation is the operator).
@@ -195,7 +197,7 @@ def build_proxy_dim(
         .agg(F.min("_target").alias("_target"))
     )
     pairs = pool_targets.crossJoin(
-        spark.createDataFrame([(p,) for p in proxies], "proxy string")
+        local_frame(spark, [(p,) for p in proxies], "proxy string")
     ).repartition(max(1, len(proxies)))
 
     n_probes = max(1, probes_per_pair)

@@ -35,6 +35,33 @@ def spread_scan(df, target: int | None = None):
     return df.repartition(target)
 
 
+def local_frame(spark: SparkSession, rows, ddl: str):
+    """A DataFrame over driver-built ``rows`` (tuples in ``ddl`` column
+    order) that plans as a JVM ``LocalTableScan``.
+
+    ``spark.createDataFrame(list)`` pickles the rows into a
+    ``PythonRDD``, so every query that scans such a frame, however
+    small, runs python tasks (~140 ms each, BASELINE §6). Here the rows
+    become a ``pyarrow.Table`` typed from the DDL and Spark stores it
+    as a local relation (or, above
+    ``spark.sql.execution.arrow.localRelationThreshold``, a JVM RDD of
+    Arrow batches): same schema and rows, no python task. The one
+    place the package turns driver rows into a frame
+    (tests/test_python_boundary.py keeps it so)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _default_driver_memory() -> str:
     """Driver heap for local mode: 48g, or about half of physical
     memory when the box has less than 96 GiB (the JVM also needs

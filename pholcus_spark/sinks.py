@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 # FileNameReplace (`common/util/util.go:307-338`): Windows-illegal name
 # chars → fullwidth/typographic equivalents; '"' alternates “ ” ; the
 # USE_KEYIN placeholder ("\r\t\n", util.go:32) is stripped.
@@ -188,7 +190,7 @@ def rule_fields_df(spark, spec) -> DataFrame:
         for rule, fields in spec.item_fields().items()
         for i, field in enumerate(fields)
     ]
-    return spark.createDataFrame(rows, "rule string, field string, ordinal int")
+    return local_frame(spark, rows, "rule string, field string, ordinal int")
 
 
 def export_items_csv(
