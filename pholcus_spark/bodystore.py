@@ -122,10 +122,10 @@ class ParquetBodyStore:
 
         ``n_tasks`` (when given and SMALLER than the bucket count) caps
         the width: an empty-ish python task still costs a ~140 ms Arrow
-        round trip (BASELINE §6), so a caller that KNOWS the batch is
-        small — the engine sizes it from the queue depth — shrinks the
-        stage instead of paying bucket-count handshakes for a handful
-        of rows. The straggler analysis above is about BULK batches,
+        round trip (OPTIMIZATION_r06.md item 4), so a caller that KNOWS
+        the batch is small — the engine sizes it from the queue depth —
+        shrinks the stage instead of paying bucket-count handshakes for
+        a handful of rows. The straggler analysis above is about BULK batches,
         where callers keep the full bucket width."""
         parts = self.n_buckets
         if n_tasks and int(n_tasks) < parts:

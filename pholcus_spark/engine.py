@@ -20,9 +20,10 @@ Each superstep:
    ``ss{N}:parse`` job before any reader runs.
 4. **emit** — items, validated image rows and file rows appended.
 5. **push** — children: absolutize→canonicalize→route→robots-filter→
-   SHA-1 key→within-batch dedup (first in wave order, then ordinal, wins)→
-   anti-join vs url_seen ∪ still-queued keys→limit cutoff→dense seq
-   assignment (`matrix.go:51-98` Push semantics).
+   SHA-1 key→failed-wave-position rule, then :meth:`CrawlEngine._push`,
+   the one Push (`matrix.go:51-98`) that seeds and requeued failures go
+   through too: anti-join vs url_seen ∪ in-flight keys→within-batch
+   dedup (first in push order wins)→limit cutoff→dense seq assignment.
 6. **ack** — succeeded keys appended to url_seen (non-reloadable only,
    `matrix.go:144-154`); failures become failed_wait rows; a failure
    whose key already sits in the failure store is recorded permanently
@@ -46,6 +47,7 @@ import dataclasses
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,7 +57,7 @@ from pyspark.sql.window import Window
 from .catalog import SnapshotCatalog
 from .keys import (
     canon_host_udf,
-    canonicalize_url,
+    canonicalize_url_safe,
     host_of,
     key_bucket_col,
     request_key,
@@ -72,6 +74,27 @@ FRONTIER_DDL = (
 )
 URL_SEEN_DDL = "key string, bucket int"
 ORDER_DDL = "spider string, key string, url string, superstep int, wave_pos int, priority int, seq long"
+_FRONTIER_COLS = [c.split(" ", 1) for c in FRONTIER_DDL.split(", ")]
+
+# rows per task for a superstep's small-wave sizing: the shuffle width
+# (``_shrink_shuffles``) and the body-store python stage width (parse /
+# attach / image sink). An empty-ish python task still costs a ~140 ms
+# Arrow round trip, and a near-empty shuffle task a scheduling slot
+# (OPTIMIZATION_r06.md items 4-5); bulk waves saturate at the base
+# width, so only tail waves shrink.
+_ROWS_PER_TASK = 64
+
+
+def frontier_rows(df: DataFrame, **cols) -> DataFrame:
+    """``df`` projected onto the frontier schema (``FRONTIER_DDL``):
+    each column is ``cols[name]`` (a Column or a literal) when given,
+    else ``df``'s column of that name, cast to the frontier type."""
+    return df.select(
+        *[
+            F.lit(cols.get(name, F.col(name))).cast(dtype).alias(name)
+            for name, dtype in _FRONTIER_COLS
+        ]
+    )
 
 
 # JVM fast path for canonicalization: a URL matching this is ALREADY in
@@ -169,6 +192,14 @@ def canonical_split(df: DataFrame, src_col: str) -> DataFrame:
     return fast.unionByName(slow)
 
 
+def _count_pushes(state: dict, n: int) -> None:
+    """Advance the seq counter and the limit guard (matrix.go:97: each
+    accepted push counts) by ``n`` accepted pushes."""
+    state["next_seq"] += n
+    if state["max_page"] is not None:
+        state["max_page"] += n
+
+
 def _dlt():
     """DownloadTime provenance (DataCell, `app/pipeline/collector/data/
     data.go:9-13`): wall-clock fetch time as the reference's formatted
@@ -247,19 +278,6 @@ def two_phase_rank(
     )
 
 
-def dense_push_rank(
-    df: DataFrame, partitions: int, unpersist_into: list | None = None
-) -> DataFrame:
-    """Dense global rank over push order (p_prio desc, p_seq asc,
-    ordinal asc) via :func:`two_phase_rank` — ordinal disambiguates
-    siblings, making the sort key unique per row."""
-    order = [F.desc("p_prio"), F.asc("p_seq"), F.asc("ordinal")]
-    ranked = two_phase_rank(
-        df, order, partitions, "_push_rank", unpersist_into=unpersist_into
-    )
-    return ranked.withColumn("_push_rank", F.col("_push_rank").cast("int"))
-
-
 @dataclasses.dataclass
 class EngineConfig:
     wave_window_ms: int = 1500
@@ -320,26 +338,6 @@ class EngineConfig:
     # Arrow bridge (the non-scaling layer in BENCH/BASELINE.md §3); the
     # catalog adopts the task-written parquet rows at commit.
     python_image_sink: bool = False
-    # adaptive small-wave shuffle width: when the queue holds fewer than
-    # ~adaptive_shuffle_rows rows per base shuffle partition, shrink
-    # spark.sql.shuffle.partitions for THAT superstep (restored after) —
-    # a 1-100-row tail wave otherwise pays 8-32 near-empty tasks per
-    # shuffle stage across ~10 stages (measured ~15% of small-wave wall,
-    # BENCH/BASELINE.md §7). Results are partition-count independent
-    # (pinned by the conformance suite, which runs both shapes). 0
-    # disables. NOTE: the conf mutation is session-wide for the duration
-    # of one superstep — don't run unrelated SQL concurrently with
-    # run() in the same session (the engine assumes it owns the session
-    # during a crawl, same as its localCheckpoint/persist discipline).
-    adaptive_shuffle_rows: int = 64
-    # python body-stage sizing: target rows per body-store python task.
-    # The engine caps each superstep's python stages (parse / attach /
-    # image sink) at ceil(queue_depth / this) tasks, bounded by the
-    # store's bucket count — an empty-ish Arrow task still costs a
-    # ~140 ms round trip (BASELINE §6), so a 5-row tail wave should run
-    # 1 python task, not bucket-count of them. Bulk waves are unchanged
-    # (the cap saturates at the bucket count). 0 disables the cap.
-    python_rows_per_task: int = 64
 
 
 class CrawlEngine:
@@ -392,22 +390,21 @@ class CrawlEngine:
         self._bloom = None  # BloomSidecar handle (paths/params only)
         self._bloom_load_attempted = False
         self._uncovered_est: int | None = None  # keys not covered by sidecar
-        # in-memory frontier carry between supersteps: localCheckpoint
-        # truncates lineage each step; parquet stays the durable resume
-        # point, but the hot loop never re-reads it
+        # the in-memory frontier (:meth:`_set_frontier`); dirty until
+        # the next flush commits it
         self._frontier_df = None
+        self._frontier_dirty = False
         # commit_every>1 buffering: per-table pending append deltas, the
         # caches backing them (unpersisted only after flush), and the
         # in-memory engine state between durable commits
         self._state: dict | None = None
         self._pending: dict[str, list[DataFrame]] = {}
         self._pending_release: list[DataFrame] = []
-        # python-sink staging: (manifest_df, rel_dir) pairs per table;
+        # python-sink staging: (manifest_df, stage_dir, rel_dir) per table;
         # manifests are forced (running the sink tasks) then the dirs
         # are adopted by the same catalog commit
-        self._pending_adopt: dict[str, list[tuple[DataFrame, str]]] = {}
+        self._pending_adopt: dict[str, list[tuple[DataFrame, str, str]]] = {}
         self._steps_since_flush = 0
-        self._frontier_dirty = False
         # cookie session store (fetcher.enable_cookie): host → {name:
         # value}. The distributed form of the reference's process-wide
         # cookiejar (`downloader_surfer.go:6,21-23`): state lives on the
@@ -417,9 +414,7 @@ class CrawlEngine:
         # hosts) per wave). Session-scoped, like the reference: not
         # persisted to the catalog across engine restarts.
         self._cookie_store: dict[str, dict[str, str]] = {}
-        # fanout signal for adaptive shuffle sizing: last superstep's
-        # children count (round-5 ADVICE — high-fanout small-queue
-        # supersteps must not shrink the children shuffles)
+        # fanout signal for the small-wave shuffle shrink
         self._last_children_count = 0
         # lazily probed: does the robots dim carry any non-empty
         # disallow list? (guide §2.4: an all-empty dim makes the
@@ -467,7 +462,7 @@ class CrawlEngine:
         rows distributed via ``spark.range`` and never materializes
         them on the driver.
         """
-        state0 = self._seed_prelude()
+        state = self._seed_prelude()
         rows = []
         for s in seeds:
             # method/post_data flow through to the frontier row (and the
@@ -487,8 +482,13 @@ class CrawlEngine:
                     tk: apply_keyin(str(tv), k)
                     for tk, tv in (s.get("temp") or {}).items()
                 }
+                url = canonicalize_url_safe(apply_keyin(s["url"], k))
+                if url is None:
+                    # a malformed seed drops like a malformed href
+                    # (common.go:178-196 MakeUrl ok=false); the rest of
+                    # the list still seeds
+                    continue
                 spider = fanout_spider_name(s["spider"], k)
-                url = canonicalize_url(apply_keyin(s["url"], k))
                 host = host_of(url)
                 key = request_key(spider, s["rule"], url, method)
                 reloadable = url in self.spec.reloadable_urls
@@ -505,7 +505,7 @@ class CrawlEngine:
         # push path) — never a driver-side collect() of the robots table,
         # which at web scale is a millions-of-hosts dim
         new_df = self._robots_disallow_filter(new_df, "url")
-        self._merge_new_frontier(new_df, state0)
+        self._merge_new_frontier(new_df, state)
 
     def _robots_disallow_filter(self, df: DataFrame, url_col: str) -> DataFrame:
         """Drop rows whose URL path matches a robots disallow prefix for
@@ -581,165 +581,87 @@ class CrawlEngine:
         ranges) and :func:`sitemap.fetch_sitemap_urls` (sitemap
         ingestion). ``urls`` carries ``raw_url`` plus an optional
         ``_ord`` long column fixing FIFO order within the batch
-        (missing → one deterministic rank by canonical URL). Robots,
-        history dedup, and the in-batch first-wins dedup all apply
-        exactly as in every other push path; nothing materializes on
-        the driver."""
-        state0 = self._seed_prelude()
+        (missing → canonical URL order). Robots, history dedup, and the
+        in-batch first-wins dedup all apply exactly as in every other
+        push path; nothing materializes on the driver."""
+        state = self._seed_prelude()
         reload_list = list(self.spec.reloadable_urls)
         has_ord = "_ord" in urls.columns
-        gen = urls.select(
-            "raw_url",
-            *([F.col("_ord").cast("long").alias("_ord")] if has_ord else []),
-        )
+        gen = urls.select("raw_url", *(["_ord"] if has_ord else []))
         gen = canonical_split(gen, "raw_url").where(F.col("curl").isNotNull())
-        if not has_ord:
-            # deterministic order for orderless sources: rank by
-            # canonical URL, shuffle-parallel (two-phase, no single
-            # partition anywhere)
-            gen = two_phase_rank(
-                gen,
-                [F.asc("curl")],
-                max(1, self.config.frontier_partitions),
-                "_ord",
-                unpersist_into=self._pending_release,
-            )
         # robots disallow (same broadcast-dim filter as the push path)
         gen = self._robots_disallow_filter(gen, "curl")
-        new_df = gen.select(
-            request_key_col(
+        new_df = frontier_rows(
+            gen,
+            key=request_key_col(
                 F.lit(spider), F.lit(rule), F.col("curl"), F.lit("GET")
-            ).alias("key"),
-            F.lit(spider).alias("spider"),
-            F.lit(rule).alias("rule"),
-            F.col("curl").alias("url"),
-            F.col("host"),
-            F.lit("GET").alias("method"),
-            F.lit("").alias("post_data"),
-            F.lit(priority).alias("priority"),
-            F.col("_ord").cast("long").alias("seq"),
-            F.lit(0).alias("depth"),
-            F.lit(None).cast("string").alias("parent_url"),
-            F.lit(0).alias("tries"),
-            F.lit(False).alias("retried"),
-            (
-                F.col("curl").isin(reload_list) if reload_list else F.lit(False)
-            ).alias("reloadable"),
-            (
-                F.create_map(
-                    *[
-                        F.lit(x)
-                        for kv in sorted((temp or {}).items())
-                        for x in (str(kv[0]), str(kv[1]))
-                    ]
-                ).cast("map<string,string>")
-                if temp
-                else F.create_map().cast("map<string,string>")
-            ).alias("temp"),
-            F.lit("queued").alias("state"),
+            ),
+            spider=spider,
+            rule=rule,
+            url=F.col("curl"),
+            method="GET",
+            post_data="",
+            priority=priority,
+            seq=F.col("_ord") if has_ord else None,
+            depth=0,
+            parent_url=None,
+            tries=0,
+            retried=False,
+            reloadable=F.col("curl").isin(reload_list) if reload_list else False,
+            temp=F.create_map(
+                *[F.lit(str(x)) for kv in sorted((temp or {}).items()) for x in kv]
+            ),
+            state="queued",
         )
-        self._merge_new_frontier(new_df, state0)
+        self._merge_new_frontier(new_df, state)
 
-    def _seed_prelude(self):
-        state0 = self._state_ref() if self.catalog.state() is not None else None
-        if state0 is not None:
-            self._flush(state0)  # durable base for the merge
-        return state0
-
-    def _merge_new_frontier(self, new_df: DataFrame, state0) -> None:
-        # in-batch dedup, AFTER the caller's robots filter (a blocked row
-        # must not shadow an allowed duplicate): first occurrence in seq
-        # order wins — colliding seeds or template indices canonicalize
-        # to one key; reloadable rows always pass but still claim their
-        # key for later dups
-        by_key = Window.partitionBy("key").orderBy(F.asc("seq"))
-        new_df = (
-            new_df.withColumn("_krn", F.row_number().over(by_key))
-            .where(F.col("reloadable") | (F.col("_krn") == 1))
-            .drop("_krn")
-        )
-        # push dedup (hasHistory = success ∪ temp history): inherited
-        # url_seen (SuccessInherit) via the Bloom-accelerated
-        # _dedup_vs_history — a seed_range re-run against 10^10 seen
-        # keys probes the per-bucket sidecars instead of paying a
-        # full-table exact anti-join — plus still-queued frontier keys
-        # (in-flight, not yet in url_seen: exact anti-join, O(queue))
-        old_frontier = None
-        if state0 is not None:
-            old_frontier = (
-                self._frontier_df
-                if self._frontier_df is not None
-                else self.catalog.read("frontier")
-            )
-        non_reload = self._dedup_vs_history(new_df.where(~F.col("reloadable")))
-        if old_frontier is not None:
-            non_reload = non_reload.join(
-                old_frontier.where(F.col("state") == "queued").select("key"),
-                "key",
-                "left_anti",
-            )
-        new_df = new_df.where(F.col("reloadable")).unionByName(non_reload)
-        base_seq = state0["next_seq"] if state0 else 0
-        limit = self.spec.limit
-        max_page = (
-            state0["max_page"]
-            if state0
-            else (-limit if limit is not None else None)
-        )
-        # limit guard: accepted (non-dup) seeds consume the remaining
-        # budget in seed order (matrix.go:59-61,97 — dups never increment).
-        # seq is unique within the batch (seed() ordinal / seed_range _ord),
-        # so the two-phase rank avoids funnelling a 10^10-entry seed_range
-        # through one task the way a global Window.orderBy would.
-        pre = new_df.persist()  # the range rank samples + rescans its input
-        _seed_unpersist: list[DataFrame] = []
-        new_df = two_phase_rank(
-            pre, [F.asc("seq")], max(1, self.config.frontier_partitions), "_rn",
-            unpersist_into=_seed_unpersist,
-        )
-        if max_page is not None:
-            new_df = new_df.where(F.col("_rn") <= max(0, -max_page))
-        new_df = (
-            new_df.withColumn(
-                "seq", (F.lit(base_seq) + F.col("_rn") - 1).cast("long")
-            )
-            .drop("_rn")
-            .persist()
-        )
-        n_new = new_df.count()
-        for df in [pre, *_seed_unpersist]:
-            release(df)
-        if state0 is None:
-            state = {
+    def _seed_prelude(self) -> dict:
+        """The state a seed merges into: the current one, flushed first
+        as the durable base for the merge, or a fresh catalog's initial
+        state."""
+        if self.catalog.state() is None:
+            limit = self.spec.limit
+            self._state = {
                 "superstep": 0,
-                "next_seq": n_new,
-                "max_page": max_page + n_new if max_page is not None else None,
-                "queued_count": n_new,
+                "next_seq": 0,
+                # limit guard (matrix.go:59-61,97): -limit, +1 per push
+                "max_page": -limit if limit is not None else None,
+                "queued_count": 0,
                 "failed_wait_count": 0,
                 "stopped": False,
                 "totals": {"fetched": 0, "failed": 0, "items": 0, "images": 0},
             }
-            self.catalog.commit({}, {"frontier": new_df}, state)
-            self._frontier_df = None  # force re-read of the committed frontier
-            self._state = state
-        else:
-            frontier = (
-                old_frontier.unionByName(new_df)
-                .coalesce(self.config.frontier_partitions)
-                .localCheckpoint(eager=True)
-            )
-            state0.update(
-                next_seq=base_seq + n_new,
-                max_page=max_page + n_new if max_page is not None else None,
-                queued_count=state0["queued_count"] + n_new,
-                stopped=state0["stopped"] and n_new == 0,
-            )
-            self.catalog.commit({}, {"frontier": frontier}, state0)
-            if self._frontier_df is not None:
-                release(self._frontier_df)
-            self._frontier_df = frontier
-            self._frontier_dirty = False
-        release(new_df)
+            return self._state
+        state = self._state_ref()
+        self._flush(state)
+        return state
+
+    def _merge_new_frontier(self, new_df: DataFrame, state: dict) -> None:
+        """Push seed rows in seq order (after the caller's robots filter:
+        a blocked row must not shadow an allowed duplicate) into the
+        frontier, with the still-queued keys in flight, and commit it.
+        Rows of an orderless source (null seq) push in URL order."""
+        old = (
+            self._frontier_df
+            if self._frontier_df is not None
+            else self.catalog.read("frontier")
+        )
+        in_flight = (
+            old.where(F.col("state") == "queued").select("key")
+            if old is not None
+            else None
+        )
+        pushed = self._push(
+            new_df, [F.asc("seq"), F.asc("url")], in_flight, state
+        )
+        n = pushed.count()
+        self._set_frontier(pushed if old is None else old.unionByName(pushed))
+        _count_pushes(state, n)
+        state.update(
+            queued_count=state["queued_count"] + n,
+            stopped=state["stopped"] and n == 0,
+        )
+        self._flush(state)
 
     # ------------------------------------------------------------------
     # superstep loop
@@ -795,14 +717,14 @@ class CrawlEngine:
                 )
 
     def _shrink_shuffles(self, state: dict) -> int | None:
-        """Small-wave shuffle shrink (config.adaptive_shuffle_rows): a
-        tail wave of 1-100 rows pays base-width near-empty shuffle tasks
-        across ~10 stages; size this superstep's shuffles by the queue
-        instead. Returns the session default to restore afterwards, or
-        None when nothing changed."""
-        cfg = self.config
-        if not cfg.adaptive_shuffle_rows:
-            return None
+        """Small-wave shuffle shrink: a tail wave of 1-100 rows pays
+        base-width near-empty shuffle tasks across ~10 stages; size this
+        superstep's shuffles at ``_ROWS_PER_TASK`` rows per partition
+        instead. Results are partition-count independent (the
+        conformance suite runs both shapes). The conf is session-wide
+        for the superstep: the engine owns its session during a crawl.
+        Returns the session default to restore afterwards, or None when
+        nothing changed."""
         try:
             base = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         except Exception:
@@ -813,7 +735,7 @@ class CrawlEngine:
         # queue depth — a 100-row wave of pages emitting hundreds of
         # links each must not collapse those stages to 2 partitions
         q_rows = max(1, state["queued_count"], self._last_children_count)
-        target = -(-q_rows // cfg.adaptive_shuffle_rows)  # ceil
+        target = -(-q_rows // _ROWS_PER_TASK)  # ceil
         if not base or target >= base:
             return None
         self.spark.conf.set("spark.sql.shuffle.partitions", str(target))
@@ -842,13 +764,8 @@ class CrawlEngine:
         superstep = state["superstep"] + 1
         # python body-stage width for this superstep: queue depth is a
         # (pre-wave) upper bound on every body batch below — size the
-        # body-store mapInPandas stages by DATA, not by inherited bucket
-        # width (config.python_rows_per_task; BASELINE §6's lesson)
-        py_tasks = (
-            max(1, -(-max(1, state["queued_count"]) // cfg.python_rows_per_task))
-            if cfg.python_rows_per_task
-            else None
-        )
+        # body-store mapInPandas stages by DATA, not by bucket width
+        py_tasks = -(-max(1, state["queued_count"]) // _ROWS_PER_TASK)
         tagged = self._select_wave(
             frontier.where(F.col("state") == "queued"), superstep
         )
@@ -868,9 +785,7 @@ class CrawlEngine:
         kept = self._push_children(
             parsed, new_seen, rest, failed_first, state, superstep
         )
-        new_frontier = self._next_frontier(
-            rest, others, kept, new_failed_wait, state, superstep
-        )
+        self._next_frontier(rest, others, kept, new_failed_wait, superstep)
         n = self._count_wave(fetched, out["items"], perm_failed, kept, superstep)
         self._last_children_count = n["children"]
 
@@ -928,14 +843,9 @@ class CrawlEngine:
                 ).cast("int").alias("wave_pos"),
                 "priority", "seq",
             )
+        _count_pushes(state, n["children"])
         state.update(
             superstep=superstep,
-            next_seq=state["next_seq"] + n["children"],
-            max_page=(
-                state["max_page"] + n["children"]
-                if state["max_page"] is not None
-                else None
-            ),
             # an EMPTY wave despite queued_count > 0 is counter drift
             # (selection takes a non-empty prefix whenever any queued
             # row exists — budget >= 1 per host): trust the frontier,
@@ -955,11 +865,6 @@ class CrawlEngine:
         if self._file_rules:
             # resume-safe: older checkpoints predate the files counter
             totals["files"] = totals.get("files", 0) + n["files"]
-        if self._frontier_df is not None:
-            # old checkpoint may still back pending append plans — defer
-            self._pending_release.append(self._frontier_df)
-        self._frontier_df = new_frontier
-        self._frontier_dirty = True
         for name, df in appends.items():
             self._pending.setdefault(name, []).append(
                 df.coalesce(cfg.append_partitions)
@@ -1202,17 +1107,15 @@ class CrawlEngine:
             .select(*perm_cols)
             .unionByName(failed_repeat.select(*perm_cols))
         )
-        new_failed_wait = failed2.where(F.col("_sk").isNull()).select(
-            "key", "spider", "rule", "url", "host", "method", "post_data",
-            "priority", "seq", "depth", "parent_url",
-            (F.col("tries") + 1).alias("tries"), "retried", "reloadable",
-            "temp",
-            F.lit("failed_wait").alias("state"),
+        new_failed_wait = frontier_rows(
+            failed2.where(F.col("_sk").isNull()),
+            tries=F.col("tries") + 1,
+            state="failed_wait",
         )
         return failed_first, perm_failed, new_failed_wait
 
     def _parse(
-        self, fetched: DataFrame, superstep: int, py_tasks: int | None
+        self, fetched: DataFrame, superstep: int, py_tasks: int
     ) -> DataFrame:
         """Parse phase: links, figures and ExtractRule output of every
         ok page in one decoded-body pass (``fetcher.parse_pages``),
@@ -1238,7 +1141,7 @@ class CrawlEngine:
 
     def _emit(
         self, parsed: DataFrame, fetched: DataFrame, superstep: int,
-        py_tasks: int | None,
+        py_tasks: int,
     ) -> dict:
         """Emit phase, as lazy append plans: ``items`` (figure items
         plus emitting ExtractRule items, cached), ``images`` (None when
@@ -1374,37 +1277,24 @@ class CrawlEngine:
         self, parsed: DataFrame, new_seen: DataFrame, rest: DataFrame,
         failed_first: DataFrame, state: dict, superstep: int,
     ) -> DataFrame:
-        """Children phase: emitted links → deduped, limit-cut children
-        in push order with a dense ``_push_rank`` (cached)."""
+        """Children phase: emitted links, pushed (:meth:`_push`) in push
+        order (parent priority desc, parent seq, ordinal) with this
+        wave's successes and the rest of the queue in flight."""
         self._describe(superstep, "children")
-        # checkpoint: the emission chain (explode -> canonicalize UDF ->
-        # route -> robots -> key) is re-analyzed by every dedup/rank
-        # Dataset below; truncating it once keeps those trees flat
-        children = self._checkpoint(self._emit_children(parsed, superstep))
-        # dedup (matrix.go:81-86 hasHistory = success-history ∪ temp-history):
-        # in-run keys (this wave's successes + still-queued) are small and
-        # checked with a plain anti-join (no distinct: duplicates on the
-        # right side of a left_anti are harmless); the historical
-        # url_seen — the 10^10-scale side — goes through the Bloom
-        # sidecar so the exact anti-join only sees probable hits + the
-        # uncovered recent tail
-        in_run_keys = new_seen.union(rest.select("key"))
-        non_reload = children.where(~F.col("reloadable")).join(
-            in_run_keys, "key", "left_anti"
-        )
-        non_reload = self._dedup_vs_history(non_reload)
-        # reloadable children skip every dedup check (request.go:270-277)
-        kept = non_reload.unionByName(children.where(F.col("reloadable")))
+        children = self._emit_children(parsed, superstep)
         # failed-wave-position rule (see module docstring); reloadable
         # exempt. Wave position i > j  <=>  (-prio_i, seq_i) > (-prio_j,
         # seq_j) lexicographically — no materialized position needed.
+        # It drops rows, not keys, so it runs before the per-key dedup.
         failed_pos = failed_first.select(
             F.col("key").alias("_fkey"),
             F.col("priority").alias("_fprio"),
             F.col("seq").alias("_fseq"),
         )
-        kept = (
-            kept.join(failed_pos, kept["key"] == failed_pos["_fkey"], "left")
+        children = (
+            children.join(
+                failed_pos, children["key"] == failed_pos["_fkey"], "left"
+            )
             .where(
                 F.col("reloadable")
                 | F.col("_fkey").isNull()
@@ -1416,55 +1306,113 @@ class CrawlEngine:
             )
             .drop("_fkey", "_fprio", "_fseq")
         )
-        # within-batch dedup: first emitter in wave order wins (non-reloadable)
-        by_key = Window.partitionBy("key").orderBy(
-            F.desc("p_prio"), F.asc("p_seq"), F.asc("ordinal")
+        # checkpoint: the emission chain (explode -> canonicalize UDF ->
+        # route -> robots -> key -> failed join) is re-analyzed by every
+        # dedup/rank Dataset in the push and read by both of its
+        # branches; truncating it once keeps those trees flat
+        return self._push(
+            self._checkpoint(children),
+            [F.desc("p_prio"), F.asc("p_seq"), F.asc("ordinal")],
+            new_seen.union(rest.select("key")),
+            state,
         )
-        kept = kept.withColumn("_rn", F.row_number().over(by_key)).where(
-            F.col("reloadable") | (F.col("_rn") == 1)
-        ).drop("_rn")
-        # limit guard cutoff in push order (matrix.go:59-61,97) and dense
-        # seq assignment both need a global rank over the CHILDREN — the
-        # two-phase form keeps it shuffle-parallel (no single-partition
-        # exchange anywhere in the superstep plan)
-        kept_base = kept.persist()
-        kept = dense_push_rank(
-            kept_base,
-            max(1, self.config.frontier_partitions),
+
+    def _push(
+        self, cands: DataFrame, order: list, in_flight: DataFrame | None,
+        state: dict,
+    ) -> DataFrame:
+        """The engine's one Push (`matrix.go:51-98`; the oracle's
+        ``push``): seeds, children and requeued failures all enter the
+        frontier through it.
+
+        A non-reloadable row drops when its key is in url_seen
+        (hasHistory, Bloom-probed by :meth:`_dedup_vs_history`) or in
+        ``in_flight`` (queued keys not yet seen); of the rows left, the
+        first per key in ``order`` wins. Reloadable rows all pass
+        (request.go:270-277). The survivors are ranked over ``order``
+        (unique per row) by :func:`two_phase_rank`, cut at the limit
+        guard's remaining budget ``state["max_page"]`` (matrix.go:59-61,
+        97: dropped rows never consume it) and given dense ``seq`` from
+        ``state["next_seq"]``. Returns the pushed rows, cached; the
+        caches are released at the next flush.
+
+        One dedup order serves every caller, without changing its rows:
+
+        1. ``reloadable`` is a function of the canonical URL, and the
+           key hashes that URL, so all rows of one key agree on it.
+        2. The anti-joins drop whole keys, so they commute with the
+           per-key window: windowing first (the oracle's push-by-push
+           order) or last (here, over the fewest rows) gives the same
+           rows.
+        3. ``_ack_failures`` sends a key that is already in the failure
+           store to failures_final, so failed_wait holds at most one
+           row per key: the requeue needs no dedup of its own.
+        """
+        # both branches read `cands`: a checkpoint or driver rows for
+        # every caller but seed_urls_df, whose reloadable branch is
+        # empty (folded away) unless the spec lists reloadable URLs
+        non_reload = cands.where(~F.col("reloadable"))
+        if in_flight is not None:
+            # O(queue): a plain anti-join (duplicates on the right side
+            # of a left_anti are harmless, so no distinct)
+            non_reload = non_reload.join(in_flight, "key", "left_anti")
+        first = Window.partitionBy("key").orderBy(*order)
+        non_reload = (
+            self._dedup_vs_history(non_reload)
+            .withColumn("_krn", F.row_number().over(first))
+            .where(F.col("_krn") == 1)
+            .drop("_krn")
+        )
+        # the range rank samples its input and rescans it: one evaluation
+        kept = non_reload.unionByName(cands.where(F.col("reloadable"))).persist()
+        ranked = two_phase_rank(
+            kept, order, max(1, self.config.frontier_partitions), "_rank",
             unpersist_into=self._pending_release,
         )
         if state["max_page"] is not None:
-            kept = kept.where(F.col("_push_rank") <= max(0, -state["max_page"]))
-        kept = kept.persist()
-        self._pending_release.extend([kept_base, kept])
-        return kept
+            ranked = ranked.where(F.col("_rank") <= max(0, -state["max_page"]))
+        pushed = (
+            ranked.withColumn(
+                "seq", (F.lit(state["next_seq"]) + F.col("_rank") - 1).cast("long")
+            )
+            .drop("_rank")
+            .persist()
+        )
+        self._pending_release.extend([kept, pushed])
+        return pushed
+
+    def _set_frontier(self, df: DataFrame) -> None:
+        """Replace the in-memory frontier with ``df``, coalesced and
+        checkpointed: lineage is truncated every step, and parquet stays
+        the durable resume point without the hot loop re-reading it. The
+        next flush commits it and releases the frontier it replaces,
+        which may still back pending append plans."""
+        if self._frontier_df is not None:
+            self._pending_release.append(self._frontier_df)
+        self._frontier_df = df.coalesce(
+            self.config.frontier_partitions
+        ).localCheckpoint(eager=True)
+        self._frontier_dirty = True
 
     def _next_frontier(
         self, rest: DataFrame, others: DataFrame, kept: DataFrame,
-        new_failed_wait: DataFrame, state: dict, superstep: int,
-    ) -> DataFrame:
+        new_failed_wait: DataFrame, superstep: int,
+    ) -> None:
         """Frontier phase: rest of the queue ∪ non-queued rows ∪ the new
-        children (dense seq from ``state['next_seq']``) ∪ new
-        failed_wait rows, checkpointed. It runs BEFORE the counts job:
-        this checkpoint forces the expensive children dedup + rank spine
-        exactly once, and the counts then read materialized branches."""
+        children ∪ new failed_wait rows, checkpointed. It runs BEFORE the
+        counts job: this checkpoint forces the expensive children dedup
+        + rank spine exactly once, and the counts then read materialized
+        branches."""
         self._describe(superstep, "frontier")
-        new_rows = kept.select(
-            "key", "spider", "rule",
-            F.col("curl").alias("url"), "host",
-            "method", "post_data", "priority",
-            (F.lit(state["next_seq"]) + F.col("_push_rank") - 1).alias("seq"),
-            "depth", "parent_url",
-            F.lit(0).alias("tries"), F.lit(False).alias("retried"),
-            "reloadable", "temp",
-            F.lit("queued").alias("state"),
-        )
-        return (
+        self._set_frontier(
             rest.unionByName(others)
-            .unionByName(new_rows)
+            .unionByName(
+                frontier_rows(
+                    kept, url=F.col("curl"), tries=0, retried=False,
+                    state="queued",
+                )
+            )
             .unionByName(new_failed_wait)
-            .coalesce(self.config.frontier_partitions)
-            .localCheckpoint(eager=True)
         )
 
     def _count_wave(
@@ -1512,7 +1460,7 @@ class CrawlEngine:
         return counts
 
     def _stage_image_sink(
-        self, image_meta: DataFrame, superstep: int, py_tasks: int | None
+        self, image_meta: DataFrame, superstep: int, py_tasks: int
     ) -> None:
         """Python image sink: decode + validate + write image rows inside
         the body-read task (body bytes never cross into the JVM). The
@@ -1559,11 +1507,7 @@ class CrawlEngine:
             for d in dfs[1:]:
                 out = out.unionByName(d)
             appends[name] = out
-        rewrites = (
-            {"frontier": self._frontier_df}
-            if (self._frontier_dirty and self._frontier_df is not None)
-            else {}
-        )
+        rewrites = {"frontier": self._frontier_df} if self._frontier_dirty else {}
         adopt: dict[str, list[str]] = {}
         staged_all = [
             (name, manifest, stage_dir, rel)
@@ -1586,21 +1530,12 @@ class CrawlEngine:
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.replace(stage_dir, dst)
 
-        if len(staged_all) > 1:
-            # commit_every>1 buffers one independent staged sink per
-            # superstep; run them as concurrent Spark jobs so the tail
-            # tasks of one back-fill cores freed by another (guide
-            # §2.6) — a few in flight is enough, and it bounds python
-            # worker pressure
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(3, len(staged_all))
-            ) as pool:
-                list(pool.map(_force_adopt, staged_all))
-        else:
-            for item in staged_all:
-                _force_adopt(item)
+        # commit_every>1 buffers one independent staged sink per
+        # superstep; they run as concurrent Spark jobs so the tail tasks
+        # of one back-fill cores freed by another — a few in flight is
+        # enough, and it bounds python worker pressure
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            list(pool.map(_force_adopt, staged_all))
         for name, _m, _s, rel in staged_all:
             adopt.setdefault(name, []).append(rel)
         self._pending_adopt = {}
@@ -2003,63 +1938,18 @@ class CrawlEngine:
         self._uncovered_est = 0
 
     def _requeue_failures(self, state: dict, frontier: DataFrame) -> None:
-        """failure-requeue-once at queue drain (`matrix.go:186-202`)."""
+        """failure-requeue-once at queue drain (`matrix.go:186-202`):
+        every failed_wait row is re-pushed (:meth:`_push`, in seq order —
+        a reloadable success followed by a same-key failure can make a
+        failed key seen) and stays in the failure store as failed_nil."""
         fw = frontier.where(F.col("state") == "failed_wait")
-        rest = frontier.where(F.col("state") != "failed_wait")
-        # failed keys are normally absent from url_seen, but a reloadable
-        # success followed by a same-key failure can collide: dedup via
-        # the Bloom-accelerated probe (same path as the per-wave push),
-        # not a full url_seen anti-join
-        cand = fw.where(F.col("reloadable")).unionByName(
-            self._dedup_vs_history(fw.where(~F.col("reloadable")))
+        pushed = self._push(fw, [F.asc("seq")], None, state)
+        n = pushed.count()
+        self._set_frontier(
+            frontier.where(F.col("state") != "failed_wait")
+            .unionByName(fw.withColumn("state", F.lit("failed_nil")))
+            .unionByName(frontier_rows(pushed, retried=True, state="queued"))
         )
-        # one requeue per key (the failure store is key-addressed,
-        # matrix.go:160-168): keep the earliest failure if duplicates slip in
-        per_key = Window.partitionBy("key").orderBy(F.asc("seq"))
-        cand_pre = (
-            cand.withColumn("_krn", F.row_number().over(per_key))
-            .where(F.col("_krn") == 1)
-            .drop("_krn")
-            .persist()  # two_phase_rank samples + rescans its input
-        )
-        # seq is unique after the per-key dedup, so the distributed rank
-        # is deterministic (failures can be O(frontier) on a bad day —
-        # never a single-partition window here)
-        _rq_unpersist: list[DataFrame] = []
-        cand = two_phase_rank(
-            cand_pre, [F.asc("seq")], max(1, self.config.frontier_partitions),
-            "_rank", unpersist_into=_rq_unpersist,
-        )
-        if state["max_page"] is not None:
-            cand = cand.where(F.col("_rank") <= max(0, -state["max_page"]))
-        requeued = cand.select(
-            "key", "spider", "rule", "url", "host", "method", "post_data",
-            "priority",
-            (F.lit(state["next_seq"]) + F.col("_rank") - 1).alias("seq"),
-            "depth", "parent_url", "tries",
-            F.lit(True).alias("retried"), "reloadable", "temp",
-            F.lit("queued").alias("state"),
-        ).persist()
-        n = requeued.count()
-        nils = fw.withColumn("state", F.lit("failed_nil"))
-        new_frontier = (
-            rest.unionByName(nils)
-            .unionByName(requeued)
-            .coalesce(self.config.frontier_partitions)
-            .localCheckpoint(eager=True)
-        )
-        state.update(
-            next_seq=state["next_seq"] + n,
-            max_page=(state["max_page"] + n if state["max_page"] is not None else None),
-            queued_count=n,
-            failed_wait_count=0,
-        )
-        if n == 0:
-            state["stopped"] = True
-        self.catalog.commit({}, {"frontier": new_frontier}, state)
-        if self._frontier_df is not None:
-            release(self._frontier_df)
-        self._frontier_df = new_frontier
-        self._frontier_dirty = False
-        for df in [requeued, cand_pre, *_rq_unpersist]:
-            release(df)
+        _count_pushes(state, n)
+        state.update(queued_count=n, failed_wait_count=0, stopped=n == 0)
+        self._flush(state)

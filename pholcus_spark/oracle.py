@@ -38,7 +38,6 @@ from collections import defaultdict
 
 from .keys import (
     absolutize,
-    canonicalize_url,
     canonicalize_url_safe,
     host_of,
     request_key,
@@ -1473,8 +1472,10 @@ def crawl(
         keyins = parse_keyins(s.get("keyin", "") or "") or [""]
         method = (s.get("method", "GET") or "GET").upper()
         for k in keyins:
+            url = canonicalize_url_safe(apply_keyin(s["url"], k))
+            if url is None:
+                continue  # a malformed seed drops, like a malformed href
             spider = fanout_spider_name(s["spider"], k)
-            url = canonicalize_url(apply_keyin(s["url"], k))
             # keyin tokens substitute in temp VALUES too — the
             # reference builds AddQueue Temps from keyin-derived
             # locals (googlesearch.go:89 baseUrl; alibaba's paginate

@@ -41,9 +41,9 @@ def local_frame(spark: SparkSession, rows, ddl: str):
 
     ``spark.createDataFrame(list)`` pickles the rows into a
     ``PythonRDD``, so every query that scans such a frame, however
-    small, runs python tasks (~140 ms each, BASELINE §6). Here the rows
-    become a ``pyarrow.Table`` typed from the DDL and Spark stores it
-    as a local relation (or, above
+    small, runs python tasks (~140 ms each, OPTIMIZATION_r06.md item
+    4). Here the rows become a ``pyarrow.Table`` typed from the DDL and
+    Spark stores it as a local relation (or, above
     ``spark.sql.execution.arrow.localRelationThreshold``, a JVM RDD of
     Arrow batches): same schema and rows, no python task. The one
     place the package turns driver rows into a frame

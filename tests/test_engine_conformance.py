@@ -826,6 +826,32 @@ def _corpus_with_seeds(corpus, seeds):
     return c
 
 
+def test_malformed_seed_drops_without_aborting(spark):
+    """A seed whose URL does not canonicalize (out-of-range port, bad
+    IPv6 bracket) drops like a malformed href; the valid seeds around
+    it crawl exactly as in the oracle, and nothing raises."""
+    corpus = fixtures.generate(
+        fixtures.SiteSpec(
+            n_hosts=2, list_pages=2, flaky_rate=0.0, fail_404_rate=0.0
+        )
+    )
+    bad = [
+        dict(corpus.seeds[0], url=url)
+        for url in ("http://h.test:99999/", "http://[bad/")
+    ]
+    assert len(corpus.seeds) == 2
+    corpus = _corpus_with_seeds(
+        corpus, [corpus.seeds[0], *bad, corpus.seeds[1]]
+    )
+    run, res = run_pair(spark, corpus, SpiderSpec("site"))
+    try:
+        check_conformance(run, res)
+        seeded = {o["url"] for o in res.order if o["superstep"] == 1}
+        assert seeded == {"http://h000.test/p/0", "http://h001.test/p/0"}
+    finally:
+        run.cleanup()
+
+
 def test_json_extract_rule_conformance(spark):
     """kind='json' ExtractRule (API-page crawling — reference rules
     json.Unmarshal page bodies, taobao.go:127): a JSON endpoint added

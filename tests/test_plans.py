@@ -166,3 +166,94 @@ def test_seed_range_frontier_is_multi_partition(spark, tmp_path):
     assert [r.url for r in lo] == [
         f"http://h000.test/p/{i}" for i in range(3)
     ]
+
+
+def test_push_dedups_cuts_and_numbers(spark, tmp_path):
+    """CrawlEngine._push, the one Push every frontier entry goes
+    through, on hand-built candidates: history and in-flight keys drop,
+    the first non-reloadable row per key in push order wins, reloadable
+    rows all pass, the limit keeps a prefix of the survivors and seq is
+    dense from next_seq — at one and at eight rank partitions."""
+    from pyspark.sql import functions as F
+
+    from pholcus_spark.catalog import SnapshotCatalog
+    from pholcus_spark.engine import (
+        URL_SEEN_DDL, CrawlEngine, EngineConfig, release,
+    )
+    from pholcus_spark.fetch import FixtureFetcher
+    from pholcus_spark.session import local_frame
+    from pholcus_spark.spiderspec import SpiderSpec
+
+    pages = local_frame(
+        spark, [], "url string, status int, flaky boolean, content_type string, body binary"
+    )
+    # (key, reloadable, seq); seq is the push order and, below, the tag
+    cands = local_frame(
+        spark,
+        [
+            ("b", False, 6), ("a", False, 3), ("r", True, 4), ("s", False, 2),
+            ("a", False, 0), ("q", False, 5), ("r", True, 1), ("c", False, 7),
+        ],
+        "key string, reloadable boolean, seq long",
+    ).withColumn("tag", F.col("seq"))
+    in_flight = local_frame(spark, [("q",)], "key string")
+    survivors = [0, 1, 4, 6, 7]  # a first, r twice, b, c
+    for parts in (1, 8):
+        cat = SnapshotCatalog(str(tmp_path / f"push{parts}"), spark)
+        cat.commit(
+            {"url_seen": local_frame(spark, [("s", 0)], URL_SEEN_DDL)}, {}, {}
+        )
+        eng = CrawlEngine(
+            spark, cat, FixtureFetcher(pages), SpiderSpec("site"), None,
+            EngineConfig(frontier_partitions=parts),
+        )
+        for max_page, want in ((None, survivors), (-2, survivors[:2])):
+            state = {"next_seq": 10, "max_page": max_page}
+            pushed = eng._push(cands, [F.asc("seq")], in_flight, state)
+            got = sorted((r.seq, r.tag) for r in pushed.collect())
+            assert got == [(10 + i, t) for i, t in enumerate(want)], (parts, max_page)
+        for df in eng._pending_release:
+            release(df)
+
+
+def test_engine_commits_and_checkpoints_in_one_place():
+    """Static guard: engine.py commits the catalog only in ``_flush``,
+    and checkpoints only in ``_checkpoint`` (superstep-owned) and
+    ``_set_frontier`` (the frontier) — so every snapshot goes through
+    the one flush and every checkpoint has one release path."""
+    import ast
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "pholcus_spark", "engine.py",
+    )
+    sites: dict[str, list[str]] = {"commit": [], "localCheckpoint": []}
+
+    class Calls(ast.NodeVisitor):
+        fn = "<module>"  # innermost enclosing function
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Call(self, node):
+            func = node.func
+            if isinstance(func, ast.Attribute) and (
+                func.attr == "localCheckpoint"
+                or (
+                    func.attr == "commit"
+                    and isinstance(func.value, ast.Attribute)
+                    and func.value.attr == "catalog"
+                )
+            ):
+                sites[func.attr].append((self.fn, node.lineno))
+            self.generic_visit(node)
+
+    with open(path, encoding="utf-8") as f:
+        Calls().visit(ast.parse(f.read(), path))
+    assert [fn for fn, _ in sites["commit"]] == ["_flush"], sites
+    assert sorted(fn for fn, _ in sites["localCheckpoint"]) == [
+        "_checkpoint", "_set_frontier",
+    ], sites
