@@ -3,7 +3,6 @@
 Modes:
   python bench_extra.py time <query...>      noop-sink timing, median of N
   python bench_extra.py plan <query...>      capture .explain("formatted")
-  python bench_extra.py crawl [reps]         crawl_bench with timing markers
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 (default 32), PHOLCUS_REPS (default 3), PHOLCUS_PLAN_DIR (default
@@ -43,22 +42,6 @@ def main():
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
-
-    if mode == "crawl":
-        import bench
-
-        n = int(args[0]) if args else 1
-        # warmup (tiny) then timed reps, mirroring bench.py methodology
-        from pholcus_spark import fixtures as _fx
-
-        bench.crawl_bench(
-            spark, cpus,
-            spec=_fx.SiteSpec(n_hosts=2, list_pages=5, flaky_rate=0.0,
-                              fail_404_rate=0.0),
-        )
-        runs = [bench.crawl_bench(spark, cpus) for _ in range(n)]
-        print(json.dumps({"crawl_runs": runs}))
-        return
 
     names = args or list(qs)
     if mode == "plan":

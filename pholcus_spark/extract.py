@@ -190,21 +190,6 @@ def extract_article(text: str) -> str:
     return best
 
 
-def clean_html_udf(depth: int = 5):
-    """Column form of :func:`clean_html` (Arrow-batched)."""
-
-    @pandas_udf(StringType())
-    def _udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: clean_html(t, depth))
-
-    return _udf
-
-
-@pandas_udf(StringType())
-def extract_article_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(extract_article)
-
-
 # hidden marker key tagging items produced by an emit=False ExtractRule
 # (a ParseFunc that never calls ctx.Output): the fused parse flattens
 # every same-named rule's items into ONE dsl_items array, so emit is

@@ -13,10 +13,10 @@ tests run with no network):
   status>=400 model the permanent path (`downloader_surfer.go:67-69`).
 * :class:`StoreFetcher` — the fixture join over a body store's
   metadata; bodies are read python-side, only where a stage needs them.
-* :class:`HttpFetcher` — an ``aiohttp``-based ``mapInPandas`` batch
-  fetcher for production clusters. Gated behind an import-try; tests
-  never touch the network (``httpfetch.StdlibHttpFetcher`` is the
-  stdlib twin).
+* :class:`~pholcus_spark.httpfetch.HttpFetcher` — the one live
+  fetcher: a ``mapInPandas`` batch over a pluggable session (stdlib
+  urllib by default, aiohttp opt-in). Tests drive it against an
+  in-process server; none touches the network.
 
 ``fetch(wave)`` returns the wave DataFrame extended with
 ``status int, content_type string, body binary, ok boolean``.
@@ -322,171 +322,3 @@ class StoreFetcher(FixtureFetcher):
             schema,
             n_tasks=n_tasks or self.store.n_buckets,
         )
-
-
-class HttpFetcher(Fetcher):  # aiohttp session gated; wrapper executed via factory
-    """Production fetcher: Arrow-batched async HTTP via mapInPandas.
-
-    Per-batch politeness is already enforced upstream by wave selection;
-    this stage only bounds in-flight connections per task. The whole
-    per-request semantics — timeouts, bounded in-fetch retries, redirect
-    policy with Go's method conversion, POST/POST-M/HEAD encodings
-    (`request.go:45-50`, `surf.go:112-197`, `surfer/param.go:61-144`) —
-    live in the SHARED :func:`~pholcus_spark.httpfetch.async_fetch_one`
-    loop, which the stdlib fetcher's live-server suite executes on
-    every run (tests/test_httpfetch.py, incl. stub-session drills of
-    the async surface); only the aiohttp ClientSession wiring here is
-    import-gated.
-    """
-
-    def __init__(self, timeout_s: float = 120.0, max_conn_per_task: int = 16,
-                 try_times: int = 3, retry_pause_s: float = 2.0,
-                 redirect_times: int = 0, session_factory=None):
-        # redirect policy per the reference (`surfer/param.go:130-144`):
-        # 0 = unlimited, <0 = forbidden, n = at most n redirects
-        self.redirect_times = redirect_times
-        # session_factory(timeout_s, max_conn) -> async context manager
-        # yielding an async_fetch_one-compatible session. None (the
-        # default) builds an aiohttp ClientSession per task; a factory
-        # lets the WHOLE mapInPandas wrapper — schema assembly, batch
-        # concurrency, column plumbing — run without aiohttp (the
-        # parity suite drives it over the urllib session against a
-        # live server). The factory is pickled into the task closure,
-        # so it must be self-contained.
-        self._session_factory = session_factory
-        if session_factory is None:
-            try:
-                import aiohttp  # noqa: F401
-            except ImportError as e:
-                raise NotImplementedError(
-                    "HttpFetcher requires aiohttp (not installed in this "
-                    "container); use FixtureFetcher for tests/benchmarks "
-                    "or inject session_factory="
-                ) from e
-        self.timeout_s = timeout_s
-        self.max_conn_per_task = max_conn_per_task
-        self.try_times = try_times
-        self.retry_pause_s = retry_pause_s
-
-    def fetch(self, wave: DataFrame) -> DataFrame:
-        import asyncio
-
-        timeout_s = self.timeout_s
-        max_conn = self.max_conn_per_task
-        try_times = self.try_times
-        retry_pause_s = self.retry_pause_s
-        redirect_times = self.redirect_times
-        session_factory = self._session_factory
-        from pyspark.sql.types import (
-            BinaryType,
-            BooleanType,
-            IntegerType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        # never StructType.add on wave.schema: it mutates the frame's
-        # CACHED schema in place and pyspark 4 then resolves the
-        # phantom columns against the child plan
-        schema = StructType(
-            list(wave.schema.fields)
-            + [
-                StructField("status", IntegerType()),
-                StructField("content_type", StringType()),
-                StructField("body", BinaryType()),
-                StructField("ok", BooleanType()),
-            ]
-        )
-
-        def run(batches):
-            import pandas as pd
-
-            from .httpfetch import async_fetch_one
-
-            def make_session():
-                if session_factory is not None:
-                    return session_factory(timeout_s, max_conn)
-                import aiohttp
-
-                conn = aiohttp.TCPConnector(limit=max_conn)
-                tmo = aiohttp.ClientTimeout(total=timeout_s)
-                # auto_decompress=False: decode_content is the ONE
-                # decode point for both transports. aiohttp's default
-                # strips Content-Encoding transparently but leaves the
-                # header visible, so a payload that is ITSELF a .gz
-                # file (sitemap.xml.gz served with Content-Encoding:
-                # gzip) would match decode_content's magic sniff and be
-                # decompressed a second time (round-5 ADVICE); with the
-                # transport's decompression off the two paths cannot
-                # diverge.
-                return aiohttp.ClientSession(
-                    connector=conn, timeout=tmo, auto_decompress=False
-                )
-
-            async def fetch_all(urls, methods, bodies, proxies, uas, hdrs):
-                import json as json_mod
-
-                async with make_session() as s:
-                    # the retry/redirect/encoding loop is the SAME
-                    # async_fetch_one the stdlib fetcher runs (and the
-                    # live-server suite pins); aiohttp's ClientSession
-                    # satisfies its session surface natively (incl. the
-                    # per-request proxy= kwarg the loop forwards)
-                    return await asyncio.gather(
-                        *[
-                            async_fetch_one(
-                                s, u, m, d or "",
-                                try_times=try_times,
-                                retry_pause_s=retry_pause_s,
-                                redirect_times=redirect_times,
-                                ua=ua or "",
-                                proxy=px or "",
-                                extra_headers=(
-                                    json_mod.loads(hj) if hj else None
-                                ),
-                            )
-                            for u, m, d, px, ua, hj in zip(
-                                urls, methods, bodies, proxies, uas, hdrs
-                            )
-                        ]
-                    )
-
-            for pdf in batches:
-                methods = (
-                    pdf["method"].tolist()
-                    if "method" in pdf
-                    else ["GET"] * len(pdf)
-                )
-                bodies_in = (
-                    pdf["post_data"].tolist()
-                    if "post_data" in pdf
-                    else [None] * len(pdf)
-                )
-                proxies_in = (
-                    pdf["proxy"].tolist()
-                    if "proxy" in pdf
-                    else [None] * len(pdf)
-                )
-                uas_in = (
-                    pdf["ua"].tolist() if "ua" in pdf else [None] * len(pdf)
-                )
-                hdrs_in = (
-                    pdf["hdr"].fillna("").tolist()
-                    if "hdr" in pdf
-                    else [""] * len(pdf)
-                )
-                res = asyncio.run(
-                    fetch_all(
-                        pdf["url"].tolist(), methods, bodies_in,
-                        proxies_in, uas_in, hdrs_in,
-                    )
-                )
-                pdf = pdf.copy()
-                pdf["status"] = [r[0] for r in res]
-                pdf["content_type"] = [r[1] for r in res]
-                pdf["body"] = [r[2] for r in res]
-                pdf["ok"] = pd.Series([r[0] < 400 for r in res])
-                yield pdf
-
-        return wave.mapInPandas(run, schema)

@@ -344,19 +344,3 @@ def t1_spec() -> SiteSpec:
     """Smoke scale: 4 hosts, ~230 pages incl. images."""
     return SiteSpec()
 
-
-def t2_spec() -> SiteSpec:
-    """Conformance scale: 16 hosts, ~5k pages."""
-    return SiteSpec(n_hosts=16, list_pages=40, details_per_list=2, images_per_detail=2)
-
-
-def bench_spec(n_hosts: int = 64, list_pages: int = 300) -> SiteSpec:
-    return SiteSpec(
-        n_hosts=n_hosts,
-        list_pages=list_pages,
-        details_per_list=2,
-        images_per_detail=1,
-        hot_host=True,
-        flaky_rate=0.01,
-        fail_404_rate=0.01,
-    )

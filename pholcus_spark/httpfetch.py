@@ -1,11 +1,14 @@
-"""Stdlib-only live HTTP fetcher — the testable production fetch path.
+"""The live HTTP fetcher — the reference's one downloader, Surf
+(`app/downloader/downloader_surfer.go:35-74`,
+`surfer/surf.go:52-197`), as one :class:`HttpFetcher` over a pluggable
+session.
 
 The reference drives its downloader against a local httptest server
 (`app/downloader/downloader_test.go:25-60`, `surfer/surf_test.go`);
-this fetcher gives the same semantics first-class, executed test
-coverage against an in-process ``http.server`` (tests/test_httpfetch.py)
-— no aiohttp required (the dependency-gated :class:`~pholcus_spark.fetch.HttpFetcher`
-remains for async scale on a real cluster).
+the default transport here is stdlib ``urllib`` (no aiohttp required),
+so the whole fetcher runs first-class against an in-process
+``http.server`` (tests/test_httpfetch.py). ``aiohttp`` is an opt-in
+session factory.
 
 Semantics mirrored from the reference surf engine:
 
@@ -24,14 +27,17 @@ Semantics mirrored from the reference surf engine:
   multipart, like the reference's writer loop).
 
 Spark shape: one ``mapInPandas`` stage over the politeness-selected
-wave; per-batch concurrency via a thread pool (network IO releases the
-GIL — threads, not processes, are the right executor-local model).
+wave; each Arrow batch gathers :func:`async_fetch_one` over one session
+with a bounded number of requests in flight (the urllib session runs
+its blocking opens on a thread pool: network IO releases the GIL).
 Politeness/rate limits are enforced UPSTREAM by wave selection; this
 stage only bounds in-flight connections per task.
 """
 
 from __future__ import annotations
 
+import asyncio
+import contextlib
 from urllib.parse import parse_qsl, urljoin
 
 from pyspark.sql import DataFrame
@@ -208,11 +214,10 @@ async def async_fetch_one(
 ) -> tuple[int, str, bytes]:
     """THE request loop — retry budget, redirect policy with Go's
     method conversion, POST/POST-M/HEAD encodings, cookie harvesting —
-    shared verbatim by both transports: the urllib adapter below
-    (:func:`fetch_one` / :class:`StdlibHttpFetcher`) and the aiohttp
-    :class:`~pholcus_spark.fetch.HttpFetcher`. One implementation, so
-    the live-server suite that pins the stdlib path pins the aiohttp
-    path's semantics too.
+    shared verbatim by every transport :class:`HttpFetcher` and
+    :func:`fetch_one` run it over (the urllib session below, aiohttp's
+    ``ClientSession``). One implementation, so the live-server suite
+    that pins the urllib path pins the aiohttp path's semantics too.
 
     ``session`` needs one method:
     ``request(method, url, data=None, headers=None,
@@ -250,7 +255,6 @@ async def async_fetch_one(
     request) — it is passed to the session only when non-empty, so
     proxy-unaware session stubs keep working.
     """
-    import asyncio
     from urllib.parse import urlsplit
 
     home_host = urlsplit(url).netloc
@@ -343,8 +347,8 @@ async def async_fetch_one(
 
 
 class _UrllibResponse:
-    """Adapter: one completed urllib response (or HTTPError, which IS a
-    response in urllib's model) behind the async response surface."""
+    """One completed urllib response (or HTTPError, which IS a response
+    in urllib's model) behind the async response surface."""
 
     def __init__(self, status: int, headers, body: bytes):
         self.status = status
@@ -353,12 +357,6 @@ class _UrllibResponse:
 
     async def read(self) -> bytes:
         return self._body
-
-    async def __aenter__(self):
-        return self
-
-    async def __aexit__(self, *exc):
-        return False
 
 
 class DnsCache:
@@ -443,11 +441,17 @@ def _cached_dns_handler(dns: "DnsCache"):
 
 class _UrllibSession:
     """Blocking-urllib transport behind the ``async_fetch_one`` session
-    surface. The call blocks the (per-request, throwaway) event loop —
-    concurrency in :class:`StdlibHttpFetcher` comes from the task-local
-    thread pool, not the loop."""
+    surface, and its own async context manager: it owns a pool of
+    ``max_conn`` threads, and each request's blocking open runs on that
+    pool (network IO releases the GIL), so a gathered batch keeps up to
+    ``max_conn`` requests in flight instead of blocking the loop one at
+    a time. The direct route always dials through a :class:`DnsCache`
+    (the reference surfer's is always on): ``dns``, or a fresh one per
+    session."""
 
-    def __init__(self, timeout_s: float, dns_cache: DnsCache | None = None):
+    def __init__(
+        self, timeout_s: float, max_conn: int = 1, dns: DnsCache | None = None
+    ):
         import urllib.request
 
         class _NoRedirect(urllib.request.HTTPRedirectHandler):
@@ -455,18 +459,28 @@ class _UrllibSession:
                 return None  # surface the 3xx instead of auto-following
 
         self._no_redirect = _NoRedirect
-        self._dns = dns_cache
-        direct = (
-            [_cached_dns_handler(dns_cache)] if dns_cache is not None else []
-        )
         # opener per proxy route ("" = direct), built lazily — one
         # session serves a whole task batch whose rows may rotate
         # through different proxies. The DNS cache applies only to the
         # direct route: a proxied request is resolved BY the proxy.
         self._openers = {
-            "": urllib.request.build_opener(_NoRedirect, *direct)
+            "": urllib.request.build_opener(
+                _NoRedirect,
+                _cached_dns_handler(dns if dns is not None else DnsCache()),
+            )
         }
         self._timeout_s = timeout_s
+        self._max_conn = max_conn
+
+    async def __aenter__(self):
+        from concurrent.futures import ThreadPoolExecutor
+
+        self._pool = ThreadPoolExecutor(max_workers=self._max_conn)
+        return self
+
+    async def __aexit__(self, *exc):
+        self._pool.shutdown(wait=True)
+        return False
 
     def _opener_for(self, proxy: str):
         import urllib.request
@@ -482,50 +496,57 @@ class _UrllibSession:
             self._openers[proxy] = op
         return op
 
-    def request(self, method, url, data=None, headers=None,
-                allow_redirects=False, proxy=""):
-        import urllib.error
+    @contextlib.asynccontextmanager
+    async def request(self, method, url, data=None, headers=None,
+                      allow_redirects=False, proxy=""):
         import urllib.request
 
         assert not allow_redirects  # the shared loop owns redirects
         req = urllib.request.Request(
             url, data=data, method=method, headers=dict(headers or {})
         )
+        # the opener is picked on the loop thread: only the blocking
+        # open runs on the pool
+        opener = self._opener_for(proxy or "")
+        yield await asyncio.get_running_loop().run_in_executor(
+            self._pool, self._open, opener, req
+        )
+
+    def _open(self, opener, req) -> "_UrllibResponse":
+        import urllib.error
+
         try:
-            with self._opener_for(proxy or "").open(
-                req, timeout=self._timeout_s
-            ) as resp:
-                body = b"" if method == "HEAD" else resp.read()
+            with opener.open(req, timeout=self._timeout_s) as resp:
+                body = b"" if req.get_method() == "HEAD" else resp.read()
                 return _UrllibResponse(resp.status, resp.headers, body)
         except urllib.error.HTTPError as he:
             body = he.read() if he.fp else b""
             return _UrllibResponse(he.code, he.headers, body)
 
 
-class _SessionCM:
-    """Async-context-manager wrapper for sessions that need no async
-    teardown (aiohttp's ClientSession is its own async CM; the urllib
-    session is not)."""
-
-    def __init__(self, session):
-        self._session = session
-
-    async def __aenter__(self):
-        return self._session
-
-    async def __aexit__(self, *exc):
-        return False
+def urllib_session_factory(timeout_s: float, max_conn: int) -> _UrllibSession:
+    """The default :class:`HttpFetcher` transport: blocking urllib on a
+    pool of ``max_conn`` threads, with a per-session DNS cache."""
+    return _UrllibSession(timeout_s, max_conn)
 
 
-def urllib_session_factory(timeout_s: float, max_conn: int):
-    """``HttpFetcher(session_factory=...)``-compatible factory over the
-    blocking urllib transport — the same session :func:`fetch_one`
-    uses. Lets the aiohttp fetcher's WHOLE mapInPandas wrapper (schema
-    assembly, batch gather, column plumbing) execute on a cluster or in
-    tests without aiohttp installed. Requests inside one batch
-    serialize (urllib blocks the loop), so this is a correctness twin,
-    not the concurrency path — ``max_conn`` is accepted and ignored."""
-    return _SessionCM(_UrllibSession(timeout_s, dns_cache=DnsCache()))
+def aiohttp_session_factory(timeout_s: float, max_conn: int):
+    """Opt-in :class:`HttpFetcher` transport over an aiohttp
+    ``ClientSession`` (aiohttp is not a dependency of this package)."""
+    import aiohttp
+
+    return aiohttp.ClientSession(
+        connector=aiohttp.TCPConnector(limit=max_conn),
+        timeout=aiohttp.ClientTimeout(total=timeout_s),
+        # decode_content is the ONE decode point for every transport: a
+        # transport that strips Content-Encoding but leaves the header
+        # would get a genuine .gz payload served gzip-encoded
+        # decompressed twice
+        auto_decompress=False,
+        # cookies are request state the engine owns (async_fetch_one's
+        # cookie/cookies_out); a session jar would leak them across rows
+        cookie_jar=aiohttp.DummyCookieJar(),
+    )
 
 
 def fetch_one(
@@ -540,35 +561,74 @@ def fetch_one(
     cookies_out: list | None = None,
     ua: str = "",
     proxy: str = "",
-    dns_cache: DnsCache | None = None,
+    dns: DnsCache | None = None,
     extra_headers: dict | None = None,
 ) -> tuple[int, str, bytes]:
     """Synchronous one-request entry point: :func:`async_fetch_one`
-    over the urllib transport. See that function for the semantics."""
-    import asyncio
+    over the urllib transport. Pass ``dns`` to share one
+    :class:`DnsCache` across calls. See :func:`async_fetch_one` for the
+    semantics."""
 
-    return asyncio.run(
-        async_fetch_one(
-            _UrllibSession(timeout_s, dns_cache=dns_cache),
-            url,
-            method,
-            post_data,
-            try_times=try_times,
-            retry_pause_s=retry_pause_s,
-            redirect_times=redirect_times,
-            cookie=cookie,
-            cookies_out=cookies_out,
-            ua=ua,
-            proxy=proxy,
-            extra_headers=extra_headers,
+    async def go():
+        async with _UrllibSession(timeout_s, dns=dns) as s:
+            return await async_fetch_one(
+                s,
+                url,
+                method,
+                post_data,
+                try_times=try_times,
+                retry_pause_s=retry_pause_s,
+                redirect_times=redirect_times,
+                cookie=cookie,
+                cookies_out=cookies_out,
+                ua=ua,
+                proxy=proxy,
+                extra_headers=extra_headers,
+            )
+
+    return asyncio.run(go())
+
+
+def _request_kwargs(pdf, with_cookie: bool) -> list[dict]:
+    """Per-row :func:`async_fetch_one` keywords from a wave batch's
+    optional request columns: ``method``, ``post_data``, ``proxy`` and
+    ``ua`` (``proxy.assign_proxy`` / ``assign_user_agent``), ``hdr``
+    (JSON map, ``fetch.headers_col``) and, with cookies on, ``cookie``
+    (the engine's per-host session header)."""
+    import json
+
+    n = len(pdf)
+
+    def col(name: str, default: str = "") -> list:
+        return pdf[name].fillna(default).tolist() if name in pdf else [default] * n
+
+    return [
+        dict(url=u, method=m, post_data=d, proxy=px, ua=ua, cookie=ck,
+             extra_headers=json.loads(hj) if hj else None)
+        for u, m, d, px, ua, hj, ck in zip(
+            pdf["url"].tolist(), col("method", "GET"), col("post_data"),
+            col("proxy"), col("ua"), col("hdr"),
+            col("cookie") if with_cookie else [""] * n,
         )
-    )
+    ]
 
 
-class StdlibHttpFetcher(Fetcher):
-    """Live fetcher over ``urllib`` with the engine's fetcher contract
-    (:class:`~pholcus_spark.fetch.Fetcher`, live defaults):
-    ``fetch(wave) -> wave + (status, content_type, body, ok)``.
+class HttpFetcher(Fetcher):
+    """The live fetcher — the reference's one downloader, Surf
+    (`downloader_surfer.go:35-74`, `surf.go:52-197`) — with the engine's
+    fetcher contract (:class:`~pholcus_spark.fetch.Fetcher`, live
+    defaults): ``fetch(wave) -> wave + (status, content_type, body,
+    ok)``.
+
+    One ``mapInPandas`` stage over the politeness-selected wave. Each
+    Arrow batch runs one event loop and opens one session,
+    ``session_factory(timeout_s, max_conn_per_task)``, and gathers
+    :func:`async_fetch_one` over its rows under one semaphore of
+    ``max_conn_per_task``: the in-flight bound per task. Politeness and
+    rate limits are enforced UPSTREAM by wave selection. The transport
+    is :func:`urllib_session_factory` by default, or
+    :func:`aiohttp_session_factory`; the factory is pickled into the
+    task closure, so it must be importable on the executors.
 
     ``enable_cookie=True`` is the reference's EnableCookie
     (`downloader_surfer.go:6,21-23` — one cookiejar shared across
@@ -589,7 +649,7 @@ class StdlibHttpFetcher(Fetcher):
         redirect_times: int = 0,
         max_conn_per_task: int = 16,
         enable_cookie: bool = False,
-        dns_cache: bool = False,
+        session_factory=urllib_session_factory,
     ):
         self.timeout_s = timeout_s
         self.try_times = try_times
@@ -597,19 +657,18 @@ class StdlibHttpFetcher(Fetcher):
         self.redirect_times = redirect_times
         self.max_conn_per_task = max_conn_per_task
         self.enable_cookie = enable_cookie
-        # surf.go:80-135 DnsCache: one cache per fetch TASK (executor
-        # tasks are stateless/retryable, so the cache is warm within a
-        # wave batch and rebuilt on retry — never driver state)
-        self.dns_cache = dns_cache
+        self.session_factory = session_factory
 
     def fetch(self, wave: DataFrame) -> DataFrame:
         timeout_s = self.timeout_s
-        try_times = self.try_times
-        retry_pause_s = self.retry_pause_s
-        redirect_times = self.redirect_times
         max_conn = self.max_conn_per_task
+        loop_kw = dict(
+            try_times=self.try_times,
+            retry_pause_s=self.retry_pause_s,
+            redirect_times=self.redirect_times,
+        )
         with_cookies = self.enable_cookie
-        use_dns_cache = self.dns_cache
+        session_factory = self.session_factory
         from pyspark.sql.types import (
             ArrayType,
             BinaryType,
@@ -638,79 +697,34 @@ class StdlibHttpFetcher(Fetcher):
             )
         )
 
-        def run(batches):
-            from concurrent.futures import ThreadPoolExecutor
+        async def fetch_batch(rows):
+            sem = asyncio.Semaphore(max_conn)
+            async with session_factory(timeout_s, max_conn) as s:
 
-            dns = DnsCache() if use_dns_cache else None
+                async def one(kw):
+                    out = [] if with_cookies else None
+                    async with sem:
+                        res = await async_fetch_one(
+                            s, cookies_out=out, **kw, **loop_kw
+                        )
+                    return (*res, out)
+
+                return await asyncio.gather(*(one(kw) for kw in rows))
+
+        def run(batches):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                n = len(pdf)
-                methods = (
-                    pdf["method"].tolist() if "method" in pdf else ["GET"] * n
+                res = asyncio.run(
+                    fetch_batch(_request_kwargs(pdf, with_cookies))
                 )
-                post = (
-                    pdf["post_data"].tolist()
-                    if "post_data" in pdf
-                    else [""] * n
-                )
-                cookies = (
-                    pdf["cookie"].fillna("").tolist()
-                    if with_cookies and "cookie" in pdf
-                    else [""] * n
-                )
-                # optional per-row proxy / User-Agent columns (attached
-                # upstream by proxy.assign_proxy / assign_user_agent)
-                proxies = (
-                    pdf["proxy"].fillna("").tolist()
-                    if "proxy" in pdf
-                    else [""] * n
-                )
-                uas = (
-                    pdf["ua"].fillna("").tolist() if "ua" in pdf else [""] * n
-                )
-                # optional merged extra-header column (JSON map, engine-
-                # attached via fetch.headers_col)
-                hdrs_json = (
-                    pdf["hdr"].fillna("").tolist()
-                    if "hdr" in pdf
-                    else [""] * n
-                )
-                outs: list[list] = [[] for _ in range(n)]
-
-                def one(t):
-                    import json as json_mod
-
-                    i, url, meth, pd, ck, px, ua, hj = t
-                    return fetch_one(
-                        url, meth, pd,
-                        timeout_s=timeout_s,
-                        try_times=try_times,
-                        retry_pause_s=retry_pause_s,
-                        redirect_times=redirect_times,
-                        cookie=ck,
-                        cookies_out=outs[i] if with_cookies else None,
-                        ua=ua,
-                        proxy=px,
-                        dns_cache=dns,
-                        extra_headers=json_mod.loads(hj) if hj else None,
-                    )
-
-                with ThreadPoolExecutor(max_workers=max_conn) as pool:
-                    res = list(
-                        pool.map(
-                            one,
-                            zip(range(n), pdf["url"].tolist(), methods,
-                                post, cookies, proxies, uas, hdrs_json),
-                        )
-                    )
                 pdf = pdf.copy()
                 pdf["status"] = [r[0] for r in res]
                 pdf["content_type"] = [r[1] for r in res]
                 pdf["body"] = [r[2] for r in res]
                 pdf["ok"] = [r[0] < 400 for r in res]
                 if with_cookies:
-                    pdf["set_cookies"] = outs
+                    pdf["set_cookies"] = [r[3] for r in res]
                 yield pdf
 
         return wave.mapInPandas(run, schema)

@@ -123,16 +123,6 @@ def host_of_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: host_of(u) if u is not None else None)
 
 
-@pandas_udf(StringType())
-def absolutize_udf(bases: pd.Series, hrefs: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            urljoin(b, h) if (b is not None and h is not None) else None
-            for b, h in zip(bases, hrefs)
-        ]
-    )
-
-
 def request_key_col(
     spider: Column, rule: Column, canonical_url: Column, method: Column
 ) -> Column:

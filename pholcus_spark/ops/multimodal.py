@@ -17,7 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..imaging import HAS_PIL, decode_image, encode_png, phash64
+from ..imaging import decode_image, encode_png, phash64
 
 IMAGE_STATS_SCHEMA = (
     "image_id string, w int, h int, fmt string, mean_r double, mean_g double, "
@@ -126,14 +126,6 @@ def audio_byte_features(media: DataFrame, id_col: str = "media_id") -> DataFrame
     return media.select(media[id_col].alias("media_id"), "bytes").mapInPandas(
         run, AUDIO_FEATURES_SCHEMA
     )
-
-
-def decode_jpeg_or_stub(data: bytes) -> np.ndarray:
-    """Explicit stub surface: raises NotImplementedError without Pillow
-    (BASELINE.json allows stubbing decode steps the container can't do)."""
-    if not HAS_PIL:
-        raise NotImplementedError("jpeg decode requires Pillow (not installed)")
-    return decode_image(data, "jpeg")
 
 
 def video_frame_sample_stub(media: DataFrame, every_n: int = 30) -> DataFrame:

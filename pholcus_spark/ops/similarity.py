@@ -271,22 +271,6 @@ def assign_ivf_cell(vec: Column, centroids: list) -> Column:
     return (-best["nc"]).cast("long")
 
 
-def probe_ivf_cells(vec: Column, centroids: list, nprobe: int) -> Column:
-    """The query's ``nprobe`` nearest cells (cos desc, cell asc), as an
-    array<long> — sort_array over the same literal structs, still fully
-    map-side.
-
-    Constant-size plan (one sort_array over the single-transform score
-    array); `knn_batch_ivf` instead probes via
-    :func:`probe_ivf_cells_df` (same arithmetic as rows) — this literal
-    form serves map-side/streaming contexts where a join is
-    unavailable."""
-    arr = F.sort_array(_cell_scores(vec, centroids), asc=False)
-    return F.transform(
-        F.slice(arr, 1, nprobe), lambda s: (-s["nc"]).cast("long")
-    )
-
-
 def centroids_df(spark, centroids: list) -> DataFrame:
     """The coarse quantizer as an n_cells-row broadcastable dim
     (cell, cvec) — the join-friendly twin of the literal-expression
@@ -303,10 +287,11 @@ def probe_ivf_cells_df(queries: DataFrame, centroids: list, nprobe: int) -> Data
     broadcast the n_cells centroid dim, score each (query, centroid)
     pair with ONE cosine expression, keep the top ``nprobe`` per query
     (cos desc, cell asc — byte-identical ordering to the literal
-    form's struct sort). The window shuffle touches only the query
-    batch × n_cells — small by definition; the corpus is untouched.
-    Unlike the literal form, the plan size is constant in n_cells and
-    dim, so driver planning cost does not grow with the index."""
+    ``_cell_scores`` structs). The window shuffle touches only the
+    query batch × n_cells — small by definition; the corpus is
+    untouched. Unlike a literal expression, the plan size is constant
+    in n_cells and dim, so driver planning cost does not grow with the
+    index."""
     from pyspark.sql.window import Window
 
     cent = centroids_df(queries.sparkSession, centroids)

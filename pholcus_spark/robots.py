@@ -176,7 +176,7 @@ def hosts_from_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
 
 def fetch_robots_dim(spark, hosts: DataFrame, fetcher, agent: str = "pholcus") -> DataFrame:
     """LIVE robots dim: fetch ``{scheme}://{host}/robots.txt`` for
-    every host through any engine fetcher (StdlibHttpFetcher in
+    every host through any engine fetcher (httpfetch.HttpFetcher in
     production, FixtureFetcher in tests) and parse the bodies
     distributed.
 

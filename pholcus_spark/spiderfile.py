@@ -99,7 +99,7 @@ class SpiderFile:
     pausetime_ms: int = 0  # reference Pausetime (ms between dispatches)
     enable_limit: bool = False  # sp.Limit = LIMIT → cap comes from the task
     enable_keyin: bool = False  # sp.Keyin = KEYIN → %keyin% fan-out allowed
-    enable_cookie: bool = False  # → StdlibHttpFetcher(enable_cookie=True)
+    enable_cookie: bool = False  # → HttpFetcher(enable_cookie=True)
     not_default_field: bool = False  # sinks drop provenance columns
     path: str = ""
 

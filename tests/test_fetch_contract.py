@@ -126,3 +126,34 @@ def test_run_releases_superstep_storage(spark, tmp_path, monkeypatch):
     assert len(made) > 3 * state["superstep"]
     assert [rdd_id(df) for df in held] == [rdd_id(eng._frontier_df)]
     pages.unpersist()
+
+
+def test_one_live_fetcher():
+    """The package has one fetcher per kind, fixture, body store and
+    live HTTP (the reference has one downloader), and the live fetcher
+    has one mapInPandas wrapper for every transport."""
+    import ast
+    import inspect
+
+    import pholcus_spark.sources  # noqa: F401
+    from pholcus_spark import httpfetch
+    from pholcus_spark.fetch import Fetcher
+
+    def subclasses(cls):
+        for sub in cls.__subclasses__():
+            yield sub
+            yield from subclasses(sub)
+
+    assert {
+        c.__name__
+        for c in subclasses(Fetcher)
+        if c.__module__.startswith("pholcus_spark.")
+    } == {"FixtureFetcher", "StoreFetcher", "HttpFetcher"}
+    wrappers = [
+        n
+        for n in ast.walk(ast.parse(inspect.getsource(httpfetch)))
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "mapInPandas"
+    ]
+    assert len(wrappers) == 1

@@ -1,6 +1,6 @@
 """Form serializer/submitter (`app/spider/common/form.go:25-180`):
 serialization rules, Input/Inputs gating, GET/POST/POST-M submit
-shapes — plus a live submit through StdlibHttpFetcher's fetch_one."""
+shapes — plus a live submit through httpfetch.fetch_one."""
 
 from __future__ import annotations
 
@@ -80,7 +80,7 @@ def test_submit_shapes():
 
 
 def test_live_submit_roundtrip():
-    """Submit a parsed form through the stdlib fetcher against a local
+    """Submit a parsed form through httpfetch.fetch_one against a local
     server: the wire request matches the reference's send()."""
     import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer

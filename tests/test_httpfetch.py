@@ -1,4 +1,4 @@
-"""Live-HTTP fetch path: StdlibHttpFetcher against an in-process
+"""Live-HTTP fetch path: HttpFetcher against an in-process
 ``http.server`` — mirroring the reference's downloader tests against a
 local httptest server (`app/downloader/downloader_test.go:25-60`,
 `surfer/surf_test.go`).
@@ -24,7 +24,7 @@ import pytest
 from pholcus_spark import fixtures, testkit
 from pholcus_spark.httpfetch import (
     MULTIPART_BOUNDARY,
-    StdlibHttpFetcher,
+    HttpFetcher,
     encode_post,
     fetch_one,
 )
@@ -431,7 +431,7 @@ def test_engine_live_crawl_compressed_bodies(spark, server):
         catalog = SnapshotCatalog(workdir, spark)
         engine = CrawlEngine(
             spark, catalog,
-            StdlibHttpFetcher(timeout_s=15.0, try_times=1),
+            HttpFetcher(timeout_s=15.0, try_times=1),
             spec, robots,
             EngineConfig(wave_window_ms=6000, commit_every=2),
         )
@@ -457,16 +457,12 @@ def test_engine_live_crawl_compressed_bodies(spark, server):
 
 
 def test_httpfetcher_wrapper_parity_with_stdlib(spark, server):
-    """VERDICT r4 item 5: execute HttpFetcher.fetch END TO END — the
-    mapInPandas wrapper, schema assembly, and batch gather path — with
-    an injected session factory (the urllib session behind an async CM)
-    against the live server, and require row-for-row parity with
-    StdlibHttpFetcher on the same scenarios: OK page, 404, miss,
-    redirect chain, POST echo, compressed body, per-row extra header."""
+    """Execute HttpFetcher.fetch END TO END — the mapInPandas wrapper,
+    schema assembly, column plumbing and batch gather — against the
+    live server, and require row-for-row parity with fetch_one called
+    per row on the same scenarios: OK page, 404, miss, redirect chain,
+    POST echo, compressed body, per-row extra header."""
     import json
-
-    from pholcus_spark.fetch import HttpFetcher
-    from pholcus_spark.httpfetch import urllib_session_factory
 
     body = b"<html>page</html>"
     _reset({
@@ -497,27 +493,86 @@ def test_httpfetcher_wrapper_parity_with_stdlib(spark, server):
         rows, "url string, method string, post_data string, hdr string"
     ).repartition(2)
 
-    def grab(fetcher):
-        out = fetcher.fetch(wave)
-        assert out.columns[-4:] == ["status", "content_type", "body", "ok"]
-        return {
-            r.url: (r.status, r.content_type, bytes(r.body or b""), r.ok)
-            for r in out.collect()
-        }
-
-    got_async = grab(
-        HttpFetcher(
-            timeout_s=15.0, try_times=1,
-            session_factory=urllib_session_factory,
+    out = HttpFetcher(timeout_s=15.0, try_times=1).fetch(wave)
+    assert out.columns[-4:] == ["status", "content_type", "body", "ok"]
+    got = {
+        r.url: (r.status, r.content_type, bytes(r.body or b""), r.ok)
+        for r in out.collect()
+    }
+    want = {}
+    for url, method, post_data, hdr in rows:
+        st, ct, b = fetch_one(
+            url, method, post_data, timeout_s=15.0, try_times=1,
+            extra_headers=json.loads(hdr) if hdr else None,
         )
+        want[url] = (st, ct, b, st < 400)
+    assert got == want
+    assert got[f"http://{server}/ok"][2] == body
+    assert got[f"http://{server}/gz"][2] == body  # decoded
+    assert got[f"http://{server}/hop"][2] == b"landed"
+    assert got[f"http://{server}/gated"][0] == 200
+    assert got[f"http://{server}/nowhere"][3] is False
+
+
+def test_httpfetcher_bounds_requests_in_flight(spark, server, monkeypatch):
+    """One task's batch keeps exactly max_conn_per_task requests in
+    flight: the urllib session runs its blocking opens on its own
+    thread pool, so the gather neither serializes the batch nor
+    exceeds the bound."""
+    _reset({f"/slow/{i}": {"body": b"s", "content_type": "text/plain"}
+            for i in range(8)})
+    _SiteHandler.slow_paths = {f"/slow/{i}": 0.4 for i in range(8)}
+    lock = threading.Lock()
+    state = {"now": 0, "peak": 0}
+    respond = _SiteHandler._respond
+
+    def counted(self, send_body=True):
+        with lock:
+            state["now"] += 1
+            state["peak"] = max(state["peak"], state["now"])
+        try:
+            respond(self, send_body)
+        finally:
+            with lock:
+                state["now"] -= 1
+
+    monkeypatch.setattr(_SiteHandler, "_respond", counted)
+    wave = spark.createDataFrame(
+        [(f"http://{server}/slow/{i}",) for i in range(8)], "url string"
+    ).coalesce(1)
+    rows = (
+        HttpFetcher(try_times=1, max_conn_per_task=3)
+        .fetch(wave).select("status").collect()
     )
-    got_stdlib = grab(StdlibHttpFetcher(timeout_s=15.0, try_times=1))
-    assert got_async == got_stdlib
-    assert got_async[f"http://{server}/ok"][2] == body
-    assert got_async[f"http://{server}/gz"][2] == body  # decoded
-    assert got_async[f"http://{server}/hop"][2] == b"landed"
-    assert got_async[f"http://{server}/gated"][0] == 200
-    assert got_async[f"http://{server}/nowhere"][3] is False
+    assert [r.status for r in rows] == [200] * 8
+    assert state["peak"] == 3
+
+
+def test_aiohttp_session_factory_leaves_decode_and_cookies_to_the_loop(
+    monkeypatch,
+):
+    """The opt-in aiohttp transport is built with transport-level
+    decompression off (decode_content is the one decode point) and no
+    session cookie jar (cookies are the loop's request state)."""
+    import sys
+    import types
+
+    from pholcus_spark.httpfetch import aiohttp_session_factory
+
+    fake = types.SimpleNamespace(
+        ClientSession=lambda **kw: kw,
+        TCPConnector=lambda limit: ("conn", limit),
+        ClientTimeout=lambda total: ("timeout", total),
+        DummyCookieJar=lambda: "no-jar",
+    )
+    monkeypatch.setitem(sys.modules, "aiohttp", fake)
+    kw = aiohttp_session_factory(7.0, 3)
+    assert kw == {
+        "connector": ("conn", 3),
+        "timeout": ("timeout", 7.0),
+        "auto_decompress": False,
+        "cookie_jar": "no-jar",
+    }
 
 
 def test_engine_live_http_conformance(spark, server):
@@ -542,7 +597,7 @@ def test_engine_live_http_conformance(spark, server):
         catalog = SnapshotCatalog(workdir, spark)
         engine = CrawlEngine(
             spark, catalog,
-            StdlibHttpFetcher(timeout_s=15.0, try_times=1),
+            HttpFetcher(timeout_s=15.0, try_times=1),
             spec, robots,
             EngineConfig(wave_window_ms=6000, commit_every=2),
         )
@@ -608,7 +663,7 @@ def test_engine_cookie_gated_crawl(spark, server):
         spec = SpiderSpec("site")
         engine = CrawlEngine(
             spark, SnapshotCatalog(workdir, spark),
-            StdlibHttpFetcher(timeout_s=15.0, try_times=1, enable_cookie=True),
+            HttpFetcher(timeout_s=15.0, try_times=1, enable_cookie=True),
             spec, robots,
             EngineConfig(wave_window_ms=6000, commit_every=2),
         )
@@ -673,7 +728,7 @@ def test_harvest_cookies_distributed_fold_equivalence(spark):
 
 def test_fetch_robots_dim_live(spark, server):
     """Live robots bootstrap: the dim is built by fetching
-    /robots.txt through the stdlib fetcher; missing robots get the
+    /robots.txt through the live fetcher; missing robots get the
     permissive default row."""
     from pholcus_spark.robots import fetch_robots_dim
 
@@ -691,7 +746,7 @@ def test_fetch_robots_dim_live(spark, server):
         [(server,), ("127.0.0.1:9",)], "host string"
     )
     dim = fetch_robots_dim(
-        spark, hosts, StdlibHttpFetcher(timeout_s=5, try_times=1)
+        spark, hosts, HttpFetcher(timeout_s=5, try_times=1)
     )
     rows = {r.host: r for r in dim.collect()}
     assert rows[server].disallow_prefixes == ["/private/"]
@@ -703,7 +758,7 @@ def test_fetch_robots_dim_live(spark, server):
 
 # ---------------------------------------------------------------------------
 # async_fetch_one via a scripted stub session — first executed coverage
-# of the surface the aiohttp HttpFetcher drives (round-3 verdict item 6)
+# of the surface an aiohttp session drives (round-3 verdict item 6)
 # ---------------------------------------------------------------------------
 
 
@@ -898,7 +953,7 @@ def test_dns_cache_resolves_once_and_serves_hits(server):
     dns = DnsCache()
     for _ in range(3):
         status, _, body = fetch_one(
-            f"http://localhost:{port}/ok", try_times=1, dns_cache=dns
+            f"http://localhost:{port}/ok", try_times=1, dns=dns
         )
         assert status == 200 and body == b"hello"
     # one real resolution, the rest served from the cache
@@ -921,7 +976,7 @@ def test_dns_cache_evicts_on_dial_failure_then_recovers(server):
     dns.resolves = 0
     status, _, body = fetch_one(
         f"http://localhost:{port}/ok",
-        try_times=2, retry_pause_s=0.0, dns_cache=dns,
+        try_times=2, retry_pause_s=0.0, dns=dns,
     )
     assert status == 200 and body == b"back"
     assert dns.evictions == 1
@@ -929,8 +984,8 @@ def test_dns_cache_evicts_on_dial_failure_then_recovers(server):
 
 
 def test_stdlib_fetcher_dns_cache_end_to_end(spark, server):
-    """dns_cache=True on the fetcher: a wave of requests to one host
-    fetches correctly through the per-task cache."""
+    """A wave of requests to one host fetches correctly through the
+    session's DNS cache (always on)."""
     _reset({f"/d/{i}": {"body": f"b{i}".encode(),
                         "content_type": "text/plain"}
             for i in range(6)})
@@ -939,7 +994,7 @@ def test_stdlib_fetcher_dns_cache_end_to_end(spark, server):
         [(f"http://localhost:{port}/d/{i}",) for i in range(6)],
         "url string",
     ).coalesce(1)
-    fetched = StdlibHttpFetcher(try_times=1, dns_cache=True).fetch(wave)
+    fetched = HttpFetcher(try_times=1).fetch(wave)
     rows = {r.url[-1]: r for r in fetched.collect()}
     assert len(rows) == 6
     assert all(r.ok and r.status == 200 for r in rows.values())
@@ -1036,7 +1091,7 @@ def test_stdlib_fetcher_hdr_column(spark, server):
         "url string, method string, post_data string, hdr string",
     )
     rows = (
-        StdlibHttpFetcher(timeout_s=15.0, try_times=1)
+        HttpFetcher(timeout_s=15.0, try_times=1)
         .fetch(wave)
         .select("hdr", "status", "ok")
         .collect()

@@ -19,7 +19,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pytest
 
 from pholcus_spark import fixtures, testkit
-from pholcus_spark.httpfetch import StdlibHttpFetcher, fetch_one
+from pholcus_spark.httpfetch import HttpFetcher, fetch_one
 from pholcus_spark.oracle import OracleConfig
 from pholcus_spark.proxy import (
     USER_AGENTS,
@@ -299,7 +299,7 @@ def test_stdlib_fetcher_reads_proxy_and_ua_columns(spark, target, proxies):
         (f"http://{target}/d3", None, None),  # null-safe
     ]
     wave = spark.createDataFrame(rows, "url string, proxy string, ua string")
-    out = StdlibHttpFetcher(timeout_s=10.0, try_times=1).fetch(wave)
+    out = HttpFetcher(timeout_s=10.0, try_times=1).fetch(wave)
     assert [r.status for r in out.collect()] == [200] * 4
     seen = {p: (ua, via) for p, ua, via in _TargetHandler.log}
     assert seen["/d0"] == ("UA-A", "p_fast")
@@ -369,7 +369,7 @@ def test_engine_proxy_rotation_conformance(spark, target, proxies):
         catalog = SnapshotCatalog(workdir, spark)
         engine = CrawlEngine(
             spark, catalog,
-            StdlibHttpFetcher(timeout_s=15.0, try_times=1),
+            HttpFetcher(timeout_s=15.0, try_times=1),
             spec, robots,
             EngineConfig(wave_window_ms=6000, ua_mode="rotate"),
             proxy_dim=dim,
@@ -438,7 +438,7 @@ def test_engine_proxy_builder_refresh_cadence(spark, target, proxies):
         spec = SpiderSpec("site")
         engine = CrawlEngine(
             spark, SnapshotCatalog(workdir, spark),
-            StdlibHttpFetcher(timeout_s=15.0, try_times=1),
+            HttpFetcher(timeout_s=15.0, try_times=1),
             spec, robots,
             EngineConfig(wave_window_ms=6000, proxy_refresh_every=2),
             proxy_dim=builder,
