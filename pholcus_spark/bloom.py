@@ -17,11 +17,13 @@ broadcasting them is a hard scale-killer. Instead:
 * **probe** — candidates are repartitioned by ``bucket`` and cogrouped
   with the filter table, so each task loads exactly ONE bucket's bitmap
   (~12 MB at 1024 buckets) and probes its candidates vectorized.
-* **freshness** — a sidecar covers an explicit list of url_seen delta
-  dirs (in its meta). Keys appended later are deduped by the engine
-  with an exact anti-join against just those uncovered deltas (small,
-  recent) until the next rebuild — the LSM pattern: bulk membership via
-  filters, recent tail via exact join, periodic rebuild folds the tail.
+* **freshness** — a sidecar covers an explicit list of key-table delta
+  dirs (in its meta). Keys appended later are deduped with an exact
+  anti-join against just those uncovered deltas (small, recent) until
+  the next rebuild — the LSM pattern: bulk membership via filters,
+  recent tail via exact join, periodic rebuild folds the tail.
+  :class:`SeenSet` is that lifecycle, once, for the engine's
+  ``url_seen`` and for ``ops.seenstore.SeenStore``.
 
 Hash scheme (double hashing, Kirsch–Mitzenmacher): the key is already a
 SHA-1 hex string; bucket = first 8 hex digits mod buckets (must match
@@ -41,6 +43,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
+
+from .catalog import SnapshotCatalog
+
+FPP = 0.01  # target false-positive rate of a freshly built filter
+HEADROOM = 2.0  # filters are sized for HEADROOM × the keys at build time
+REBUILD_FRAC = 0.5  # rebuild once the tail > max(rebuild_min, this × covered)
 
 
 @dataclasses.dataclass(frozen=True)
@@ -94,9 +102,9 @@ def build_sidecar(
     seen: DataFrame,
     num_buckets: int,
     out_path: str,
-    fpp: float = 0.01,
+    fpp: float = FPP,
     covered_dirs: tuple[str, ...] = (),
-    headroom: float = 2.0,
+    headroom: float = HEADROOM,
 ) -> BloomSidecar:
     """Build per-bucket filters distributed (one applyInPandas group per
     bucket) and persist them as a parquet table at ``out_path``; sized
@@ -228,6 +236,106 @@ def filter_unseen(
     if tail_df is not None:
         out = out.join(tail_df.select(key_col), key_col, "left_anti")
     return out
+
+
+class SeenSet:
+    """The sidecar lifecycle over one append-only key table of a
+    :class:`~pholcus_spark.catalog.SnapshotCatalog`, sidecar at
+    ``{catalog.root}/bloom``: the engine's ``url_seen`` and
+    ``ops.seenstore.SeenStore``'s ``keys`` both run on it. Each caller
+    owns the commits that append keys and reports them via :meth:`added`.
+
+    The tail size is an estimate kept across calls, counted (one Spark
+    job) only when unknown: on a fresh instance (a resumed catalog too),
+    after :meth:`compact`, or once the sidecar it was measured against
+    is no longer the live one."""
+
+    def __init__(
+        self, catalog: SnapshotCatalog, table: str, num_buckets: int, rebuild_min: int
+    ):
+        self.catalog = catalog
+        self.table = table
+        self.num_buckets = num_buckets
+        self.rebuild_min = rebuild_min
+        self.root = os.path.join(catalog.root, "bloom")
+        self._tail: int | None = None  # keys outside the sidecar; None = unknown
+        self._tail_of: str | None = None  # path of the sidecar it was measured against
+
+    def dirs(self) -> list[str]:
+        m = self.catalog.current()
+        return list((m["tables"].get(self.table) or {}).get("dirs", [])) if m else []
+
+    def sidecar(self, dirs: list[str]) -> BloomSidecar | None:
+        """The current sidecar, read from disk, iff its coverage is
+        still a subset of the live ``dirs`` (compaction invalidates
+        it)."""
+        sc = load_sidecar(self.root)
+        if sc is not None and not set(sc.covered_dirs) <= set(dirs):
+            return None
+        return sc
+
+    def _read_uncovered(self, dirs: list[str], sc: BloomSidecar | None):
+        covered = set(sc.covered_dirs) if sc is not None else set()
+        return self.catalog.read_dirs(self.table, [d for d in dirs if d not in covered])
+
+    def filter_unseen(
+        self, df: DataFrame, key_col: str = "key", pending=()
+    ) -> DataFrame:
+        """Rows of ``df`` whose key is not in the table: the covered
+        dirs through the sidecar probe, the tail — uncovered dirs plus
+        the caller's unflushed ``pending`` deltas — exact-anti-joined
+        (:func:`filter_unseen`)."""
+        dirs = self.dirs()
+        sc = self.sidecar(dirs)
+        tail = self._read_uncovered(dirs, sc)
+        for p in pending:
+            tail = p if tail is None else tail.unionByName(p)
+        if sc is None:  # no covered part: read no covered dirs
+            return filter_unseen(df, None, None, tail, key_col)
+        covered = self.catalog.read_dirs(self.table, list(sc.covered_dirs))
+        return filter_unseen(df, sc, covered, tail, key_col)
+
+    def added(self, n: int) -> None:
+        """The caller appended ``n`` keys (they join the tail). An
+        unknown tail stays unknown: it is counted at the next
+        :meth:`maybe_rebuild`."""
+        if self._tail is not None:
+            self._tail += n
+
+    def maybe_rebuild(self) -> None:
+        """Fold the tail into a fresh sidecar once it exceeds
+        ``max(rebuild_min, REBUILD_FRAC × covered keys)``: one
+        applyInPandas job over the whole durable table, written to
+        ``bloom/v{snapshot_id:06d}``; no bitmap leaves the executors."""
+        dirs = self.dirs()
+        if not dirs:
+            self._tail = 0
+            return
+        sc = self.sidecar(dirs)
+        live = sc.path if sc is not None else None
+        if self._tail is None or live != self._tail_of:
+            tail = self._read_uncovered(dirs, sc)
+            self._tail = tail.count() if tail is not None else 0
+            self._tail_of = live
+        covered_n = sc.n_keys if sc is not None else 0
+        if self._tail <= max(self.rebuild_min, REBUILD_FRAC * covered_n):
+            return
+        out = os.path.join(self.root, f"v{self.catalog.current()['snapshot_id']:06d}")
+        # through the module global, so a rebinding of
+        # ``bloom.build_sidecar`` (perfbench's timer) sees every rebuild
+        self._tail_of = build_sidecar(
+            self.catalog.read(self.table), self.num_buckets, out,
+            covered_dirs=tuple(dirs),
+        ).path
+        self._tail = 0
+
+    def compact(self) -> None:
+        """Fold the table's delta dirs into one (``catalog.compact``).
+        The sidecar then covers none of the live dirs, so the tail is
+        recounted and a rebuild follows if it is due."""
+        self.catalog.compact(self.table)
+        self._tail = None
+        self.maybe_rebuild()
 
 
 def contains(spark: SparkSession, sidecar: BloomSidecar, key: str) -> bool:

@@ -172,8 +172,10 @@ class SnapshotCatalog:
 
     def compact(self, name: str) -> None:
         """Rewrite an append-only table's delta dirs into one dir (Iceberg
-        compaction analog). Keeps read fan-in bounded on long crawls; also
-        the point where Bloom sidecars are rebuilt (bloom.py)."""
+        compaction analog). Keeps read fan-in bounded on long crawls. A
+        Bloom sidecar over the table covers the old dirs, so it stops
+        being used; ``bloom.SeenSet.compact`` compacts and then rebuilds
+        it when its rebuild policy says so."""
         m = self.current()
         if m is None or name not in m["tables"]:
             return

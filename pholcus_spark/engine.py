@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .bloom import SeenSet
 from .catalog import SnapshotCatalog
 from .keys import (
     canon_host_udf,
@@ -290,17 +291,14 @@ class EngineConfig:
     # conformance fixtures opt in (the order table is a test
     # instrument, not an output).
     record_order: bool = False
-    bloom_enabled: bool = True
-    bloom_fpp: float = 0.01
-    # sidecar rebuild policy (LSM-style): the filters cover url_seen up
-    # to their build snapshot; newer keys are exact-anti-joined until the
-    # uncovered tail exceeds max(min, frac × covered), then the sidecar
-    # is rebuilt at the next flush. Lower bloom_rebuild_min to force the
-    # probe path at fixture scale (conformance tests do).
+    # url_seen Bloom sidecar rebuild policy (bloom.SeenSet, LSM-style):
+    # the filters cover url_seen up to their build snapshot; newer keys
+    # are exact-anti-joined until the uncovered tail exceeds
+    # max(min, bloom.REBUILD_FRAC × covered), then the sidecar is
+    # rebuilt at the next flush. Lower it to force the probe path at
+    # fixture scale (conformance tests do); a value never reached
+    # keeps every dedup on the exact anti-join.
     bloom_rebuild_min: int = 1024
-    bloom_rebuild_frac: float = 0.5
-    bloom_headroom: float = 2.0
-    compact_every: int = 0  # url_seen compaction interval (0 = off)
     # retain at most this many historical snapshots, expiring older
     # manifests + unreferenced data dirs at each flush (0 = keep all).
     # A long crawl REWRITES the frontier per commit, so without expiry
@@ -387,9 +385,11 @@ class CrawlEngine:
         self._file_rules = {
             fr.rule: fr.name_or_ext for fr in getattr(spec, "file_rules", ()) or ()
         }
-        self._bloom = None  # BloomSidecar handle (paths/params only)
-        self._bloom_load_attempted = False
-        self._uncovered_est: int | None = None  # keys not covered by sidecar
+        # url_seen membership: Bloom-probed covered dirs + exact tail
+        self._seen = SeenSet(
+            catalog, "url_seen", self.config.num_buckets,
+            self.config.bloom_rebuild_min,
+        )
         # the in-memory frontier (:meth:`_set_frontier`); dirty until
         # the next flush commits it
         self._frontier_df = None
@@ -869,10 +869,7 @@ class CrawlEngine:
             self._pending.setdefault(name, []).append(
                 df.coalesce(cfg.append_partitions)
             )
-        if n["ok"] > 0:
-            # appended keys sit in the uncovered tail until the sidecar
-            # is rebuilt (exact-joined meanwhile — _dedup_vs_history)
-            self._uncovered_est = (self._uncovered_est or 0) + n["ok"]
+        self._seen.added(n["ok"])
         self._steps_since_flush += 1
         if self._steps_since_flush >= cfg.commit_every:
             self._flush(state)
@@ -1326,7 +1323,8 @@ class CrawlEngine:
         frontier through it.
 
         A non-reloadable row drops when its key is in url_seen
-        (hasHistory, Bloom-probed by :meth:`_dedup_vs_history`) or in
+        (hasHistory, Bloom-probed by ``bloom.SeenSet.filter_unseen``,
+        unflushed deltas included) or in
         ``in_flight`` (queued keys not yet seen); of the rows left, the
         first per key in ``order`` wins. Reloadable rows all pass
         (request.go:270-277). The survivors are ranked over ``order``
@@ -1358,7 +1356,9 @@ class CrawlEngine:
             non_reload = non_reload.join(in_flight, "key", "left_anti")
         first = Window.partitionBy("key").orderBy(*order)
         non_reload = (
-            self._dedup_vs_history(non_reload)
+            self._seen.filter_unseen(
+                non_reload, pending=self._pending.get("url_seen", [])
+            )
             .withColumn("_krn", F.row_number().over(first))
             .where(F.col("_krn") == 1)
             .drop("_krn")
@@ -1546,19 +1546,11 @@ class CrawlEngine:
         self._pending_release = []
         self._steps_since_flush = 0
         self._frontier_dirty = False
-        if self.config.compact_every:
-            m = self.catalog.current()
-            dirs = (m["tables"].get("url_seen") or {}).get("dirs", [])
-            if len(dirs) >= self.config.compact_every:
-                self.catalog.compact("url_seen")
-                # coverage now points at rewritten dirs — invalidate
-                self._bloom = None
-                self._uncovered_est = None
         if self.config.expire_keep_snapshots:
             self.catalog.expire_snapshots(
                 keep_last=self.config.expire_keep_snapshots
             )
-        self._maybe_rebuild_bloom()
+        self._seen.maybe_rebuild()
         self.spark.sparkContext.setJobDescription(None)
 
     # ------------------------------------------------------------------
@@ -1833,109 +1825,6 @@ class CrawlEngine:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
-
-    def _seen_dirs(self) -> list[str]:
-        m = self.catalog.current()
-        if m is None:
-            return []
-        return list((m["tables"].get("url_seen") or {}).get("dirs", []))
-
-    def _read_seen(
-        self, dirs: list[str], pending: list[DataFrame]
-    ) -> DataFrame | None:
-        df = self.catalog.read_dirs("url_seen", dirs)
-        for p in pending:
-            df = p if df is None else df.unionByName(p)
-        return df
-
-    def _valid_sidecar(self, dirs: list[str]):
-        """Current sidecar handle iff its coverage is still a subset of
-        the live url_seen dirs (compaction invalidates it)."""
-        if not self._bloom_load_attempted and self._bloom is None:
-            from . import bloom
-
-            self._bloom = bloom.load_sidecar(
-                os.path.join(self.catalog.root, "bloom")
-            )
-            self._bloom_load_attempted = True
-        sidecar = self._bloom
-        if sidecar is not None and not set(sidecar.covered_dirs) <= set(dirs):
-            self._bloom = sidecar = None
-            self._uncovered_est = None
-        return sidecar
-
-    def _dedup_vs_history(self, candidates: DataFrame) -> DataFrame:
-        """Anti-join candidates vs the historical url_seen, Bloom-
-        accelerated and fully distributed.
-
-        Covered portion (filters built at the last rebuild): cogrouped
-        per-bucket probe — definitely-unseen rows pass with NO exact
-        join; probable hits (candidates × FPR + true dups) exact-join
-        only the covered dirs. Uncovered tail (keys appended since the
-        rebuild, incl. unflushed deltas): small and recent, exact
-        anti-join. At 10^10 keys this keeps per-superstep dedup O(wave),
-        with no driver-resident or broadcast bitmap state (SURVEY.md
-        §7.3).
-        """
-        from . import bloom
-
-        dirs = self._seen_dirs()
-        pending = self._pending.get("url_seen", [])
-        sidecar = (
-            self._valid_sidecar(dirs) if self.config.bloom_enabled else None
-        )
-        if sidecar is None:
-            return bloom.filter_unseen(
-                candidates, None, None, self._read_seen(dirs, pending)
-            )
-        covered = list(sidecar.covered_dirs)
-        uncovered = [d for d in dirs if d not in sidecar.covered_dirs]
-        return bloom.filter_unseen(
-            candidates,
-            sidecar,
-            self.catalog.read_dirs("url_seen", covered),
-            self._read_seen(uncovered, pending),
-        )
-
-    def _maybe_rebuild_bloom(self) -> None:
-        """At flush time: fold the uncovered url_seen tail into a fresh
-        sidecar when it has outgrown the rebuild threshold. The build is
-        one applyInPandas job over the full (durable) url_seen; filters
-        land as a parquet table — never on the driver."""
-        cfg = self.config
-        if not cfg.bloom_enabled:
-            return
-        dirs = self._seen_dirs()
-        if not dirs:
-            return
-        sidecar = self._valid_sidecar(dirs)
-        covered_n = sidecar.n_keys if sidecar is not None else 0
-        if self._uncovered_est is None:
-            uncovered = [
-                d
-                for d in dirs
-                if sidecar is None or d not in sidecar.covered_dirs
-            ]
-            df = self.catalog.read_dirs("url_seen", uncovered)
-            self._uncovered_est = df.count() if df is not None else 0
-        threshold = max(cfg.bloom_rebuild_min, cfg.bloom_rebuild_frac * covered_n)
-        if self._uncovered_est <= threshold:
-            return
-        from . import bloom
-
-        m = self.catalog.current()
-        out = os.path.join(
-            self.catalog.root, "bloom", f"v{m['snapshot_id']:06d}"
-        )
-        self._bloom = bloom.build_sidecar(
-            self.catalog.read("url_seen"),
-            cfg.num_buckets,
-            out,
-            fpp=cfg.bloom_fpp,
-            covered_dirs=tuple(dirs),
-            headroom=cfg.bloom_headroom,
-        )
-        self._uncovered_est = 0
 
     def _requeue_failures(self, state: dict, frontier: DataFrame) -> None:
         """failure-requeue-once at queue drain (`matrix.go:186-202`):

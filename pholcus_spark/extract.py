@@ -7,11 +7,12 @@ operations over Arrow batches — anchor hrefs in document order and
 ``<figure><img ...><p class=caption>`` pairs — plus charset transcode
 (`context.go:678-736`: Content-Type charset sniff, non-UTF-8 → UTF-8).
 
-Everything runs as pandas UDFs over Arrow batches (never per-row
-Python UDFs in the Spark plan); regex parsing is the idiomatic
+Everything runs in one Arrow-batch kernel, ``parse_pages_kernel``,
+which every fetcher's ``parse_pages`` maps over its pages (never
+per-row Python UDFs in the Spark plan); regex parsing is the idiomatic
 scale path since page HTML is machine-generated in the fixture and
 well-formed subsets suffice for conformance. A full selector library
-(selectolax/lxml) would slot into the same UDFs on a real cluster.
+(selectolax/lxml) would slot into the same kernel on a real cluster.
 """
 
 from __future__ import annotations
@@ -20,13 +21,6 @@ import html as html_mod
 import re
 
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from .keys import absolutize
 
@@ -38,15 +32,6 @@ _HREF_RE = re.compile(r"<a\s[^>]*href=\"([^\"]*)\"", re.I)
 _FIGURE_RE = re.compile(
     r"<figure><img\s+src=\"([^\"]*)\">\s*<p class=\"caption\">(.*?)</p></figure>",
     re.I | re.S,
-)
-
-FIGURES_TYPE = ArrayType(
-    StructType(
-        [
-            StructField("src", StringType()),
-            StructField("caption", StringType()),
-        ]
-    )
 )
 
 
@@ -85,51 +70,6 @@ def decode_body(body: bytes, content_type: str) -> str:
         return body.decode(charset, errors="replace")
     except LookupError:
         return body.decode("utf-8", errors="replace")
-
-
-def extract_links(body: bytes, content_type: str, base_url: str) -> list[str]:
-    """Absolutized hrefs in document order (ctx.AddQueue link emission,
-    `context.go:104-125`; absolutizers `common/common.go:178-260`)."""
-    text = decode_body(body, content_type)
-    return [
-        absolutize(base_url, html_mod.unescape(h)) for h in _HREF_RE.findall(text)
-    ]
-
-
-def extract_figures(body: bytes, content_type: str, base_url: str) -> list[dict]:
-    """(img_src, caption) pairs in document order."""
-    text = decode_body(body, content_type)
-    return [
-        {
-            "src": absolutize(base_url, html_mod.unescape(src)),
-            "caption": html_mod.unescape(cap),
-        }
-        for src, cap in _FIGURE_RE.findall(text)
-    ]
-
-
-@pandas_udf(ArrayType(StringType()))
-def extract_links_udf(
-    bodies: pd.Series, content_types: pd.Series, base_urls: pd.Series
-) -> pd.Series:
-    return pd.Series(
-        [
-            extract_links(b, ct, u) if b is not None else []
-            for b, ct, u in zip(bodies, content_types, base_urls)
-        ]
-    )
-
-
-@pandas_udf(FIGURES_TYPE)
-def extract_figures_udf(
-    bodies: pd.Series, content_types: pd.Series, base_urls: pd.Series
-) -> pd.Series:
-    return pd.Series(
-        [
-            extract_figures(b, ct, u) if b is not None else []
-            for b, ct, u in zip(bodies, content_types, base_urls)
-        ]
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -824,14 +764,6 @@ def apply_rule_spec(
 # (`udf_for` / `parse_pages_kernel`) is the one extraction surface.
 
 
-EXTRACT_ALL_TYPE = StructType(
-    [
-        StructField("out_links", ArrayType(StringType())),
-        StructField("figures", FIGURES_TYPE),
-    ]
-)
-
-
 def _apply_rules_for(
     compiled, text: str, rule: str, base_url: str, temp: dict | None = None,
     carry_concat: tuple = (),
@@ -1036,36 +968,6 @@ def _apply_rules_for(
                             tgt[ck] = (tgt.get(ck) or "") + carry[ck]
         row_links, row_carries = keep_links, keep_carries
     return row_items, row_links, row_carries
-
-
-@pandas_udf(EXTRACT_ALL_TYPE)
-def extract_all_udf(
-    bodies: pd.Series, content_types: pd.Series, base_urls: pd.Series
-) -> pd.DataFrame:
-    """Links + figures in ONE pass: the body is charset-decoded once per
-    row instead of once per extractor, and the engine spends one Python
-    stage instead of two (the hot-path form; the single-purpose UDFs
-    above remain for composability)."""
-    links_out, figs_out = [], []
-    for b, ct, u in zip(bodies, content_types, base_urls):
-        if b is None:
-            links_out.append([])
-            figs_out.append([])
-            continue
-        text = decode_body(b, ct)
-        links_out.append(
-            [absolutize(u, html_mod.unescape(h)) for h in _HREF_RE.findall(text)]
-        )
-        figs_out.append(
-            [
-                {
-                    "src": absolutize(u, html_mod.unescape(src)),
-                    "caption": html_mod.unescape(cap),
-                }
-                for src, cap in _FIGURE_RE.findall(text)
-            ]
-        )
-    return pd.DataFrame({"out_links": links_out, "figures": figs_out})
 
 
 def parse_pages_kernel(extract_rules=(), carry_concat=()):

@@ -4,14 +4,7 @@ URL canonicalization + keys, HTML extraction, image validation — the
 Arrow-batched UDF surface and the JVM column helpers.
 """
 
-from ..extract import (  # noqa: F401
-    decode_body,
-    extract_all_udf,
-    extract_figures,
-    extract_figures_udf,
-    extract_links,
-    extract_links_udf,
-)
+from ..extract import decode_body  # noqa: F401
 from ..keys import (  # noqa: F401
     absolutize,
     canon_host_udf,

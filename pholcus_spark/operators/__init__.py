@@ -6,7 +6,8 @@ package groups them the way the operator inventory does:
 - frontier push/pull, politeness waves, limit guard, failure state
   machine: :class:`pholcus_spark.engine.CrawlEngine`
 - URL-seen dedup (distributed Bloom sidecar + anti-join):
-  :mod:`pholcus_spark.bloom` and ``CrawlEngine._dedup_vs_history``
+  :class:`pholcus_spark.bloom.SeenSet`, which ``CrawlEngine._push``
+  probes
 - reference-semantics oracle: :mod:`pholcus_spark.oracle`
 """
 

@@ -4,13 +4,12 @@ At 100 TB you never re-dedup the whole corpus when a new crawl batch
 lands — you probe the batch against the accumulated fingerprint set and
 append the survivors. The engine already runs exactly this shape for
 URLs (the 10^10-key ``url_seen`` table: bucketed parquet keys + per-
-bucket Bloom sidecars + an LSM-style exact tail,
-``engine.py:1692-1715`` / SURVEY.md §7.3); :class:`SeenStore` is that
-machinery factored out for CORPUS-level fingerprints (content hashes,
-simhashes, phashes — any hex-digest key), built on the same
+bucket Bloom sidecars + an LSM-style exact tail, SURVEY.md §7.3), and
+:class:`SeenStore` runs the same lifecycle, :class:`bloom.SeenSet
+<pholcus_spark.bloom.SeenSet>`, for CORPUS-level fingerprints (content
+hashes, simhashes, phashes — any hex-digest key), on its own
 :class:`~pholcus_spark.catalog.SnapshotCatalog` (snapshot commits,
-resume, compaction, expiry) and :mod:`~pholcus_spark.bloom`
-(distributed build, cogrouped probe, ``filter_unseen`` core).
+resume, compaction, expiry).
 
 Scale shape per batch: one ``distinct`` on the batch keys, one
 cogrouped Bloom probe (definitely-unseen rows never touch the store),
@@ -30,12 +29,10 @@ Typical pipeline::
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import bloom
+from ..bloom import SeenSet
 from ..catalog import SnapshotCatalog
 from ..keys import key_bucket_col
 
@@ -46,12 +43,10 @@ class SeenStore:
     """Persistent, Bloom-accelerated membership store for hex-digest
     fingerprint keys.
 
-    Parameters mirror :class:`~pholcus_spark.engine.EngineConfig`'s
-    url_seen knobs: ``num_buckets`` partitions keys and sidecar filters
-    (10^10 keys → 1024+), ``rebuild_min``/``rebuild_frac`` set the
-    LSM rebuild threshold (the uncovered exact-join tail may grow to
-    ``max(min, frac × covered)`` keys before a rebuild is forced),
-    ``fpp``/``headroom`` size the filters.
+    ``num_buckets`` partitions keys and sidecar filters (10^10 keys →
+    1024+); ``rebuild_min`` is the engine's ``bloom_rebuild_min``: the
+    uncovered exact-join tail may grow to ``max(rebuild_min,
+    bloom.REBUILD_FRAC × covered)`` keys before a rebuild is forced.
     """
 
     def __init__(
@@ -59,18 +54,11 @@ class SeenStore:
         spark: SparkSession,
         root: str,
         num_buckets: int = 64,
-        fpp: float = 0.01,
         rebuild_min: int = 1024,
-        rebuild_frac: float = 0.5,
-        headroom: float = 2.0,
     ):
         self.spark = spark
         self.catalog = SnapshotCatalog(root, spark)
-        self.num_buckets = num_buckets
-        self.fpp = fpp
-        self.rebuild_min = rebuild_min
-        self.rebuild_frac = rebuild_frac
-        self.headroom = headroom
+        self.seen = SeenSet(self.catalog, _TABLE, num_buckets, rebuild_min)
 
     @classmethod
     def open(cls, spark: SparkSession, root: str, **kw) -> "SeenStore":
@@ -78,24 +66,6 @@ class SeenStore:
         fresh one are the same operation (the manifest is the source of
         truth)."""
         return cls(spark, root, **kw)
-
-    # -- internal ----------------------------------------------------------
-
-    def _dirs(self) -> list[str]:
-        m = self.catalog.current()
-        if m is None:
-            return []
-        entry = m["tables"].get(_TABLE)
-        return list(entry["dirs"]) if entry else []
-
-    def _sidecar(self, dirs: list[str]) -> bloom.BloomSidecar | None:
-        """Current sidecar iff its coverage is still a subset of the
-        live dirs (compaction/expiry invalidates it) — the engine's
-        ``_valid_sidecar`` contract."""
-        sc = bloom.load_sidecar(os.path.join(self.catalog.root, "bloom"))
-        if sc is not None and not set(sc.covered_dirs) <= set(dirs):
-            return None
-        return sc
 
     # -- read side ---------------------------------------------------------
 
@@ -110,21 +80,7 @@ class SeenStore:
         store answers membership, not uniqueness — apply
         ``dropDuplicates([key_col])`` first if the batch itself may
         repeat keys)."""
-        dirs = self._dirs()
-        sidecar = self._sidecar(dirs)
-        if sidecar is None:
-            return bloom.filter_unseen(
-                df, None, None, self.catalog.read(_TABLE), key_col
-            )
-        covered = [d for d in dirs if d in sidecar.covered_dirs]
-        uncovered = [d for d in dirs if d not in sidecar.covered_dirs]
-        return bloom.filter_unseen(
-            df,
-            sidecar,
-            self.catalog.read_dirs(_TABLE, covered),
-            self.catalog.read_dirs(_TABLE, uncovered),
-            key_col,
-        )
+        return self.seen.filter_unseen(df, key_col)
 
     # -- write side --------------------------------------------------------
 
@@ -142,19 +98,18 @@ class SeenStore:
         merged into the committed snapshot state (e.g. a stream batch id
         for replay idempotence — :func:`streaming.seenstore_sink`).
 
-        When the uncovered tail outgrows the rebuild threshold the
-        per-bucket sidecar is rebuilt — one distributed applyInPandas
-        job over the durable table, amortized exactly like the engine's
-        ``_maybe_rebuild_bloom`` (engine.py:1735-1775)."""
+        When the uncovered tail (counted once per store, then advanced
+        by each batch) outgrows the rebuild threshold, the sidecar is
+        rebuilt (:meth:`bloom.SeenSet.maybe_rebuild`)."""
         delta = (
             keys.select(F.col(key_col).alias("key"))
             .where(F.col("key").isNotNull())
             .distinct()
-            .withColumn("bucket", key_bucket_col(F.col("key"), self.num_buckets))
+            .withColumn("bucket", key_bucket_col(F.col("key"), self.seen.num_buckets))
         )
         prev_state = self.catalog.state() or {}
         n_added = delta.count()
-        manifest = self.catalog.commit(
+        self.catalog.commit(
             appends={_TABLE: delta},
             rewrites={},
             state={
@@ -162,53 +117,16 @@ class SeenStore:
                 **(state_extra or {}),
             },
         )
-        self._maybe_rebuild(manifest)
+        self.seen.added(n_added)
+        self.seen.maybe_rebuild()
         return self.catalog.current()
-
-    def _maybe_rebuild(self, manifest: dict) -> None:
-        dirs = self._dirs()
-        sidecar = self._sidecar(dirs)
-        covered_n = sidecar.n_keys if sidecar is not None else 0
-        uncovered = [
-            d for d in dirs
-            if sidecar is None or d not in sidecar.covered_dirs
-        ]
-        tail = self.catalog.read_dirs(_TABLE, uncovered)
-        tail_n = tail.count() if tail is not None else 0
-        threshold = max(self.rebuild_min, self.rebuild_frac * covered_n)
-        if tail_n <= threshold:
-            return
-        out = os.path.join(
-            self.catalog.root, "bloom", f"v{manifest['snapshot_id']:06d}"
-        )
-        bloom.build_sidecar(
-            self.catalog.read(_TABLE),
-            self.num_buckets,
-            out,
-            fpp=self.fpp,
-            covered_dirs=tuple(dirs),
-            headroom=self.headroom,
-        )
 
     def compact(self) -> None:
         """Fold the delta dirs into one (Iceberg rewrite_data_files
-        analog) and rebuild the sidecar over the compacted table so the
-        probe path survives the dir rename."""
-        self.catalog.compact(_TABLE)
-        m = self.catalog.current()
-        if m is None:
-            return
-        dirs = self._dirs()
-        df = self.catalog.read(_TABLE)
-        if df is None:
-            return
-        out = os.path.join(
-            self.catalog.root, "bloom", f"v{m['snapshot_id']:06d}"
-        )
-        bloom.build_sidecar(
-            df, self.num_buckets, out, fpp=self.fpp,
-            covered_dirs=tuple(dirs), headroom=self.headroom,
-        )
+        analog); the sidecar, which covered the old dirs, is rebuilt
+        over the compacted table when the rebuild policy says it is
+        due (:meth:`bloom.SeenSet.compact`)."""
+        self.seen.compact()
 
 
 def dedup_incremental(

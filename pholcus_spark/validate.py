@@ -56,24 +56,37 @@ def _fmt_of(content_type: str | None, url: str | None) -> str:
     return "png"
 
 
+def _validate_row(body, content_type: str | None, url: str | None) -> tuple:
+    """One image row's ``(w, h, phash, ok, error)``. The whole tuple is
+    computed before a caller appends any of it, so a failure mid-row
+    (e.g. phash on a degenerate image) cannot leave columns ragged."""
+    try:
+        px = decode_image(bytes(body), _fmt_of(content_type, url))
+        return int(px.shape[1]), int(px.shape[0]), phash64(px), True, None
+    except NotImplementedError as e:  # jpeg without Pillow — stub path
+        return None, None, None, False, f"stub:{e}"
+    except Exception as e:
+        return None, None, None, False, str(e)
+
+
 @pandas_udf(VALIDATION_TYPE)
 def validate_image_udf(
     bodies: pd.Series, content_types: pd.Series, urls: pd.Series
 ) -> pd.DataFrame:
-    ws, hs, phs, oks, errs = [], [], [], [], []
-    for body, ct, url in zip(bodies, content_types, urls):
-        # compute BEFORE appending: a failure mid-row (e.g. phash on a
-        # degenerate image) must not leave the column lists ragged
-        try:
-            px = decode_image(bytes(body), _fmt_of(ct, url))
-            row = (int(px.shape[1]), int(px.shape[0]), phash64(px), True, None)
-        except NotImplementedError as e:  # jpeg without Pillow — stub path
-            row = (None, None, None, False, f"stub:{e}")
-        except Exception as e:
-            row = (None, None, None, False, str(e))
-        ws.append(row[0]), hs.append(row[1]), phs.append(row[2])
-        oks.append(row[3]), errs.append(row[4])
-    return pd.DataFrame({"w": ws, "h": hs, "phash": phs, "ok": oks, "error": errs})
+    rows = [_validate_row(b, ct, u) for b, ct, u in zip(bodies, content_types, urls)]
+    w, h, phash, ok, error = ([r[i] for r in rows] for i in range(5))
+    # nullable integer arrays: with plain lists, one failed row (None)
+    # turns the column into float64, which rounds every 64-bit phash in
+    # the batch
+    return pd.DataFrame(
+        {
+            "w": pd.array(w, dtype="Int32"),
+            "h": pd.array(h, dtype="Int32"),
+            "phash": pd.array(phash, dtype="Int64"),
+            "ok": ok,
+            "error": error,
+        }
+    )
 
 
 IMAGES_ARROW_SCHEMA_FIELDS = [
@@ -104,8 +117,8 @@ def make_image_sink_kernel(superstep: int, session_tz: str = "UTC"):
     validates in the same task that read the bytes, returns
     ``(manifest_pdf, sink_pdf)`` where the sink carries the full images
     -table row (bytes included) and the manifest only (image_id, valid).
-    Same per-row semantics as ``validate_image_udf`` + the engine's
-    images projection (engine.py images branch)."""
+    The same :func:`_validate_row` as ``validate_image_udf``, plus the
+    engine's images projection (engine.py images branch)."""
     import re
 
     id_re = re.compile(r"/img/(.+)\.(png|jpe?g)$")
@@ -135,19 +148,8 @@ def make_image_sink_kernel(superstep: int, session_tz: str = "UTC"):
             ids.append(iid)
             fmts.append("jpeg" if "jpeg" in (ct or "") else "png")
             caps.append(temp.get("caption") or "")
-            try:
-                px = decode_image(bytes(body), _fmt_of(ct, url))
-                ws.append(int(px.shape[1]))
-                hs.append(int(px.shape[0]))
-                phs.append(phash64(px))
-                oks.append(True)
-                errs.append(None)
-            except NotImplementedError as e:
-                ws.append(None), hs.append(None), phs.append(None)
-                oks.append(False), errs.append(f"stub:{e}")
-            except Exception as e:
-                ws.append(None), hs.append(None), phs.append(None)
-                oks.append(False), errs.append(str(e))
+            w, h, ph, ok, err = _validate_row(body, ct, url)
+            ws.append(w), hs.append(h), phs.append(ph), oks.append(ok), errs.append(err)
         sink = pd.DataFrame(
             {
                 "image_id": ids,

@@ -13,6 +13,7 @@ jobs from multiple threads) — the suite pays ~max(scenario) wall time
 instead of Σ(scenario).
 """
 
+import os
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -38,13 +39,13 @@ def run_pair(
         spark, corpus, spec,
         # bloom_rebuild_min=20: low enough that fixture runs rebuild the
         # sidecar several times (exercising the cogrouped probe path),
-        # high enough not to rebuild on every flush; commit_every=2
-        # halves the per-superstep flush cost while still producing
-        # multiple durable snapshots per run
+        # high enough not to rebuild on every flush; without bloom, a
+        # threshold no fixture reaches keeps every dedup exact.
+        # commit_every=2 halves the per-superstep flush cost while still
+        # producing multiple durable snapshots per run
         EngineConfig(
             wave_window_ms=wave_window_ms,
-            bloom_enabled=bloom,
-            bloom_rebuild_min=20,
+            bloom_rebuild_min=20 if bloom else 10**18,
             commit_every=2,
             per_spider_quota=per_spider_quota,
             python_image_sink=body_store,
@@ -502,6 +503,8 @@ def test_t1_full_conformance(runs):
 def test_t1_conformance_without_bloom(runs):
     _, run, res = runs["nobloom"]
     check_conformance(run, res)
+    # no sidecar from start to finish: every dedup was the exact join
+    assert not os.path.exists(os.path.join(run.workdir, "bloom"))
 
 
 def test_politeness_budget_conformance(runs):

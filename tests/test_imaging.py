@@ -102,3 +102,42 @@ def test_jpeg_stub_without_pil():
         pytest.skip("Pillow present; stub path not reachable")
     with pytest.raises(NotImplementedError):
         decode_image(b"\xff\xd8\xff", "jpeg")
+
+
+def test_validate_udf_phash_exact_beside_a_bad_row(spark):
+    """One undecodable image in an Arrow batch must not change the
+    other rows' phash (a None in a plain int column makes it float64,
+    which rounds 64-bit hashes), and the UDF and the python image sink
+    agree row for row."""
+    import pandas as pd
+
+    from pholcus_spark.validate import make_image_sink_kernel, validate_image_udf
+
+    rng = np.random.default_rng(3)
+    pxs = [synth_pixels(rng, 32, 32) for _ in range(8)]
+    rows = [(f"http://h.test/img/{i}.png", bytearray(encode_png(px)), "image/png")
+            for i, px in enumerate(pxs)]
+    rows.append(("http://h.test/img/bad.png", bytearray(b"garbage"), "image/png"))
+    df = spark.createDataFrame(rows, "url string, body binary, ct string").coalesce(1)
+    got = {
+        r.url: r.v
+        for r in df.select("url", validate_image_udf("body", "ct", "url").alias("v"))
+        .collect()
+    }
+    for (url, _b, _c), px in zip(rows, pxs):
+        assert (got[url].w, got[url].h, got[url].phash, got[url].ok) == (
+            32, 32, phash64(px), True
+        )
+    bad = got["http://h.test/img/bad.png"]
+    assert (bad.w, bad.phash, bad.ok) == (None, None, False) and bad.error
+
+    grp = pd.DataFrame(
+        {"body": [bytes(b) for _u, b, _c in rows], "content_type": "image/png",
+         "url": [u for u, _b, _c in rows], "temp": None, "parent_url": ""}
+    )
+    _manifest, sink = make_image_sink_kernel(1)(grp)
+    for rec in sink.itertuples():
+        v = got[rec.url]
+        assert (rec.valid, rec.error) == (v.ok, v.error)
+        if v.ok:
+            assert (rec.w, rec.h, rec.phash) == (v.w, v.h, v.phash)

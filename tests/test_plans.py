@@ -257,3 +257,54 @@ def test_engine_commits_and_checkpoints_in_one_place():
     assert sorted(fn for fn, _ in sites["localCheckpoint"]) == [
         "_checkpoint", "_set_frontier",
     ], sites
+
+
+def test_one_seen_set_lifecycle():
+    """Static guard: the Bloom-sidecar lifecycle lives once, in
+    ``bloom.SeenSet``. Under ``pholcus_spark/`` the only calls of
+    ``build_sidecar`` and ``load_sidecar`` are inside ``SeenSet``, and
+    neither the engine nor ``ops/seenstore.py`` touches a sidecar's
+    ``covered_dirs`` — so the engine's url_seen and SeenStore cannot
+    grow two rebuild policies again."""
+    import ast
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "pholcus_spark",
+    )
+    sites: list[tuple[str, str, str, int]] = []
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.cls = rel, "<module>"  # innermost enclosing class
+
+        def visit_ClassDef(self, node):
+            outer, self.cls = self.cls, node.name
+            self.generic_visit(node)
+            self.cls = outer
+
+        def visit_Call(self, node):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name in ("build_sidecar", "load_sidecar"):
+                sites.append((self.rel, self.cls, name, node.lineno))
+            self.generic_visit(node)
+
+    covered = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as f:
+                src = f.read()
+            Calls(rel).visit(ast.parse(src, path))
+            if rel in ("engine.py", "ops/seenstore.py") and "covered_dirs" in src:
+                covered.append(rel)
+    assert sorted((rel, cls, name) for rel, cls, name, _ in sites) == [
+        ("bloom.py", "SeenSet", "build_sidecar"),
+        ("bloom.py", "SeenSet", "load_sidecar"),
+    ], sites
+    assert not covered, covered

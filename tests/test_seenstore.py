@@ -44,7 +44,7 @@ def test_probe_path_engaged_after_rebuild(spark, tmp_path, monkeypatch):
     )
     texts = [f"doc {i}" for i in range(40)]
     store.add(_batch(spark, texts).select("key"))
-    assert store._sidecar(store._dirs()) is not None
+    assert store.seen.sidecar(store.seen.dirs()) is not None
 
     calls = []
     real = bloom.probe
@@ -77,12 +77,12 @@ def test_compact_preserves_membership_and_rebuilds(spark, tmp_path):
     )
     store.add(_batch(spark, [f"x{i}" for i in range(10)]).select("key"))
     store.add(_batch(spark, [f"y{i}" for i in range(10)], 100).select("key"))
-    assert len(store._dirs()) == 2
+    assert len(store.seen.dirs()) == 2
     store.compact()
-    dirs = store._dirs()
+    dirs = store.seen.dirs()
     assert len(dirs) == 1 and "compact" in dirs[0]
     # sidecar rebuilt over the compacted dir → still valid and probing
-    sc = store._sidecar(dirs)
+    sc = store.seen.sidecar(dirs)
     assert sc is not None and set(sc.covered_dirs) == set(dirs)
     probe_batch = _batch(spark, ["x3", "y7", "zz"], 200)
     assert sorted(
