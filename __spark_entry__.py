@@ -767,21 +767,21 @@ def q_global_rank(spark, sf_dir):
     (`engine.two_phase_rank` — seq assignment for seed merge, failure
     requeue, and children push) oracle-checked end to end: a total
     order over lineitem WITHOUT a single-partition exchange, vs
-    DuckDB's row_number() over the same (unique) sort key. The sampled
-    range boundaries are pinned by the in-function cache, so the
-    assembled rank is exactly the single-window rank."""
+    DuckDB's row_number() over the same (unique) sort key. The range
+    boundaries are sampled once, inside the one sorted checkpoint that
+    both the partition counts and the ranks read, so the assembled rank
+    is exactly the single-window rank."""
     from pholcus_spark.engine import two_phase_rank
 
     li = _load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate"
     )
-    cleanup: list = []
-    ranked = two_phase_rank(
+    ranked, _n = two_phase_rank(
         li,
         [F.asc("l_shipdate"), F.asc("l_orderkey"), F.asc("l_linenumber")],
         32,
         "rnk",
-        unpersist_into=cleanup,
+        lambda df: df.localCheckpoint(eager=True),
     )
     return ranked.select(
         "l_orderkey", "l_linenumber", F.col("rnk").cast("long").alias("rnk")

@@ -19,11 +19,12 @@ Each superstep:
    ExtractRule items (``fetcher.parse_pages``), checkpointed in its own
    ``ss{N}:parse`` job before any reader runs.
 4. **emit** — items, validated image rows and file rows appended.
-5. **push** — children: absolutize→canonicalize→route→robots-filter→
-   SHA-1 key→failed-wave-position rule, then :meth:`CrawlEngine._push`,
-   the one Push (`matrix.go:51-98`) that seeds and requeued failures go
-   through too: anti-join vs url_seen ∪ in-flight keys→within-batch
-   dedup (first in push order wins)→limit cutoff→dense seq assignment.
+5. **push** — children (absolutized and canonicalized by the parse):
+   route→robots-filter→SHA-1 key→failed-wave-position rule, then
+   :meth:`CrawlEngine._push`, the one Push (`matrix.go:51-98`) that
+   seeds and requeued failures go through too: anti-join vs url_seen ∪
+   in-flight keys→within-batch dedup (first in push order wins)→limit
+   cutoff→dense seq assignment.
 6. **ack** — succeeded keys appended to url_seen (non-reloadable only,
    `matrix.go:144-154`); failures become failed_wait rows; a failure
    whose key already sits in the failure store is recorded permanently
@@ -103,10 +104,9 @@ def frontier_rows(df: DataFrame, **cols) -> DataFrame:
 # no userinfo, non-empty path, no query/fragment/whitespace) — for such
 # rows curl == raw and host is a regexp_extract, all inside codegen.
 # Everything else (relative leftovers, ports, uppercase, queries, IDN,
-# malformed) takes the exact pandas-UDF path. Absolutized crawl links
-# overwhelmingly hit the fast path, so the per-link Python cost drops to
-# the odd tail — this is the widest stage of a superstep (links ≈ wave ×
-# branching).
+# malformed) takes the exact pandas-UDF path. Template-generated URLs
+# (seed ranges, sitemaps, pagination) overwhelmingly hit the fast path;
+# crawled links never come here, the parse kernel canonicalizes them.
 _FAST_CANON_RE = r"^https?://[a-z0-9\.\-]+/[^?#\s]*$"
 _FAST_HOST_RE = r"^https?://([a-z0-9\.\-]+)/"
 
@@ -168,7 +168,12 @@ def paginate_expand(src: DataFrame, pr) -> DataFrame:
 def canonical_split(df: DataFrame, src_col: str) -> DataFrame:
     """Add ``curl`` (canonical URL) + ``host`` columns: JVM expression
     for already-canonical URLs, vectorized UDF for the rest; rows whose
-    URL is malformed canonicalize to NULL curl (caller filters)."""
+    URL is malformed canonicalize to NULL curl (caller filters).
+
+    For URLs built in the JVM: :meth:`CrawlEngine.seed_urls_df` and
+    the PaginateRule rows. Links parsed from pages arrive canonical
+    from the parse kernel (``extract.parse_pages_kernel``), with the
+    same ``(curl, host)`` pair (:func:`keys.canon_host`)."""
     fast_cond = F.col(src_col).rlike(_FAST_CANON_RE)
     fast = df.where(fast_cond).withColumns(
         {
@@ -226,57 +231,50 @@ def release(df: DataFrame) -> None:
 
 
 def two_phase_rank(
-    df: DataFrame,
-    order: list,
-    partitions: int,
-    out_col: str,
-    unpersist_into: list | None = None,
-) -> DataFrame:
-    """Global ``row_number`` over `order` WITHOUT a single-partition
-    exchange.
+    df: DataFrame, order: list, partitions: int | None, out_col: str,
+    checkpoint,
+) -> tuple[DataFrame, int]:
+    """Global ``row_number`` over `order` as ``out_col``, with no
+    single-partition exchange, window or join. Returns the ranked frame
+    and its row count.
 
-    Two-phase: range-repartition on the sort key, rank locally inside
-    each range partition, then add the cumulative row count of the
-    preceding partitions via a broadcast join (the cumulative window
-    runs over ≤ `partitions` rows — trivially small). The sort key must
-    be unique per row, so the assembled rank is identical to the
-    single-window rank regardless of where the range boundaries fall.
-
-    The ranged frame is persist()ed: ``repartitionByRange`` SAMPLES its
-    input with a fresh random seed per execution, so the rank subtree
-    and the partition-count subtree MUST read one materialization —
-    two independent executions can draw different boundaries and
-    mis-assemble the global rank (caught by
-    tests/test_plans.py::test_two_phase_rank_matches_global_window).
-    A lazy cache gives that single execution without the per-call
-    driver planning a localCheckpoint forces (~1s/superstep measured);
-    the caller owns release via `unpersist_into` (the persisted frame
-    is appended for a later :func:`release`).
+    One sort: range-repartition on the sort key, sort within each range
+    partition and materialize the result once through ``checkpoint``
+    (an eager localCheckpoint whose release the caller owns).
+    ``partitions=None`` takes the session's shuffle width and lets AQE
+    merge adjacent small ranges; an explicit count is kept as is.
+    Inside that plan ``monotonically_increasing_id`` packs the row's
+    range partition (high 31 bits) and its position in it (low 33
+    bits), so it holds under any coalescing. The driver collects the
+    per-partition row counts (one row per range partition), and a
+    row's rank is the row count of the partitions before its own (a
+    literal array) plus its position + 1. The sort key must be unique
+    per row, so the rank is the single-window rank wherever the range
+    boundaries fall; ``repartitionByRange`` samples them afresh per
+    execution, and the one materialization is what every reader,
+    counts included, sees.
     """
     ranged = (
-        df.repartitionByRange(partitions, *order)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+        df.repartitionByRange(*order)
+        if partitions is None
+        else df.repartitionByRange(partitions, *order)
     )
-    if unpersist_into is not None:
-        unpersist_into.append(ranged)
-    local = Window.partitionBy("_pid").orderBy(*order)
-    ranked = ranged.withColumn("_lrank", F.row_number().over(local))
-    pc = ranged.groupBy("_pid").agg(F.count("*").alias("_pn"))
-    # NOTE: this single-partition window is DELIBERATE and runs over
-    # <= `partitions` rows (the per-range counts), never data rows —
-    # it is the source of WindowExec's "No Partition Defined" log
-    # warnings during a crawl (a foldable partitionBy(lit) key gets
-    # optimized away, so the warning cannot be silenced per-window)
-    off_w = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = pc.withColumn(
-        "_poff", F.coalesce(F.sum("_pn").over(off_w), F.lit(0))
-    ).select("_pid", "_poff")
-    return (
-        ranked.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.col("_poff") + F.col("_lrank"))
-        .drop("_pid", "_lrank", "_poff")
+    ck = checkpoint(
+        ranged.sortWithinPartitions(*order)
+        .withColumn("_mid", F.monotonically_increasing_id())
     )
+    pid = F.shiftright(F.col("_mid"), 33)
+    counts = dict(ck.groupBy(pid).count().collect())
+    offsets, total = [], 0
+    for p in range(max(counts, default=-1) + 1):
+        offsets.append(total)
+        total += counts.get(p, 0)
+    offset = F.element_at(
+        F.array(*[F.lit(o) for o in offsets]).cast("array<long>"),
+        (pid + 1).cast("int"),
+    )
+    pos = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
+    return ck.withColumn(out_col, offset + pos + 1).drop("_mid"), total
 
 
 @dataclasses.dataclass
@@ -651,10 +649,9 @@ class CrawlEngine:
             if old is not None
             else None
         )
-        pushed = self._push(
+        pushed, n = self._push(
             new_df, [F.asc("seq"), F.asc("url")], in_flight, state
         )
-        n = pushed.count()
         self._set_frontier(pushed if old is None else old.unionByName(pushed))
         _count_pushes(state, n)
         state.update(
@@ -782,12 +779,12 @@ class CrawlEngine:
         failed_first, perm_failed, new_failed_wait = self._ack_failures(
             fetched, others, superstep
         )
-        kept = self._push_children(
+        kept, n_children = self._push_children(
             parsed, new_seen, rest, failed_first, state, superstep
         )
         self._next_frontier(rest, others, kept, new_failed_wait, superstep)
-        n = self._count_wave(fetched, out["items"], perm_failed, kept, superstep)
-        self._last_children_count = n["children"]
+        n = self._count_wave(fetched, out["items"], perm_failed, superstep)
+        n["children"] = self._last_children_count = n_children
 
         # -- commit: skip appends known to be empty (each is a Spark job)
         lineage = (
@@ -1273,10 +1270,11 @@ class CrawlEngine:
     def _push_children(
         self, parsed: DataFrame, new_seen: DataFrame, rest: DataFrame,
         failed_first: DataFrame, state: dict, superstep: int,
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, int]:
         """Children phase: emitted links, pushed (:meth:`_push`) in push
         order (parent priority desc, parent seq, ordinal) with this
-        wave's successes and the rest of the queue in flight."""
+        wave's successes and the rest of the queue in flight. Returns
+        the pushed rows and their count."""
         self._describe(superstep, "children")
         children = self._emit_children(parsed, superstep)
         # failed-wave-position rule (see module docstring); reloadable
@@ -1303,10 +1301,10 @@ class CrawlEngine:
             )
             .drop("_fkey", "_fprio", "_fseq")
         )
-        # checkpoint: the emission chain (explode -> canonicalize UDF ->
-        # route -> robots -> key -> failed join) is re-analyzed by every
-        # dedup/rank Dataset in the push and read by both of its
-        # branches; truncating it once keeps those trees flat
+        # checkpoint: the emission chain (explode -> route -> robots ->
+        # carry window -> key -> failed join) is read by both branches
+        # of the push (reloadable or not); truncating it once keeps it
+        # from running twice and keeps the push's plans flat
         return self._push(
             self._checkpoint(children),
             [F.desc("p_prio"), F.asc("p_seq"), F.asc("ordinal")],
@@ -1317,7 +1315,7 @@ class CrawlEngine:
     def _push(
         self, cands: DataFrame, order: list, in_flight: DataFrame | None,
         state: dict,
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, int]:
         """The engine's one Push (`matrix.go:51-98`; the oracle's
         ``push``): seeds, children and requeued failures all enter the
         frontier through it.
@@ -1331,8 +1329,9 @@ class CrawlEngine:
         (unique per row) by :func:`two_phase_rank`, cut at the limit
         guard's remaining budget ``state["max_page"]`` (matrix.go:59-61,
         97: dropped rows never consume it) and given dense ``seq`` from
-        ``state["next_seq"]``. Returns the pushed rows, cached; the
-        caches are released at the next flush.
+        ``state["next_seq"]``. Returns the pushed rows, a projection of
+        the rank's checkpoint (released at the next flush), and their
+        count, known on the driver from the rank's partition counts.
 
         One dedup order serves every caller, without changing its rows:
 
@@ -1363,23 +1362,18 @@ class CrawlEngine:
             .where(F.col("_krn") == 1)
             .drop("_krn")
         )
-        # the range rank samples its input and rescans it: one evaluation
-        kept = non_reload.unionByName(cands.where(F.col("reloadable"))).persist()
-        ranked = two_phase_rank(
-            kept, order, max(1, self.config.frontier_partitions), "_rank",
-            unpersist_into=self._pending_release,
+        ranked, n = two_phase_rank(
+            non_reload.unionByName(cands.where(F.col("reloadable"))),
+            order, None, "_rank", self._checkpoint,
         )
         if state["max_page"] is not None:
-            ranked = ranked.where(F.col("_rank") <= max(0, -state["max_page"]))
-        pushed = (
-            ranked.withColumn(
-                "seq", (F.lit(state["next_seq"]) + F.col("_rank") - 1).cast("long")
-            )
-            .drop("_rank")
-            .persist()
-        )
-        self._pending_release.extend([kept, pushed])
-        return pushed
+            budget = max(0, -state["max_page"])
+            ranked = ranked.where(F.col("_rank") <= budget)
+            n = min(n, budget)
+        pushed = ranked.withColumn(
+            "seq", (F.lit(state["next_seq"]) + F.col("_rank") - 1).cast("long")
+        ).drop("_rank")
+        return pushed, n
 
     def _set_frontier(self, df: DataFrame) -> None:
         """Replace the in-memory frontier with ``df``, coalesced and
@@ -1417,11 +1411,12 @@ class CrawlEngine:
 
     def _count_wave(
         self, fetched: DataFrame, items: DataFrame, perm_failed: DataFrame,
-        kept: DataFrame, superstep: int,
+        superstep: int,
     ) -> dict[str, int]:
         """Counts phase: ONE job. wave/ok/images/files are conditional
-        counts over one scan of the checkpointed fetch metadata; items,
-        permanent failures and children read their caches."""
+        counts over one scan of the checkpointed fetch metadata; items
+        and permanent failures read their caches. (The push already
+        knows its own count.)"""
         self._describe(superstep, "counts")
         ok_is = lambda cond: F.sum((F.col("ok") & cond).cast("long"))  # noqa: E731
         aggs = {
@@ -1448,13 +1443,12 @@ class CrawlEngine:
         counts_src = (
             tag(items, "items")
             .union(tag(perm_failed, "perm"))
-            .union(tag(kept, "children"))
             .groupBy("t")
             .agg(F.count("*").alias("n"))
             .unionByName(fetched_counts)
         )
         counts = dict.fromkeys(
-            ("wave", "ok", "images", "files", "items", "perm", "children"), 0
+            ("wave", "ok", "images", "files", "items", "perm"), 0
         )
         counts.update((r.t, r.n) for r in counts_src.collect())
         return counts
@@ -1556,15 +1550,17 @@ class CrawlEngine:
     # ------------------------------------------------------------------
 
     def _emit_children(self, parsed: DataFrame, superstep: int) -> DataFrame:
-        """Explode out-links into routed, keyed child requests."""
+        """Explode out-links into routed, keyed child requests. The
+        parse kernel hands every link over canonical, with its host
+        (NULL for a malformed link), so this runs in the JVM only."""
         spec = self.spec
         # children come from anchors AND embedded image srcs — the reference
         # enqueues file downloads from img srcs via ctx.AddQueue just like
         # page links (context.go:104-125, FileOutput path :247-284).
         # The figure-caption carry and the rule-authored Temp carry ride
         # the SAME explode as the links, as struct entries: one
-        # canonicalize pass and one last-wins window over (parent_url,
-        # curl), instead of a python stage, window and join per carry.
+        # last-wins window over (parent_url, curl), instead of a
+        # window and join per carry.
         follow = getattr(spec, "follow_anchors", True)
         has_carry = any(
             getattr(er, "carry_fields", ()) or ()
@@ -1575,9 +1571,10 @@ class CrawlEngine:
         )
         null_map = F.lit(None).cast("map<string,string>")
 
-        def _entry(raw, fig=None, ctemp=None, emit=True):
+        def _entry(curl, host, fig=None, ctemp=None, emit=True):
             return F.struct(
-                raw.alias("raw_link"),
+                curl.alias("curl"),
+                host.alias("host"),
                 (fig if fig is not None else null_fig).alias("fig0"),
                 (ctemp if ctemp is not None else null_map).alias("ctemp0"),
                 F.lit(emit).alias("is_emit"),
@@ -1586,7 +1583,10 @@ class CrawlEngine:
         emit_arrays = []
         if follow:
             emit_arrays.append(
-                F.transform(F.col("out_links"), lambda l: _entry(l))
+                F.transform(
+                    F.col("out_links"),
+                    lambda l, i: _entry(l, F.get(F.col("out_hosts"), i)),
+                )
             )
         # figure entries are always present: emitted children when
         # follow_anchors, caption-carry-only otherwise (explicit-
@@ -1595,7 +1595,8 @@ class CrawlEngine:
             F.transform(
                 F.col("figures"),
                 lambda f: _entry(
-                    f["src"],
+                    f["curl"],
+                    f["host"],
                     fig=F.struct(
                         f["caption"].alias("caption"),
                         F.regexp_extract(
@@ -1616,6 +1617,7 @@ class CrawlEngine:
                 ),
                 lambda l, i: _entry(
                     l,
+                    F.get(F.col("dsl_hosts"), i),
                     ctemp=(
                         F.try_element_at(F.col("dsl_carry"), i + 1)
                         if has_carry
@@ -1633,7 +1635,8 @@ class CrawlEngine:
             F.posexplode(F.concat(*emit_arrays)).alias("ordinal", "_e"),
         ).select(
             "spider", "parent_url", "depth", "p_prio", "p_seq", "ordinal",
-            F.col("_e.raw_link").alias("raw_link"),
+            F.col("_e.curl").alias("curl"),
+            F.col("_e.host").alias("host"),
             F.col("_e.fig0").alias("fig0"),
             F.col("_e.ctemp0").alias("ctemp0"),
             F.col("_e.is_emit").alias("is_emit"),
@@ -1642,9 +1645,7 @@ class CrawlEngine:
             links = links.where(F.col("depth") < spec.max_depth)
         # malformed hrefs canonicalize to NULL and are dropped, never
         # fatal (common.go:178-196 MakeUrl ok=false; oracle does the same)
-        links = canonical_split(links, "raw_link").where(
-            F.col("curl").isNotNull()
-        )
+        links = links.where(F.col("curl").isNotNull())
         # route: first matching pattern wins (spiderspec order) — a chained
         # CASE WHEN stays JVM-side in whole-stage codegen. The LinkRule also
         # fixes the HTTP method + POST body (param.go:61-84).
@@ -1766,8 +1767,8 @@ class CrawlEngine:
         (``(ipos+1)·2^20 + page``) so push order is: anchors, figure
         srcs, link_fields children, then pagination — FIFO-stable and
         mirrored independently by the conformance oracle. Returns rows
-        shaped exactly like the routed-links frame at the union point
-        (post canonical_split + routing, pre robots)."""
+        shaped like the routed-links frame at the union point (post
+        canonicalize + routing, pre robots), plus ``pcarry``."""
         spec = self.spec
         parts: list[DataFrame] = []
         for pr in getattr(spec, "paginate_rules", ()) or ():
@@ -1806,8 +1807,10 @@ class CrawlEngine:
                 F.col("raw_link"),
                 pcarry.alias("pcarry"),
             )
-            part = canonical_split(part, "raw_link").where(
-                F.col("curl").isNotNull()
+            part = (
+                canonical_split(part, "raw_link")
+                .where(F.col("curl").isNotNull())
+                .drop("raw_link")
             )
             parts.append(
                 part.withColumns(
@@ -1832,8 +1835,7 @@ class CrawlEngine:
         a reloadable success followed by a same-key failure can make a
         failed key seen) and stays in the failure store as failed_nil."""
         fw = frontier.where(F.col("state") == "failed_wait")
-        pushed = self._push(fw, [F.asc("seq")], None, state)
-        n = pushed.count()
+        pushed, n = self._push(fw, [F.asc("seq")], None, state)
         self._set_frontier(
             frontier.where(F.col("state") != "failed_wait")
             .unionByName(fw.withColumn("state", F.lit("failed_nil")))

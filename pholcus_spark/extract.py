@@ -9,10 +9,12 @@ operations over Arrow batches — anchor hrefs in document order and
 
 Everything runs in one Arrow-batch kernel, ``parse_pages_kernel``,
 which every fetcher's ``parse_pages`` maps over its pages (never
-per-row Python UDFs in the Spark plan); regex parsing is the idiomatic
-scale path since page HTML is machine-generated in the fixture and
-well-formed subsets suffice for conformance. A full selector library
-(selectolax/lxml) would slot into the same kernel on a real cluster.
+per-row Python UDFs in the Spark plan), and which also canonicalizes
+every link it emits, so the crawl crosses the Python boundary once per
+page; regex parsing is the idiomatic scale path since page HTML is
+machine-generated in the fixture and well-formed subsets suffice for
+conformance. A full selector library (selectolax/lxml) would slot into
+the same kernel on a real cluster.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ import re
 
 import pandas as pd
 
-from .keys import absolutize
+from .keys import absolutize_safe, canon_host
 
 _CHARSET_RE = re.compile(r"charset=[\"']?([\w-]+)", re.I)
 _META_CHARSET_RE = re.compile(
@@ -917,8 +919,9 @@ def _apply_rules_for(
             )
             for lf in link_fields:
                 v = it.get(lf)
-                if v:
-                    row_links.append(absolutize(base_url, v))
+                link = absolutize_safe(base_url, v) if v else None
+                if link:
+                    row_links.append(link)
                     row_carries.append(carry)
         # cursor pagination (wukongwenda.go:125-141): one follow-up per
         # page — the page URL with the cursor param set to the LAST
@@ -974,20 +977,31 @@ def parse_pages_kernel(extract_rules=(), carry_concat=()):
     """The page parse: one decoded-body pass per row computing
     out_links + figures + user ExtractRule items + rule-emitted links
     (``link_fields`` — ctx.AddQueue from rule data, avatar.go:95-101),
-    absolutized and appended after anchors + figure srcs in push order
-    (the oracle mirrors that order independently). Every fetcher's
-    ``parse_pages`` runs it: the body store inside the task that read
-    the bytes, so html bodies never enter the JVM plan ("parse where
-    you read"); other fetchers over their attached bodies. Input pdf
-    carries ``body``; output drops it and adds the
-    :data:`PARSE_EXTRA_DDL` columns."""
+    appended after anchors + figure srcs in push order (the oracle
+    mirrors that order independently). Every fetcher's ``parse_pages``
+    runs it: the body store inside the task that read the bytes, so
+    html bodies never enter the JVM plan ("parse where you read");
+    other fetchers over their attached bodies. Input pdf carries
+    ``body``; output drops it and adds the :data:`PARSE_EXTRA_DDL`
+    columns.
+
+    Every link leaves the kernel canonical, with its host
+    (:func:`keys.canon_host`), so the children phase runs no python
+    stage of its own. A malformed link is NULL at its ordinal: the
+    link arrays keep their length and ``dsl_carry`` stays aligned with
+    ``dsl_links``. The ``carry_concat`` merge runs first, on the
+    absolutized strings; its survivors are canonicalized after it."""
     specs = rule_spec_tuples(extract_rules)
 
     def kernel(grp: pd.DataFrame) -> pd.DataFrame:
         compiled = compile_rule_specs(specs)
-        links_out, figs_out, dsl_out, dlinks_out, dcarry_out = (
-            [], [], [], [], [],
-        )
+        cols = {
+            c: []
+            for c in (
+                "out_links", "out_hosts", "figures", "dsl_items",
+                "dsl_links", "dsl_hosts", "dsl_carry",
+            )
+        }
         temps = (
             grp["temp"]
             if "temp" in grp.columns
@@ -997,46 +1011,56 @@ def parse_pages_kernel(extract_rules=(), carry_concat=()):
             grp["body"], grp["content_type"], grp["url"], grp["rule"], temps
         ):
             if b is None:
-                links_out.append([])
-                figs_out.append([])
-                dsl_out.append([])
-                dlinks_out.append([])
-                dcarry_out.append([])
+                for v in cols.values():
+                    v.append([])
                 continue
             text = decode_body(bytes(b), ct)
-            links_out.append(
-                [absolutize(u, html_mod.unescape(h)) for h in _HREF_RE.findall(text)]
-            )
-            figs_out.append(
-                [
+            anchors = [
+                canon_host(absolutize_safe(u, html_mod.unescape(h)))
+                for h in _HREF_RE.findall(text)
+            ]
+            cols["out_links"].append([c for c, _ in anchors])
+            cols["out_hosts"].append([h for _, h in anchors])
+            figs = []
+            for src, cap in _FIGURE_RE.findall(text):
+                src = absolutize_safe(u, html_mod.unescape(src))
+                curl, host = canon_host(src)
+                figs.append(
                     {
-                        "src": absolutize(u, html_mod.unescape(src)),
+                        "src": src,
                         "caption": html_mod.unescape(cap),
+                        "curl": curl,
+                        "host": host,
                     }
-                    for src, cap in _FIGURE_RE.findall(text)
-                ]
-            )
+                )
+            cols["figures"].append(figs)
             row_items, row_links, row_carries = _apply_rules_for(
                 compiled, text, r, u, tp, carry_concat
             )
-            dsl_out.append(row_items)
-            dlinks_out.append(row_links)
-            dcarry_out.append(row_carries)
+            dsl = [canon_host(link) for link in row_links]
+            cols["dsl_items"].append(row_items)
+            cols["dsl_links"].append([c for c, _ in dsl])
+            cols["dsl_hosts"].append([h for _, h in dsl])
+            cols["dsl_carry"].append(row_carries)
         out = grp.drop(columns=["body"]).copy()
-        out["out_links"] = links_out
-        out["figures"] = figs_out
-        out["dsl_items"] = dsl_out
-        out["dsl_links"] = dlinks_out
-        out["dsl_carry"] = dcarry_out
+        for name, v in cols.items():
+            out[name] = v
         return out
 
     return kernel
 
 
+# The parse kernel's output columns. ``out_links``/``dsl_links`` and
+# ``figures.curl`` are canonical URLs (NULL where the link is
+# malformed), each with its host in the parallel ``out_hosts``/
+# ``dsl_hosts`` entry or ``figures.host``; ``figures.src`` stays the
+# absolutized src the items' image_id is read from.
 PARSE_EXTRA_DDL = (
     "out_links array<string>, "
-    "figures array<struct<src:string,caption:string>>, "
+    "out_hosts array<string>, "
+    "figures array<struct<src:string,caption:string,curl:string,host:string>>, "
     "dsl_items array<map<string,string>>, "
     "dsl_links array<string>, "
+    "dsl_hosts array<string>, "
     "dsl_carry array<map<string,string>>"
 )

@@ -34,6 +34,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType, StructField, StructType
 
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
+_ASCII_LOWER = "abcdefghijklmnopqrstuvwxyz"
 
 
 def canonicalize_url(url: str) -> str:
@@ -67,6 +68,14 @@ def canonicalize_url_safe(url: str | None) -> str | None:
         return None
 
 
+def canon_host(url: str | None) -> tuple[str | None, str | None]:
+    """``(canonical URL, host)`` of one URL, both None when it is
+    malformed — the pair :func:`canon_host_udf` returns per row and the
+    parse kernel emits per link."""
+    c = canonicalize_url_safe(url)
+    return c, (host_of(c) if c is not None else None)
+
+
 def host_of(url: str) -> str:
     """Registrable host of a URL (lowercased hostname)."""
     try:
@@ -82,6 +91,16 @@ def absolutize(base_url: str, href: str) -> str:
     (``app/spider/common/common.go:178-260``).
     """
     return urljoin(base_url, href)
+
+
+def absolutize_safe(base_url: str, href: str) -> str | None:
+    """:func:`absolutize`, or None for an href ``urljoin`` cannot parse
+    (an unbalanced IPv6 bracket, …): page content is untrusted, and a
+    malformed link drops instead of failing the parse."""
+    try:
+        return absolutize(base_url, href)
+    except ValueError:
+        return None
 
 
 def request_key(spider: str, rule: str, url: str, method: str = "GET") -> str:
@@ -129,9 +148,15 @@ def request_key_col(
     """JVM-side SHA-1 over an already-canonicalized URL column.
 
     Stays inside whole-stage codegen — no Python in the hot dedup path.
+    HTTP methods are ASCII tokens, so they are upper-cased by an ASCII
+    ``translate``: Spark's ``upper`` maps case through ICU, whose
+    first use per JVM runs a costly static initialization.
     """
     return F.sha1(
-        F.concat(spider, rule, canonical_url, F.upper(method)).cast("binary")
+        F.concat(
+            spider, rule, canonical_url,
+            F.translate(method, _ASCII_LOWER, _ASCII_LOWER.upper()),
+        ).cast("binary")
     )
 
 
@@ -159,11 +184,8 @@ CANON_HOST_TYPE = StructType(
 
 @pandas_udf(CANON_HOST_TYPE)
 def canon_host_udf(urls: pd.Series) -> pd.DataFrame:
-    """Canonical URL + host in one Python stage (hot-path form of
-    canonicalize_url_udf + host_of_udf — one urlsplit per row)."""
-    curls, hosts = [], []
-    for u in urls:
-        c = canonicalize_url_safe(u)
-        curls.append(c)
-        hosts.append(host_of(c) if c is not None else None)
-    return pd.DataFrame({"curl": curls, "host": hosts})
+    """Canonical URL + host (:func:`canon_host`) in one Python stage."""
+    pairs = [canon_host(u) for u in urls]
+    return pd.DataFrame(
+        {"curl": [c for c, _ in pairs], "host": [h for _, h in pairs]}
+    )

@@ -37,7 +37,7 @@ import dataclasses
 from collections import defaultdict
 
 from .keys import (
-    absolutize,
+    absolutize_safe,
     canonicalize_url_safe,
     host_of,
     request_key,
@@ -1693,7 +1693,7 @@ def crawl(
                         for lf in lfs:
                             v = data.get(lf)
                             if v:
-                                link = absolutize(req.url, v)
+                                link = absolutize_safe(req.url, v)
                                 dsl_links.append(link)
                                 if carry is not None:
                                     c = canonicalize_url_safe(link)

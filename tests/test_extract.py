@@ -618,3 +618,81 @@ def test_const_fields_literals():
     assert items == [{"名称": "n1", "级别": "0", "上级": "0"}]
     page = {"body": html.encode(), "content_type": "text/html"}
     assert _extract_items(page, er) == items
+
+
+def test_parse_kernel_emits_canonical_links(spark):
+    """The parse kernel hands every link to the children phase already
+    canonical, with its host: a relative href comes out canonical and
+    absolute, with the (curl, host) pair canon_host_udf gives for it; a
+    malformed href is NULL at its ordinal; dsl_links, dsl_hosts and
+    dsl_carry keep one length; and the carry_concat merge still runs on
+    the absolutized strings, before canonicalization. An href urljoin
+    cannot parse is NULL too among the anchors, and drops (with its
+    carry) among the rule-emitted links, instead of failing the
+    parse."""
+    import pandas as pd
+
+    from pholcus_spark.extract import parse_pages_kernel
+    from pholcus_spark.keys import canon_host_udf
+    from pholcus_spark.session import local_frame
+
+    html = (
+        '<html><body><a href="/rel/p?b=2&amp;a=1#frag">r</a>'
+        '<a href="http://h:99999/x">bad</a>'
+        '<a href="http://[bad/x">unparseable</a>'
+        '<a href="HTTP://Other.TEST:80/Up">up</a>'
+        '<figure><img src="/img/a.png"> <p class="caption">cap</p></figure>'
+        '<div class="r"><i>/d?y=2&x=1</i><b>L1</b></div>'
+        '<div class="r"><i>http://h:99999/d</i><b>L2</b></div>'
+        '<div class="r"><i>http://[bad/d</i><b>Lx</b></div>'
+        '<div class="r"><i>/d?y=2&x=1</i><b>L3</b></div>'
+        '<div class="r"><i>/d?x=1&y=2</i><b>L4</b></div>'
+        "</body></html>"
+    )
+    er = ExtractRule(
+        rule="list",
+        item_pattern=r'<div class="r"><i>(?P<u>[^<]*)</i><b>(?P<lab>[^<]*)</b></div>',
+        fields=("u", "lab"),
+        link_fields=("u",),
+        carry_fields=("lab",),
+    )
+    kernel = parse_pages_kernel([er], carry_concat=("lab",))
+    out = kernel(
+        pd.DataFrame(
+            {
+                "body": [html.encode()],
+                "content_type": ["text/html; charset=utf-8"],
+                "url": ["http://h.test/dir/page"],
+                "rule": ["list"],
+            }
+        )
+    ).iloc[0]
+    assert list(out["out_links"]) == [
+        "http://h.test/rel/p?a=1&b=2", None, None, "http://other.test/Up",
+    ]
+    assert list(out["out_hosts"]) == ["h.test", None, None, "other.test"]
+    assert out["figures"] == [
+        {
+            "src": "http://h.test/img/a.png", "caption": "cap",
+            "curl": "http://h.test/img/a.png", "host": "h.test",
+        }
+    ]
+    # the pair the JVM-side canonicalize gives for the absolutized hrefs
+    raw = [
+        "http://h.test/rel/p?b=2&a=1#frag", "http://h:99999/x",
+        "HTTP://Other.TEST:80/Up",
+    ]
+    udf = local_frame(spark, [(i, u) for i, u in enumerate(raw)], "i int, u string")
+    got = udf.select("i", canon_host_udf("u").alias("ch")).orderBy("i").collect()
+    pairs = list(zip(out["out_links"], out["out_hosts"]))
+    assert [(r.ch.curl, r.ch.host) for r in got] == pairs[:2] + pairs[3:]
+    # merge on the absolutized strings: the two spellings of /d stay
+    # two entries (they meet later, in the engine's last-wins carry
+    # window); the repeated spelling concatenates into its first one
+    assert list(out["dsl_links"]) == [
+        "http://h.test/d?x=1&y=2", None, "http://h.test/d?x=1&y=2",
+    ]
+    assert list(out["dsl_hosts"]) == ["h.test", None, "h.test"]
+    assert list(out["dsl_carry"]) == [
+        {"lab": "L1L3"}, {"lab": "L2"}, {"lab": "L4"},
+    ]

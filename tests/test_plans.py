@@ -54,28 +54,71 @@ def test_entry_flagship_no_cartesian(spark):
 def test_two_phase_rank_matches_global_window(spark):
     """two_phase_rank (the seed-merge / requeue / push rank) assigns the
     exact ranks of a global row_number WITHOUT funnelling the data
-    through one task: the only full-data exchange is rangepartitioning;
-    the SinglePartition window runs over <= `partitions` offset rows."""
+    through one task: one range-partitioned sort, materialized once, and
+    no window or SinglePartition exchange over the data rows — at one
+    and at eight range partitions, for empty input, and with AQE
+    coalescing the range partitions (``partitions=None``, the engine's
+    choice)."""
     from pyspark.sql import functions as F
 
-    from pholcus_spark.engine import two_phase_rank
+    from pholcus_spark.engine import release, two_phase_rank
 
     df = (
         spark.range(0, 5000)
         .select((F.col("id") * 7919 % 5000).alias("seq"))
         .persist()
     )
-    ranked = two_phase_rank(df, [F.asc("seq")], 8, "_rn")
-    phys, _ = _plans(ranked)
-    # the window over the DATA is partitioned by _pid (local rank) —
-    # the range exchange itself is behind the localCheckpoint scan; the
-    # only unpartitioned window runs over the <=8-row offsets frame
-    assert "windowspecdefinition(_pid" in phys
-    rows = ranked.select("seq", "_rn").collect()
-    assert sorted((r.seq, r._rn) for r in rows) == [
-        (i, i + 1) for i in range(5000)
-    ]
-    df.unpersist()
+    made = []
+
+    def check(src, parts, n):
+        def checkpoint(d):
+            made.append(d.localCheckpoint(eager=True))
+            phys = d._jdf.queryExecution().executedPlan().toString()
+            phys = phys.split("== Initial Plan ==")[0]
+            # at most one exchange (AQE folds empty input away), a
+            # range one (at one range partition that is the
+            # SinglePartition exchange asked for)
+            assert phys.count("Exchange") <= 1, phys
+            if parts != 1 and n:
+                assert "rangepartitioning(seq" in phys, phys
+                assert "SinglePartition" not in phys, phys
+            for banned in ("Window", "Join"):
+                assert banned not in phys, (banned, phys)
+            return made[-1]
+
+        ranked, total = two_phase_rank(src, [F.asc("seq")], parts, "_rn", checkpoint)
+        phys, _ = _plans(ranked)
+        for banned in ("Window", "SinglePartition", "Exchange", "Join"):
+            assert banned not in phys, (banned, phys)
+        assert total == n
+        rows = ranked.select("seq", "_rn").collect()
+        assert sorted((r.seq, r._rn) for r in rows) == [
+            (i, i + 1) for i in range(n)
+        ], (parts, n)
+
+    confs = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.shuffle.partitions": "64",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for parts in (1, 8):
+            check(df, parts, 5000)
+            check(df.where("seq < 0"), parts, 0)
+        # AQE merges small adjacent range partitions: 64 ranges of ~8
+        # rows come out as fewer checkpoint partitions
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        before = len(made)
+        check(df.where("seq < 500"), None, 500)
+        assert made[before].rdd.getNumPartitions() < 64
+        check(df.where("seq < 0"), None, 0)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+        for d in made:
+            release(d)
+        df.unpersist()
 
 
 def test_wave_selection_has_no_unpartitioned_window(spark, tmp_path):
@@ -140,9 +183,11 @@ def test_wave_selection_has_no_unpartitioned_window(spark, tmp_path):
 
 
 def test_seed_range_frontier_is_multi_partition(spark, tmp_path):
-    """The seed_range -> merge path commits a frontier spread over the
-    configured partitions (round-2 verdict item 3: the old global
-    Window.orderBy rank funnelled every seed through one task)."""
+    """The seed_range -> merge path ranks its seeds without funnelling
+    them through one task (round-2 verdict item 3: the old global
+    Window.orderBy rank did): its plans hold no SinglePartition
+    exchange, and the rank is a range-partitioned sort. How many
+    partitions the ranges end up in is AQE's call by data size."""
     from pholcus_spark.catalog import SnapshotCatalog
     from pholcus_spark.engine import CrawlEngine, EngineConfig
     from pholcus_spark.fetch import FixtureFetcher
@@ -159,7 +204,17 @@ def test_seed_range_frontier_is_multi_partition(spark, tmp_path):
         spark, cat, FixtureFetcher(pages), SpiderSpec("site"), robots,
         EngineConfig(frontier_partitions=8),
     )
+    plans = []
+    checkpoint = eng._checkpoint
+
+    def recording(df):
+        plans.append(_plans(df)[0])
+        return checkpoint(df)
+
+    eng._checkpoint = recording
     eng.seed_range("http://h000.test/p/%d", 0, 2000, "list", "site")
+    assert any("rangepartitioning(" in p for p in plans), plans
+    assert not any("SinglePartition" in p for p in plans), plans
     frontier = cat.read("frontier")
     assert frontier.count() == 2000
     lo = frontier.orderBy("seq").limit(3).collect()
@@ -173,7 +228,8 @@ def test_push_dedups_cuts_and_numbers(spark, tmp_path):
     through, on hand-built candidates: history and in-flight keys drop,
     the first non-reloadable row per key in push order wins, reloadable
     rows all pass, the limit keeps a prefix of the survivors and seq is
-    dense from next_seq — at one and at eight rank partitions."""
+    dense from next_seq — at one and at eight shuffle partitions (the
+    rank's range width) — and the returned count is the pushed rows'."""
     from pyspark.sql import functions as F
 
     from pholcus_spark.catalog import SnapshotCatalog
@@ -198,22 +254,26 @@ def test_push_dedups_cuts_and_numbers(spark, tmp_path):
     ).withColumn("tag", F.col("seq"))
     in_flight = local_frame(spark, [("q",)], "key string")
     survivors = [0, 1, 4, 6, 7]  # a first, r twice, b, c
+    base = spark.conf.get("spark.sql.shuffle.partitions")
     for parts in (1, 8):
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         cat = SnapshotCatalog(str(tmp_path / f"push{parts}"), spark)
         cat.commit(
             {"url_seen": local_frame(spark, [("s", 0)], URL_SEEN_DDL)}, {}, {}
         )
         eng = CrawlEngine(
             spark, cat, FixtureFetcher(pages), SpiderSpec("site"), None,
-            EngineConfig(frontier_partitions=parts),
+            EngineConfig(),
         )
         for max_page, want in ((None, survivors), (-2, survivors[:2])):
             state = {"next_seq": 10, "max_page": max_page}
-            pushed = eng._push(cands, [F.asc("seq")], in_flight, state)
+            pushed, n = eng._push(cands, [F.asc("seq")], in_flight, state)
             got = sorted((r.seq, r.tag) for r in pushed.collect())
             assert got == [(10 + i, t) for i, t in enumerate(want)], (parts, max_page)
+            assert n == len(want), (parts, max_page)
         for df in eng._pending_release:
             release(df)
+    spark.conf.set("spark.sql.shuffle.partitions", base)
 
 
 def test_engine_commits_and_checkpoints_in_one_place():
@@ -308,3 +368,39 @@ def test_one_seen_set_lifecycle():
         ("bloom.py", "SeenSet", "load_sidecar"),
     ], sites
     assert not covered, covered
+
+
+def test_key_path_plans_have_no_case_mapping(spark, tmp_path):
+    """The seed, children and push plans map no case in the JVM:
+    Spark's upper/lower go through ICU, whose first use per JVM runs a
+    costly static initialization. HTTP methods are ASCII, so the
+    request key upper-cases them with translate."""
+    from pholcus_spark import fixtures
+    from pholcus_spark.catalog import SnapshotCatalog
+    from pholcus_spark.engine import CrawlEngine, EngineConfig
+    from pholcus_spark.fetch import FixtureFetcher
+    from pholcus_spark.spiderspec import SpiderSpec
+
+    corpus = fixtures.generate(
+        fixtures.SiteSpec(n_hosts=2, list_pages=3, flaky_rate=0.0, fail_404_rate=0.0)
+    )
+    pages, _i, _t, _s, robots = fixtures.to_spark(spark, corpus)
+    eng = CrawlEngine(
+        spark, SnapshotCatalog(str(tmp_path / "crawl"), spark),
+        FixtureFetcher(pages), SpiderSpec("site"), robots,
+        EngineConfig(wave_window_ms=3000),
+    )
+    plans = []
+    checkpoint = eng._checkpoint
+
+    def recording(df):
+        plans.append(_plans(df)[1])
+        return checkpoint(df)
+
+    eng._checkpoint = recording
+    eng.seed(corpus.seeds)
+    eng.seed_range("http://h000.test/r/%d", 0, 3, "list", "site")
+    assert eng.superstep() > 0
+    assert len(plans) >= 6  # 2 seed ranks, wave, fetch, parse, children, rank
+    for opt in plans:
+        assert "upper(" not in opt and "lower(" not in opt, opt

@@ -145,3 +145,71 @@ def test_parse_kernel_runs_once_per_page(spark, tmp_path, monkeypatch):
         assert eng.superstep() == len(corpus.seeds), name
         assert at_children == [len(html_seeds)], name
         assert parsed_rows.value - before == len(html_seeds), name
+
+
+def test_children_phase_runs_no_python_stage(spark, tmp_path):
+    """The parse kernel hands links over canonical, so the children
+    phase (the emitted links and their push) plans no python stage: the
+    parse is the superstep's one python stage, in its own job."""
+    corpus = fixtures.generate(
+        fixtures.SiteSpec(n_hosts=2, list_pages=3, flaky_rate=0.0, fail_404_rate=0.0)
+    )
+    pages = fixtures.to_spark(spark, corpus)[0]
+    store = ParquetBodyStore.write(pages, str(tmp_path / "store"), n_buckets=4)
+    eng = _engine(spark, tmp_path, corpus, StoreFetcher(spark, store), None)
+    seen = []  # (job description, executed plan) per checkpoint
+    checkpoint = eng._checkpoint
+
+    def recording(df):
+        desc = spark.sparkContext.getLocalProperty("spark.job.description")
+        seen.append((desc, df._jdf.queryExecution().executedPlan().toString()))
+        return checkpoint(df)
+
+    eng._checkpoint = recording
+    eng.seed(corpus.seeds)
+    assert eng.superstep() > 0
+    phases = [d for d, _p in seen]
+    assert phases.count("ss1:children") == 2, phases  # emitted links, rank
+    assert phases.count("ss1:parse") == 1, phases
+    for desc, phys in seen:
+        if desc == "ss1:parse":
+            assert "MapInPandas" in phys, phys
+        else:
+            assert "Python" not in phys and "MapInPandas" not in phys, (desc, phys)
+
+
+def test_canon_host_udf_only_in_canonical_split():
+    """Static guard: the canonicalize UDF is called only by
+    ``engine.canonical_split``, and that only for URLs built in the JVM
+    (``seed_urls_df``, PaginateRule rows) — never on the emitted-links
+    path, whose links the parse kernel canonicalizes."""
+    paths = [os.path.join(_ROOT, "__spark_entry__.py")]
+    for d, _sub, files in os.walk(os.path.join(_ROOT, "pholcus_spark")):
+        paths += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    sites: dict[str, set] = {"canon_host_udf": set(), "canonical_split": set()}
+
+    class Calls(ast.NodeVisitor):
+        fn = "<module>"
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Call(self, node):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name in sites:
+                sites[name].add((os.path.relpath(self.path, _ROOT), self.fn))
+            self.generic_visit(node)
+
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            v = Calls()
+            v.path = path
+            v.visit(ast.parse(f.read(), path))
+    engine = os.path.join("pholcus_spark", "engine.py")
+    assert sites["canon_host_udf"] == {(engine, "canonical_split")}, sites
+    assert sites["canonical_split"] == {
+        (engine, "seed_urls_df"), (engine, "_paginate_children"),
+    }, sites
