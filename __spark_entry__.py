@@ -770,19 +770,31 @@ def q_global_rank(spark, sf_dir):
     DuckDB's row_number() over the same (unique) sort key. The range
     boundaries are sampled once, inside the one sorted checkpoint that
     both the partition counts and the ranks read, so the assembled rank
-    is exactly the single-window rank."""
+    is exactly the single-window rank. The rank runs at 32 range
+    partitions with AQE coalescing off, so the offsets of many
+    partitions are checked, not one merged range."""
     from pholcus_spark.engine import two_phase_rank
 
     li = _load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate"
     )
-    ranked, _n = two_phase_rank(
-        li,
-        [F.asc("l_shipdate"), F.asc("l_orderkey"), F.asc("l_linenumber")],
-        32,
-        "rnk",
-        lambda df: df.localCheckpoint(eager=True),
-    )
+    confs = {
+        "spark.sql.shuffle.partitions": "32",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        ranked, _n = two_phase_rank(
+            li,
+            [F.asc("l_shipdate"), F.asc("l_orderkey"), F.asc("l_linenumber")],
+            "rnk",
+            lambda df: df.localCheckpoint(eager=True),
+        )
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
     return ranked.select(
         "l_orderkey", "l_linenumber", F.col("rnk").cast("long").alias("rnk")
     )

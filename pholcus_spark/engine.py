@@ -99,18 +99,6 @@ def frontier_rows(df: DataFrame, **cols) -> DataFrame:
     )
 
 
-# JVM fast path for canonicalization: a URL matching this is ALREADY in
-# canonical form (lowercase http/https scheme + lowercase host, no port,
-# no userinfo, non-empty path, no query/fragment/whitespace) — for such
-# rows curl == raw and host is a regexp_extract, all inside codegen.
-# Everything else (relative leftovers, ports, uppercase, queries, IDN,
-# malformed) takes the exact pandas-UDF path. Template-generated URLs
-# (seed ranges, sitemaps, pagination) overwhelmingly hit the fast path;
-# crawled links never come here, the parse kernel canonicalizes them.
-_FAST_CANON_RE = r"^https?://[a-z0-9\.\-]+/[^?#\s]*$"
-_FAST_HOST_RE = r"^https?://([a-z0-9\.\-]+)/"
-
-
 def paginate_expand(src: DataFrame, pr) -> DataFrame:
     """The PaginateRule count→pages→URL expansion, as a standalone
     DataFrame transform (shared by the engine's ``_paginate_children``
@@ -166,36 +154,26 @@ def paginate_expand(src: DataFrame, pr) -> DataFrame:
 
 
 def canonical_split(df: DataFrame, src_col: str) -> DataFrame:
-    """Add ``curl`` (canonical URL) + ``host`` columns: JVM expression
-    for already-canonical URLs, vectorized UDF for the rest; rows whose
-    URL is malformed canonicalize to NULL curl (caller filters).
+    """Add ``curl`` (canonical URL) + ``host`` columns, the pair
+    :func:`keys.canon_host` gives, through one vectorized UDF; rows
+    whose URL is malformed canonicalize to NULL curl (caller filters).
 
     For URLs built in the JVM: :meth:`CrawlEngine.seed_urls_df` and
     the PaginateRule rows. Links parsed from pages arrive canonical
     from the parse kernel (``extract.parse_pages_kernel``), with the
-    same ``(curl, host)`` pair (:func:`keys.canon_host`)."""
-    fast_cond = F.col(src_col).rlike(_FAST_CANON_RE)
-    fast = df.where(fast_cond).withColumns(
-        {
-            "curl": F.col(src_col),
-            "host": F.regexp_extract(F.col(src_col), _FAST_HOST_RE, 1),
-        }
-    )
-    slow = (
-        df.where(fast_cond.isNull() | ~fast_cond)
-        # repartition BY COLUMN (no fixed count): the slow branch
-        # inherits the parent's width (e.g. one partition per body-store
-        # bucket) while usually holding a tiny minority of rows — every
-        # inherited partition then pays a python-worker round trip for
-        # ~0 rows (measured ~140 ms/task at 0 rows). A column shuffle
-        # lets AQE size python parallelism by the DATA: near-empty
-        # coalesces to one partition, a slow-heavy wave still fans out.
-        .repartition(F.col(src_col))
+    same pair."""
+    return (
+        # repartition BY COLUMN (no fixed count): the input's width
+        # (one partition per body-store bucket, a range's default
+        # parallelism) says nothing about its row count, and a python
+        # task costs a ~140 ms worker round trip even at 0 rows. A
+        # column shuffle lets AQE size python parallelism by the DATA:
+        # a few rows coalesce to one partition, a large batch fans out.
+        df.repartition(F.col(src_col))
         .withColumn("_ch", canon_host_udf(src_col))
         .withColumns({"curl": F.col("_ch.curl"), "host": F.col("_ch.host")})
         .drop("_ch")
     )
-    return fast.unionByName(slow)
 
 
 def _count_pushes(state: dict, n: int) -> None:
@@ -231,8 +209,7 @@ def release(df: DataFrame) -> None:
 
 
 def two_phase_rank(
-    df: DataFrame, order: list, partitions: int | None, out_col: str,
-    checkpoint,
+    df: DataFrame, order: list, out_col: str, checkpoint,
 ) -> tuple[DataFrame, int]:
     """Global ``row_number`` over `order` as ``out_col``, with no
     single-partition exchange, window or join. Returns the ranked frame
@@ -240,27 +217,22 @@ def two_phase_rank(
 
     One sort: range-repartition on the sort key, sort within each range
     partition and materialize the result once through ``checkpoint``
-    (an eager localCheckpoint whose release the caller owns).
-    ``partitions=None`` takes the session's shuffle width and lets AQE
-    merge adjacent small ranges; an explicit count is kept as is.
-    Inside that plan ``monotonically_increasing_id`` packs the row's
-    range partition (high 31 bits) and its position in it (low 33
-    bits), so it holds under any coalescing. The driver collects the
-    per-partition row counts (one row per range partition), and a
-    row's rank is the row count of the partitions before its own (a
-    literal array) plus its position + 1. The sort key must be unique
-    per row, so the rank is the single-window rank wherever the range
-    boundaries fall; ``repartitionByRange`` samples them afresh per
-    execution, and the one materialization is what every reader,
-    counts included, sees.
+    (an eager localCheckpoint whose release the caller owns). The range
+    width is the session's shuffle width, and AQE may merge adjacent
+    small ranges. Inside that plan ``monotonically_increasing_id``
+    packs the row's range partition (high 31 bits) and its position in
+    it (low 33 bits), so it holds under any coalescing. The driver
+    collects the per-partition row counts (one row per range
+    partition), and a row's rank is the row count of the partitions
+    before its own (a literal array) plus its position + 1. The sort
+    key must be unique per row, so the rank is the single-window rank
+    wherever the range boundaries fall; ``repartitionByRange`` samples
+    them afresh per execution, and the one materialization is what
+    every reader, counts included, sees.
     """
-    ranged = (
-        df.repartitionByRange(*order)
-        if partitions is None
-        else df.repartitionByRange(partitions, *order)
-    )
     ck = checkpoint(
-        ranged.sortWithinPartitions(*order)
+        df.repartitionByRange(*order)
+        .sortWithinPartitions(*order)
         .withColumn("_mid", F.monotonically_increasing_id())
     )
     pid = F.shiftright(F.col("_mid"), 33)
@@ -1364,7 +1336,7 @@ class CrawlEngine:
         )
         ranked, n = two_phase_rank(
             non_reload.unionByName(cands.where(F.col("reloadable"))),
-            order, None, "_rank", self._checkpoint,
+            order, "_rank", self._checkpoint,
         )
         if state["max_page"] is not None:
             budget = max(0, -state["max_page"])
@@ -1393,10 +1365,10 @@ class CrawlEngine:
         new_failed_wait: DataFrame, superstep: int,
     ) -> None:
         """Frontier phase: rest of the queue ∪ non-queued rows ∪ the new
-        children ∪ new failed_wait rows, checkpointed. It runs BEFORE the
-        counts job: this checkpoint forces the expensive children dedup
-        + rank spine exactly once, and the counts then read materialized
-        branches."""
+        children ∪ new failed_wait rows, checkpointed. The children's
+        dedup and rank already ran in the push's own rank checkpoint
+        (:func:`two_phase_rank`); this checkpoint only unions that
+        materialized output with the other branches."""
         self._describe(superstep, "frontier")
         self._set_frontier(
             rest.unionByName(others)

@@ -25,6 +25,7 @@ the canonical column already exists.
 from __future__ import annotations
 
 import hashlib
+import re
 from urllib.parse import parse_qsl, urlencode, urljoin, urlsplit, urlunsplit
 
 import pandas as pd
@@ -34,6 +35,12 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType, StructField, StructType
 
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
+# A URL this matches is already canonical: lowercase http(s) scheme and
+# host, no port or userinfo, a non-empty path of printable ASCII, no
+# query, fragment, whitespace or control byte. canonicalize_url returns
+# it unchanged and host_of returns the captured host, so canon_host
+# skips the urlsplit round trips for it (most absolutized links).
+_CANONICAL_RE = re.compile(r"https?://([a-z0-9.\-]+)/[!-\"$->@-~]*")
 _ASCII_LOWER = "abcdefghijklmnopqrstuvwxyz"
 
 
@@ -72,6 +79,9 @@ def canon_host(url: str | None) -> tuple[str | None, str | None]:
     """``(canonical URL, host)`` of one URL, both None when it is
     malformed — the pair :func:`canon_host_udf` returns per row and the
     parse kernel emits per link."""
+    m = _CANONICAL_RE.fullmatch(url) if url else None
+    if m is not None:
+        return url, m.group(1)
     c = canonicalize_url_safe(url)
     return c, (host_of(c) if c is not None else None)
 

@@ -100,23 +100,26 @@ def test_spark_column_key_matches_python(spark):
 
 
 def test_canonical_split_matches_udf_path(spark):
-    """The JVM fast path must emit exactly canonicalize_url_safe's result
-    for every URL shape — tricky ones must fall to the slow path."""
+    """canonical_split (seed_urls_df, PaginateRule rows) must emit
+    exactly canonicalize_url_safe's result and its host for every URL
+    shape, the keys seed() and the oracle compute."""
     from pholcus_spark.engine import canonical_split
     from pholcus_spark.keys import canonicalize_url_safe, host_of
 
     urls = [
-        "http://h.test/p/0",                      # fast
-        "https://a-b.test/x/y.png",               # fast
-        "http://h.test/A%20B/UPPER",              # fast (path case kept)
-        "http://h.test",                          # no path → slow, adds /
-        "HTTP://H.Test/p/0",                      # uppercase → slow
-        "http://h.test:80/p/0",                   # default port → slow
-        "http://h.test:8080/p/0",                 # port kept → slow
-        "http://h.test/p?b=2&a=1",                # query sort → slow
-        "http://h.test/p#frag",                   # fragment → slow
-        "http://user@h.test/p",                   # userinfo → slow
-        "http://h.test/a b",                      # space → slow
+        "http://h.test/p/0",                      # already canonical
+        "https://a-b.test/x/y.png",
+        "http://h.test/A%20B/UPPER",              # path case kept
+        "http://h.test",                          # no path → adds /
+        "HTTP://H.Test/p/0",                      # uppercase
+        "http://h.test:80/p/0",                   # default port
+        "http://h.test:8080/p/0",                 # port kept
+        "http://h.test/p?b=2&a=1",                # query sort
+        "http://h.test/p#frag",                   # fragment
+        "http://user@h.test/p",                   # userinfo
+        "http://h.test/a b",                      # space
+        "http://h.test/x\x1f",                    # trailing C0 control
+        "http://h.test/y\x1c",                    # (str.strip removes it)
         "http://[::1",                            # malformed → NULL
         "http://h.test:80x/",                     # bad port → NULL
     ]
@@ -129,6 +132,51 @@ def test_canonical_split_matches_udf_path(spark):
         assert got_curl == expect, (u, got_curl, expect)
         if expect is not None:
             assert got_host == host_of(expect), u
+
+
+def test_canon_host_fast_path_is_exact():
+    """canon_host returns an already-canonical URL and its host without
+    parsing it; that shortcut must give exactly the pair
+    canonicalize_url_safe + host_of give, for any URL it accepts and
+    any it rejects."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from pholcus_spark.keys import (
+        _CANONICAL_RE, canon_host, canonicalize_url_safe, host_of,
+    )
+
+    def parsed(u):
+        c = canonicalize_url_safe(u)
+        return c, (host_of(c) if c is not None else None)
+
+    cases = [
+        "http://h.test/p/0", "https://a-b.test/x/y.png", "http://h.test/",
+        "http://h.test//x", "http://h.test/a;b/../c%zz\\~", "http://h.test",
+        "HTTP://h.test/p", "http://H.test/p", "http://h.test:80/p",
+        "http://u@h.test/p", "http://h.test/p?q=1", "http://h.test/p#f",
+        "http://h.test/a b", "http://h.test/a\tb", "http://h.test/x\x1f",
+        "http://h.test/x\x7f", "http://h.test/\xe9", " http://h.test/p",
+        "http://[::1]/p", "http://[::1", None, "",
+    ]
+    for u in cases:
+        assert canon_host(u) == parsed(u), u
+    assert _CANONICAL_RE.fullmatch("http://h.test/p/0")
+
+    chars = st.sampled_from(
+        list("aZz09.-_/:@?#%[]\\~!$&'()*+,;= ") + ["\t", "\n", "\x1f", "\x7f", "\xe9"]
+    )
+
+    @settings(max_examples=2000, deadline=None)
+    @given(
+        st.sampled_from(["http://", "https://", "HTTP://", "ftp://", ""]),
+        st.text(chars, max_size=30),
+    )
+    def prop(scheme, rest):
+        u = scheme + rest
+        assert canon_host(u) == parsed(u), u
+
+    prop()
 
 
 def test_canonicalize_never_raises_fuzz():

@@ -56,9 +56,9 @@ def test_two_phase_rank_matches_global_window(spark):
     exact ranks of a global row_number WITHOUT funnelling the data
     through one task: one range-partitioned sort, materialized once, and
     no window or SinglePartition exchange over the data rows — at one
-    and at eight range partitions, for empty input, and with AQE
-    coalescing the range partitions (``partitions=None``, the engine's
-    choice)."""
+    and at eight range partitions (``spark.sql.shuffle.partitions``,
+    AQE coalescing off), for empty input, and with AQE coalescing the
+    range partitions (the engine's session)."""
     from pyspark.sql import functions as F
 
     from pholcus_spark.engine import release, two_phase_rank
@@ -80,13 +80,16 @@ def test_two_phase_rank_matches_global_window(spark):
             # SinglePartition exchange asked for)
             assert phys.count("Exchange") <= 1, phys
             if parts != 1 and n:
+                if parts == 8:
+                    assert re.search(r"rangepartitioning\(seq#\d+L ASC NULLS FIRST, 8\)", phys), phys
                 assert "rangepartitioning(seq" in phys, phys
                 assert "SinglePartition" not in phys, phys
             for banned in ("Window", "Join"):
                 assert banned not in phys, (banned, phys)
             return made[-1]
 
-        ranked, total = two_phase_rank(src, [F.asc("seq")], parts, "_rn", checkpoint)
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        ranked, total = two_phase_rank(src, [F.asc("seq")], "_rn", checkpoint)
         phys, _ = _plans(ranked)
         for banned in ("Window", "SinglePartition", "Exchange", "Join"):
             assert banned not in phys, (banned, phys)
@@ -96,23 +99,26 @@ def test_two_phase_rank_matches_global_window(spark):
             (i, i + 1) for i in range(n)
         ], (parts, n)
 
-    confs = {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.shuffle.partitions": "64",
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions", coalesce)
     }
-    saved = {k: spark.conf.get(k) for k in confs}
     try:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set(coalesce, "false")
         for parts in (1, 8):
+            before = len(made)
             check(df, parts, 5000)
+            assert made[before].rdd.getNumPartitions() == parts
             check(df.where("seq < 0"), parts, 0)
         # AQE merges small adjacent range partitions: 64 ranges of ~8
         # rows come out as fewer checkpoint partitions
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+        spark.conf.set(coalesce, "true")
         before = len(made)
-        check(df.where("seq < 500"), None, 500)
+        check(df.where("seq < 500"), 64, 500)
         assert made[before].rdd.getNumPartitions() < 64
-        check(df.where("seq < 0"), None, 0)
+        check(df.where("seq < 0"), 64, 0)
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
@@ -254,26 +260,32 @@ def test_push_dedups_cuts_and_numbers(spark, tmp_path):
     ).withColumn("tag", F.col("seq"))
     in_flight = local_frame(spark, [("q",)], "key string")
     survivors = [0, 1, 4, 6, 7]  # a first, r twice, b, c
-    base = spark.conf.get("spark.sql.shuffle.partitions")
-    for parts in (1, 8):
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        cat = SnapshotCatalog(str(tmp_path / f"push{parts}"), spark)
-        cat.commit(
-            {"url_seen": local_frame(spark, [("s", 0)], URL_SEEN_DDL)}, {}, {}
-        )
-        eng = CrawlEngine(
-            spark, cat, FixtureFetcher(pages), SpiderSpec("site"), None,
-            EngineConfig(),
-        )
-        for max_page, want in ((None, survivors), (-2, survivors[:2])):
-            state = {"next_seq": 10, "max_page": max_page}
-            pushed, n = eng._push(cands, [F.asc("seq")], in_flight, state)
-            got = sorted((r.seq, r.tag) for r in pushed.collect())
-            assert got == [(10 + i, t) for i, t in enumerate(want)], (parts, max_page)
-            assert n == len(want), (parts, max_page)
-        for df in eng._pending_release:
-            release(df)
-    spark.conf.set("spark.sql.shuffle.partitions", base)
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = {k: spark.conf.get(k) for k in ("spark.sql.shuffle.partitions", coalesce)}
+    try:
+        # coalescing off, so the eight ranges stay eight partitions
+        spark.conf.set(coalesce, "false")
+        for parts in (1, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            cat = SnapshotCatalog(str(tmp_path / f"push{parts}"), spark)
+            cat.commit(
+                {"url_seen": local_frame(spark, [("s", 0)], URL_SEEN_DDL)}, {}, {}
+            )
+            eng = CrawlEngine(
+                spark, cat, FixtureFetcher(pages), SpiderSpec("site"), None,
+                EngineConfig(),
+            )
+            for max_page, want in ((None, survivors), (-2, survivors[:2])):
+                state = {"next_seq": 10, "max_page": max_page}
+                pushed, n = eng._push(cands, [F.asc("seq")], in_flight, state)
+                got = sorted((r.seq, r.tag) for r in pushed.collect())
+                assert got == [(10 + i, t) for i, t in enumerate(want)], (parts, max_page)
+                assert n == len(want), (parts, max_page)
+            for df in eng._pending_release:
+                release(df)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_engine_commits_and_checkpoints_in_one_place():
