@@ -72,14 +72,19 @@ class SnapshotCatalog:
 
     def _write_manifest(self, manifest: dict) -> None:
         data = json.dumps(manifest, indent=1)
-        # keep the historical copy, then atomically swap the head pointer
-        hist = os.path.join(self.root, f"_manifest-{manifest['snapshot_id']:06d}.json")
-        with open(hist, "w") as f:
-            f.write(data)
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".json")
-        with os.fdopen(fd, "w") as f:
-            f.write(data)
-        os.replace(tmp, self._manifest_path())
+        # keep the historical copy, then swap the head pointer; each
+        # lands whole or not at all (a torn history copy would break
+        # snapshots() and expire_snapshots())
+        hist = f"_manifest-{manifest['snapshot_id']:06d}.json"
+        for path in (os.path.join(self.root, hist), self._manifest_path()):
+            fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".tmp")
+            try:
+                with os.fdopen(fd, "w") as f:
+                    f.write(data)
+                os.replace(tmp, path)
+            except BaseException:
+                os.unlink(tmp)
+                raise
 
     # -- tables ------------------------------------------------------------
 
@@ -148,8 +153,13 @@ class SnapshotCatalog:
             write_jobs.append((df, rel))
             tables[name] = {"dirs": [rel]}
 
+        # pool threads do not inherit the caller's job description
+        sc = self.spark.sparkContext
+        desc = sc.getLocalProperty("spark.job.description")
+
         def _write(job):
             df, rel = job
+            sc.setJobDescription(desc)
             df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
 
         if len(write_jobs) > 1:

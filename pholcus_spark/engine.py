@@ -18,7 +18,8 @@ Each superstep:
 3. **parse** — one decoded-body pass per page for links, figures and
    ExtractRule items (``fetcher.parse_pages``), checkpointed in its own
    ``ss{N}:parse`` job before any reader runs.
-4. **emit** — items, validated image rows and file rows appended.
+4. **emit** — items (checkpointed in their own ``ss{N}:emit`` job),
+   validated image rows and file rows appended.
 5. **push** — children (absolutized and canonicalized by the parse):
    route→robots-filter→SHA-1 key→failed-wave-position rule, then
    :meth:`CrawlEngine._push`, the one Push (`matrix.go:51-98`) that
@@ -31,6 +32,11 @@ Each superstep:
    (`matrix.go:160-168`); when the queue drains, failed_wait rows are
    re-pushed exactly once (`matrix.go:186-202`).
 7. **commit** — one catalog snapshot per superstep = the resume point.
+
+A superstep's numbers (wave, ok, images, files, items, permanent
+failures) are not a job of their own: each is a ``pyspark.sql.
+Observation`` on a plan that a checkpoint above already runs, read once
+the frontier checkpoint is done.
 
 Within-wave dedup subtlety (pinned by the oracle): the reference
 processes a wave sequentially, deleting each request's temp-history
@@ -51,7 +57,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -182,6 +188,19 @@ def _count_pushes(state: dict, n: int) -> None:
     state["next_seq"] += n
     if state["max_page"] is not None:
         state["max_page"] += n
+
+
+def _observed(
+    df: DataFrame, **aggs: Column
+) -> tuple[DataFrame, Observation]:
+    """``df`` with the named aggregates observed on it, and the
+    Observation whose ``get`` returns them after the first action that
+    runs ``df``. ``get`` blocks until such an action has run, so observe
+    only plans that run every superstep, and only in the result stage
+    of the action that runs them first (above every exchange: a re-run
+    shuffle-map stage may count twice)."""
+    obs = Observation()
+    return df.observe(obs, *[c.alias(k) for k, c in aggs.items()]), obs
 
 
 def _dlt():
@@ -588,7 +607,7 @@ class CrawlEngine:
     def _seed_prelude(self) -> dict:
         """The state a seed merges into: the current one, flushed first
         as the durable base for the merge, or a fresh catalog's initial
-        state."""
+        state. The seed's jobs that follow are labelled ``ss{N}:seed``."""
         if self.catalog.state() is None:
             limit = self.spec.limit
             self._state = {
@@ -601,10 +620,10 @@ class CrawlEngine:
                 "stopped": False,
                 "totals": {"fetched": 0, "failed": 0, "items": 0, "images": 0},
             }
-            return self._state
-        state = self._state_ref()
-        self._flush(state)
-        return state
+        else:
+            self._flush(self._state_ref())
+        self._describe(self._state["superstep"], "seed")
+        return self._state
 
     def _merge_new_frontier(self, new_df: DataFrame, state: dict) -> None:
         """Push seed rows in seq order (after the caller's robots filter:
@@ -727,8 +746,10 @@ class CrawlEngine:
 
     def _run_superstep(self, state: dict, frontier: DataFrame, t0: float) -> int:
         """The superstep as a sequence of named phases: wave → fetch →
-        parse → emit → children → frontier → counts → commit. Each phase
-        that runs Spark jobs labels them ``ss{N}:{phase}``."""
+        parse → emit → children → frontier → commit. Each phase that
+        runs Spark jobs labels them ``ss{N}:{phase}``. The counts come
+        from the observations of the fetch, emit and frontier
+        checkpoints; the push knows its own."""
         cfg = self.config
         superstep = state["superstep"] + 1
         # python body-stage width for this superstep: queue depth is a
@@ -742,20 +763,20 @@ class CrawlEngine:
         rest = tagged.where(~F.col("_wv")).drop("_wv")
         others = frontier.where(F.col("state") != "queued")
 
-        fetched = self._fetch(wave, superstep)
+        fetched, fetch_counts = self._fetch(wave, superstep)
         parsed = self._parse(fetched, superstep, py_tasks)
-        out = self._emit(parsed, fetched, superstep, py_tasks)
+        out, item_counts = self._emit(parsed, fetched, superstep, py_tasks)
         new_seen = fetched.where(F.col("ok")).where(~F.col("reloadable")).select(
             "key"
         )
-        failed_first, perm_failed, new_failed_wait = self._ack_failures(
-            fetched, others, superstep
+        failed_first, perm_failed, new_failed_wait, perm_counts = (
+            self._ack_failures(fetched, others, superstep)
         )
         kept, n_children = self._push_children(
             parsed, new_seen, rest, failed_first, state, superstep
         )
         self._next_frontier(rest, others, kept, new_failed_wait, superstep)
-        n = self._count_wave(fetched, out["items"], perm_failed, superstep)
+        n = {**fetch_counts.get, **item_counts.get, **perm_counts.get}
         n["children"] = self._last_children_count = n_children
 
         # -- commit: skip appends known to be empty (each is a Spark job)
@@ -906,14 +927,18 @@ class CrawlEngine:
             )
         return tagged
 
-    def _fetch(self, wave: DataFrame, superstep: int) -> DataFrame:
+    def _fetch(
+        self, wave: DataFrame, superstep: int
+    ) -> tuple[DataFrame, Observation]:
         """Fetch phase: ``fetcher.fetch_meta`` once per wave, with the
         request-side columns attached (author headers, session cookies,
         proxy, User-Agent) and dropped again after, checkpointed. Every
         bookkeeping branch reads this one materialization. A body-store
         or fixture fetcher returns metadata only (bodies attach per
         branch, for just that branch's rows); a live fetcher returns the
-        full fetch, so the checkpoint is also what makes it run once."""
+        full fetch, so the checkpoint is also what makes it run once.
+        Returns the checkpoint and the counts observed on it: ``wave``
+        (rows), ``ok``, and the ok ``images`` and ``files`` rows."""
         self._describe(superstep, "fetch")
         out = self._attach_cookies(self._attach_headers(wave))
         dim = self._proxy_dim_for(superstep)
@@ -927,10 +952,15 @@ class CrawlEngine:
             from .proxy import assign_user_agent
 
             out = assign_user_agent(out, self.config.ua_mode)
-        fetched = self._checkpoint(
-            self.fetcher.fetch_meta(out).drop("hdr", "cookie", "proxy", "ua")
+        ok_is = lambda cond: F.count_if(F.col("ok") & cond)  # noqa: E731
+        meta, counts = _observed(
+            self.fetcher.fetch_meta(out).drop("hdr", "cookie", "proxy", "ua"),
+            wave=F.count("*"),
+            ok=F.count_if("ok"),
+            images=ok_is(F.col("rule") == self.spec.image_rule),
+            files=ok_is(F.col("rule").isin(list(self._file_rules))),
         )
-        return self._harvest_cookies(fetched)
+        return self._harvest_cookies(self._checkpoint(meta)), counts
 
     def _attach_headers(self, wave: DataFrame) -> DataFrame:
         """Author-set request headers out (`request.Request{Header:}`,
@@ -1039,9 +1069,12 @@ class CrawlEngine:
 
     def _ack_failures(
         self, fetched: DataFrame, others: DataFrame, superstep: int
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    ) -> tuple[DataFrame, DataFrame, DataFrame, Observation]:
         """The failure state machine as lazy plans: (first failure per
-        key, permanent failures, new failed_wait frontier rows).
+        key, permanent failures, new failed_wait frontier rows), and
+        the ``perm`` count observed on the split of the two. The
+        frontier checkpoint is the first action that runs the split, so
+        its observation is in that checkpoint's result stage.
 
         Same-key repeat failures within one wave (only possible for
         reloadable rows — non-reloadable keys are unique in the queue):
@@ -1058,27 +1091,26 @@ class CrawlEngine:
             "_frank", F.row_number().over(by_key)
         )
         failed_first = failed.where(F.col("_frank") == 1).drop("_frank")
-        failed_repeat = failed.where(F.col("_frank") > 1).drop("_frank")
         store_keys = others.where(
             F.col("state").isin("failed_wait", "failed_nil")
         ).select(F.col("key").alias("_sk"))
-        failed2 = failed_first.join(
-            store_keys, failed_first["key"] == store_keys["_sk"], "left"
+        split, counts = _observed(
+            failed.join(
+                store_keys, failed["key"] == store_keys["_sk"], "left"
+            ).withColumn(
+                "_perm", (F.col("_frank") > 1) | F.col("_sk").isNotNull()
+            ),
+            perm=F.count_if("_perm"),
         )
-        perm_cols = [
+        perm_failed = split.where(F.col("_perm")).select(
             "key", "spider", "rule", "url", F.lit(superstep).alias("superstep")
-        ]
-        perm_failed = (
-            failed2.where(F.col("_sk").isNotNull())
-            .select(*perm_cols)
-            .unionByName(failed_repeat.select(*perm_cols))
         )
         new_failed_wait = frontier_rows(
-            failed2.where(F.col("_sk").isNull()),
+            split.where(~F.col("_perm")),
             tries=F.col("tries") + 1,
             state="failed_wait",
         )
-        return failed_first, perm_failed, new_failed_wait
+        return failed_first, perm_failed, new_failed_wait, counts
 
     def _parse(
         self, fetched: DataFrame, superstep: int, py_tasks: int
@@ -1108,14 +1140,16 @@ class CrawlEngine:
     def _emit(
         self, parsed: DataFrame, fetched: DataFrame, superstep: int,
         py_tasks: int,
-    ) -> dict:
-        """Emit phase, as lazy append plans: ``items`` (figure items
-        plus emitting ExtractRule items, cached), ``images`` (None when
+    ) -> tuple[dict, Observation]:
+        """Emit phase: ``items`` (figure items plus emitting ExtractRule
+        items), checkpointed in its own ``ss{N}:emit`` job with its row
+        count observed, and the lazy append plans ``images`` (None when
         the python image sink writes them; ``image_meta`` is then its
         metadata input) and ``files`` (None without FileOutput rules).
-        Images are NOT cached or counted on their own branch: their row
-        count is the ok image-rule metadata count, so the decode and the
-        body stream run exactly once — inside the flush write."""
+        Returns them and the ``items`` observation. Images are NOT
+        materialized or counted on their own branch: their row count is
+        the ok image-rule count observed at the fetch, so the decode and
+        the body stream run exactly once — inside the flush write."""
         from .extract import NOEMIT_KEY, OUTRULE_KEY
 
         stamp = {"superstep": F.lit(superstep), "download_time": _dlt()}
@@ -1176,10 +1210,9 @@ class CrawlEngine:
                 )
             )
             items = items.unionByName(dsl.withColumns(stamp))
-        items = items.persist()
-        self._pending_release.append(items)
-
-        out = {"items": items, "images": None, "files": None}
+        items, counts = _observed(items, items=F.count("*"))
+        self._describe(superstep, "emit")
+        out = {"items": self._checkpoint(items), "images": None, "files": None}
         image_meta = fetched.where(
             F.col("ok") & (F.col("rule") == self.spec.image_rule)
         )
@@ -1237,7 +1270,7 @@ class CrawlEngine:
                 )
                 .withColumns(stamp)
             )
-        return out
+        return out, counts
 
     def _push_children(
         self, parsed: DataFrame, new_seen: DataFrame, rest: DataFrame,
@@ -1380,50 +1413,6 @@ class CrawlEngine:
             )
             .unionByName(new_failed_wait)
         )
-
-    def _count_wave(
-        self, fetched: DataFrame, items: DataFrame, perm_failed: DataFrame,
-        superstep: int,
-    ) -> dict[str, int]:
-        """Counts phase: ONE job. wave/ok/images/files are conditional
-        counts over one scan of the checkpointed fetch metadata; items
-        and permanent failures read their caches. (The push already
-        knows its own count.)"""
-        self._describe(superstep, "counts")
-        ok_is = lambda cond: F.sum((F.col("ok") & cond).cast("long"))  # noqa: E731
-        aggs = {
-            "wave": F.count("*"),
-            "ok": F.sum(F.col("ok").cast("long")),
-            "images": ok_is(F.col("rule") == self.spec.image_rule),
-        }
-        if self._file_rules:
-            aggs["files"] = ok_is(F.col("rule").isin(list(self._file_rules)))
-        fetched_counts = fetched.agg(
-            *[c.alias(name) for name, c in aggs.items()]
-        ).select(
-            F.explode(
-                F.create_map(
-                    *[
-                        c
-                        for name in aggs
-                        for c in (F.lit(name), F.coalesce(F.col(name), F.lit(0)))
-                    ]
-                )
-            ).alias("t", "n")
-        )
-        tag = lambda df, t: df.select(F.lit(t).alias("t"))  # noqa: E731
-        counts_src = (
-            tag(items, "items")
-            .union(tag(perm_failed, "perm"))
-            .groupBy("t")
-            .agg(F.count("*").alias("n"))
-            .unionByName(fetched_counts)
-        )
-        counts = dict.fromkeys(
-            ("wave", "ok", "images", "files", "items", "perm"), 0
-        )
-        counts.update((r.t, r.n) for r in counts_src.collect())
-        return counts
 
     def _stage_image_sink(
         self, image_meta: DataFrame, superstep: int, py_tasks: int
@@ -1805,7 +1794,9 @@ class CrawlEngine:
         """failure-requeue-once at queue drain (`matrix.go:186-202`):
         every failed_wait row is re-pushed (:meth:`_push`, in seq order —
         a reloadable success followed by a same-key failure can make a
-        failed key seen) and stays in the failure store as failed_nil."""
+        failed key seen) and stays in the failure store as failed_nil.
+        Its jobs are labelled ``ss{N}:requeue``."""
+        self._describe(state["superstep"], "requeue")
         fw = frontier.where(F.col("state") == "failed_wait")
         pushed, n = self._push(fw, [F.asc("seq")], None, state)
         self._set_frontier(

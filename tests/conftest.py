@@ -25,7 +25,12 @@ def collect_outputs(run):
     }
     ff = run.df("failures_final")
     failed = sorted(r.key for r in ff.collect()) if ff is not None else []
-    return seen, order, items, images, failed
+    # every per-superstep count but the wall time, and the final
+    # state's counters and totals
+    metrics = sorted(
+        tuple(r) for r in run.df("metrics").drop("seconds").collect()
+    )
+    return seen, order, items, images, failed, metrics, run.state
 
 
 @pytest.fixture(scope="session")

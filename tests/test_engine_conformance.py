@@ -90,6 +90,11 @@ def check_conformance(run, res):
     # metrics account for every pulled request
     mdf = run.df("metrics")
     assert mdf.agg(F.sum("wave_size")).first()[0] == len(res.order)
+    # ... superstep by superstep
+    cols = ["superstep", "wave_size", "fetched", "failed", "items"]
+    assert sorted(tuple(r) for r in mdf.select(*cols).collect()) == sorted(
+        tuple(m[c] for c in cols) for m in res.metrics
+    )
 
 
 # ---------------------------------------------------------------------------

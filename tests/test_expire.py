@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from pholcus_spark import fixtures, testkit
 from pholcus_spark.engine import EngineConfig
 from pholcus_spark.spiderspec import SpiderSpec
@@ -133,3 +135,72 @@ def test_engine_auto_expiry(spark):
         assert run2.state["totals"] == run.state["totals"]
     finally:
         run.cleanup()
+
+
+def test_torn_history_manifest_write_keeps_previous_head(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that dies partway through writing its history manifest
+    leaves no torn ``_manifest-*.json`` behind: ``snapshots()`` and
+    ``expire_snapshots()`` still work, and a reopened catalog resumes
+    from the previous head."""
+    import builtins
+
+    from pholcus_spark import catalog as catalog_mod
+    from pholcus_spark.catalog import SnapshotCatalog
+
+    root = str(tmp_path / "cat")
+    cat = SnapshotCatalog(root, spark)
+    keys = lambda a, b: spark.range(a, b).selectExpr(  # noqa: E731
+        "cast(id as string) key"
+    )
+    cat.commit({"url_seen": keys(0, 3)}, {}, {"s": 0})
+
+    class Torn:
+        """A file whose first write lands half its data, then fails."""
+
+        def __init__(self, f):
+            self.f = f
+
+        def write(self, data):
+            self.f.write(data[: len(data) // 2])
+            self.f.flush()
+            raise OSError("no space left on device")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+    armed = [True]
+
+    def tearing(opener):
+        def open_(*args, **kwargs):
+            f = opener(*args, **kwargs)
+            mode = args[1] if len(args) > 1 else kwargs.get("mode", "r")
+            if armed[0] and "w" in mode:
+                armed[0] = False
+                return Torn(f)
+            return f
+
+        return open_
+
+    monkeypatch.setattr(
+        catalog_mod, "open", tearing(builtins.open), raising=False
+    )
+    monkeypatch.setattr(catalog_mod.os, "fdopen", tearing(os.fdopen))
+    with pytest.raises(OSError, match="no space left"):
+        cat.commit({"url_seen": keys(3, 5)}, {}, {"s": 1})
+    monkeypatch.undo()
+
+    assert [s["snapshot_id"] for s in cat.snapshots()] == [0]
+    assert cat.expire_snapshots(keep_last=1)["manifests_removed"] == 0
+    reopened = SnapshotCatalog(root, spark)
+    assert reopened.current()["snapshot_id"] == 0
+    assert reopened.state() == {"s": 0}
+    seen = reopened.read("url_seen").collect()
+    assert sorted(r.key for r in seen) == ["0", "1", "2"]
+    # and the next commit takes the torn one's place
+    reopened.commit({}, {}, {"s": 1})
+    assert [s["snapshot_id"] for s in reopened.snapshots()] == [0, 1]
