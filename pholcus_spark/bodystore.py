@@ -150,20 +150,14 @@ class ParquetBodyStore:
         output (one pdf per input group) must match ``out_schema`` —
         return metadata, not bodies, to keep the bridge body-free.
         """
-        store, n_buckets = self.path, self.n_buckets
-        bucketed = self._bucketed(meta, n_tasks)
+        store = self.path
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for bb, grp in pdf.groupby("_bb", sort=True):
-                    grp = grp.drop(columns=["_bb"]).reset_index(drop=True)
-                    bodies = _load_bodies(store, int(bb), grp["url"])
-                    grp["body"] = [bodies.get(u) for u in grp["url"]]
-                    out = kernel(grp)
-                    if out is not None and len(out):
-                        yield out
+            for _bb, out in _kernel_per_bucket(store, batches, kernel):
+                if out is not None and len(out):
+                    yield out
 
-        return bucketed.mapInPandas(run, out_schema)
+        return self._bucketed(meta, n_tasks).mapInPandas(run, out_schema)
 
     def sink_map_bodies(
         self,
@@ -182,8 +176,7 @@ class ParquetBodyStore:
         overwrite instead of duplicating (idempotent, like a commit
         -protocol file rename). Only the small manifest crosses back.
         """
-        store, n_buckets = self.path, self.n_buckets
-        bucketed = self._bucketed(meta, n_tasks)
+        store = self.path
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             import pyarrow as pa
@@ -205,27 +198,36 @@ class ParquetBodyStore:
             cur_bb: int | None = None
             parts: list = []
             # buckets arrive sorted within the task, so one bucket's sink
-            # rows are buffered at a time and flushed on bucket change —
-            # task memory stays O(one bucket), not O(task share of corpus)
-            for pdf in batches:
-                for bb, grp in pdf.groupby("_bb", sort=True):
-                    bb = int(bb)
-                    if cur_bb is not None and bb != cur_bb and parts:
-                        flush(cur_bb, parts)
-                        parts = []
-                    cur_bb = bb
-                    grp = grp.drop(columns=["_bb"]).reset_index(drop=True)
-                    bodies = _load_bodies(store, bb, grp["url"])
-                    grp["body"] = [bodies.get(u) for u in grp["url"]]
-                    manifest, sink = kernel(grp)
-                    if sink is not None and len(sink):
-                        parts.append(sink)
-                    if manifest is not None and len(manifest):
-                        yield manifest
+            # rows are buffered at a time and written once the next
+            # bucket's kernel has run — task memory stays O(bucket), not
+            # O(task share of corpus)
+            for bb, (manifest, sink) in _kernel_per_bucket(store, batches, kernel):
+                if cur_bb is not None and bb != cur_bb and parts:
+                    flush(cur_bb, parts)
+                    parts = []
+                cur_bb = bb
+                if sink is not None and len(sink):
+                    parts.append(sink)
+                if manifest is not None and len(manifest):
+                    yield manifest
             if cur_bb is not None and parts:
                 flush(cur_bb, parts)
 
-        return bucketed.mapInPandas(run, out_schema)
+        return self._bucketed(meta, n_tasks).mapInPandas(run, out_schema)
+
+
+def _kernel_per_bucket(store: str, batches: Iterator[pd.DataFrame], kernel):
+    """The per-bucket loop of :meth:`ParquetBodyStore.map_bodies` and
+    :meth:`~ParquetBodyStore.sink_map_bodies`: each batch grouped by
+    ``_bb`` in bucket order, the group's bodies loaded
+    (:func:`_load_bodies`) and attached as ``body``, and ``(bucket,
+    kernel(group))`` yielded."""
+    for pdf in batches:
+        for bb, grp in pdf.groupby("_bb", sort=True):
+            grp = grp.drop(columns=["_bb"]).reset_index(drop=True)
+            bodies = _load_bodies(store, int(bb), grp["url"])
+            grp["body"] = [bodies.get(u) for u in grp["url"]]
+            yield int(bb), kernel(grp)
 
 
 # below this fraction of the bucket's rows, push the url set into the

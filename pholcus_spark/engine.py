@@ -31,7 +31,9 @@ Each superstep:
    whose key already sits in the failure store is recorded permanently
    (`matrix.go:160-168`); when the queue drains, failed_wait rows are
    re-pushed exactly once (`matrix.go:186-202`).
-7. **commit** — one catalog snapshot per superstep = the resume point.
+7. **commit** — one catalog snapshot per flush, the resume point: every
+   ``commit_every`` supersteps, and at seed, requeue and stop. Every
+   snapshot holds a seed, buffered supersteps, a requeue or the stop.
 
 A superstep's numbers (wave, ok, images, files, items, permanent
 failures) are not a job of their own: each is a ``pyspark.sql.
@@ -84,13 +86,15 @@ URL_SEEN_DDL = "key string, bucket int"
 ORDER_DDL = "spider string, key string, url string, superstep int, wave_pos int, priority int, seq long"
 _FRONTIER_COLS = [c.split(" ", 1) for c in FRONTIER_DDL.split(", ")]
 
-# rows per task for a superstep's small-wave sizing: the shuffle width
-# (``_shrink_shuffles``) and the body-store python stage width (parse /
-# attach / image sink). An empty-ish python task still costs a ~140 ms
-# Arrow round trip, and a near-empty shuffle task a scheduling slot
-# (OPTIMIZATION_r06.md items 4-5); bulk waves saturate at the base
-# width, so only tail waves shrink.
+# rows per task for the body-store python stages of a small wave
+# (parse / attach / image sink): an empty-ish python task still costs a
+# ~140 ms Arrow round trip (OPTIMIZATION_r06.md items 4-5); bulk waves
+# saturate at the bucket width, so only tail waves shrink. Shuffle
+# widths are left to AQE coalescing.
 _ROWS_PER_TASK = 64
+# host crawl delay when the robots dim has none (or 0): 1.25 × the
+# reference's Pausetime of 300 ms
+_DEFAULT_CRAWL_DELAY_MS = 375
 
 
 def frontier_rows(df: DataFrame, **cols) -> DataFrame:
@@ -271,8 +275,6 @@ def two_phase_rank(
 @dataclasses.dataclass
 class EngineConfig:
     wave_window_ms: int = 1500
-    default_crawl_delay_ms: int = 375  # 1.25 × reference Pausetime 300 ms
-    requeue_failures: bool = True
     num_buckets: int = 64  # url_seen bucketing (10^10 scale → 1024+)
     # golden-order table: ranks wave_pos with an UNPARTITIONED window
     # over each wave where the table is appended — a single-partition
@@ -298,8 +300,8 @@ class EngineConfig:
     # deltas in executor caches and flushes them in one commit —
     # resume replays from the last flushed snapshot (deterministic →
     # identical results), trading resume granularity for a large cut in
-    # per-superstep Spark-job count. Flushes are forced at stop,
-    # failure-requeue, and run() exit.
+    # per-superstep Spark-job count. Flushes are forced at seed, stop,
+    # failure-requeue, and run() exit with supersteps buffered.
     commit_every: int = 1
     # fair-share quota: max wave rows per spider, applied to the
     # host-budgeted wave (reference scheduler.go:92-99 avgRes slot cap).
@@ -403,8 +405,6 @@ class CrawlEngine:
         # hosts) per wave). Session-scoped, like the reference: not
         # persisted to the catalog across engine restarts.
         self._cookie_store: dict[str, dict[str, str]] = {}
-        # fanout signal for the small-wave shuffle shrink
-        self._last_children_count = 0
         # lazily probed: does the robots dim carry any non-empty
         # disallow list? (guide §2.4: an all-empty dim makes the
         # per-superstep robots join an identity — skip it outright;
@@ -605,9 +605,10 @@ class CrawlEngine:
         self._merge_new_frontier(new_df, state)
 
     def _seed_prelude(self) -> dict:
-        """The state a seed merges into: the current one, flushed first
-        as the durable base for the merge, or a fresh catalog's initial
-        state. The seed's jobs that follow are labelled ``ss{N}:seed``."""
+        """The state a seed merges into: the current one (buffered
+        supersteps included: the seed's flush commits them with it), or
+        a fresh catalog's initial state. The seed's jobs that follow are
+        labelled ``ss{N}:seed``."""
         if self.catalog.state() is None:
             limit = self.spec.limit
             self._state = {
@@ -620,9 +621,7 @@ class CrawlEngine:
                 "stopped": False,
                 "totals": {"fetched": 0, "failed": 0, "items": 0, "images": 0},
             }
-        else:
-            self._flush(self._state_ref())
-        self._describe(self._state["superstep"], "seed")
+        self._describe(self._state_ref()["superstep"], "seed")
         return self._state
 
     def _merge_new_frontier(self, new_df: DataFrame, state: dict) -> None:
@@ -661,6 +660,11 @@ class CrawlEngine:
         return self._state
 
     def run(self, max_supersteps: int | None = None) -> dict[str, Any]:
+        """Run supersteps until the crawl stops or the state reaches
+        ``max_supersteps``, then flush the supersteps still buffered
+        (``commit_every`` > 1), the durable pause point. A run that
+        buffered nothing, such as one on a stopped engine, commits
+        nothing. Returns the committed state."""
         while True:
             state = self._state_ref()
             if state["stopped"]:
@@ -668,11 +672,19 @@ class CrawlEngine:
             if max_supersteps is not None and state["superstep"] >= max_supersteps:
                 break
             self.superstep()
-        self._flush(self._state_ref())  # durable pause/stop point
+        if self._steps_since_flush:
+            self._flush(self._state_ref())
         return self.catalog.state()
 
     def superstep(self) -> int:
-        """Run one wave. Returns the wave size (0 = terminated)."""
+        """Run one wave. Returns the wave size (0 = terminated).
+
+        On an empty queue it runs no wave: failed_wait rows are requeued
+        once (:meth:`_requeue_failures`, which commits) and the wave
+        after runs, or the crawl stops in one flush that also commits
+        the supersteps still buffered; a stopped engine commits nothing
+        more. Shuffle widths are the session's, coalesced by AQE: the
+        engine sets no session conf."""
         state = self._state_ref()
         frontier = (
             self._frontier_df
@@ -680,54 +692,20 @@ class CrawlEngine:
             else self.catalog.read("frontier")
         )
 
+        # <=: a drifted counter — e.g. a fetcher answering one request
+        # with several rows — must still terminate, never spin on an
+        # empty frontier
         if state["queued_count"] <= 0:
-            # requeue and termination decisions read the durable url_seen —
-            # flush pending deltas first (<=: a drifted counter — e.g. a
-            # fetcher answering one request with several rows — must
-            # still terminate, never spin on an empty frontier)
-            self._flush(state)
-            if state["failed_wait_count"] > 0 and self.config.requeue_failures:
+            if state["failed_wait_count"] > 0:
                 self._requeue_failures(state, frontier)
                 return self.superstep() if not state.get("stopped") else 0
-            state["stopped"] = True
-            self._flush(state)
+            if not state["stopped"]:
+                state["stopped"] = True
+                self._flush(state)
             return 0
-
-        t0 = time.time()
-        base_sp = self._shrink_shuffles(state)
-        try:
-            return self._run_superstep(state, frontier, t0)
-        finally:
-            self.spark.sparkContext.setJobDescription(None)
-            if base_sp is not None:
-                self.spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(base_sp)
-                )
-
-    def _shrink_shuffles(self, state: dict) -> int | None:
-        """Small-wave shuffle shrink: a tail wave of 1-100 rows pays
-        base-width near-empty shuffle tasks across ~10 stages; size this
-        superstep's shuffles at ``_ROWS_PER_TASK`` rows per partition
-        instead. Results are partition-count independent (the
-        conformance suite runs both shapes). The conf is session-wide
-        for the superstep: the engine owns its session during a crawl.
-        Returns the session default to restore afterwards, or None when
-        nothing changed."""
-        try:
-            base = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            base = 0
-        # size by the LARGER of queue depth and last superstep's
-        # children volume: the dominant shuffles (children dedup
-        # windows, push rank) scale with wave × out-link fanout, not
-        # queue depth — a 100-row wave of pages emitting hundreds of
-        # links each must not collapse those stages to 2 partitions
-        q_rows = max(1, state["queued_count"], self._last_children_count)
-        target = -(-q_rows // _ROWS_PER_TASK)  # ceil
-        if not base or target >= base:
-            return None
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        return base
+        n = self._run_superstep(state, frontier)
+        self.spark.sparkContext.setJobDescription(None)
+        return n
 
     def _describe(self, superstep: int, phase: str) -> None:
         """Label the Spark jobs that follow as ``ss{N}:{phase}``, so the
@@ -744,12 +722,13 @@ class CrawlEngine:
         self._pending_release.append(ck)
         return ck
 
-    def _run_superstep(self, state: dict, frontier: DataFrame, t0: float) -> int:
+    def _run_superstep(self, state: dict, frontier: DataFrame) -> int:
         """The superstep as a sequence of named phases: wave → fetch →
         parse → emit → children → frontier → commit. Each phase that
         runs Spark jobs labels them ``ss{N}:{phase}``. The counts come
         from the observations of the fetch, emit and frontier
         checkpoints; the push knows its own."""
+        t0 = time.time()
         cfg = self.config
         superstep = state["superstep"] + 1
         # python body-stage width for this superstep: queue depth is a
@@ -777,7 +756,7 @@ class CrawlEngine:
         )
         self._next_frontier(rest, others, kept, new_failed_wait, superstep)
         n = {**fetch_counts.get, **item_counts.get, **perm_counts.get}
-        n["children"] = self._last_children_count = n_children
+        n["children"] = n_children
 
         # -- commit: skip appends known to be empty (each is a Spark job)
         lineage = (
@@ -897,7 +876,7 @@ class CrawlEngine:
                 F.lit(cfg.wave_window_ms)
                 / F.coalesce(
                     F.nullif(F.col("crawl_delay_ms"), F.lit(0)),
-                    F.lit(cfg.default_crawl_delay_ms),
+                    F.lit(_DEFAULT_CRAWL_DELAY_MS),
                 )
             ),
         ).cast("int")
@@ -1791,10 +1770,13 @@ class CrawlEngine:
         return out
 
     def _requeue_failures(self, state: dict, frontier: DataFrame) -> None:
-        """failure-requeue-once at queue drain (`matrix.go:186-202`):
-        every failed_wait row is re-pushed (:meth:`_push`, in seq order —
-        a reloadable success followed by a same-key failure can make a
-        failed key seen) and stays in the failure store as failed_nil.
+        """failure-requeue-once at queue drain (`matrix.go:186-202`; the
+        reference always requeues): every failed_wait row is re-pushed
+        (:meth:`_push`, in seq order — a reloadable success followed by
+        a same-key failure can make a failed key seen; the push's seen
+        filter covers the buffered url_seen deltas, so nothing is
+        flushed first) and stays in the failure store as failed_nil.
+        One flush then commits the buffered supersteps and the requeue.
         Its jobs are labelled ``ss{N}:requeue``."""
         self._describe(state["superstep"], "requeue")
         fw = frontier.where(F.col("state") == "failed_wait")

@@ -18,7 +18,10 @@ import time
 
 def drive_forever(engine, seed_poll, interval_s: float = 5.0, max_cycles=None):
     """Run the engine to drain, then poll `seed_poll()` for new seed
-    dicts and continue; stop after max_cycles polls (None = forever)."""
+    dicts and continue; stop after max_cycles polls (None = forever).
+    An idle poll (no seeds, engine stopped) commits nothing: the
+    engine's ``run()`` flushes only buffered supersteps, and ``seed()``
+    commits only when called."""
     cycles = 0
     while True:
         engine.run()

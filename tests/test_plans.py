@@ -292,7 +292,10 @@ def test_engine_commits_and_checkpoints_in_one_place():
     """Static guard: engine.py commits the catalog only in ``_flush``,
     and checkpoints only in ``_checkpoint`` (superstep-owned) and
     ``_set_frontier`` (the frontier) — so every snapshot goes through
-    the one flush and every checkpoint has one release path."""
+    the one flush and every checkpoint has one release path. It sets
+    no session conf: the session may be shared by other engines
+    (``equiv_runs`` drives four from threads), and AQE sizes the
+    shuffles."""
     import ast
     import os
 
@@ -300,7 +303,9 @@ def test_engine_commits_and_checkpoints_in_one_place():
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "pholcus_spark", "engine.py",
     )
-    sites: dict[str, list[str]] = {"commit": [], "localCheckpoint": []}
+    sites: dict[str, list[str]] = {
+        "commit": [], "localCheckpoint": [], "conf.set": [],
+    }
 
     class Calls(ast.NodeVisitor):
         fn = "<module>"  # innermost enclosing function
@@ -321,11 +326,19 @@ def test_engine_commits_and_checkpoints_in_one_place():
                 )
             ):
                 sites[func.attr].append((self.fn, node.lineno))
+            if (
+                isinstance(func, ast.Attribute)
+                and func.attr == "set"
+                and isinstance(func.value, ast.Attribute)
+                and func.value.attr == "conf"
+            ):
+                sites["conf.set"].append((self.fn, node.lineno))
             self.generic_visit(node)
 
     with open(path, encoding="utf-8") as f:
         Calls().visit(ast.parse(f.read(), path))
     assert [fn for fn, _ in sites["commit"]] == ["_flush"], sites
+    assert sites["conf.set"] == [], sites
     assert sorted(fn for fn, _ in sites["localCheckpoint"]) == [
         "_checkpoint", "_set_frontier",
     ], sites

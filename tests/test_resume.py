@@ -14,6 +14,7 @@ import tempfile
 from pholcus_spark import fixtures, testkit
 from pholcus_spark.catalog import SnapshotCatalog
 from pholcus_spark.spiderspec import SpiderSpec
+from pholcus_spark.streaming import drive_forever
 
 
 def test_resume_midrun_equivalence(equiv_runs):
@@ -28,14 +29,23 @@ def test_resume_midrun_equivalence(equiv_runs):
 
 
 def test_snapshot_history_and_time_travel(spark):
+    """One snapshot per durable point: with commit_every=1 a crawl of N
+    supersteps commits the seed, each superstep and the stop (N + 2);
+    a second ``run()``, a ``superstep()`` and idle ``drive_forever``
+    polls on the stopped engine commit nothing."""
     corpus = fixtures.generate(
         fixtures.SiteSpec(n_hosts=1, list_pages=4, flaky_rate=0, fail_404_rate=0)
     )
-    run = testkit.run_engine(spark, corpus, SpiderSpec("site"))
+    engines = []
+    run = testkit.run_engine(
+        spark, corpus, SpiderSpec("site"), engine_out=engines
+    )
     try:
         cat = run.catalog
         snaps = cat.snapshots()
-        assert len(snaps) >= 2
+        n = run.state["superstep"]
+        assert n >= 2
+        assert len(snaps) == n + 2
         assert [s["snapshot_id"] for s in snaps] == sorted(
             s["snapshot_id"] for s in snaps
         )
@@ -46,7 +56,16 @@ def test_snapshot_history_and_time_travel(spark):
             sizes.append(df.count() if df is not None else 0)
         assert sizes == sorted(sizes)
         # the manifest state at each snapshot carries the superstep counter
+        assert [s["state"]["superstep"] for s in snaps] == [
+            0, *range(1, n + 1), n
+        ]
         assert snaps[-1]["state"]["stopped"]
+        assert not any(s["state"]["stopped"] for s in snaps[:-1])
+        (eng,) = engines
+        assert eng.run() == run.state
+        assert eng.superstep() == 0
+        drive_forever(eng, lambda: [], interval_s=0, max_cycles=3)
+        assert len(cat.snapshots()) == n + 2
     finally:
         run.cleanup()
 
