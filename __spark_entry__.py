@@ -540,8 +540,7 @@ def q_css_extract(spark, sf_dir):
 
     from pholcus_spark.extract import (
         apply_rule_spec,
-        compile_rule_specs,
-        rule_spec_tuples,
+        compile_rules,
     )
     from pholcus_spark.spiderspec import ExtractRule
 
@@ -574,15 +573,16 @@ def q_css_extract(spark, sf_dir):
             ("sj", "span@each(;) b@eq(1)@text"),
         ),
     )
-    specs = rule_spec_tuples([er])
+    (rule,) = compile_rules([er])
 
     @pandas_udf(
         "head string, tail string, nc string, w3 string, wlast string, "
         "w2c string, hhtml string, bjoin string, sj string"
     )
     def _css(htmls: pd.Series) -> pd.DataFrame:
-        _r, kind, key, fields, *_rest = compile_rule_specs(specs)[0]
-        rows = [apply_rule_spec(h, kind, key, fields)[0] for h in htmls]
+        rows = [
+            apply_rule_spec(h, er.kind, rule.key, er.fields)[0] for h in htmls
+        ]
         return pd.DataFrame(
             rows,
             columns=[

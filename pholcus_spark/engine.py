@@ -73,8 +73,9 @@ from .keys import (
     request_key,
     request_key_col,
 )
-from .session import local_frame
+from .session import local_frame, release
 from .spiderspec import SpiderSpec, apply_keyin, fanout_spider_name, parse_keyins
+from .validate import IMAGE_ID_RE
 
 FRONTIER_DDL = (
     "key string, spider string, rule string, url string, host string, "
@@ -137,7 +138,7 @@ def paginate_expand(src: DataFrame, pr) -> DataFrame:
     out = src.select("*", F.explode(pages).alias("_i"))
     # affine page numbering (page_expr, jdSpider.go:84-97 dual-URL
     # loops): '%d' receives mult*i + add; default (1,0) = i itself
-    mult, add = getattr(pr, "page_expr", (1, 0)) or (1, 0)
+    mult, add = pr.page_expr
     out = out.withColumn(
         "_page", (F.col("_i") * F.lit(mult) + F.lit(add)).cast("int")
     ).drop("_i")
@@ -213,22 +214,6 @@ def _dlt():
     string. Provenance only — never part of a conformance or oracle
     comparison (it is the one intentionally non-deterministic column)."""
     return F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss")
-
-
-def release(df: DataFrame) -> None:
-    """Free the executor storage behind ``df`` — the one release path
-    for every cache and checkpoint the engine owns.
-
-    ``DataFrame.unpersist`` only drops cache-manager entries, so on a
-    ``localCheckpoint`` frame it is a no-op and the checkpoint blocks
-    stay until JVM GC. A checkpoint's analyzed plan is a ``LogicalRDD``
-    over the checkpointed RDD; that RDD is unpersisted directly. Pass
-    the handle ``persist``/``localCheckpoint`` returned, not a
-    projection of it."""
-    df.unpersist()
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
 
 
 def two_phase_rank(
@@ -374,7 +359,7 @@ class CrawlEngine:
         # FileOutput rules (rule -> nameOrExt): raw-body outputs, never
         # parsed as pages
         self._file_rules = {
-            fr.rule: fr.name_or_ext for fr in getattr(spec, "file_rules", ()) or ()
+            fr.rule: fr.name_or_ext for fr in spec.file_rules
         }
         # url_seen membership: Bloom-probed covered dirs + exact tail
         self._seen = SeenSet(
@@ -957,7 +942,7 @@ class CrawlEngine:
         """Session cookies out: join the wave with the driver-held
         host→Cookie-header dim (broadcast — O(hosts) rows, the robots
         scale class). No-op unless the fetcher opted into cookies."""
-        if not getattr(self.fetcher, "enable_cookie", False):
+        if not self.fetcher.enable_cookie:
             return wave
         from .httpfetch import cookie_header
 
@@ -993,7 +978,7 @@ class CrawlEngine:
         envelope is the login-session use case the reference's cookie
         jar serves (surf's per-client jar), not a per-page cache.
         Returns ``fetched`` without the ``set_cookies`` column."""
-        if not getattr(self.fetcher, "enable_cookie", False):
+        if not self.fetcher.enable_cookie:
             return fetched
 
         rows = fetched.where(F.size("set_cookies") > 0).select(
@@ -1111,7 +1096,7 @@ class CrawlEngine:
         return self._checkpoint(
             self.fetcher.parse_pages(
                 fetched.where(html), self.spec.extract_rules,
-                getattr(self.spec, "carry_concat", ()) or (),
+                self.spec.carry_concat,
                 n_tasks=py_tasks,
             )
         )
@@ -1142,7 +1127,7 @@ class CrawlEngine:
                 "spider", "rule", "url", "parent_url",
                 F.create_map(
                     F.lit("image_id"),
-                    F.regexp_extract(F.col("fig.src"), r"/img/(.+)\.(png|jpe?g)$", 1),
+                    F.regexp_extract(F.col("fig.src"), IMAGE_ID_RE, 1),
                     F.lit("caption"),
                     F.col("fig.caption"),
                 ).alias("data"),
@@ -1158,11 +1143,7 @@ class CrawlEngine:
         # Rule names where nothing emits skip the union entirely.
         if self.spec.extract_rules:
             dsl_rules = sorted(
-                {
-                    er.rule
-                    for er in self.spec.extract_rules
-                    if getattr(er, "emit", True)
-                }
+                {er.rule for er in self.spec.extract_rules if er.emit}
             )
             dsl = (
                 parsed.where(F.col("rule").isin(dsl_rules))
@@ -1195,7 +1176,7 @@ class CrawlEngine:
         image_meta = fetched.where(
             F.col("ok") & (F.col("rule") == self.spec.image_rule)
         )
-        if self.config.python_image_sink and getattr(self.fetcher, "store", None):
+        if self.config.python_image_sink and self.fetcher.store:
             out["image_meta"] = image_meta
         else:
             from .validate import validate_image_udf
@@ -1204,9 +1185,14 @@ class CrawlEngine:
                 self.fetcher.attach_bodies(image_meta, n_tasks=py_tasks)
                 .withColumn("val", validate_image_udf("body", "content_type", "url"))
                 .select(
+                    # an empty carried id falls back to the URL's, as
+                    # in the python sink (validate.make_image_sink_kernel)
                     F.coalesce(
-                        F.try_element_at(F.col("temp"), F.lit("image_id")),
-                        F.regexp_extract("url", r"/img/(.+)\.(png|jpe?g)$", 1),
+                        F.nullif(
+                            F.try_element_at(F.col("temp"), F.lit("image_id")),
+                            F.lit(""),
+                        ),
+                        F.regexp_extract("url", IMAGE_ID_RE, 1),
                     ).alias("image_id"),
                     F.col("body").alias("bytes"),
                     F.col("val.w").alias("w"),
@@ -1501,11 +1487,8 @@ class CrawlEngine:
         # the SAME explode as the links, as struct entries: one
         # last-wins window over (parent_url, curl), instead of a
         # window and join per carry.
-        follow = getattr(spec, "follow_anchors", True)
-        has_carry = any(
-            getattr(er, "carry_fields", ()) or ()
-            for er in spec.extract_rules
-        )
+        follow = spec.follow_anchors
+        has_carry = any(er.carry_fields for er in spec.extract_rules)
         null_fig = F.lit(None).cast(
             "struct<caption:string,image_id:string>"
         )
@@ -1539,9 +1522,9 @@ class CrawlEngine:
                     f["host"],
                     fig=F.struct(
                         f["caption"].alias("caption"),
-                        F.regexp_extract(
-                            f["src"], r"/img/(.+)\.(png|jpe?g)$", 1
-                        ).alias("image_id"),
+                        F.regexp_extract(f["src"], IMAGE_ID_RE, 1).alias(
+                            "image_id"
+                        ),
                     ),
                     emit=follow,
                 ),
@@ -1622,7 +1605,7 @@ class CrawlEngine:
         # Aid-loop idiom): expanded JVM-side, pushed after the page's
         # other children via the ordinal block offset; joins the same
         # robots / temp-carry / key pipeline below
-        if getattr(spec, "paginate_rules", ()) or ():
+        if spec.paginate_rules:
             pag = self._paginate_children(parsed)
             if pag is not None:
                 # allowMissingColumns: pag rows add `pcarry` (the
@@ -1711,7 +1694,7 @@ class CrawlEngine:
         canonicalize + routing, pre robots), plus ``pcarry``."""
         spec = self.spec
         parts: list[DataFrame] = []
-        for pr in getattr(spec, "paginate_rules", ()) or ():
+        for pr in spec.paginate_rules:
             src = parsed.where(F.col("rule") == pr.rule).select(
                 "spider",
                 F.col("url").alias("parent_url"),
@@ -1725,10 +1708,9 @@ class CrawlEngine:
             # the reference's next-page AddQueue carries the grown Temp
             # (taobao.go:244-250): {dst: item[src]} from the emitting
             # item rides every generated page request
-            cfs = getattr(pr, "carry_fields", ()) or ()
-            if cfs:
+            if pr.carry_fields:
                 kv: list = []
-                for c in cfs:
+                for c in pr.carry_fields:
                     src_f, dst_f = (c, c) if isinstance(c, str) else c
                     kv += [
                         F.lit(dst_f),

@@ -21,10 +21,12 @@ from __future__ import annotations
 
 import html as html_mod
 import re
+from typing import Any, NamedTuple
 
 import pandas as pd
 
 from .keys import absolutize_safe, canon_host
+from .spiderspec import ExtractRule
 
 _CHARSET_RE = re.compile(r"charset=[\"']?([\w-]+)", re.I)
 _META_CHARSET_RE = re.compile(
@@ -145,39 +147,6 @@ NOEMIT_KEY = "\x00noemit"
 # SetRuleName, context.go:356-374): the engine's items union reads it
 # as the item's rule column and strips it from the data map
 OUTRULE_KEY = "\x00outrule"
-
-
-def rule_spec_tuples(extract_rules) -> list[tuple]:
-    """ExtractRules → plain picklable (rule, kind, pattern, fields,
-    field_css, link_fields, carry_fields, temp_fields,
-    field_transforms) tuples for UDF closures (compile
-    regexes/selectors task-side with :func:`compile_rule_specs`)."""
-    return [
-        (
-            er.rule,
-            getattr(er, "kind", "regex"),
-            er.item_pattern,
-            tuple(er.fields),
-            tuple(getattr(er, "field_css", ()) or ()),
-            tuple(getattr(er, "link_fields", ()) or ()),
-            tuple(getattr(er, "carry_fields", ()) or ()),
-            tuple(getattr(er, "temp_fields", ()) or ()),
-            tuple(getattr(er, "field_transforms", ()) or ()),
-            bool(getattr(er, "emit", True)),
-            tuple(getattr(er, "require_fields", ()) or ()),
-            tuple(getattr(er, "field_json", ()) or ()),
-            tuple(getattr(er, "cursor", ()) or ()),
-            tuple(getattr(er, "cursor_require", ()) or ()),
-            getattr(er, "out_rule", None) or "",
-            tuple(getattr(er, "require_equals", ()) or ()),
-            tuple(getattr(er, "forbid_fields", ()) or ()),
-            tuple(getattr(er, "item_slice", ()) or ()),
-            tuple(getattr(er, "const_fields", ()) or ()),
-            tuple(getattr(er, "dynamic_kv", ()) or ()),
-            tuple(getattr(er, "carve", ()) or ()),
-        )
-        for er in extract_rules
-    ]
 
 
 def _pick_part(parts: list[str], i: int, expect, on_mismatch: str, v: str) -> str:
@@ -490,39 +459,36 @@ def _compile_css_spec(pat: str, fields: tuple, field_css: tuple):
     return container, projections
 
 
-def compile_rule_specs(specs: list[tuple]) -> list[tuple]:
-    """Task-side: compile the regex/css kinds once per task. Output
-    tuples: (rule, kind, compiled-key, fields, link_fields,
-    carry_fields, temp_fields, compiled-transforms, emit,
-    require_fields)."""
+class CompiledRule(NamedTuple):
+    """One ExtractRule and the parts of it compiled once per kernel:
+    the matcher ``key`` (the regex pattern, the css (container,
+    projections) pair, or the json/xml dot-path as written), the
+    ``field_transforms`` callables and the ``carve`` (pattern, group),
+    ``()`` when the rule carves nothing. Every other field is read off
+    ``er`` by name."""
+
+    er: ExtractRule
+    key: Any
+    transforms: dict
+    carve: tuple
+
+
+def compile_rules(extract_rules) -> list[CompiledRule]:
+    """The ExtractRules as :class:`CompiledRule` s, in spec order."""
     out = []
-    for rule, kind, pat, fields, field_css, link_fields, carry, tf, *rest in specs:
-        if kind == "regex":
-            key = re.compile(pat, re.S)
-        elif kind == "css":
-            key = _compile_css_spec(pat, fields, field_css)
+    for er in extract_rules:
+        if er.kind == "regex":
+            key = re.compile(er.item_pattern, re.S)
+        elif er.kind == "css":
+            key = _compile_css_spec(er.item_pattern, er.fields, er.field_css)
         else:
-            key = pat
-        tfx = compile_transforms(rest[0]) if rest and rest[0] else {}
-        emit = rest[1] if len(rest) > 1 else True
-        req = tuple(rest[2]) if len(rest) > 2 else ()
-        fjson = dict(rest[3]) if len(rest) > 3 and rest[3] else {}
-        cursor = tuple(rest[4]) if len(rest) > 4 else ()
-        curreq = tuple(rest[5]) if len(rest) > 5 else ()
-        outrule = rest[6] if len(rest) > 6 else ""
-        reqeq = tuple(rest[7]) if len(rest) > 7 else ()
-        forbid = tuple(rest[8]) if len(rest) > 8 else ()
-        islice = tuple(rest[9]) if len(rest) > 9 else ()
-        consts = tuple(rest[10]) if len(rest) > 10 else ()
-        dynkv = tuple(rest[11]) if len(rest) > 11 else ()
-        carve = tuple(rest[12]) if len(rest) > 12 else ()
-        if carve:
-            carve = (re.compile(carve[0], re.S),
-                     carve[1] if len(carve) > 1 else 1)
+            key = er.item_pattern
+        carve = er.carve and (
+            re.compile(er.carve[0], re.S),
+            er.carve[1] if len(er.carve) > 1 else 1,
+        )
         out.append(
-            (rule, kind, key, fields, link_fields, carry, tf, tfx, emit,
-             req, fjson, cursor, curreq, outrule, reqeq, forbid, islice,
-             consts, dynkv, carve)
+            CompiledRule(er, key, compile_transforms(er.field_transforms), carve)
         )
     return out
 
@@ -625,7 +591,7 @@ def _project_css(css_mod, target, segments, proj) -> str:
 
 
 def apply_rule_spec(
-    text: str, kind: str, key, fields: tuple, fjson: dict | None = None
+    text: str, kind: str, key, fields: tuple, field_json: tuple = ()
 ) -> list[dict]:
     """One compiled rule over one decoded page → item dicts.
 
@@ -714,6 +680,7 @@ def apply_rule_spec(
                 return []
         if not isinstance(node, list):
             return []
+        fjson = dict(field_json)
         items = []
         for el in node:
             if not isinstance(el, dict):
@@ -735,7 +702,7 @@ def apply_rule_spec(
             for f in fields:
                 # field_json nested dot-path (gjson.Get,
                 # wukongwenda.go:113-119); plain top-level key otherwise
-                path = (fjson or {}).get(f)
+                path = fjson.get(f)
                 v = json_path_str(el, path) if path else None
                 if v is not None:
                     row[f] = v
@@ -763,15 +730,15 @@ def apply_rule_spec(
 # fused parse runs (field_transforms, require/forbid guards, item_slice,
 # const_fields, carve, dynamic_kv), so it silently produced different
 # items than the engine for the same ExtractRules. The engine path
-# (`udf_for` / `parse_pages_kernel`) is the one extraction surface.
+# (`parse_pages_kernel`) is the one extraction surface.
 
 
 def _apply_rules_for(
     compiled, text: str, rule: str, base_url: str, temp: dict | None = None,
     carry_concat: tuple = (),
 ):
-    """All compiled ExtractRules matching `rule` over one decoded page:
-    (items, link_fields-emitted links in item order, per-link carry
+    """All compiled ExtractRules (:func:`compile_rules`) matching
+    `rule` over one decoded page: (items, link_fields-emitted links in item order, per-link carry
     temps — ``carry_fields`` values of the emitting item, None when the
     rule carries nothing: the reference's AddQueue ``Temp:`` map,
     shunfenghaitao.go:60).
@@ -790,12 +757,8 @@ def _apply_rules_for(
     row_items: list[dict] = []
     row_links: list[str] = []
     row_carries: list[dict | None] = []
-    for (
-        r, kind, key, fields, link_fields, carry_fields, tfs, tfx, _emit,
-        req, fjson, cursor, curreq, outrule, reqeq, forbid, islice,
-        consts, dynkv, carve,
-    ) in compiled:
-        if r != rule:
+    for er, key, tfx, carve in compiled:
+        if er.rule != rule:
             continue
         # carve: the embedded-JSON pre-step (taobaosearch.go:146-160) —
         # the kind parses the regex-extracted span; no match → nothing
@@ -805,12 +768,13 @@ def _apply_rules_for(
             if m is None:
                 continue
             page_text = m.group(carve[1]) or ""
-        items = apply_rule_spec(page_text, kind, key, fields, fjson)
+        items = apply_rule_spec(page_text, er.kind, key, er.fields, er.field_json)
         # item_slice: Each-loop ordinal gates over the RAW matches in
         # document order (kaola.go:49-50 `if i == 0 { return }`,
         # IJGUC.go:75 `if k%2 == 0`) — before transforms/guards.
         # (start[, stop[, step]]) — NOT bare slice(*t), whose 1-arg
         # form means stop
+        islice = er.item_slice
         if islice:
             items = items[
                 slice(
@@ -821,9 +785,9 @@ def _apply_rules_for(
             ]
         # const_fields: literal output columns (area_codes.go:91-96
         # level/parent constants) — set before transforms
-        if consts:
+        if er.const_fields:
             for it in items:
-                for f, v in consts:
+                for f, v in er.const_fields:
                     it[f] = v
         # field_transforms run FIRST (the reference munges the local
         # variable before Output/AddQueue, fang_resell_list.go:74-135),
@@ -841,56 +805,59 @@ def _apply_rules_for(
         # PaginateRule count. Evaluated on the EXTRACTED+TRANSFORMED
         # values, before the temp merge (the guard reads ParseFunc
         # locals, not GetTemp).
-        if req:
-            items = [it for it in items if all(it.get(f) for f in req)]
+        if er.require_fields:
+            items = [
+                it for it in items if all(it.get(f) for f in er.require_fields)
+            ]
         # forbid_fields: the inverse guard — a NON-empty listed field
         # drops the item (wangyi.go:119-128's full-text redirect branch,
         # alibaba.go:63-75's no-pagination fallback)
-        if forbid:
+        if er.forbid_fields:
             items = [
-                it for it in items if not any(it.get(f) for f in forbid)
+                it for it in items
+                if not any(it.get(f) for f in er.forbid_fields)
             ]
         # require_equals: extracted value must equal the request temp's
         # value (the car_home.go:55-57 / ganji_gongsi.go:54-56
         # current-page probe `Find(".pages .cur").Text() !=
         # strconv.Itoa(GetTemp("p"))`)
-        if reqeq:
+        if er.require_equals:
             items = [
                 it
                 for it in items
                 if all(
                     it.get(f, "") == str((temp or {}).get(k) or "")
-                    for f, k in reqeq
+                    for f, k in er.require_equals
                 )
             ]
         # dynamic_kv: zip the joined key/value lists into runtime item
         # columns (UpsertItemField, context.go:246-253 /
         # taobaosearch.go:158-198); empty keys skipped, shortest list
         # bounds (the Go loop), source fields dropped
-        if dynkv:
-            kf, vf, dsep = dynkv
+        if er.dynamic_kv:
+            kf, vf, dsep = er.dynamic_kv
             for it in items:
                 ks = (it.pop(kf, "") or "").split(dsep)
                 vs = (it.pop(vf, "") or "").split(dsep)
                 for k2, v2 in zip(ks, vs):
                     if k2:
                         it[k2] = v2
-        if not _emit:
+        if not er.emit:
             # per-ITEM emit marker (see NOEMIT_KEY): this ExtractRule's
             # items drive links/carries/pagination but produce no
             # output rows, even when another ExtractRule sharing the
             # rule name does emit
             for it in items:
                 it[NOEMIT_KEY] = "1"
-        if outrule:
+        if er.out_rule:
             # ctx.Parse relabel (context.go:363 SetRuleName): the
-            # engine's items union emits these under `outrule`
+            # engine's items union emits these under `out_rule`
             for it in items:
-                it[OUTRULE_KEY] = outrule
+                it[OUTRULE_KEY] = er.out_rule
         # temp_fields consumer merge: request temp overrides any
         # same-named extracted field (the reference authors the Output
         # map explicitly, so the collision cannot arise there)
-        for f in tfs:
+        for f in er.temp_fields:
             v = str((temp or {}).get(f) or "")
             for it in items:
                 it[f] = v
@@ -912,12 +879,12 @@ def _apply_rules_for(
                     (c if isinstance(c, str) else c[1]): it.get(
                         c if isinstance(c, str) else c[0], ""
                     )
-                    for c in carry_fields
+                    for c in er.carry_fields
                 }
-                if carry_fields
+                if er.carry_fields
                 else None
             )
-            for lf in link_fields:
+            for lf in er.link_fields:
                 v = it.get(lf)
                 link = absolutize_safe(base_url, v) if v else None
                 if link:
@@ -929,9 +896,9 @@ def _apply_rules_for(
         # children, gated on the page-level root value when declared
         # (`if more == "true"`). No items → no child (empty
         # questionlist ends the walk).
-        if kind == "json" and cursor and items:
+        if er.kind == "json" and er.cursor and items:
             ok = True
-            if curreq:
+            if er.cursor_require:
                 import json as json_mod
 
                 try:
@@ -940,11 +907,13 @@ def _apply_rules_for(
                     root = None
                     ok = False
                 if ok:
-                    ok = json_path_str(root, curreq[0]) == curreq[1]
+                    path, want = er.cursor_require
+                    ok = json_path_str(root, path) == want
             if ok:
-                val = items[-1].get(cursor[0], "")
+                field, param = er.cursor
+                val = items[-1].get(field, "")
                 if val:
-                    row_links.append(cursor_url(base_url, cursor[1], val))
+                    row_links.append(cursor_url(base_url, param, val))
                     row_carries.append(None)
     if carry_concat and row_links:
         # within-page carry merge (wangyi.go:74-90 urls_top[url] +=
@@ -991,10 +960,9 @@ def parse_pages_kernel(extract_rules=(), carry_concat=()):
     link arrays keep their length and ``dsl_carry`` stays aligned with
     ``dsl_links``. The ``carry_concat`` merge runs first, on the
     absolutized strings; its survivors are canonicalized after it."""
-    specs = rule_spec_tuples(extract_rules)
+    compiled = compile_rules(extract_rules)
 
     def kernel(grp: pd.DataFrame) -> pd.DataFrame:
-        compiled = compile_rule_specs(specs)
         cols = {
             c: []
             for c in (

@@ -84,7 +84,15 @@ class Fetcher:
     ``n_tasks`` caps the width of a python body stage; fetchers without
     one ignore it. ``fetch(wave)`` stays the one-call form for callers
     outside the engine (sitemap and robots ingestion).
+
+    Capabilities the engine reads by name: ``store``, the
+    :class:`~pholcus_spark.bodystore.ParquetBodyStore` the bodies live
+    in (the python image sink writes from it), and ``enable_cookie``,
+    the reference's EnableCookie session jar.
     """
+
+    store = None
+    enable_cookie = False
 
     def fetch(self, wave: DataFrame) -> DataFrame:
         raise NotImplementedError
@@ -269,8 +277,6 @@ class StoreFetcher(FixtureFetcher):
     """
 
     def __init__(self, spark, store, try_times: int = 1):
-        from pyspark.sql import functions as F  # noqa: F811
-
         self.store = store
         meta = spark.read.parquet(store.path).drop("body", "body_bucket")
         super().__init__(meta, try_times=try_times)

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import release
 from .text import norm_text, portable_hash64
 
 
@@ -507,12 +508,13 @@ def connected_components(
         .distinct()
         .persist()
     )
-    labels = (
+    held = (
         edges.select(F.col("a").alias("v"))
         .distinct()
         .withColumn("label", F.col("v"))
         .localCheckpoint(eager=True)
     )
+    labels = held
     for _ in range(max_iter):
         nbr = (
             edges.join(labels, edges["b"] == labels["v"])
@@ -523,7 +525,9 @@ def connected_components(
         # neighbor offered a strictly smaller label — no extra
         # old-vs-new join. The checkpoint is LAZY so the count action
         # both materializes it and reads the change flag in ONE Spark
-        # job per iteration (eager ckpt + count was two).
+        # job per iteration (eager ckpt + count was two). Once it has,
+        # the labels it supersedes are released: only the returned
+        # labels stay held.
         new_labels = (
             labels.join(nbr, labels["v"] == nbr["a"], "left")
             .select(
@@ -536,10 +540,11 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         changed = new_labels.where(F.col("_chg")).count()
-        labels = new_labels.drop("_chg")
+        release(held)
+        held, labels = new_labels, new_labels.drop("_chg")
         if changed == 0:
             break
-    edges.unpersist()
+    release(edges)
     return labels.select(
         F.col("v").alias("doc_id"), F.col("label").alias("canonical_doc_id")
     )

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def spread_scan(df, target: int | None = None):
@@ -33,6 +33,22 @@ def spread_scan(df, target: int | None = None):
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def release(df: DataFrame) -> None:
+    """Free the executor storage behind ``df`` — the one release path
+    for every cache and checkpoint the package owns.
+
+    ``DataFrame.unpersist`` only drops cache-manager entries, so on a
+    ``localCheckpoint`` frame it is a no-op and the checkpoint blocks
+    stay until JVM GC. A checkpoint's analyzed plan is a ``LogicalRDD``
+    over the checkpointed RDD; that RDD is unpersisted directly. Pass
+    the handle ``persist``/``localCheckpoint`` returned, not a
+    projection of it."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def local_frame(spark: SparkSession, rows, ddl: str):

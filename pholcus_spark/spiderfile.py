@@ -33,7 +33,8 @@ log-and-skip on malformed files), while the ``<Script>`` slots hold
   object (or a list of them); ``rule`` is filled from the ``name``
   attribute. Every declarative field of
   :class:`pholcus_spark.spiderspec.ExtractRule` is accepted — JSON
-  arrays become the dataclass's tuples.
+  arrays become the dataclass's tuples, and a null takes the field's
+  default (in every rule object of the file).
 * ``Rule name="X"`` / ``AidFunc>Script`` — PaginateRule kwargs (or a
   list); ``rule`` filled from the attribute (the reference AidFunc is
   the Aid-loop page generator, which PaginateRule already models).
@@ -149,9 +150,11 @@ def _deep_tuple(v):
 
 
 def _kwargs(obj: dict, what: str) -> dict:
+    """A JSON object → dataclass keyword arguments. A null value means
+    the field's default, so its key is dropped."""
     if not isinstance(obj, dict):
         raise SpiderFileError(f"{what}: expected a JSON object, got {type(obj).__name__}")
-    return {k: _deep_tuple(v) for k, v in obj.items()}
+    return {k: _deep_tuple(v) for k, v in obj.items() if v is not None}
 
 
 def _script_text(parent: ET.Element | None) -> str:
@@ -245,7 +248,7 @@ def parse_spider_xml(text: str, path: str = "") -> SpiderFile:
                 parse_script, f"{path}: Rule {rule_name!r} ParseFunc"
             )):
                 kw = _kwargs(obj, f"{path}: Rule {rule_name!r} ParseFunc")
-                if "file_output" in kw:
+                if "file_output" in obj:
                     # the ctx.FileOutput(nameOrExt) ParseFunc body
                     # (filetest.go:56-64): the rule collects the raw
                     # body as a FileCell, nothing else may be declared
@@ -257,7 +260,7 @@ def parse_spider_xml(text: str, path: str = "") -> SpiderFile:
                             f"{sorted(extra)}"
                         )
                     file_rules.append(
-                        FileRule(rule_name, kw["file_output"] or "")
+                        FileRule(rule_name, kw.get("file_output", ""))
                     )
                     continue
                 kw.setdefault("rule", rule_name)

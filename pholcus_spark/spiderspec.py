@@ -97,6 +97,11 @@ class ExtractRule:
     (``spider.go:53-58``) — sinks emit columns in exactly this order
     (``output_csv.go:46-50``), followed by the default provenance
     columns (``context.go:236-240``).
+
+    The parse kernel keeps each rule as it is (``extract.compile_rules``
+    adds only the compiled matcher, transforms and carve), so a new
+    field is read by name in ``extract._apply_rules_for`` and in the
+    oracle twin (``oracle._extract_items``), and nowhere else.
     """
 
     rule: str  # parse-rule name this extraction applies to
@@ -422,13 +427,10 @@ class SpiderSpec:
         out = {r: ("image_id", "caption") for r in self.item_rules}
         for er in self.extract_rules:
             fields = er.fields
-            dynkv = tuple(getattr(er, "dynamic_kv", ()) or ())
-            if dynkv:
+            if er.dynamic_kv:
                 # the joined key/value source fields never reach the
                 # item (dynamic_kv pops them after zipping)
-                fields = tuple(
-                    f for f in fields if f not in (dynkv[0], dynkv[1])
-                )
+                fields = tuple(f for f in fields if f not in er.dynamic_kv[:2])
             # out_rule items land under the delegated rule name, so
             # sink column order keys there (ctx.Parse → SetRuleName)
             out[er.out_rule or er.rule] = fields

@@ -33,6 +33,12 @@ from pyspark.sql.types import (
 
 from .imaging import decode_image, phash64, psnr
 
+# an image URL's id: the file stem under /img/ (``{host}/img/{id}.png``,
+# the fixture web's shape). Every image_id read — the figure src a
+# page's image child carries, and the image row's own URL when that
+# carry is missing or empty — uses this one pattern.
+IMAGE_ID_RE = r"/img/(.+)\.(png|jpe?g)$"
+
 VALIDATION_TYPE = StructType(
     [
         StructField("w", IntegerType()),
@@ -121,7 +127,7 @@ def make_image_sink_kernel(superstep: int, session_tz: str = "UTC"):
     engine's images projection (engine.py images branch)."""
     import re
 
-    id_re = re.compile(r"/img/(.+)\.(png|jpe?g)$")
+    id_re = re.compile(IMAGE_ID_RE)
 
     def kernel(grp: pd.DataFrame):
         # DownloadTime provenance (data.go:9-13) — same format AND same

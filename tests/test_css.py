@@ -22,8 +22,7 @@ from pholcus_spark.css import (
 )
 from pholcus_spark.extract import (
     apply_rule_spec,
-    compile_rule_specs,
-    rule_spec_tuples,
+    compile_rules,
 )
 from pholcus_spark.oracle import _css_items, _oracle_parse_field_spec
 from pholcus_spark.spiderspec import ExtractRule
@@ -364,10 +363,8 @@ def test_children_eq_idiom_engine_equals_oracle():
 
 
 def _apply_engine(html: str, er: ExtractRule) -> list[dict]:
-    rule, kind, key, fields, *_rest = compile_rule_specs(
-        rule_spec_tuples([er])
-    )[0]
-    return apply_rule_spec(html, kind, key, fields)
+    (rule,) = compile_rules([er])
+    return apply_rule_spec(html, er.kind, rule.key, er.fields)
 
 
 def test_engine_equals_oracle_on_fixture_shapes():

@@ -130,8 +130,7 @@ def test_require_fields_guard_engine_and_oracle():
     empties a field kills the item)."""
     from pholcus_spark.extract import (
         _apply_rules_for,
-        compile_rule_specs,
-        rule_spec_tuples,
+        compile_rules,
     )
     from pholcus_spark.oracle import _extract_items
     from pholcus_spark.spiderspec import ExtractRule
@@ -153,7 +152,7 @@ def test_require_fields_guard_engine_and_oracle():
         link_fields=("u",),
         require_fields=("t", "u"),
     )
-    compiled = compile_rule_specs(rule_spec_tuples([er]))
+    compiled = compile_rules([er])
     items, links, _c = _apply_rules_for(compiled, html, "r", "http://b.test/")
     assert items == [{"t": "ok", "u": "http://x.test/1"}]
     assert links == ["http://x.test/1"]
@@ -168,8 +167,7 @@ def test_per_extract_rule_emit_marker():
     from pholcus_spark.extract import (
         NOEMIT_KEY,
         _apply_rules_for,
-        compile_rule_specs,
-        rule_spec_tuples,
+        compile_rules,
     )
     from pholcus_spark.spiderspec import ExtractRule
 
@@ -179,7 +177,7 @@ def test_per_extract_rule_emit_marker():
         field_css=(("next", "a.n@last@href"),), link_fields=("next",),
         require_fields=("next",), emit=False,
     )
-    compiled = compile_rule_specs(rule_spec_tuples([probe]))
+    compiled = compile_rules([probe])
     items, links, carries = _apply_rules_for(
         compiled, html, "r", "http://h.test/p1"
     )
@@ -195,7 +193,7 @@ def test_per_extract_rule_emit_marker():
 def test_json_field_json_nested_paths():
     """field_json nested dot-paths (gjson.Get, wukongwenda.go:113-119):
     missing path → '', non-string leaves stringified like gjson."""
-    from pholcus_spark.extract import compile_rule_specs, rule_spec_tuples
+    from pholcus_spark.extract import compile_rules
     from pholcus_spark.extract import apply_rule_spec
     from pholcus_spark.spiderspec import ExtractRule
 
@@ -205,13 +203,12 @@ def test_json_field_json_nested_paths():
         field_json=(("t", "q.title"), ("n", "q.num"),
                     ("deep", "a.b.c"), ("missing", "q.nope.x")),
     )
-    (spec,) = compile_rule_specs(rule_spec_tuples([er]))
-    _, kind, key, fields, *rest = spec
+    (rule,) = compile_rules([er])
     text = (
         '{"data": [{"q": {"title": "T1", "num": 7},'
         ' "a": {"b": {"c": true}}}]}'
     )
-    (item,) = apply_rule_spec(text, kind, key, fields, rest[6])
+    (item,) = apply_rule_spec(text, er.kind, rule.key, er.fields, er.field_json)
     assert item == {"t": "T1", "n": "7", "deep": "true", "missing": ""}
 
 
@@ -266,8 +263,7 @@ def test_cursor_emits_follow_up_with_gate():
     while the root gate holds, keyed by the LAST item's field."""
     from pholcus_spark.extract import (
         _apply_rules_for,
-        compile_rule_specs,
-        rule_spec_tuples,
+        compile_rules,
     )
     from pholcus_spark.spiderspec import ExtractRule
 
@@ -277,7 +273,7 @@ def test_cursor_emits_follow_up_with_gate():
         cursor=("off", "cur"), cursor_require=("more", "true"),
         emit=False,
     )
-    compiled = compile_rule_specs(rule_spec_tuples([er]))
+    compiled = compile_rules([er])
     more = '{"more": true, "data": [{"bt": 3}, {"bt": 8}]}'
     items, links, carries = _apply_rules_for(
         compiled, more, "r", "http://h/api?x=1"
@@ -299,8 +295,7 @@ def test_forbid_fields_guard_engine_and_oracle():
     on one rule name express the whole if/else branch."""
     from pholcus_spark.extract import (
         _apply_rules_for,
-        compile_rule_specs,
-        rule_spec_tuples,
+        compile_rules,
     )
     from pholcus_spark.oracle import _extract_items
     from pholcus_spark.spiderspec import ExtractRule
@@ -321,7 +316,7 @@ def test_forbid_fields_guard_engine_and_oracle():
         fields=("pageall",), field_css=(("pageall", "a.all@href"),),
         require_fields=("pageall",), emit=False, link_fields=("pageall",),
     )
-    compiled = compile_rule_specs(rule_spec_tuples([er_out, er_probe]))
+    compiled = compile_rules([er_out, er_probe])
     items, links, _c = _apply_rules_for(
         compiled, paged, "r", "http://h.test/p"
     )
@@ -347,8 +342,7 @@ def test_require_equals_temp_guard():
     the item (and its children) vanish — in BOTH interpreters."""
     from pholcus_spark.extract import (
         _apply_rules_for,
-        compile_rule_specs,
-        rule_spec_tuples,
+        compile_rules,
     )
     from pholcus_spark.spiderspec import ExtractRule
 
@@ -363,7 +357,7 @@ def test_require_equals_temp_guard():
         require_equals=(("cur", "p"),),
         link_fields=("nxt",), emit=False,
     )
-    compiled = compile_rule_specs(rule_spec_tuples([er]))
+    compiled = compile_rules([er])
     _i, links, _c = _apply_rules_for(
         compiled, html, "r", "http://h.test/o3", temp={"p": "3"}
     )
@@ -386,8 +380,7 @@ def test_require_equals_with_dynamic_kv_order_parity():
     combined the two features."""
     from pholcus_spark.extract import (
         _apply_rules_for,
-        compile_rule_specs,
-        rule_spec_tuples,
+        compile_rules,
     )
     from pholcus_spark.oracle import _extract_items
     from pholcus_spark.spiderspec import ExtractRule
@@ -403,7 +396,7 @@ def test_require_equals_with_dynamic_kv_order_parity():
         require_equals=(("_ks", "want"),),
         dynamic_kv=("_ks", "_vs", "|"),
     )
-    compiled = compile_rule_specs(rule_spec_tuples([er]))
+    compiled = compile_rules([er])
     for temp, n_expected in [
         ({"want": "k1|k2"}, 1),  # guard sees the raw blob → passes
         ({"want": "nope"}, 0),   # mismatch → item vanishes
@@ -435,8 +428,7 @@ def test_oracle_charset_parity_with_engine():
     meta-declared page must extract identically through both."""
     from pholcus_spark.extract import (
         _apply_rules_for,
-        compile_rule_specs,
-        rule_spec_tuples,
+        compile_rules,
     )
     from pholcus_spark.oracle import _extract_items
     from pholcus_spark.spiderspec import ExtractRule
@@ -445,7 +437,7 @@ def test_oracle_charset_parity_with_engine():
         rule="r", kind="css", item_pattern="body",
         fields=("t",), field_css=(("t", "h1@text"),),
     )
-    compiled = compile_rule_specs(rule_spec_tuples([er]))
+    compiled = compile_rules([er])
     plain = "<html><body><h1>标题x</h1></body></html>"
     cases = [
         # UTF-8 BOM, bare content type (BOM must be stripped, not
@@ -481,8 +473,7 @@ def test_item_slice_ordinal_gates():
     before transforms/guards, in BOTH interpreters."""
     from pholcus_spark.extract import (
         _apply_rules_for,
-        compile_rule_specs,
-        rule_spec_tuples,
+        compile_rules,
     )
     from pholcus_spark.oracle import _extract_items
     from pholcus_spark.spiderspec import ExtractRule
@@ -500,7 +491,7 @@ def test_item_slice_ordinal_gates():
             fields=("t",), field_css=(("t", "a@text"),),
             item_slice=islice,
         )
-        compiled = compile_rule_specs(rule_spec_tuples([er]))
+        compiled = compile_rules([er])
         items, _l, _c = _apply_rules_for(compiled, html, "r", "http://b/")
         assert [i["t"] for i in items] == want, islice
         page = {"body": html.encode(), "content_type": "text/html"}
@@ -543,8 +534,7 @@ def test_json_numeric_array_indices():
 
     from pholcus_spark.extract import (
         _apply_rules_for,
-        compile_rule_specs,
-        rule_spec_tuples,
+        compile_rules,
     )
     from pholcus_spark.oracle import _extract_items
     from pholcus_spark.spiderspec import ExtractRule
@@ -576,7 +566,7 @@ def test_json_numeric_array_indices():
             ("miss", "records.9.attributes.Name"),
         ),
     )
-    compiled = compile_rule_specs(rule_spec_tuples([er]))
+    compiled = compile_rules([er])
     items, _l, _c = _apply_rules_for(compiled, doc, "r", "http://b/")
     assert items == [
         {"name": "a", "lp": "1", "miss": ""},
@@ -589,7 +579,7 @@ def test_json_numeric_array_indices():
         rule="r", kind="json", item_pattern="contents.7.mainContent",
         fields=("x",),
     )
-    compiled2 = compile_rule_specs(rule_spec_tuples([er2]))
+    compiled2 = compile_rules([er2])
     items2, _l2, _c2 = _apply_rules_for(compiled2, doc, "r", "http://b/")
     assert items2 == []
     assert _extract_items(page, er2) == []
@@ -600,8 +590,7 @@ def test_const_fields_literals():
     columns on every item, set before transforms, both interpreters."""
     from pholcus_spark.extract import (
         _apply_rules_for,
-        compile_rule_specs,
-        rule_spec_tuples,
+        compile_rules,
     )
     from pholcus_spark.oracle import _extract_items
     from pholcus_spark.spiderspec import ExtractRule
@@ -613,7 +602,7 @@ def test_const_fields_literals():
         field_css=(("名称", "a@text"),),
         const_fields=(("级别", "0"), ("上级", "0")),
     )
-    compiled = compile_rule_specs(rule_spec_tuples([er]))
+    compiled = compile_rules([er])
     items, _l, _c = _apply_rules_for(compiled, html, "r", "http://b/")
     assert items == [{"名称": "n1", "级别": "0", "上级": "0"}]
     page = {"body": html.encode(), "content_type": "text/html"}

@@ -157,3 +157,40 @@ def test_one_live_fetcher():
         and n.func.attr == "mapInPandas"
     ]
     assert len(wrappers) == 1
+
+
+def test_image_paths_agree_on_fragment_src(spark, tmp_path):
+    """A figure src with a fragment (``/img/<id>.png#v2``) carries an
+    empty image_id: the fragment defeats the ``$``-anchored id pattern.
+    The JVM images projection (fixture fetcher) and the python image
+    sink (body store) both then read the id off the image row's own,
+    fragment-free URL."""
+    import dataclasses
+
+    from pholcus_spark import testkit
+
+    corpus = fixtures.generate(
+        fixtures.SiteSpec(
+            n_hosts=1, list_pages=1, flaky_rate=0.0, fail_404_rate=0.0
+        )
+    )
+    corpus = dataclasses.replace(
+        corpus,
+        pages=[
+            {**p, "body": p["body"].replace(b'.png"', b'.png#v2"')}
+            if p["content_type"].startswith("text/html")
+            else p
+            for p in corpus.pages
+        ],
+    )
+    want = sorted(i["image_id"] for i in corpus.images)
+    assert want
+    for body_store in (False, True):
+        run = testkit.run_engine(
+            spark, corpus, SpiderSpec("site"),
+            EngineConfig(python_image_sink=body_store),
+            workdir=str(tmp_path / f"crawl-{body_store}"),
+            body_store=body_store,
+        )
+        got = sorted(r.image_id for r in run.df("images").collect())
+        assert got == want, body_store

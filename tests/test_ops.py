@@ -200,16 +200,19 @@ def test_text_ops_shapes(spark, docs):
 def test_connected_components_clusters(spark):
     """Min-label CC on a known graph: two chains + a singleton-free
     isolated pair — every vertex maps to its component's min id, and
-    convergence beats the iteration cap (diameter-bound)."""
+    convergence beats the iteration cap (diameter-bound). Of the
+    per-iteration label checkpoints only the returned labels stay
+    held."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
         "doc_a long, doc_b long",
     )
-    got = {
-        r.doc_id: r.canonical_doc_id
-        for r in dedup.connected_components(pairs).collect()
-    }
+    jsc = spark.sparkContext._jsc
+    base = jsc.getPersistentRDDs().size()
+    labels = dedup.connected_components(pairs)
+    got = {r.doc_id: r.canonical_doc_id for r in labels.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    assert jsc.getPersistentRDDs().size() - base <= 1
 
 
 def test_phash_neardup_pairs(spark):

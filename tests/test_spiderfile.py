@@ -118,7 +118,10 @@ def test_envelope_zero_values_and_bools():
 
 def test_rich_payload_to_dataclasses():
     """Nested payloads — transforms op-chains, AidFunc pagination,
-    SubNamespace, Namespace override — land as the exact dataclasses."""
+    SubNamespace, Namespace override — land as the exact dataclasses.
+    A JSON null takes the field's default: the rule with
+    ``"carry_fields": null`` and ``"field_json": null`` equals the
+    same rule without those keys."""
     xml = textwrap.dedent(
         """\
         <Spider>
@@ -141,7 +144,8 @@ def test_rich_payload_to_dataclasses():
                "field_transforms": [
                  ["addr", [["split_pick", "-", 0, 2, "keep"], ["trim"]]],
                  ["biz", [["split_pick", "-", 1, 2, "empty"]]]],
-               "require_fields": ["addr"]}
+               "require_fields": ["addr"],
+               "carry_fields": null, "field_json": null}
             </Script></ParseFunc>
             <AidFunc><Script>
               {"count_field": "pages",

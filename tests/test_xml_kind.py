@@ -17,9 +17,8 @@ from hypothesis import given, settings, strategies as st
 from pholcus_spark.extract import (
     apply_rule_spec,
     clean_html_py,
-    compile_rule_specs,
+    compile_rules,
     compile_transforms,
-    rule_spec_tuples,
 )
 from pholcus_spark.oracle import _oracle_transform_value, _xml_items
 from pholcus_spark.spiderspec import ExtractRule
@@ -222,19 +221,6 @@ def test_clean_html_jvm_parity(spark):
 # --- emit flag plumbing ----------------------------------------------
 
 
-def test_emit_rides_spec_tuples():
-    er_on = ExtractRule(rule="a", kind="xml", item_pattern="c.i", fields=("f",))
-    er_off = ExtractRule(
-        rule="b", kind="xml", item_pattern="c.i", fields=("f",), emit=False
-    )
-    # emit sits at a fixed position, not the tail — the tuple has
-    # grown past it (require_fields/field_json/cursor/cursor_require)
-    specs = rule_spec_tuples([er_on, er_off])
-    assert specs[0][9] is True and specs[1][9] is False
-    compiled = compile_rule_specs(specs)
-    assert compiled[0][8] is True and compiled[1][8] is False
-
-
 def test_emit_false_items_still_drive_links():
     """_apply_rules_for keeps emit=False items in the fused output
     (they feed link_fields/pagination); the OUTPUT filter is the
@@ -250,7 +236,7 @@ def test_emit_false_items_still_drive_links():
         carry_fields=("title",),
         emit=False,
     )
-    compiled = compile_rule_specs(rule_spec_tuples([er]))
+    compiled = compile_rules([er])
     items, links, carries = _apply_rules_for(
         compiled,
         "<rss><channel><item><title>T</title>"
