@@ -18,11 +18,6 @@ same contract over plain parquet with an atomic JSON manifest:
 * old manifests are retained (``_manifest-{n}.json``) → time travel for
   the resume test.
 
-When a real cluster provides Iceberg
-(``spark.sql.catalog...=org.apache.iceberg...``), set
-``use_iceberg=True`` to route reads/writes through table identifiers
-instead of paths; the engine code is unchanged.
-
 Replaces the reference's history stores (local JSON/MySQL/Mongo,
 ``app/aid/history/success.go:54-120``) and its flush-at-batch
 checkpointing (``app/scheduler/matrix.go:207-218``).
@@ -39,13 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class SnapshotCatalog:
-    def __init__(self, root: str, spark: SparkSession, use_iceberg: bool = False):
-        if use_iceberg:  # pragma: no cover - requires iceberg runtime jar
-            raise NotImplementedError(
-                "Iceberg catalog routing requires the iceberg-spark-runtime jar "
-                "(absent in this container); parquet-snapshot mode implements "
-                "the same commit/resume contract"
-            )
+    def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
         os.makedirs(root, exist_ok=True)

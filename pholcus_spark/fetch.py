@@ -14,9 +14,9 @@ tests run with no network):
 * :class:`StoreFetcher` — the fixture join over a body store's
   metadata; bodies are read python-side, only where a stage needs them.
 * :class:`~pholcus_spark.httpfetch.HttpFetcher` — the one live
-  fetcher: a ``mapInPandas`` batch over a pluggable session (stdlib
-  urllib by default, aiohttp opt-in). Tests drive it against an
-  in-process server; none touches the network.
+  fetcher: a ``mapInPandas`` batch over one blocking stdlib urllib
+  transport. Tests drive it against an in-process server; none
+  touches the network.
 
 ``fetch(wave)`` returns the wave DataFrame extended with
 ``status int, content_type string, body binary, ok boolean``.

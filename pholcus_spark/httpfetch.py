@@ -1,14 +1,13 @@
 """The live HTTP fetcher — the reference's one downloader, Surf
 (`app/downloader/downloader_surfer.go:35-74`,
-`surfer/surf.go:52-197`), as one :class:`HttpFetcher` over a pluggable
-session.
+`surfer/surf.go:52-197`), as one :class:`HttpFetcher` over one blocking
+transport.
 
 The reference drives its downloader against a local httptest server
 (`app/downloader/downloader_test.go:25-60`, `surfer/surf_test.go`);
-the default transport here is stdlib ``urllib`` (no aiohttp required),
-so the whole fetcher runs first-class against an in-process
-``http.server`` (tests/test_httpfetch.py). ``aiohttp`` is an opt-in
-session factory.
+the transport here is stdlib ``urllib`` with a DNS cache, so the whole
+fetcher runs first-class against an in-process ``http.server``
+(tests/test_httpfetch.py).
 
 Semantics mirrored from the reference surf engine:
 
@@ -27,17 +26,16 @@ Semantics mirrored from the reference surf engine:
   multipart, like the reference's writer loop).
 
 Spark shape: one ``mapInPandas`` stage over the politeness-selected
-wave; each Arrow batch gathers :func:`async_fetch_one` over one session
-with a bounded number of requests in flight (the urllib session runs
-its blocking opens on a thread pool: network IO releases the GIL).
-Politeness/rate limits are enforced UPSTREAM by wave selection; this
-stage only bounds in-flight connections per task.
+wave; each Arrow batch runs :func:`fetch_one` over its rows on a pool
+of ``max_conn_per_task`` threads sharing one session (network IO
+releases the GIL). Politeness/rate limits are enforced UPSTREAM by wave
+selection; the pool only bounds in-flight connections per task.
 """
 
 from __future__ import annotations
 
-import asyncio
-import contextlib
+import threading
+import time
 from urllib.parse import parse_qsl, urljoin
 
 from pyspark.sql import DataFrame
@@ -142,18 +140,11 @@ def decode_content(body: bytes, headers) -> bytes:
     stream many servers actually send), and zlib — matching the
     reference Surf engine's reader selection
     (`surfer/surf.go:52-155`: gzip.NewReader / flate.NewReader /
-    zlib.NewReader by header).
-
-    This is the ONE decode point for both transports: the aiohttp
-    session is constructed with ``auto_decompress=False`` (a transport
-    that silently strips the encoding but leaves the header visible
-    would make a genuine ``.gz`` payload served with Content-Encoding:
-    gzip match the magic sniff below and be decompressed twice —
-    round-5 ADVICE). Injected ``session_factory`` sessions must follow
-    the same contract (no transport-level decompression).
+    zlib.NewReader by header). The transport never decompresses, so
+    this is the one decode point.
 
     Defensive on two fronts: (a) a gzip-labeled body that lacks the
-    \\x1f\\x8b magic (e.g. a legacy auto-decompressing session stub) is
+    \\x1f\\x8b magic (a server that mislabels a plain body) is
     returned as-is rather than mis-decoded, and a deflate/zlib decode
     failure falls back to the raw bytes; (b) decode errors on truly
     mangled streams must not raise — the body goes to the parser
@@ -166,7 +157,7 @@ def decode_content(body: bytes, headers) -> bytes:
     try:
         if enc in ("gzip", "x-gzip"):
             if body[:2] != b"\x1f\x8b":
-                return body  # transport already decoded (aiohttp)
+                return body  # labeled gzip, sent plain
             return _zlib.decompress(body, 16 + _zlib.MAX_WBITS)
         if enc == "deflate":
             try:
@@ -181,28 +172,21 @@ def decode_content(body: bytes, headers) -> bytes:
 
 
 def _all_headers(headers, name: str) -> list[str]:
-    """Every value of a (possibly repeated) header across the header
-    containers the two transports use: ``email.Message`` (urllib,
-    ``get_all``), aiohttp's ``CIMultiDict`` (``getall``), plain dicts
-    (test stubs)."""
+    """Every value of a (possibly repeated) header: ``email.Message``
+    (urllib's ``get_all``) or a plain dict."""
     if headers is None:
         return []
     if hasattr(headers, "get_all"):
         return headers.get_all(name) or []
-    if hasattr(headers, "getall"):
-        try:
-            return headers.getall(name)
-        except KeyError:
-            return []
     v = headers.get(name)
     return [v] if v else []
 
 
-async def async_fetch_one(
-    session,
+def fetch_one(
     url: str,
     method: str = "GET",
     post_data: str = "",
+    timeout_s: float = 120.0,
     try_times: int = 3,
     retry_pause_s: float = 2.0,
     redirect_times: int = 0,
@@ -210,22 +194,23 @@ async def async_fetch_one(
     cookies_out: list | None = None,
     ua: str = "",
     proxy: str = "",
+    dns: DnsCache | None = None,
     extra_headers: dict | None = None,
+    session=None,
 ) -> tuple[int, str, bytes]:
     """THE request loop — retry budget, redirect policy with Go's
     method conversion, POST/POST-M/HEAD encodings, cookie harvesting —
-    shared verbatim by every transport :class:`HttpFetcher` and
-    :func:`fetch_one` run it over (the urllib session below, aiohttp's
-    ``ClientSession``). One implementation, so the live-server suite
-    that pins the urllib path pins the aiohttp path's semantics too.
+    run per row by :class:`HttpFetcher` and by standalone callers.
 
-    ``session`` needs one method:
-    ``request(method, url, data=None, headers=None,
-    allow_redirects=False)`` returning an async context manager whose
-    response has ``.status``, ``.headers`` (case-insensitive ``get``;
-    ``get_all``/``getall`` for repeats), and ``async .read()``.
-    aiohttp's ``ClientSession`` satisfies this natively; tests drive the
-    loop with scripted stub sessions.
+    ``session`` is the transport: by default a fresh urllib session
+    built from ``timeout_s`` and ``dns`` (pass ``dns`` to share one
+    :class:`DnsCache` across calls); a given session brings its own
+    timeout and DNS cache. It needs one method,
+    ``request(method, url, data, headers, proxy)``, which sends one hop
+    without following redirects and returns the finished response:
+    ``.status``, ``.headers`` (``get``; ``get_all`` for repeats) and
+    ``.body`` (raw bytes, not decompressed). Tests drive the loop with
+    scripted stub sessions.
 
     Returns (status, content_type, body); never raises — a transport
     failure after the retry budget yields the 599 sentinel. ``cookie``
@@ -249,14 +234,15 @@ async def async_fetch_one(
 
     ``ua`` sets the User-Agent header when the caller provided none
     (`surfer/param.go:85-95` only fills a missing header — an
-    extra_headers User-Agent therefore wins); ``proxy``
-    routes every hop of the chain through the given proxy URL
+    extra_headers User-Agent therefore wins); ``proxy`` (``""`` =
+    direct) routes every hop of the chain through the given proxy URL
     (`surf.go:139-152` sets the transport's proxy for the whole
-    request) — it is passed to the session only when non-empty, so
-    proxy-unaware session stubs keep working.
+    request).
     """
     from urllib.parse import urlsplit
 
+    if session is None:
+        session = _UrllibSession(timeout_s, dns=dns)
     home_host = urlsplit(url).netloc
 
     def _harvest(jar, headers) -> None:
@@ -312,51 +298,44 @@ async def async_fetch_one(
                     ]
                     if parts:
                         hdrs["Cookie"] = "; ".join(parts)
-                kw = {"proxy": proxy} if proxy else {}
-                async with session.request(
-                    cur_method, cur_url, data=cur_data, headers=hdrs,
-                    allow_redirects=False, **kw,
-                ) as r:
-                    status = r.status
-                    ctype = r.headers.get("Content-Type", "") or ""
-                    _harvest(jar, r.headers)
-                    location = r.headers.get("Location")
-                    if 300 <= status < 400 and location:
-                        limit = (
-                            _REDIRECT_HARD_CAP
-                            if redirect_times == 0
-                            else redirect_times
-                        )
-                        if redirect_times < 0 or hops >= limit:
-                            return status, ctype, b""  # policy: stop here
-                        hops += 1
-                        cur_url = urljoin(cur_url, location)
-                        if status in (301, 302, 303):
-                            cur_method, cur_data, headers = "GET", None, {}
-                        continue  # 307/308 keep method + body
-                    body = b"" if cur_method == "HEAD" else decode_content(
-                        await r.read(), r.headers
+                r = session.request(cur_method, cur_url, cur_data, hdrs, proxy)
+                status = r.status
+                ctype = r.headers.get("Content-Type", "") or ""
+                _harvest(jar, r.headers)
+                location = r.headers.get("Location")
+                if 300 <= status < 400 and location:
+                    limit = (
+                        _REDIRECT_HARD_CAP
+                        if redirect_times == 0
+                        else redirect_times
                     )
+                    if redirect_times < 0 or hops >= limit:
+                        return status, ctype, b""  # policy: stop here
+                    hops += 1
+                    cur_url = urljoin(cur_url, location)
+                    if status in (301, 302, 303):
+                        cur_method, cur_data, headers = "GET", None, {}
+                    continue  # 307/308 keep method + body
+                body = b"" if cur_method == "HEAD" else decode_content(
+                    r.body, r.headers
+                )
                 return status, ctype, body
         except Exception:
             if cookies_out is not None:
                 del cookies_out[:]  # retry re-harvests from scratch
             if attempt + 1 < max(1, try_times):
-                await asyncio.sleep(retry_pause_s)
+                time.sleep(retry_pause_s)
     return 599, "", b""
 
 
 class _UrllibResponse:
-    """One completed urllib response (or HTTPError, which IS a response
-    in urllib's model) behind the async response surface."""
+    """One finished urllib response (or HTTPError, which IS a response
+    in urllib's model)."""
 
     def __init__(self, status: int, headers, body: bytes):
         self.status = status
         self.headers = headers or {}
-        self._body = body
-
-    async def read(self) -> bytes:
-        return self._body
+        self.body = body
 
 
 class DnsCache:
@@ -369,8 +348,6 @@ class DnsCache:
     so a batch of requests to the same host resolves once."""
 
     def __init__(self):
-        import threading
-
         self._lib: dict[str, str] = {}
         self._lock = threading.Lock()
         self.resolves = 0   # connections that went through the resolver
@@ -440,18 +417,13 @@ def _cached_dns_handler(dns: "DnsCache"):
 
 
 class _UrllibSession:
-    """Blocking-urllib transport behind the ``async_fetch_one`` session
-    surface, and its own async context manager: it owns a pool of
-    ``max_conn`` threads, and each request's blocking open runs on that
-    pool (network IO releases the GIL), so a gathered batch keeps up to
-    ``max_conn`` requests in flight instead of blocking the loop one at
-    a time. The direct route always dials through a :class:`DnsCache`
-    (the reference surfer's is always on): ``dns``, or a fresh one per
-    session."""
+    """The blocking urllib transport, shared by a batch's pool threads:
+    ``request`` opens one hop (redirects surface as the 3xx) and returns
+    the finished response. The direct route always dials through a
+    :class:`DnsCache` (the reference surfer's is always on): ``dns``, or
+    a fresh one per session."""
 
-    def __init__(
-        self, timeout_s: float, max_conn: int = 1, dns: DnsCache | None = None
-    ):
+    def __init__(self, timeout_s: float, dns: DnsCache | None = None):
         import urllib.request
 
         class _NoRedirect(urllib.request.HTTPRedirectHandler):
@@ -469,128 +441,44 @@ class _UrllibSession:
                 _cached_dns_handler(dns if dns is not None else DnsCache()),
             )
         }
+        self._lock = threading.Lock()  # pool threads build openers
         self._timeout_s = timeout_s
-        self._max_conn = max_conn
-
-    async def __aenter__(self):
-        from concurrent.futures import ThreadPoolExecutor
-
-        self._pool = ThreadPoolExecutor(max_workers=self._max_conn)
-        return self
-
-    async def __aexit__(self, *exc):
-        self._pool.shutdown(wait=True)
-        return False
 
     def _opener_for(self, proxy: str):
         import urllib.request
 
-        op = self._openers.get(proxy)
-        if op is None:
-            op = urllib.request.build_opener(
-                self._no_redirect,
-                urllib.request.ProxyHandler(
-                    {"http": proxy, "https": proxy}
-                ),
-            )
-            self._openers[proxy] = op
-        return op
+        with self._lock:
+            op = self._openers.get(proxy)
+            if op is None:
+                op = urllib.request.build_opener(
+                    self._no_redirect,
+                    urllib.request.ProxyHandler(
+                        {"http": proxy, "https": proxy}
+                    ),
+                )
+                self._openers[proxy] = op
+            return op
 
-    @contextlib.asynccontextmanager
-    async def request(self, method, url, data=None, headers=None,
-                      allow_redirects=False, proxy=""):
+    def request(self, method, url, data, headers, proxy) -> _UrllibResponse:
+        import urllib.error
         import urllib.request
 
-        assert not allow_redirects  # the shared loop owns redirects
         req = urllib.request.Request(
-            url, data=data, method=method, headers=dict(headers or {})
+            url, data=data, method=method, headers=headers
         )
-        # the opener is picked on the loop thread: only the blocking
-        # open runs on the pool
-        opener = self._opener_for(proxy or "")
-        yield await asyncio.get_running_loop().run_in_executor(
-            self._pool, self._open, opener, req
-        )
-
-    def _open(self, opener, req) -> "_UrllibResponse":
-        import urllib.error
-
         try:
-            with opener.open(req, timeout=self._timeout_s) as resp:
-                body = b"" if req.get_method() == "HEAD" else resp.read()
+            with self._opener_for(proxy).open(
+                req, timeout=self._timeout_s
+            ) as resp:
+                body = b"" if method == "HEAD" else resp.read()
                 return _UrllibResponse(resp.status, resp.headers, body)
         except urllib.error.HTTPError as he:
             body = he.read() if he.fp else b""
             return _UrllibResponse(he.code, he.headers, body)
 
 
-def urllib_session_factory(timeout_s: float, max_conn: int) -> _UrllibSession:
-    """The default :class:`HttpFetcher` transport: blocking urllib on a
-    pool of ``max_conn`` threads, with a per-session DNS cache."""
-    return _UrllibSession(timeout_s, max_conn)
-
-
-def aiohttp_session_factory(timeout_s: float, max_conn: int):
-    """Opt-in :class:`HttpFetcher` transport over an aiohttp
-    ``ClientSession`` (aiohttp is not a dependency of this package)."""
-    import aiohttp
-
-    return aiohttp.ClientSession(
-        connector=aiohttp.TCPConnector(limit=max_conn),
-        timeout=aiohttp.ClientTimeout(total=timeout_s),
-        # decode_content is the ONE decode point for every transport: a
-        # transport that strips Content-Encoding but leaves the header
-        # would get a genuine .gz payload served gzip-encoded
-        # decompressed twice
-        auto_decompress=False,
-        # cookies are request state the engine owns (async_fetch_one's
-        # cookie/cookies_out); a session jar would leak them across rows
-        cookie_jar=aiohttp.DummyCookieJar(),
-    )
-
-
-def fetch_one(
-    url: str,
-    method: str = "GET",
-    post_data: str = "",
-    timeout_s: float = 120.0,
-    try_times: int = 3,
-    retry_pause_s: float = 2.0,
-    redirect_times: int = 0,
-    cookie: str = "",
-    cookies_out: list | None = None,
-    ua: str = "",
-    proxy: str = "",
-    dns: DnsCache | None = None,
-    extra_headers: dict | None = None,
-) -> tuple[int, str, bytes]:
-    """Synchronous one-request entry point: :func:`async_fetch_one`
-    over the urllib transport. Pass ``dns`` to share one
-    :class:`DnsCache` across calls. See :func:`async_fetch_one` for the
-    semantics."""
-
-    async def go():
-        async with _UrllibSession(timeout_s, dns=dns) as s:
-            return await async_fetch_one(
-                s,
-                url,
-                method,
-                post_data,
-                try_times=try_times,
-                retry_pause_s=retry_pause_s,
-                redirect_times=redirect_times,
-                cookie=cookie,
-                cookies_out=cookies_out,
-                ua=ua,
-                proxy=proxy,
-                extra_headers=extra_headers,
-            )
-
-    return asyncio.run(go())
-
-
 def _request_kwargs(pdf, with_cookie: bool) -> list[dict]:
-    """Per-row :func:`async_fetch_one` keywords from a wave batch's
+    """Per-row :func:`fetch_one` keywords from a wave batch's
     optional request columns: ``method``, ``post_data``, ``proxy`` and
     ``ua`` (``proxy.assign_proxy`` / ``assign_user_agent``), ``hdr``
     (JSON map, ``fetch.headers_col``) and, with cookies on, ``cookie``
@@ -621,14 +509,11 @@ class HttpFetcher(Fetcher):
     ok)``.
 
     One ``mapInPandas`` stage over the politeness-selected wave. Each
-    Arrow batch runs one event loop and opens one session,
-    ``session_factory(timeout_s, max_conn_per_task)``, and gathers
-    :func:`async_fetch_one` over its rows under one semaphore of
-    ``max_conn_per_task``: the in-flight bound per task. Politeness and
-    rate limits are enforced UPSTREAM by wave selection. The transport
-    is :func:`urllib_session_factory` by default, or
-    :func:`aiohttp_session_factory`; the factory is pickled into the
-    task closure, so it must be importable on the executors.
+    Arrow batch opens one urllib session (with its DNS cache) and runs
+    :func:`fetch_one` over its rows on a pool of ``max_conn_per_task``
+    threads: the pool is the in-flight bound per task, and a retry
+    pause keeps its thread. Politeness and rate limits are enforced
+    UPSTREAM by wave selection.
 
     ``enable_cookie=True`` is the reference's EnableCookie
     (`downloader_surfer.go:6,21-23` — one cookiejar shared across
@@ -649,7 +534,6 @@ class HttpFetcher(Fetcher):
         redirect_times: int = 0,
         max_conn_per_task: int = 16,
         enable_cookie: bool = False,
-        session_factory=urllib_session_factory,
     ):
         self.timeout_s = timeout_s
         self.try_times = try_times
@@ -657,7 +541,6 @@ class HttpFetcher(Fetcher):
         self.redirect_times = redirect_times
         self.max_conn_per_task = max_conn_per_task
         self.enable_cookie = enable_cookie
-        self.session_factory = session_factory
 
     def fetch(self, wave: DataFrame) -> DataFrame:
         timeout_s = self.timeout_s
@@ -668,7 +551,6 @@ class HttpFetcher(Fetcher):
             redirect_times=self.redirect_times,
         )
         with_cookies = self.enable_cookie
-        session_factory = self.session_factory
         from pyspark.sql.types import (
             ArrayType,
             BinaryType,
@@ -697,27 +579,24 @@ class HttpFetcher(Fetcher):
             )
         )
 
-        async def fetch_batch(rows):
-            sem = asyncio.Semaphore(max_conn)
-            async with session_factory(timeout_s, max_conn) as s:
+        def fetch_batch(rows):
+            from concurrent.futures import ThreadPoolExecutor
 
-                async def one(kw):
-                    out = [] if with_cookies else None
-                    async with sem:
-                        res = await async_fetch_one(
-                            s, cookies_out=out, **kw, **loop_kw
-                        )
-                    return (*res, out)
+            s = _UrllibSession(timeout_s)
 
-                return await asyncio.gather(*(one(kw) for kw in rows))
+            def one(kw):
+                out = [] if with_cookies else None
+                res = fetch_one(session=s, cookies_out=out, **kw, **loop_kw)
+                return (*res, out)
+
+            with ThreadPoolExecutor(max_workers=max_conn) as pool:
+                return list(pool.map(one, rows))
 
         def run(batches):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                res = asyncio.run(
-                    fetch_batch(_request_kwargs(pdf, with_cookies))
-                )
+                res = fetch_batch(_request_kwargs(pdf, with_cookies))
                 pdf = pdf.copy()
                 pdf["status"] = [r[0] for r in res]
                 pdf["content_type"] = [r[1] for r in res]

@@ -1,8 +1,8 @@
 """Source facade — scans/fetchers (SURVEY.md §2.1/§2.4).
 
 - web fetch: :class:`pholcus_spark.fetch.FixtureFetcher` (test-mode
-  equi-join) / :class:`pholcus_spark.httpfetch.HttpFetcher` (live HTTP,
-  urllib by default, aiohttp opt-in)
+  equi-join) / :class:`pholcus_spark.httpfetch.HttpFetcher` (live HTTP
+  over urllib)
 - fixture corpus generation: :mod:`pholcus_spark.fixtures`
 - snapshot-table reads: :class:`pholcus_spark.catalog.SnapshotCatalog`
 """

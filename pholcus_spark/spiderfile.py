@@ -234,6 +234,8 @@ def parse_spider_xml(text: str, path: str = "") -> SpiderFile:
     unknown = set(root_obj) - known_root
     if unknown:
         raise SpiderFileError(f"{path}: Root script: unknown keys {sorted(unknown)}")
+    # a null value means the default, as in _kwargs
+    root_obj = {k: v for k, v in root_obj.items() if v is not None}
 
     extract_rules: list[ExtractRule] = []
     paginate_rules: list[PaginateRule] = []

@@ -149,14 +149,37 @@ def test_one_live_fetcher():
         for c in subclasses(Fetcher)
         if c.__module__.startswith("pholcus_spark.")
     } == {"FixtureFetcher", "StoreFetcher", "HttpFetcher"}
+    tree = ast.parse(inspect.getsource(httpfetch))
     wrappers = [
         n
-        for n in ast.walk(ast.parse(inspect.getsource(httpfetch)))
+        for n in ast.walk(tree)
         if isinstance(n, ast.Call)
         and isinstance(n.func, ast.Attribute)
         and n.func.attr == "mapInPandas"
     ]
     assert len(wrappers) == 1
+    # one blocking transport: no event loop under the batch's pool
+    assert not [
+        n for n in ast.walk(tree)
+        if isinstance(n, (ast.AsyncFunctionDef, ast.Await))
+    ]
+    imported = {
+        a.name.split(".")[0]
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Import)
+        for a in n.names
+    } | {
+        (n.module or "").split(".")[0]
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom)
+    }
+    assert not {"asyncio", "contextlib"} & imported
+    assert list(
+        inspect.signature(httpfetch.HttpFetcher.__init__).parameters
+    ) == [
+        "self", "timeout_s", "try_times", "retry_pause_s",
+        "redirect_times", "max_conn_per_task", "enable_cookie",
+    ]
 
 
 def test_image_paths_agree_on_fragment_src(spark, tmp_path):

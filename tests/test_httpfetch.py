@@ -376,14 +376,14 @@ def test_accept_encoding_advertised_and_author_override(server):
 
 
 def test_decode_content_defensive():
-    """decode_content must never raise and never double-decode: aiohttp
-    auto-decompresses but keeps the Content-Encoding header visible, so
-    a 'gzip' body without the magic bytes passes through untouched, and
-    mangled streams fall back to the raw bytes."""
+    """decode_content must never raise and never double-decode: a
+    'gzip'-labeled body without the magic bytes (a server that
+    mislabels a plain body) passes through untouched, and mangled
+    streams fall back to the raw bytes."""
     from pholcus_spark.httpfetch import decode_content
 
     plain = b"<html>already decoded</html>"
-    # aiohttp shape: header present, body already plain
+    # mislabeled: header present, body plain
     assert decode_content(plain, {"Content-Encoding": "gzip"}) == plain
     assert decode_content(plain, {"Content-Encoding": "deflate"}) == plain
     # mangled gzip stream: raw bytes, no raise
@@ -516,9 +516,9 @@ def test_httpfetcher_wrapper_parity_with_stdlib(spark, server):
 
 def test_httpfetcher_bounds_requests_in_flight(spark, server, monkeypatch):
     """One task's batch keeps exactly max_conn_per_task requests in
-    flight: the urllib session runs its blocking opens on its own
-    thread pool, so the gather neither serializes the batch nor
-    exceeds the bound."""
+    flight: the batch runs its rows on a pool of max_conn_per_task
+    threads over one shared session, so it neither serializes the
+    batch nor exceeds the bound."""
     _reset({f"/slow/{i}": {"body": b"s", "content_type": "text/plain"}
             for i in range(8)})
     _SiteHandler.slow_paths = {f"/slow/{i}": 0.4 for i in range(8)}
@@ -546,33 +546,6 @@ def test_httpfetcher_bounds_requests_in_flight(spark, server, monkeypatch):
     )
     assert [r.status for r in rows] == [200] * 8
     assert state["peak"] == 3
-
-
-def test_aiohttp_session_factory_leaves_decode_and_cookies_to_the_loop(
-    monkeypatch,
-):
-    """The opt-in aiohttp transport is built with transport-level
-    decompression off (decode_content is the one decode point) and no
-    session cookie jar (cookies are the loop's request state)."""
-    import sys
-    import types
-
-    from pholcus_spark.httpfetch import aiohttp_session_factory
-
-    fake = types.SimpleNamespace(
-        ClientSession=lambda **kw: kw,
-        TCPConnector=lambda limit: ("conn", limit),
-        ClientTimeout=lambda total: ("timeout", total),
-        DummyCookieJar=lambda: "no-jar",
-    )
-    monkeypatch.setitem(sys.modules, "aiohttp", fake)
-    kw = aiohttp_session_factory(7.0, 3)
-    assert kw == {
-        "connector": ("conn", 3),
-        "timeout": ("timeout", 7.0),
-        "auto_decompress": False,
-        "cookie_jar": "no-jar",
-    }
 
 
 def test_engine_live_http_conformance(spark, server):
@@ -757,42 +730,28 @@ def test_fetch_robots_dim_live(spark, server):
 
 
 # ---------------------------------------------------------------------------
-# async_fetch_one via a scripted stub session — first executed coverage
-# of the surface an aiohttp session drives (round-3 verdict item 6)
+# fetch_one's request loop via a scripted stub session
 # ---------------------------------------------------------------------------
 
 
 class _StubHeaders(dict):
-    """aiohttp-shaped headers: case-sensitive plain dict + getall (the
-    CIMultiDict repeated-header accessor), NO get_all — exercises the
-    _all_headers aiohttp branch."""
+    """Case-sensitive plain dict + get_all for repeated headers."""
 
     def __init__(self, items=(), repeats=None):
         super().__init__(items)
         self._repeats = repeats or {}
 
-    def getall(self, name):
+    def get_all(self, name):
         if name in self._repeats:
             return list(self._repeats[name])
-        if name in self:
-            return [self[name]]
-        raise KeyError(name)
+        return [self[name]] if name in self else []
 
 
 class _StubResponse:
     def __init__(self, status, headers=None, body=b"", repeats=None):
         self.status = status
         self.headers = _StubHeaders(headers or {}, repeats)
-        self._body = body
-
-    async def read(self):
-        return self._body
-
-    async def __aenter__(self):
-        return self
-
-    async def __aexit__(self, *exc):
-        return False
+        self.body = body
 
 
 class _StubSession:
@@ -805,9 +764,7 @@ class _StubSession:
                        for k, v in routes.items()}
         self.calls = []
 
-    def request(self, method, url, data=None, headers=None,
-                allow_redirects=False):
-        assert not allow_redirects
+    def request(self, method, url, data, headers, proxy):
         self.calls.append(
             {"method": method, "url": url, "data": data,
              "headers": dict(headers or {})}
@@ -817,49 +774,31 @@ class _StubSession:
             r = r.pop(0) if len(r) > 1 else r[0]
         if isinstance(r, Exception):
             raise r
-
-        class _Ctx:  # each entry returns a fresh ctx over the response
-            async def __aenter__(self_c):
-                return r
-
-            async def __aexit__(self_c, *exc):
-                return False
-
-        return _Ctx()
+        return r
 
 
-def _drive(coro):
-    import asyncio
-
-    return asyncio.run(coro)
-
-
-def test_async_loop_retry_then_599_and_recovery():
-    from pholcus_spark.httpfetch import async_fetch_one
-
+def test_request_loop_retry_then_599_and_recovery():
     boom = ConnectionError("refused")
     s = _StubSession({("GET", "http://a.test/x"): boom})
-    st, _, _ = _drive(async_fetch_one(
-        s, "http://a.test/x", try_times=3, retry_pause_s=0.0))
+    st, _, _ = fetch_one(
+        "http://a.test/x", try_times=3, retry_pause_s=0.0, session=s)
     assert st == 599 and len(s.calls) == 3  # full retry budget spent
     # transient error then success
     s2 = _StubSession({("GET", "http://a.test/x"): [
         boom, _StubResponse(200, {"Content-Type": "text/plain"}, b"up")]})
-    st, ct, body = _drive(async_fetch_one(
-        s2, "http://a.test/x", try_times=2, retry_pause_s=0.0))
+    st, ct, body = fetch_one(
+        "http://a.test/x", try_times=2, retry_pause_s=0.0, session=s2)
     assert (st, ct, body) == (200, "text/plain", b"up")
 
 
-def test_async_loop_redirect_method_conversion():
-    from pholcus_spark.httpfetch import async_fetch_one
-
+def test_request_loop_redirect_method_conversion():
     s = _StubSession({
         ("POST", "http://a.test/login"): _StubResponse(
             302, {"Location": "/home"}),
         ("GET", "http://a.test/home"): _StubResponse(200, {}, b"home"),
     })
-    st, _, body = _drive(async_fetch_one(
-        s, "http://a.test/login", "POST", "u=x", try_times=1))
+    st, _, body = fetch_one(
+        "http://a.test/login", "POST", "u=x", try_times=1, session=s)
     assert (st, body) == (200, b"home")
     # 302 re-issued as GET without the POST body (Go's http.Client)
     assert s.calls[1]["method"] == "GET" and s.calls[1]["data"] is None
@@ -869,57 +808,53 @@ def test_async_loop_redirect_method_conversion():
             307, {"Location": "/q"}),
         ("POST", "http://a.test/q"): _StubResponse(200, {}, b"kept"),
     })
-    st, _, body = _drive(async_fetch_one(
-        s7, "http://a.test/p", "POST", "k=v", try_times=1))
+    st, _, body = fetch_one(
+        "http://a.test/p", "POST", "k=v", try_times=1, session=s7)
     assert (st, body) == (200, b"kept")
     assert s7.calls[1]["data"] == b"k=v"
     assert "multipart" not in s7.calls[1]["headers"].get("Content-Type", "")
 
 
-def test_async_loop_redirect_policies():
-    from pholcus_spark.httpfetch import async_fetch_one
-
+def test_request_loop_redirect_policies():
     routes = {
         ("GET", "http://a.test/r2"): _StubResponse(302, {"Location": "/r1"}),
         ("GET", "http://a.test/r1"): _StubResponse(302, {"Location": "/dst"}),
         ("GET", "http://a.test/dst"): _StubResponse(200, {}, b"end"),
     }
     # unlimited (0) clears the chain; forbidden (<0) stops at the 3xx;
-    # bounded n: 1 hop insufficient, 2 hops clear — fetch_one parity
-    assert _drive(async_fetch_one(_StubSession(routes),
-        "http://a.test/r2", try_times=1))[0] == 200
-    assert _drive(async_fetch_one(_StubSession(routes),
-        "http://a.test/r2", try_times=1, redirect_times=-1))[0] == 302
-    assert _drive(async_fetch_one(_StubSession(routes),
-        "http://a.test/r2", try_times=1, redirect_times=1))[0] == 302
-    assert _drive(async_fetch_one(_StubSession(routes),
-        "http://a.test/r2", try_times=1, redirect_times=2))[0] == 200
+    # bounded n: 1 hop insufficient, 2 hops clear — live-server parity
+    assert fetch_one("http://a.test/r2", try_times=1,
+                     session=_StubSession(routes))[0] == 200
+    assert fetch_one("http://a.test/r2", try_times=1, redirect_times=-1,
+                     session=_StubSession(routes))[0] == 302
+    assert fetch_one("http://a.test/r2", try_times=1, redirect_times=1,
+                     session=_StubSession(routes))[0] == 302
+    assert fetch_one("http://a.test/r2", try_times=1, redirect_times=2,
+                     session=_StubSession(routes))[0] == 200
 
 
-def test_async_loop_post_m_encoding_and_head():
-    from pholcus_spark.httpfetch import MULTIPART_BOUNDARY, async_fetch_one
+def test_request_loop_post_m_encoding_and_head():
+    from pholcus_spark.httpfetch import MULTIPART_BOUNDARY
 
     s = _StubSession({
         ("POST", "http://a.test/up"): _StubResponse(200, {}, b"ok"),
         ("HEAD", "http://a.test/h"): _StubResponse(
             200, {"Content-Type": "text/plain"}, b"never-read"),
     })
-    _drive(async_fetch_one(s, "http://a.test/up", "POST-M", "a=1&b=2",
-                           try_times=1))
+    fetch_one("http://a.test/up", "POST-M", "a=1&b=2", try_times=1,
+              session=s)
     call = s.calls[0]
     assert call["headers"]["Content-Type"].startswith("multipart/form-data")
     assert f"--{MULTIPART_BOUNDARY}".encode() in call["data"]
-    st, ct, body = _drive(async_fetch_one(
-        s, "http://a.test/h", "HEAD", try_times=1))
+    st, ct, body = fetch_one(
+        "http://a.test/h", "HEAD", try_times=1, session=s)
     assert (st, body) == (200, b"")  # HEAD never reads a body
 
 
-def test_async_loop_cookie_harvest_getall_headers():
-    """Repeated Set-Cookie via the aiohttp-style getall accessor; the
-    session header goes out, harvested cookies apply to the next hop,
-    and a cross-host redirect drops the Cookie header."""
-    from pholcus_spark.httpfetch import async_fetch_one
-
+def test_request_loop_cookie_harvest_repeated_headers():
+    """Repeated Set-Cookie via the get_all accessor; the session header
+    goes out, harvested cookies apply to the next hop, and a cross-host
+    redirect drops the Cookie header."""
     s = _StubSession({
         ("GET", "http://a.test/login"): _StubResponse(
             302, {"Location": "http://a.test/home", "Set-Cookie": "sid=1"},
@@ -929,9 +864,9 @@ def test_async_loop_cookie_harvest_getall_headers():
         ("GET", "http://evil.test/x"): _StubResponse(200, {}, b"out"),
     })
     out: list = []
-    st, _, _ = _drive(async_fetch_one(
-        s, "http://a.test/login", try_times=1, cookie="pre=0",
-        cookies_out=out))
+    st, _, _ = fetch_one(
+        "http://a.test/login", try_times=1, cookie="pre=0",
+        cookies_out=out, session=s)
     assert st == 200
     assert out == ["sid=1", "lang=en"]
     # hop 2 (same host) carries pre-existing + harvested cookies
@@ -981,6 +916,39 @@ def test_dns_cache_evicts_on_dial_failure_then_recovers(server):
     assert status == 200 and body == b"back"
     assert dns.evictions == 1
     assert dns.query(f"localhost:{port}") == "127.0.0.1"
+
+
+def test_session_builds_one_opener_per_proxy_across_threads():
+    """A batch's pool threads share one session: concurrent first uses
+    of a proxy route all get the one opener the session keeps."""
+    import sys
+
+    from pholcus_spark.httpfetch import _UrllibSession
+
+    s = _UrllibSession(5.0)
+    proxies = [f"http://127.0.0.1:{9000 + i}" for i in range(8)]
+    got: list = []
+    start = threading.Barrier(16, timeout=30)
+
+    def worker():
+        start.wait()
+        got.extend((p, id(s._opener_for(p))) for p in proxies)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 16 * len(proxies)
+    assert {p: {i for q, i in got if q == p} for p in proxies} == {
+        p: {id(s._openers[p])} for p in proxies
+    }
 
 
 def test_stdlib_fetcher_dns_cache_end_to_end(spark, server):

@@ -28,8 +28,6 @@ from __future__ import annotations
 import os
 from typing import Any
 
-import pytest
-
 from pholcus_spark.catalog import SnapshotCatalog
 
 
@@ -239,7 +237,3 @@ def test_maintenance_contract_mock_iceberg_catalog(spark, tmp_path):
     os.makedirs(root, exist_ok=True)
     _maintenance_contract(spark, MockIcebergCatalog(root, spark), root)
 
-
-def test_use_iceberg_gate_names_the_missing_jar(spark, tmp_path):
-    with pytest.raises(NotImplementedError, match="iceberg-spark-runtime"):
-        SnapshotCatalog(str(tmp_path / "x"), spark, use_iceberg=True)

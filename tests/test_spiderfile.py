@@ -245,6 +245,20 @@ def test_default_spec_shape_matches_spiderspec_defaults():
     assert sf.spec == SpiderSpec("d")
 
 
+def test_null_root_keys_take_the_defaults():
+    """A JSON null in the Root script means the key's default, as in
+    rule payloads: all nine keys set to null load like ``{}``."""
+    keys = ("seeds", "link_rules", "item_rules", "image_rule",
+            "follow_anchors", "headers", "carry_concat", "limit",
+            "max_depth")
+    nulls = "{" + ", ".join(f'"{k}": null' for k in keys) + "}"
+    got = spiderfile.parse_spider_xml(
+        _envelope(f"<Root><Script>{nulls}</Script></Root>"))
+    want = spiderfile.parse_spider_xml(
+        _envelope("<Root><Script>{}</Script></Root>"))
+    assert (got.spec, got.seeds) == (want.spec, want.seeds)
+
+
 def test_file_output_rule_in_spider_file():
     """{"file_output": nameOrExt} ParseFunc payloads declare FileRules
     (filetest.go:56-64 as a dynamic file); the parsed spec equals the
